@@ -54,6 +54,10 @@ object KtxBinary {
       (1L + bit(bx) + 2L * bit(by) + 4L * bit(bz)).toString
     }.mkString
 
+  /** File name of the block's KTX ([[serializeAt]]'s second result). */
+  private[octree] def nameAt(level: Int, bz: Long, by: Long, bx: Long): String =
+    s"block_8_xy_${pathOfAt(level, bz, by, bx)}.ktx"
+
   private def putU32(out: java.io.ByteArrayOutputStream, v: Long): Unit = {
     out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
     out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
@@ -163,7 +167,7 @@ object KtxBinary {
       (0 until (3 - ((bytes + 3) % 4)).toInt).foreach(_ => out.write(0))
     }
     // octant digits become nested dirs, the ktxName relpath layout
-    (path.map(_.toString).mkString("/"), s"block_8_xy_$path.ktx", out.toByteArray)
+    (path.map(_.toString).mkString("/"), nameAt(level, bz, by, bx), out.toByteArray)
   }
 
   /** Write every occupied spatial block as a real `.ktx` file under

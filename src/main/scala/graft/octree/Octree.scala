@@ -100,8 +100,10 @@ object Addressing {
 
 /** The reference's four downsampling kernels over the sparse voxel
   * model: a 2×2×2 (or 2×2 for xy-only) parent group collapses to one
-  * voxel via groupBy on halved coordinates — one shuffle whose key
-  * space shrinks 8× per level, with map-side partial aggregation.
+  * voxel via groupBy on halved coordinates — one shuffle per level,
+  * with map-side partial aggregation. This Catalyst form serves the
+  * single-level rows; [[Pyramid]] folds whole regions in one task and
+  * must equal a per-level fold of this function exactly.
   *
   * Implicit-zero semantics: absent voxels are zeros, so e.g.
   * `second_max` of a group with a single present voxel is 0 (then
@@ -281,22 +283,159 @@ object Downsample {
 /** Level-pyramid construction and block-level maintenance ops. */
 object Pyramid {
 
-  /** tiff2octree.py:1062 `downsample_octree_blocks`: iterative
-    * level-(L-1)..1 build. Union of all levels, each produced by one
-    * shrinking-key shuffle — total shuffle volume is a geometric
-    * series ≤ 8/7 of the full-res scan.
+  /** Levels one task builds in memory per region: a region is 2^5 = 32
+    * voxels per axis of one channel, so a task's working set is fixed
+    * whatever the volume size.
+    */
+  private val LocalLevels = 5
+
+  /** A leaf voxel keyed for the region shuffle: region coords and the
+    * packed in-region offset `(lz << 2s) | (ly << s) | lx`.
+    */
+  private[octree] case class Keyed(c: Long, rz: Long, ry: Long, rx: Long, li: Int, v: Long)
+
+  /** One output voxel of a downsampled level. */
+  private[octree] case class Out(level: Long, c: Long, z: Long, y: Long, x: Long, v: Long)
+
+  /** tiff2octree.py:1062 `downsample_octree_blocks`: every block's
+    * levels built from that block's own children. The leaf level is
+    * the input itself (no shuffle). Levels L-1 .. L-s come from ONE
+    * shuffle keyed by region `(c, z>>s, y>>s, x>>s)`, s = min(L-1, 5):
+    * each task folds its regions through all s levels in memory
+    * ([[RegionFold]]), one region at a time. A deeper pyramid folds
+    * the coarsest local level through this same function again, so
+    * a volume needs ⌈(L-1)/5⌉ shuffles instead of one per level.
+    *
+    * Every level equals the per-level [[Downsample]] fold exactly
+    * (implicit zeros, duplicates counted separately, `v = 0` pruned).
+    * The output carries no order; consumers group or sort for
+    * themselves.
     */
   def apply(voxels: DataFrame, levels: Int = VoxelGrid.Levels,
             kernel: String = "arthur"): DataFrame = {
-    var cur = voxels
-    var out = voxels.select(lit(levels.toLong).as("level"),
+    val k = Downsample.kernels.indexOf(kernel)
+    require(k >= 0, s"unknown kernel $kernel (one of ${Downsample.kernels.mkString(", ")})")
+    val leaf = voxels.select(lit(levels.toLong).as("level"),
       col("c"), col("z"), col("y"), col("x"), col("v"))
-    for (lv <- (levels - 1) to 1 by -1) {
-      cur = Downsample(cur, kernel)
-      out = out.union(cur.select(lit(lv.toLong).as("level"),
-        col("c"), col("z"), col("y"), col("x"), col("v")))
+    if (levels <= 1) return leaf
+    val spark = voxels.sparkSession
+    import spark.implicits._
+    val s = math.min(levels - 1, LocalLevels)
+    val m = (1L << s) - 1
+    val Seq(c, z, y, x, v) = Seq("c", "z", "y", "x", "v").map(col(_).cast("long"))
+    val folded = voxels
+      .select(c.as("c"), shiftright(z, s).as("rz"), shiftright(y, s).as("ry"),
+        shiftright(x, s).as("rx"),
+        shiftleft(z.bitwiseAND(m), 2 * s).bitwiseOR(shiftleft(y.bitwiseAND(m), s))
+          .bitwiseOR(x.bitwiseAND(m)).cast("int").as("li"),
+        v.as("v"))
+      .repartition(col("c"), col("rz"), col("ry"), col("rx"))
+      .sortWithinPartitions("c", "rz", "ry", "rx")
+      .as[Keyed]
+      .mapPartitions(it => new RegionFold(it, levels, s, k))
+      .toDF()
+    val top = levels - s
+    if (top == 1) leaf.union(folded)
+    else {
+      val rest = apply(folded.filter(col("level") === top).drop("level"), top, kernel)
+        .filter(col("level") < top)
+      leaf.union(folded).union(rest)
     }
-    out.orderBy("level", "c", "z", "y", "x")
+  }
+
+  /** The in-task pyramid of [[apply]]: reduces a partition sorted by
+    * region, one region at a time, through `s` 2×2×2 levels. Per level
+    * it keeps (count, sum, max, second max) of the children in
+    * primitive arrays indexed by packed cell offset, plus the list of
+    * touched cells, so a sparse region costs its voxels, not its
+    * volume. The box kernels are one scalar reduction of that state
+    * (kernel ids index [[Downsample.kernels]]).
+    */
+  private final class RegionFold(in: Iterator[Keyed], levels: Int, s: Int, kernel: Int)
+      extends Iterator[Out] {
+    // level k (1..s) has 2^(s-k) cells per axis; index 0 is unused
+    private def cells(k: Int) = if (k == 0) 0 else 1 << (3 * (s - k))
+    private val cnt = Array.tabulate(s + 1)(k => new Array[Int](cells(k)))
+    private val sum = Array.tabulate(s + 1)(k => new Array[Long](cells(k)))
+    private val mx = Array.tabulate(s + 1)(k => new Array[Long](cells(k)))
+    private val sec = Array.tabulate(s + 1)(k => new Array[Long](cells(k)))
+    private val touched = Array.tabulate(s + 1)(k => new Array[Int](cells(k)))
+    private val nTouched = new Array[Int](s + 1)
+
+    private val out = scala.collection.mutable.ArrayBuffer.empty[Out]
+    private var pos = 0
+    private var pending: Keyed = if (in.hasNext) in.next() else null
+
+    /** Parent offset of a child offset that has `b` bits per axis. */
+    private def parent(idx: Int, b: Int): Int = {
+      val mask = (1 << b) - 1
+      val z = idx >>> (2 * b); val y = (idx >>> b) & mask; val x = idx & mask
+      ((z >>> 1) << (2 * (b - 1))) | ((y >>> 1) << (b - 1)) | (x >>> 1)
+    }
+
+    private def add(k: Int, i: Int, v: Long): Unit =
+      if (cnt(k)(i) == 0) {
+        cnt(k)(i) = 1; sum(k)(i) = v; mx(k)(i) = v; sec(k)(i) = Long.MinValue
+        touched(k)(nTouched(k)) = i; nTouched(k) += 1
+      } else {
+        cnt(k)(i) += 1; sum(k)(i) += v
+        if (v > mx(k)(i)) { sec(k)(i) = mx(k)(i); mx(k)(i) = v }
+        else if (v > sec(k)(i)) sec(k)(i) = v
+      }
+
+    private def reduce(k: Int, i: Int): Long = {
+      val n = cnt(k)(i)
+      kernel match {
+        case 0 => if (n >= 2) sec(k)(i) else 0L        // second_max
+        case 1 => sum(k)(i) / 8                         // area: dense 8 incl. zeros
+        case 2 => sum(k)(i) / n                         // mean_nz
+        case 3 => mx(k)(i)                              // max
+        case _ => if (n >= 2) sec(k)(i) else mx(k)(i)   // arthur
+      }
+    }
+
+    /** Folds the next region into `out`. */
+    private def foldRegion(): Unit = {
+      val r = pending
+      var cur = r
+      while (cur != null && cur.c == r.c && cur.rz == r.rz && cur.ry == r.ry && cur.rx == r.rx) {
+        add(1, parent(cur.li, s), cur.v)
+        cur = if (in.hasNext) in.next() else null
+      }
+      pending = cur
+      out.clear(); pos = 0
+      var k = 1
+      while (k <= s) {
+        val b = s - k
+        val mask = (1 << b) - 1
+        var t = 0
+        while (t < nTouched(k)) {
+          val i = touched(k)(t)
+          val v = reduce(k, i)
+          cnt(k)(i) = 0
+          if (v > 0) {
+            out += Out((levels - k).toLong, r.c,
+              (r.rz << b) | (i >>> (2 * b)), (r.ry << b) | ((i >>> b) & mask),
+              (r.rx << b) | (i & mask), v)
+            if (k < s) add(k + 1, parent(i, b), v)
+          }
+          t += 1
+        }
+        nTouched(k) = 0
+        k += 1
+      }
+    }
+
+    override def hasNext: Boolean = {
+      while (pos >= out.length && pending != null) foldRegion()
+      pos < out.length
+    }
+
+    override def next(): Out = {
+      if (!hasNext) throw new NoSuchElementException
+      pos += 1
+      out(pos - 1)
+    }
   }
 
   /** Incremental pyramid maintenance — the ingest-batch path a 100 TB

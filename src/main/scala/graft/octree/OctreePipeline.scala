@@ -27,10 +27,13 @@ import graft.VoxelGrid
   * volume identity by sharing oct_pyramid's SQL verbatim).
   *
   * Scale shape: every stage is the already-audited distributed form —
-  * the pyramid is the shrinking-key shuffle fold, block serialization
+  * the pyramid is one region-keyed shuffle whose tasks build all
+  * levels of a region in memory ([[Pyramid]]), block serialization
   * is per-block `flatMapGroups` on executors, the resume listing is
-  * block keys only (broadcast — never voxels), and the parse is a
-  * distributed binaryFile scan. Nothing voxel-sized ever routes
+  * file names and lengths only (broadcast — never voxels; a listed
+  * file is skipped before it is serialized), and the parse is a
+  * distributed binaryFile scan. No stage sorts globally: each
+  * consumer groups by its own key. Nothing voxel-sized ever routes
   * through the driver.
   */
 object OctreePipeline {
@@ -43,37 +46,38 @@ object OctreePipeline {
   private def relOf(level: Int, bz: Long, by: Long, bx: Long): String =
     KtxBinary.pathOfAt(level, bz, by, bx).map(_.toString).mkString("/")
 
-  /** Recursive relpath listing of an existing (partial) tree — the
-    * resume anti-set. File names only, so the broadcast is block keys
-    * at any scale (an object-store deployment lists the prefix the
-    * same way).
+  /** Recursive relpath listing of an existing (partial) tree with
+    * each file's length — the resume anti-set. File names and sizes
+    * only, so the broadcast is block keys at any scale (an
+    * object-store deployment lists the prefix the same way).
     */
-  private def listTree(outRoot: String): Set[String] = {
+  private def listTree(outRoot: String): Map[String, Long] = {
     val root = new java.io.File(outRoot)
-    def walk(f: java.io.File, rel: String): Seq[String] =
+    def walk(f: java.io.File, rel: String): Seq[(String, Long)] =
       if (f.isDirectory)
         Option(f.listFiles()).toSeq.flatten.flatMap(c =>
           walk(c, if (rel.isEmpty) c.getName else s"$rel/${c.getName}"))
-      else Seq(rel)
-    if (!root.isDirectory) Set.empty else walk(root, "").toSet
+      else Seq(rel -> f.length)
+    if (!root.isDirectory) Map.empty else walk(root, "").toMap
   }
 
   /** Write the per-level octant tree from a pyramid frame
-    * ((level, c, z, y, x, v) level-local coords): for every occupied
-    * block at every level, one strip TIFF per nonempty channel
-    * (reference skips empty channels, tiff2octree.py:312) and one
-    * interleaved KTX with its in-file arthur mip chain. With
+    * ((level, c, z, y, x, v) level-local coords, in any order): for
+    * every occupied block at every level, one strip TIFF per nonempty
+    * channel (reference skips empty channels, tiff2octree.py:312) and
+    * one interleaved KTX with its in-file arthur mip chain. With
     * `skipExisting` the current tree listing is broadcast and
-    * already-written files are skipped — `check_block`:359's resume,
-    * as a set-difference instead of a per-file probe. Returns the
-    * per-file summary (level, rel, n_bytes, written 0/1); the caller
-    * runs an action on it.
+    * already-written files are skipped before they are serialized —
+    * `check_block`:359's resume, as a set-difference instead of a
+    * per-file probe. Returns the per-file summary (level, rel,
+    * n_bytes, written 0/1), where a skipped file reports its listed
+    * length; the caller runs an action on it.
     */
   def writeTree(spark: SparkSession, pyr: DataFrame, outRoot: String,
       skipExisting: Boolean = false): DataFrame = {
     import spark.implicits._
     val doneB = spark.sparkContext.broadcast(
-      if (skipExisting) listTree(outRoot) else Set.empty[String])
+      if (skipExisting) listTree(outRoot) else Map.empty[String, Long])
     Addressing.blockify(pyr)
       .select(col("level"), col("bz"), col("by"), col("bx"),
         col("c"), col("lz"), col("ly"), col("lx"), col("v"))
@@ -87,17 +91,20 @@ object OctreePipeline {
         val pre = if (rel.isEmpty) "" else rel + "/"
         val tiffs = vox.groupBy(_._1).toSeq.sortBy(_._1).map { case (c, vs) =>
           (pre + s"default.$c.tif",
-            TiffBinary.serialize(vs.map(t => (t._2, t._3, t._4, t._5))))
+            () => TiffBinary.serialize(vs.map(t => (t._2, t._3, t._4, t._5))))
         }
-        val (_, ktxName, ktxBytes) = KtxBinary.serializeAt(level, bz, by, bx, vox)
-        (tiffs :+ (pre + ktxName, ktxBytes)).map { case (relPath, bytes) =>
-          val skip = doneB.value.contains(relPath)
-          if (!skip) {
-            val f = new java.io.File(s"$outRoot/$relPath")
-            Option(f.getParentFile).foreach(_.mkdirs())
-            java.nio.file.Files.write(f.toPath, bytes): Unit
+        val ktx = (pre + KtxBinary.nameAt(level, bz, by, bx),
+          () => KtxBinary.serializeAt(level, bz, by, bx, vox)._3)
+        (tiffs :+ ktx).map { case (relPath, bytes) =>
+          doneB.value.get(relPath) match {
+            case Some(listed) => (level.toLong, relPath, listed, 0L)
+            case None =>
+              val b = bytes()
+              val f = new java.io.File(s"$outRoot/$relPath")
+              Option(f.getParentFile).foreach(_.mkdirs())
+              java.nio.file.Files.write(f.toPath, b)
+              (level.toLong, relPath, b.length.toLong, 1L)
           }
-          (level.toLong, relPath, bytes.length.toLong, if (skip) 0L else 1L)
         }
       }
       .toDF("level", "rel", "n_bytes", "written")

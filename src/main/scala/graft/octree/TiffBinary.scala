@@ -49,7 +49,7 @@ object TiffBinary {
     out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
   }
 
-  private[octree] def getU16(b: Array[Byte], off: Int): Int =
+  private[graft] def getU16(b: Array[Byte], off: Int): Int =
     (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
 
   private def getU32(b: Array[Byte], off: Int): Long =
@@ -66,7 +66,7 @@ object TiffBinary {
     out.toByteArray
   }
 
-  private[octree] def inflate(comp: Array[Byte], rawLen: Int): Array[Byte] = {
+  private[graft] def inflate(comp: Array[Byte], rawLen: Int): Array[Byte] = {
     val inf = new java.util.zip.Inflater()
     inf.setInput(comp)
     val raw = new Array[Byte](rawLen)

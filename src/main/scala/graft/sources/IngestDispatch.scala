@@ -331,7 +331,8 @@ object IngestDispatch {
     * distributed binaryFile scan over both channels' staged `.tif`
     * slices, each file decoded from bytes alone — channel from the
     * `ch{c}` dir name, z from the sorted `z%04d` file name — must
-    * reproduce [[VoxelGrid]] exactly.
+    * reproduce [[VoxelGrid]] exactly. The frame carries no order:
+    * every consumer groups or sorts for itself.
     */
   def parseSliceVoxels(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
@@ -347,27 +348,16 @@ object IngestDispatch {
         graft.octree.TiffBinary.decodePages(bytes).flatMap {
           case (_, w, h, bits, comp, off, nb) =>
             require(bits == 16 && comp == 8, s"unexpected page encoding ($bits, $comp)")
-            val inf = new java.util.zip.Inflater()
-            inf.setInput(bytes.slice(off.toInt, (off + nb).toInt))
-            val raw = new Array[Byte]((w * h * 2).toInt)
-            var o = 0
-            while (o < raw.length && !inf.finished()) {
-              val n = inf.inflate(raw, o, raw.length - o)
-              require(n > 0 || !(inf.needsInput() || inf.needsDictionary()),
-                s"truncated deflate stream: $o of ${raw.length} bytes inflated")
-              o += n
-            }
-            inf.end()
+            val raw = graft.octree.TiffBinary.inflate(
+              bytes.slice(off.toInt, (off + nb).toInt), (w * h * 2).toInt)
             for {
               y <- 0 until h.toInt; x <- 0 until w.toInt
-              v = (raw(2 * (y * w.toInt + x)) & 0xff) |
-                ((raw(2 * (y * w.toInt + x) + 1) & 0xff) << 8)
+              v = graft.octree.TiffBinary.getU16(raw, 2 * (y * w.toInt + x))
               if v > 0
             } yield (c, z, y.toLong, x.toLong, v.toLong)
         }
       }
       .toDF("c", "z", "y", "x", "v")
-      .orderBy("c", "z", "y", "x")
   }
 
   /** The STACK read direction (`stack_to_dask_array`
@@ -391,21 +381,11 @@ object IngestDispatch {
         graft.octree.TiffBinary.decodePages(bytes).zipWithIndex.flatMap {
           case ((_, w, h, bits, comp, off, nb), z) =>
             require(bits == 16 && comp == 8, s"unexpected page encoding ($bits, $comp)")
-            val inf = new java.util.zip.Inflater()
-            inf.setInput(bytes.slice(off.toInt, (off + nb).toInt))
-            val raw = new Array[Byte]((w * h * 2).toInt)
-            var o = 0
-            while (o < raw.length && !inf.finished()) {
-              val n = inf.inflate(raw, o, raw.length - o)
-              require(n > 0 || !(inf.needsInput() || inf.needsDictionary()),
-                s"truncated deflate stream: $o of ${raw.length} bytes inflated")
-              o += n
-            }
-            inf.end()
+            val raw = graft.octree.TiffBinary.inflate(
+              bytes.slice(off.toInt, (off + nb).toInt), (w * h * 2).toInt)
             for {
               y <- 0 until h.toInt; x <- 0 until w.toInt
-              v = (raw(2 * (y * w.toInt + x)) & 0xff) |
-                ((raw(2 * (y * w.toInt + x) + 1) & 0xff) << 8)
+              v = graft.octree.TiffBinary.getU16(raw, 2 * (y * w.toInt + x))
               if v > 0
             } yield (c, z.toLong, y.toLong, x.toLong, v.toLong)
         }

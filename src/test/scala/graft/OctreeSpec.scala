@@ -145,6 +145,105 @@ class OctreeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(byLevel === Seq((1L, 1L, 0L), (2L, 8L, 1L), (3L, 64L, 3L)))
   }
 
+  /** Seeded sparse two-channel volume in a 256³ box: dense-ish 6³
+    * clusters, lone voxels (single-voxel cells), repeated coordinates, and
+    * small values that `area` prunes — with whole regions empty.
+    */
+  private def sparseVolume(seed: Long) = {
+    val rng = new java.util.SplittableRandom(seed)
+    def value(): Long = if (rng.nextInt(3) == 0) 1L + rng.nextInt(8) else 1L + rng.nextInt(65535)
+    val clusters = (0 until 6).flatMap { _ =>
+      val c = rng.nextInt(2).toLong
+      val (oz, oy, ox) = (rng.nextInt(250), rng.nextInt(250), rng.nextInt(250))
+      for (dz <- 0 until 6; dy <- 0 until 6; dx <- 0 until 6 if rng.nextInt(4) != 0)
+        yield (c, (oz + dz).toLong, (oy + dy).toLong, (ox + dx).toLong, value())
+    }
+    val lone = (0 until 200).map(_ => (rng.nextInt(2).toLong, rng.nextInt(256).toLong,
+      rng.nextInt(256).toLong, rng.nextInt(256).toLong, value()))
+    // repeated coordinates, half with the same value, half with a new one
+    val dups = clusters.take(40).zipWithIndex.map { case ((c, z, y, x, v), i) =>
+      (c, z, y, x, if (i % 2 == 0) v else value())
+    }
+    vox(clusters ++ lone ++ dups: _*)
+  }
+
+  /** Jobs `body` submits, counted by a listener; a marker job after it
+    * guarantees every earlier event has been delivered.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case "counted" => jobs.incrementAndGet(): Unit
+          case "marker" => marker.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("counted", "counted")
+      try body finally {
+        sc.setJobGroup("marker", "marker")
+        sc.parallelize(Seq(1), 1).count()
+        sc.clearJobGroup()
+      }
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("pyramid equals the per-level Downsample fold for every kernel and depth") {
+    val v = sparseVolume(20261017L).localCheckpoint(true)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("level", "c", "z", "y", "x", "v").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+          r.getLong(4), r.getLong(5))).toSeq.sorted
+    for (kernel <- Downsample.kernels; levels <- Seq(3, 6, 8)) {
+      var cur = v
+      var want = v.select(lit(levels.toLong).as("level"), col("c"), col("z"), col("y"),
+        col("x"), col("v"))
+      for (lv <- (levels - 1) to 1 by -1) {
+        cur = Downsample(cur, kernel).localCheckpoint(true)
+        want = want.union(cur.select(lit(lv.toLong).as("level"), col("c"), col("z"),
+          col("y"), col("x"), col("v")))
+      }
+      val expected = rows(want)
+      // second_max and area thin out with depth; the others must reach the root
+      assert(expected.exists(r => r._1 == (if (kernel == "max" || kernel == "arthur") 1L
+        else levels - 1L)), s"kernel $kernel, levels $levels: fixture too thin")
+      assert(rows(Pyramid(v, levels, kernel)) === expected, s"kernel $kernel, levels $levels")
+    }
+  }
+
+  test("six-level pyramid is one shuffle in at most two jobs") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
+    val v = sparseVolume(7L).localCheckpoint(true)
+    val p = Pyramid(v, 6)
+    val jobs = jobsOf(p.localCheckpoint(true): Unit)
+    assert(jobs >= 1 && jobs <= 2, s"$jobs jobs")
+    val plan = p.queryExecution.executedPlan
+    val exchanges = new AdaptiveSparkPlanHelper {}.collect(plan) {
+      case e: ShuffleExchangeLike => e
+      case e: ReusedExchangeExec => e
+    }
+    assert(exchanges.size === 1, plan.toString)
+  }
+
+  test("pyramid rejects an unknown kernel before submitting a job") {
+    val v = vox((0, 0, 0, 0, 1))
+    var err: IllegalArgumentException = null
+    val jobs = jobsOf {
+      err = intercept[IllegalArgumentException](Pyramid(v, 6, "median"))
+    }
+    assert(err.getMessage.contains("unknown kernel median"))
+    assert(jobs === 0)
+  }
+
   test("ktx parse inverts the write layout byte-for-byte") {
     // every probe appears exactly once per block (the mip regions
     // tile the data span with no gap or overlap), and re-encoding a

@@ -619,7 +619,7 @@ class VolumeSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       val want = graft.VoxelGrid(spark, dir)
         .orderBy("c", "z", "y", "x").collect().map(_.toSeq)
       val got = graft.sources.IngestDispatch.parseSliceVoxels(spark, out)
-        .collect().map(_.toSeq)
+        .orderBy("c", "z", "y", "x").collect().map(_.toSeq)
       assert(got.nonEmpty)
       assert(got.toSeq === want.toSeq)
       // every slice file exists even when its plane is empty
