@@ -25,6 +25,13 @@ object GraftSession {
       // shuffle/spill on tmpfs: the host's disk has multi-second stalls
       // that block shuffle-file IO (observed 80s pauses at ~0% CPU)
       .config("spark.local.dir", "/dev/shm/graft-spark")
+      // Every running sort and hash aggregate holds at least one whole
+      // page. Spark sizes pages from heap / cores (16 MB on a 3 GB heap
+      // with 4 cores), though most tasks here sort a few hundred KB;
+      // with one sort per core running at once that is heap held for
+      // nothing. Records larger than a page still get a page of their
+      // own size.
+      .config("spark.buffer.pageSize", "2m")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -28,7 +28,9 @@ import graft.VoxelGrid
   * oct_down_arthur expresses relationally). Serialization is per-block
   * `mapGroups` work on executors — at cluster scale the same bytes
   * would stream to a DSV2 writer; the file sink here is the local
-  * test harness for the byte layout.
+  * test harness for the byte layout. The parsers list the tree once
+  * on the driver and read and decode the files on executors
+  * ([[TreeFiles]]).
   */
 object KtxBinary {
 
@@ -279,11 +281,9 @@ object KtxBinary {
     Parsed(path, bz + 1, by + 1, bx + 1, kvBytes, nMips, mips, off - 64 - kvBytes)
   }
 
-  private def files(spark: SparkSession, outRoot: String): DataFrame =
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.ktx")
-      .option("recursiveFileLookup", "true")
-      .load(outRoot)
+  /** Every `.ktx` file's bytes under `outRoot`, read on executors. */
+  private def files(spark: SparkSession, outRoot: String) =
+    TreeFiles.read(spark, outRoot, ".ktx").map(_._2)
 
   /** The oct_ktx_parse probe frame re-derived purely from read-back
     * file bytes — same schema, same probe positions, classification
@@ -292,7 +292,7 @@ object KtxBinary {
     */
   def parseProbes(spark: SparkSession, outRoot: String): DataFrame = {
     import spark.implicits._
-    files(spark, outRoot).select(col("content")).as[Array[Byte]]
+    files(spark, outRoot)
       .flatMap { bytes =>
         val f = decode(bytes)
         (0L until OctreeQueries.KtxProbes).flatMap { probe =>
@@ -334,7 +334,7 @@ object KtxBinary {
     */
   def parseMipVoxels(spark: SparkSession, outRoot: String): DataFrame = {
     import spark.implicits._
-    files(spark, outRoot).select(col("content")).as[Array[Byte]]
+    files(spark, outRoot)
       .flatMap { bytes =>
         val f = decode(bytes)
         f.mips.flatMap { case (m, dEdge, _, off) =>
@@ -359,7 +359,7 @@ object KtxBinary {
     */
   def parseVoxels(spark: SparkSession, outRoot: String): DataFrame = {
     import spark.implicits._
-    files(spark, outRoot).select(col("content")).as[Array[Byte]]
+    files(spark, outRoot)
       .flatMap { bytes =>
         val f = decode(bytes)
         val (_, _, _, off0) = f.mips.head

@@ -28,13 +28,17 @@ import graft.VoxelGrid
   *
   * Scale shape: every stage is the already-audited distributed form —
   * the pyramid is one region-keyed shuffle whose tasks build all
-  * levels of a region in memory ([[Pyramid]]), block serialization
-  * is per-block `flatMapGroups` on executors, the resume listing is
-  * file names and lengths only (broadcast — never voxels; a listed
-  * file is skipped before it is serialized), and the parse is a
-  * distributed binaryFile scan. No stage sorts globally: each
-  * consumer groups by its own key. Nothing voxel-sized ever routes
-  * through the driver.
+  * levels of a region in memory ([[Pyramid]]); block serialization
+  * is per-block `flatMapGroups` after one block-keyed shuffle into
+  * `defaultParallelism` partitions, so every core writes files; the
+  * resume listing is file names and lengths only (broadcast — never
+  * voxels; a listed file is skipped before it is serialized); and the
+  * parse lists the tree once on the driver and reads the files on
+  * executors, spread over every core ([[TreeFiles]]). No stage sorts
+  * globally: each consumer groups by its own key. Nothing voxel-sized
+  * ever routes through the driver. Trees live on a filesystem the
+  * driver and the executors share at one path; object stores are out
+  * of scope.
   */
 object OctreePipeline {
 
@@ -46,20 +50,8 @@ object OctreePipeline {
   private def relOf(level: Int, bz: Long, by: Long, bx: Long): String =
     KtxBinary.pathOfAt(level, bz, by, bx).map(_.toString).mkString("/")
 
-  /** Recursive relpath listing of an existing (partial) tree with
-    * each file's length — the resume anti-set. File names and sizes
-    * only, so the broadcast is block keys at any scale (an
-    * object-store deployment lists the prefix the same way).
-    */
-  private def listTree(outRoot: String): Map[String, Long] = {
-    val root = new java.io.File(outRoot)
-    def walk(f: java.io.File, rel: String): Seq[(String, Long)] =
-      if (f.isDirectory)
-        Option(f.listFiles()).toSeq.flatten.flatMap(c =>
-          walk(c, if (rel.isEmpty) c.getName else s"$rel/${c.getName}"))
-      else Seq(rel -> f.length)
-    if (!root.isDirectory) Map.empty else walk(root, "").toMap
-  }
+  /** One blockified voxel: (level, bz, by, bx, c, lz, ly, lx, v). */
+  private type BlockVoxel = (Long, Long, Long, Long, Long, Long, Long, Long, Long)
 
   /** Write the per-level octant tree from a pyramid frame
     * ((level, c, z, y, x, v) level-local coords, in any order): for
@@ -76,15 +68,21 @@ object OctreePipeline {
   def writeTree(spark: SparkSession, pyr: DataFrame, outRoot: String,
       skipExisting: Boolean = false): DataFrame = {
     import spark.implicits._
+    // the resume anti-set: relpath -> length of what is already there
     val doneB = spark.sparkContext.broadcast(
-      if (skipExisting) listTree(outRoot) else Map.empty[String, Long])
+      if (skipExisting && new java.io.File(outRoot).isDirectory) TreeFiles.list(outRoot).toMap
+      else Map.empty[String, Long])
+    val block = Seq(col("level"), col("bz"), col("by"), col("bx"))
     Addressing.blockify(pyr)
       .select(col("level"), col("bz"), col("by"), col("bx"),
         col("c"), col("lz"), col("ly"), col("lx"), col("v"))
-      .as[(Long, Long, Long, Long, Long, Long, Long, Long, Long)]
-      .groupByKey(t => (t._1, t._2, t._3, t._4))
-      .flatMapGroups { (key: (Long, Long, Long, Long),
-          it: Iterator[(Long, Long, Long, Long, Long, Long, Long, Long, Long)]) =>
+      // a fixed partition count, which AQE does not coalesce: a tree's
+      // shuffle is small, and coalesced into one task it leaves one
+      // thread writing every file. Grouping on the same columns reuses
+      // this partitioning, so the plan keeps one Exchange.
+      .repartition(spark.sparkContext.defaultParallelism, block: _*)
+      .groupBy(block: _*).as[(Long, Long, Long, Long), BlockVoxel]
+      .flatMapGroups { (key: (Long, Long, Long, Long), it: Iterator[BlockVoxel]) =>
         val (level, bz, by, bx) = (key._1.toInt, key._2, key._3, key._4)
         val vox = it.map(t => (t._5, t._6, t._7, t._8, t._9)).toSeq
         val rel = relOf(level, bz, by, bx)
@@ -145,12 +143,11 @@ object OctreePipeline {
       kv("sx").toDouble, kv("sy").toDouble, kv("sz").toDouble, kv("nl").toLong)
   }
 
-  /** (level, 0-based block coords, channel) from a tree file path —
-    * level = octant-digit dir count + 1.
+  /** (level, 0-based block coords, file name) from a tree-relative
+    * path — level = octant-digit dir count + 1.
     */
-  private def blockOfPath(path: String, rootName: String): (Int, Long, Long, Long, String) = {
-    val segs = path.split('/')
-    val parts = segs.drop(segs.lastIndexOf(rootName) + 1)
+  private[octree] def blockOfPath(rel: String): (Int, Long, Long, Long, String) = {
+    val parts = rel.split('/')
     val digits = parts.dropRight(1)
     val level = digits.length + 1
     var (bz, by, bx) = (0L, 0L, 0L)
@@ -168,14 +165,9 @@ object OctreePipeline {
     */
   def parseTiffTree(spark: SparkSession, outRoot: String): DataFrame = {
     import spark.implicits._
-    val rootName = new java.io.File(outRoot).getName
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.tif")
-      .option("recursiveFileLookup", "true")
-      .load(outRoot)
-      .select(col("path"), col("content")).as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val (level, bz, by, bx, name) = blockOfPath(path, rootName)
+    TreeFiles.read(spark, outRoot, ".tif")
+      .flatMap { case (rel, bytes) =>
+        val (level, bz, by, bx, name) = blockOfPath(rel)
         val c = name.stripPrefix("default.").stripSuffix(".tif").toLong
         TiffBinary.decodePages(bytes).flatMap { case (z, w, h, bits, comp, off, nb) =>
           require(bits == 16 && comp == 8, s"unexpected page encoding ($bits, $comp)")
@@ -196,12 +188,8 @@ object OctreePipeline {
     */
   def parseKtxTree(spark: SparkSession, outRoot: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.ktx")
-      .option("recursiveFileLookup", "true")
-      .load(outRoot)
-      .select(col("content")).as[Array[Byte]]
-      .flatMap { bytes =>
+    TreeFiles.read(spark, outRoot, ".ktx")
+      .flatMap { case (_, bytes) =>
         val (level, bz, by, bx, vox) = KtxBinary.decodeMip0Any(bytes)
         vox.map { case (c, lz, ly, lx, v) =>
           (level.toLong, c, (bz - 1) * Leaf + lz, (by - 1) * Leaf + ly,
@@ -222,20 +210,15 @@ object OctreePipeline {
     */
   def audit(spark: SparkSession, outRoot: String): DataFrame = {
     import spark.implicits._
-    val rootName = new java.io.File(outRoot).getName
-    def fileLevels(glob: String): DataFrame =
-      spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .option("recursiveFileLookup", "true")
-        .load(outRoot)
-        .select(col("path")).as[String]
-        .map(p => blockOfPath(p, rootName)._1.toLong)
+    val listed = TreeFiles.list(outRoot)
+    def fileLevels(suffix: String): DataFrame =
+      listed.collect { case (rel, _) if rel.endsWith(suffix) => blockOfPath(rel)._1.toLong }
         .toDF("level")
     val cksum = (((col("z") * Grid + col("y")) * Grid + col("x")) * 2
       + col("c") + 1) * col("v")
-    val tifFiles = fileLevels("*.tif").groupBy("level")
+    val tifFiles = fileLevels(".tif").groupBy("level")
       .agg(count(lit(1)).as("n_tif_files"))
-    val ktxFiles = fileLevels("*.ktx").groupBy("level")
+    val ktxFiles = fileLevels(".ktx").groupBy("level")
       .agg(count(lit(1)).as("n_ktx_files"))
     val tifVox = parseTiffTree(spark, outRoot).groupBy("level")
       .agg(count(lit(1)).as("n_voxels"), sum("v").as("sum_v"),

@@ -23,10 +23,10 @@ import graft.VoxelGrid
   * independent DuckDB derivation of the volume model.
   *
   * Serialization is per-(block,channel) `mapGroups` work on executors
-  * and the read-back is a distributed `binaryFile` scan + per-file
-  * decode — at cluster scale both sides stream through executors; the
-  * local directory is the test harness for the byte layout, exactly
-  * as in [[KtxBinary]].
+  * and the read-back is one driver-side listing whose files are read
+  * and decoded on executors ([[TreeFiles]]) — both sides spread over
+  * every core; the local directory is the test harness for the byte
+  * layout, exactly as in [[KtxBinary]].
   */
 object TiffBinary {
 
@@ -326,31 +326,28 @@ object TiffBinary {
   }
 
   /** Rewrite every strip `.tif` under `stripRoot` as a tiled TIFF at
-    * the same relative path under `tiledRoot` — a distributed
-    * binaryFile scan with per-file executor-side conversion, the
-    * restaging pass `conv_tiled_tiffs` (tiff2octree.py:553) runs over
-    * its input list.
+    * the same relative path under `tiledRoot` — per-file conversion on
+    * executors over the [[TreeFiles]] listing, the restaging pass
+    * `conv_tiled_tiffs` (tiff2octree.py:553) runs over its input list.
     */
-  def convTiledDir(spark: SparkSession, stripRoot: String, tiledRoot: String, t: Int): Unit = {
-    import spark.implicits._
-    val prefix = new java.io.File(stripRoot).getAbsolutePath
-    files(spark, stripRoot).select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .foreach { case (path, bytes) =>
-        val abs = new java.io.File(new java.net.URI(path).getPath).getAbsolutePath
-        require(abs.startsWith(prefix), s"$abs outside $prefix")
-        val rel = abs.stripPrefix(prefix).stripPrefix("/")
-        val dst = new java.io.File(s"$tiledRoot/$rel")
-        dst.getParentFile.mkdirs()
-        java.nio.file.Files.write(dst.toPath, convTiled(bytes, t)): Unit
-      }
-  }
+  def convTiledDir(spark: SparkSession, stripRoot: String, tiledRoot: String, t: Int): Unit =
+    files(spark, stripRoot).foreach { case (rel, bytes) =>
+      val dst = new java.io.File(s"$tiledRoot/$rel")
+      dst.getParentFile.mkdirs()
+      java.nio.file.Files.write(dst.toPath, convTiled(bytes, t)): Unit
+    }
 
-  private def files(spark: SparkSession, outRoot: String): DataFrame =
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.tif")
-      .option("recursiveFileLookup", "true")
-      .load(outRoot)
+  private def files(spark: SparkSession, outRoot: String) =
+    TreeFiles.read(spark, outRoot, ".tif")
+
+  /** (channel, 0-based bz, by, bx) of a leaf file from its
+    * tree-relative path: the octant directory names and the
+    * reference's `default.<c>.tif` naming.
+    */
+  private def blockOf(rel: String): (Long, Long, Long, Long) = {
+    val (_, bz, by, bx, name) = OctreePipeline.blockOfPath(rel)
+    (name.stripPrefix("default.").stripSuffix(".tif").toLong, bz, by, bx)
+  }
 
   /** Absolute voxels (c, z, y, x, v) decoded purely from read-back
     * file bytes (IFD walk + strip inflate), zeros dropped — must equal
@@ -358,28 +355,11 @@ object TiffBinary {
     * octant directory names, the channel from the reference's
     * `default.<c>.tif` naming.
     */
-  /** (channel, bz, by, bx) decoded from the octant directory names and
-    * the reference's `default.<c>.tif` naming.
-    */
-  private def blockOf(path: String): (Long, Long, Long, Long) = {
-    val parts = path.split('/')
-    val c = parts.last.stripPrefix("default.").stripSuffix(".tif").toLong
-    val digits = parts.slice(parts.length - 1 - (Levels - 1), parts.length - 1)
-    var (bz, by, bx) = (0L, 0L, 0L)
-    digits.zipWithIndex.foreach { case (ds, i) =>
-      val lv = Levels - 2 - i
-      val d = ds.head - '1'
-      bx |= (d & 1L) << lv; by |= ((d >> 1) & 1L) << lv; bz |= ((d >> 2) & 1L) << lv
-    }
-    (c, bz, by, bx)
-  }
-
   def parseVoxels(spark: SparkSession, outRoot: String): DataFrame = {
     import spark.implicits._
-    files(spark, outRoot).select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val (c, bz, by, bx) = blockOf(path)
+    files(spark, outRoot)
+      .flatMap { case (rel, bytes) =>
+        val (c, bz, by, bx) = blockOf(rel)
         decodePages(bytes).flatMap { case (z, w, h, bits, comp, off, nb) =>
           require(bits == 16 && comp == 8, s"unexpected page encoding ($bits, $comp)")
           val raw = inflate(bytes.slice(off.toInt, (off + nb).toInt), (w * h * 2).toInt)
@@ -400,10 +380,9 @@ object TiffBinary {
     */
   def parseVoxelsTiled(spark: SparkSession, outRoot: String): DataFrame = {
     import spark.implicits._
-    files(spark, outRoot).select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val (c, bz, by, bx) = blockOf(path)
+    files(spark, outRoot)
+      .flatMap { case (rel, bytes) =>
+        val (c, bz, by, bx) = blockOf(rel)
         decodeTiledPages(bytes).zipWithIndex.flatMap { case (page, z) =>
           for {
             y <- page.indices; x <- page(y).indices

@@ -280,18 +280,24 @@ object VolumeQueries {
     * partition-column type drift, level mixing — hash-mismatches.
     */
   def pyramidSink(spark: SparkSession, dir: String): DataFrame = {
-    // fixed per-process path on tmpfs, Overwrite mode: repeated runs
-    // (best-of-4 bench, verify) reuse one directory instead of
-    // leaking a pyramid copy per call onto the stall-prone disk
+    // staged on tmpfs, reclaimed once the read-back is checkpointed
     val base = new java.io.File("/dev/shm")
     val root = if (base.isDirectory && base.canWrite) "/dev/shm"
       else System.getProperty("java.io.tmpdir")
     val tmp = s"$root/graft_pyr_sink_${graft.Staging.token()}"
-    writePyramid(graft.octree.Pyramid(graft.VoxelGrid(spark, dir)), tmp)
-    spark.read.parquet(tmp)
-      .select(col("level").cast("long").as("level"),
-        col("c").cast("long").as("c"), col("z"), col("y"), col("x"), col("v"))
-      .orderBy("level", "c", "z", "y", "x")
+    try {
+      writePyramid(graft.octree.Pyramid(graft.VoxelGrid(spark, dir)), tmp)
+      spark.read.parquet(tmp)
+        .select(col("level").cast("long").as("level"),
+          col("c").cast("long").as("c"), col("z"), col("y"), col("x"), col("v"))
+        .localCheckpoint(true)
+        .orderBy("level", "c", "z", "y", "x")
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
+      }
+      rm(new java.io.File(tmp))
+    }
   }
 
   /** src_volume_sink — the DSV2 WRITE direction of the custom
@@ -311,13 +317,20 @@ object VolumeQueries {
     val root = if (base.isDirectory && base.canWrite) "/dev/shm"
       else System.getProperty("java.io.tmpdir")
     val tmp = s"$root/graft_vsink_${graft.Staging.token()}"
-    graft.octree.Addressing.blockify(
-        graft.octree.Pyramid(graft.VoxelGrid(spark, dir)))
-      .select("level", "c", "bz", "by", "bx", "lz", "ly", "lx", "v")
-      .write.format("graft.sources.VolumeSink").option("path", tmp)
-      .mode(SaveMode.Overwrite).save()
-    VolumeSink.parseVoxels(spark, tmp).localCheckpoint(true)
-      .orderBy("level", "c", "z", "y", "x")
+    try {
+      graft.octree.Addressing.blockify(
+          graft.octree.Pyramid(graft.VoxelGrid(spark, dir)))
+        .select("level", "c", "bz", "by", "bx", "lz", "ly", "lx", "v")
+        .write.format("graft.sources.VolumeSink").option("path", tmp)
+        .mode(SaveMode.Overwrite).save()
+      VolumeSink.parseVoxels(spark, tmp).localCheckpoint(true)
+        .orderBy("level", "c", "z", "y", "x")
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
+      }
+      rm(new java.io.File(tmp))
+    }
   }
 
   /** src_n5_bytes — the PHYSICAL N5 round trip over the reference's

@@ -58,6 +58,14 @@ class OctreePipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     p
   }
 
+  /** (level, c, z, y, x, v) rows of a frame, sorted. */
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.select("level", "c", "z", "y", "x", "v").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getLong(3), r.getLong(4), r.getLong(5))).sorted.toSeq
+
+  @transient private lazy val model = rows(pyr)
+
   test("interrupted-then-resumed tree is byte-identical to a one-shot build") {
     val oneShot = s"$tmp/oneshot"
     val resumed = s"$tmp/resumed"
@@ -107,16 +115,81 @@ class OctreePipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("KTX mip-0 bytes decode to exactly the TIFF bytes' voxels at every level") {
     val root = s"$tmp/crossfmt"
     OctreePipeline.writeTree(spark, pyr, root).count()
-    def key(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4), r.getLong(5))).sorted.toSeq
-    val tif = key(OctreePipeline.parseTiffTree(spark, root))
-    val ktx = key(OctreePipeline.parseKtxTree(spark, root))
+    val tif = rows(OctreePipeline.parseTiffTree(spark, root))
+    val ktx = rows(OctreePipeline.parseKtxTree(spark, root))
     assert(tif.nonEmpty && tif === ktx)
     // and both equal the pyramid frame that wrote them
-    val model = pyr.select("level", "c", "z", "y", "x", "v").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4), r.getLong(5))).sorted.toSeq
     assert(tif === model)
+  }
+
+  test("writeTree shuffles once into defaultParallelism serialize tasks") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerStageCompleted}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
+    val sc = spark.sparkContext
+    assert(model.nonEmpty)
+    // (stage id, tasks) of every stage the write runs; a marker job
+    // after it guarantees every earlier event has been delivered
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int)]
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        stages.add(e.stageInfo.stageId -> e.stageInfo.numTasks): Unit
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull == "marker")
+          marker.countDown()
+    }
+    // the top levels only: a shuffle small enough that AQE would
+    // coalesce it into fewer partitions than cores
+    val w = OctreePipeline.writeTree(spark, pyr.filter(col("level") <= 3L), s"$tmp/parallel")
+    sc.addSparkListener(listener)
+    try {
+      assert(w.collect().length > 0)
+      sc.setJobGroup("marker", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      sc.clearJobGroup()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    // the marker's stage is the last; the write's result stage precedes it
+    val serialize = stages.asScala.toSeq.sortBy(_._1).dropRight(1).last
+    assert(serialize._2 === sc.defaultParallelism, stages.toString)
+    val plan = w.queryExecution.executedPlan
+    val exchanges = new AdaptiveSparkPlanHelper {}.collect(plan) {
+      case e: ShuffleExchangeLike => e
+      case e: ReusedExchangeExec => e
+    }
+    assert(exchanges.size === 1, plan.toString)
+  }
+
+  test("a tree rooted at a directory named like an octant parses back to the pyramid") {
+    val root = s"$tmp/1"
+    OctreePipeline.writeTree(spark, pyr, root).count()
+    assert(rows(OctreePipeline.parseTiffTree(spark, root)) === model)
+    assert(rows(OctreePipeline.parseKtxTree(spark, root)) === model)
+  }
+
+  test("both parsers skip hidden, underscore-prefixed and foreign files") {
+    val root = s"$tmp/planted"
+    OctreePipeline.writeTree(spark, pyr, root).count()
+    OctreePipeline.writeTransform(spark, root)
+    // copies of real blocks: parsed, they would add voxels
+    val listed = TreeFiles.list(root).map(_._1)
+    def plant(from: String, name: String): Unit = {
+      val src = new java.io.File(s"$root/$from")
+      java.nio.file.Files.copy(src.toPath, new java.io.File(src.getParentFile, name).toPath): Unit
+    }
+    plant(listed.find(_.endsWith(".tif")).get, ".default.0.tif")
+    plant(listed.find(_.endsWith(".ktx")).get, "_stray.ktx")
+    assert(TreeFiles.list(root).map(_._1).contains("transform.txt"))
+    assert(rows(OctreePipeline.parseTiffTree(spark, root)) === model)
+    assert(rows(OctreePipeline.parseKtxTree(spark, root)) === model)
+  }
+
+  test("parsing a missing tree throws") {
+    val root = s"$tmp/absent"
+    intercept[java.io.FileNotFoundException](OctreePipeline.parseTiffTree(spark, root))
+    intercept[java.io.FileNotFoundException](OctreePipeline.parseKtxTree(spark, root))
   }
 }

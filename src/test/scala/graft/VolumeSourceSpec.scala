@@ -128,6 +128,25 @@ class VolumeSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(lvl1.select("level").distinct().collect().map(_.get(0).toString).toSeq === Seq("1"))
   }
 
+  test("pyramid and volume sink rows remove their staging directories") {
+    val sf = "/root/testdata/sf0.001"
+    val shm = new java.io.File("/dev/shm")
+    val root = if (shm.isDirectory && shm.canWrite) shm
+      else new java.io.File(System.getProperty("java.io.tmpdir"))
+    val pid = ProcessHandle.current().pid()
+    def staged = Option(root.list()).toSeq.flatten.filter(n =>
+      n.startsWith(s"graft_pyr_sink_${pid}_") || n.startsWith(s"graft_vsink_${pid}_")).toSet
+    val before = staged
+    val pyramid = VolumeQueries.pyramidSink(spark, sf).collect().toSeq
+    val volume = VolumeQueries.volumeSink(spark, sf).collect().toSeq
+    assert(staged === before)
+    // both frames were read back in full before their files went away
+    val want = graft.octree.Pyramid(graft.VoxelGrid(spark, sf))
+      .select("level", "c", "z", "y", "x", "v").orderBy("level", "c", "z", "y", "x")
+      .collect().toSeq
+    assert(want.nonEmpty && pyramid === want && volume === want)
+  }
+
   test("bucketed pyramid store: level read partition-pruned, block stats plan zero Exchange") {
     // 8-cube, 2-channel fixture: full-res level spans 8 blocks, so
     // rows hash to MULTIPLE bucket ids and the file-count assertion
