@@ -116,7 +116,7 @@ object Bench {
       // the dedup_substring byte-vs-pass tradeoff measured on real
       // disk — SURVEY §6).
       .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/graft-spark"))
+        sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", s"${Scratch.root}/graft-spark"))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -184,7 +184,10 @@ object Bench {
       name -> (if (runs.exists(_ < 0)) -1.0 else runs.min)
     }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    // a failed query reads -1 and stays out of `total`; it is counted
+    // in `n_failed` and fails the process instead
     val total = results.map(_._2).filter(_ >= 0).sum
+    val nFailed = results.count(_._2 < 0)
     val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
     println(json)
     // Also persist to disk: the driver's stdout capture has truncated
@@ -204,7 +207,11 @@ object Bench {
     // summary line LAST so any tail window contains one complete,
     // parseable JSON object; the full per-query map lives in the line
     // above and in the on-disk artifact (bench_last.json).
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"sf":"$sfDir","cpus":$cpus,"queries_file":"$outPath"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"n_failed":$nFailed,"sf":"$sfDir","cpus":$cpus,"queries_file":"$outPath"}""")
     spark.stop()
+    if (nFailed > 0) {
+      System.err.println(s"[bench] $nFailed of ${results.size} queries failed")
+      sys.exit(1)
+    }
   }
 }

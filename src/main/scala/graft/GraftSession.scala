@@ -24,7 +24,7 @@ object GraftSession {
       .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
       // shuffle/spill on tmpfs: the host's disk has multi-second stalls
       // that block shuffle-file IO (observed 80s pauses at ~0% CPU)
-      .config("spark.local.dir", "/dev/shm/graft-spark")
+      .config("spark.local.dir", s"${Scratch.root}/graft-spark")
       // Every running sort and hash aggregate holds at least one whole
       // page. Spark sizes pages from heap / cores (16 MB on a 3 GB heap
       // with 4 cores), though most tasks here sort a few hundred KB;

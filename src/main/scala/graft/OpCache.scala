@@ -28,10 +28,11 @@ package graft
   * sim_graph_topk*, spec-pinned to never rebuild). Those call
   * [[getOrBuildPinned]] and stay memoized even under the bench.
   *
-  * Cleanup: every artifact root allocated through [[newArtifactRoot]]
-  * is deleted by a JVM shutdown hook, so repeated benchmark JVMs never
-  * accumulate RAM-backed parquet under /dev/shm; a build that fails
-  * midway rm's its partial directory before rethrowing.
+  * Cleanup: every artifact root allocated through [[buildArtifact]]
+  * is a [[Scratch.keep]] directory, deleted by the one scratch
+  * shutdown hook, so repeated benchmark JVMs never accumulate
+  * RAM-backed parquet under [[Scratch.root]]; a build that fails
+  * midway removes its partial directory before rethrowing.
   */
 object OpCache {
 
@@ -51,34 +52,15 @@ object OpCache {
     */
   private[graft] def setDisabledForTest(v: Boolean): Unit = cachingDisabled = v
 
-  private val builtRoots =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]()
-
-  locally {
-    java.lang.Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      builtRoots.forEach(p => graft.sources.TableRefs.rm(new java.io.File(p)))
-    }, "graft-opcache-cleanup"))
-  }
-
-  /** A fresh artifact directory path under tmpfs, registered for
-    * shutdown cleanup. The caller writes parquet under it.
-    */
-  def newArtifactRoot(prefix: String): String = {
-    val root =
-      s"${graft.sources.TableRefs.tmpfsRoot}/graft_${prefix}_${Staging.token()}"
-    builtRoots.add(root)
-    root
-  }
-
-  /** Allocate a root, run the build against it, rm the partial dir on
-    * failure. Returns the root.
+  /** Allocate a root that lives until JVM shutdown, run the build
+    * against it, rm the partial dir on failure. Returns the root.
     */
   def buildArtifact(prefix: String)(write: String => Unit): String = {
-    val root = newArtifactRoot(prefix)
+    val root = Scratch.keep(prefix)
     try { write(root); root }
     catch {
       case e: Throwable =>
-        graft.sources.TableRefs.rm(new java.io.File(root))
+        Scratch.rm(root)
         throw e
     }
   }

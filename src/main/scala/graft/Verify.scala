@@ -17,7 +17,7 @@ object Verify {
       .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
       // shuffle/spill on tmpfs: the host's disk has multi-second stalls
       // that block shuffle-file IO (observed 80s pauses at ~0% CPU)
-      .config("spark.local.dir", "/dev/shm/graft-spark")
+      .config("spark.local.dir", s"${Scratch.root}/graft-spark")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -2,6 +2,7 @@ package graft.octree
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Scratch
 import graft.VoxelGrid
 
 /** The octree END-TO-END capstone — the reference's
@@ -229,17 +230,6 @@ object OctreePipeline {
       .join(tifVox, Seq("level")).join(ktxVox, Seq("level"))
   }
 
-  private def tmpRoot(): String = {
-    val base = new java.io.File("/dev/shm")
-    val root = if (base.isDirectory && base.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    s"$root/graft_octp_${graft.Staging.token()}"
-  }
-
-  private def rm(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-  }
-
   /** Stage slices → ingest → pyramid → tree under `out`. The
     * `interrupt` flag runs the write as crash-then-resume: leaf level
     * only, then the resume pass completes the remaining levels
@@ -272,12 +262,11 @@ object OctreePipeline {
     * the hash misses.
     */
   def pipelineOctree(spark: SparkSession, dir: String): DataFrame = {
-    val out = tmpRoot() + "_main"
-    try {
+    Scratch.withDir("octp_main") { out =>
       buildTree(spark, dir, out, interrupt = true)
       parseTiffTree(spark, s"$out/tree").localCheckpoint(true)
         .orderBy("level", "c", "z", "y", "x")
-    } finally rm(new java.io.File(out))
+    }
   }
 
   /** pipeline_octree_audit — the per-artifact audit of a one-shot
@@ -286,10 +275,9 @@ object OctreePipeline {
     * by the oracle from the DuckDB pyramid reconstruction.
     */
   def pipelineOctreeAudit(spark: SparkSession, dir: String): DataFrame = {
-    val out = tmpRoot() + "_audit"
-    try {
+    Scratch.withDir("octp_audit") { out =>
       buildTree(spark, dir, out, interrupt = false)
       audit(spark, s"$out/tree").localCheckpoint(true).orderBy("level")
-    } finally rm(new java.io.File(out))
+    }
   }
 }

@@ -2,6 +2,7 @@ package graft.octree
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Scratch
 import graft.{Tables, VoxelGrid}
 
 /** Driver-contract entry points for every octree operator in
@@ -267,24 +268,13 @@ object OctreeQueries {
     * are reclaimed once the small probe frame is materialized.
     */
   def ktxBytes(spark: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File("/dev/shm")
-    val root = if (base.isDirectory && base.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val out = s"$root/graft_ktx_${graft.Staging.token()}"
-    try {
-      // write INSIDE the try so a failure mid-write still reclaims the
-      // pid-keyed staging dir (tmpfs doubles as the shuffle dir)
+    Scratch.withDir("ktx") { out =>
       KtxBinary.writeBlocks(spark, dir, out)
       // eager localCheckpoint: partitions materialize on EXECUTORS, so
       // the staging files can be reclaimed without routing the frame
       // through the driver (no corpus-sized collect in any bytes op)
       KtxBinary.parseProbes(spark, out).localCheckpoint(true)
         .orderBy("bz", "by", "bx", "probe")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(out))
     }
   }
 
@@ -300,23 +290,13 @@ object OctreeQueries {
     * and are reclaimed once the parsed frame is materialized.
     */
   def tiffBytes(spark: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File("/dev/shm")
-    val root = if (base.isDirectory && base.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val out = s"$root/graft_tiff_${graft.Staging.token()}"
-    try {
-      // write INSIDE the try (mid-write failures must not leak tmpfs
-      // staging); eager localCheckpoint keeps the corpus-sized voxel
+    Scratch.withDir("tiff") { out =>
+      // eager localCheckpoint keeps the corpus-sized voxel
       // frame DISTRIBUTED — the old collect+parallelize rebuilt it on
       // the driver, an OOM at 100× scale
       TiffBinary.writeBlocks(spark, dir, out)
       TiffBinary.parseVoxels(spark, out).localCheckpoint(true)
         .orderBy("c", "z", "y", "x")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(out))
     }
   }
 
@@ -331,22 +311,13 @@ object OctreeQueries {
     * checkpointed executor-side.
     */
   def retileBytes(spark: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File("/dev/shm")
-    val root = if (base.isDirectory && base.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val pid = graft.Staging.token()
-    val strip = s"$root/graft_rt_strip_$pid"
-    val tiled = s"$root/graft_rt_tiled_$pid"
-    try {
-      TiffBinary.writeBlocks(spark, dir, strip)
-      TiffBinary.convTiledDir(spark, strip, tiled, 16)
-      TiffBinary.parseVoxelsTiled(spark, tiled).localCheckpoint(true)
-        .orderBy("c", "z", "y", "x")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
+    Scratch.withDir("rt_strip") { strip =>
+      Scratch.withDir("rt_tiled") { tiled =>
+        TiffBinary.writeBlocks(spark, dir, strip)
+        TiffBinary.convTiledDir(spark, strip, tiled, 16)
+        TiffBinary.parseVoxelsTiled(spark, tiled).localCheckpoint(true)
+          .orderBy("c", "z", "y", "x")
       }
-      rm(new java.io.File(strip)); rm(new java.io.File(tiled))
     }
   }
 

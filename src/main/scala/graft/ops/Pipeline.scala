@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Scratch
 import graft.Tables
 
 /** End-to-end corpus-cleaning pipeline — the composed flow a
@@ -129,11 +130,7 @@ object Pipeline {
     */
   def export(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val base = new java.io.File("/dev/shm")
-    val root = if (base.isDirectory && base.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val tmp = s"$root/graft_export_${graft.Staging.token()}"
-    try {
+    Scratch.withDir("export") { tmp =>
       new java.io.File(tmp).mkdirs()
       import graft.sources.TfRecordBinary
       survivorsWithText(spark, dir)
@@ -181,11 +178,6 @@ object Pipeline {
           sum(col("wh")).as("text_cksum"))
         .orderBy("shard")
       agg.localCheckpoint(true).orderBy("shard")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(tmp))
     }
   }
 
@@ -426,11 +418,7 @@ object Pipeline {
     * hash-mismatch.
     */
   def backfill(spark: SparkSession, dir: String): DataFrame = {
-    val base0 = new java.io.File("/dev/shm")
-    val root = if (base0.isDirectory && base0.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val tmp = s"$root/graft_backfill_${graft.Staging.token()}"
-    try {
+    Scratch.withDir("backfill") { tmp =>
       val ev = Tables(spark, dir, "events")
         .withColumn("sec", graft.relational.Queries.nsToSec(col("ts")))
         .select(col("event_id"), col("event_type"),
@@ -458,11 +446,6 @@ object Pipeline {
         .orderBy("day", "event_type")
       val rows = spliced.collect().toIndexedSeq
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), spliced.schema)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(tmp))
     }
   }
 
@@ -544,12 +527,7 @@ object Pipeline {
       val mv1 = ivmApply(mv0, ivmDelta(spark, v1, cs)).orderBy("p")
       val rows = mv1.collect().toIndexedSeq
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), mv1.schema)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(store))
-    }
+    } finally Scratch.rm(store)
   }
 
   /** pipeline_ivm_join — incremental maintenance of a JOIN view, the

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Scratch
 import graft.Tables
 
 /** Deterministic sampling and sketch aggregates for training-data
@@ -569,11 +570,7 @@ object Sampling {
     */
   def hllMerge(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    val base0 = new java.io.File("/dev/shm")
-    val root = if (base0.isDirectory && base0.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val tmp = s"$root/graft_hllcube_${graft.Staging.token()}"
-    try {
+    Scratch.withDir("hllcube") { tmp =>
       val pairs = Tables(spark, dir, "events")
         .withColumn("sec", graft.relational.Queries.nsToSec(col("ts")))
         .select(col("event_type"), expr("sec div 86400L").as("day"),
@@ -617,11 +614,6 @@ object Sampling {
       val rows = out.collect().toIndexedSeq
       spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), out.schema)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(tmp))
     }
   }
 

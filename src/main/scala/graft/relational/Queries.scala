@@ -3,6 +3,7 @@ package graft.relational
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Scratch
 import graft.Tables
 
 /** Relational / analytic core: the engine basics (scan, filter, join,
@@ -2136,12 +2137,7 @@ object Queries {
     try {
       val rows = df.collect().toIndexedSeq
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), df.schema)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(store))
-    }
+    } finally Scratch.rm(store)
   }
 
   /** The staged plan behind [[qDpp]] — exposed so the plan audit can
@@ -2149,10 +2145,7 @@ object Queries {
     */
   private[graft] def dppPlan(spark: SparkSession,
       dir: String): (DataFrame, String) = {
-    val base = new java.io.File("/dev/shm")
-    val root = if (base.isDirectory && base.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val store = s"$root/graft_dpp_${graft.Staging.token()}"
+    val store = Scratch.path("dpp")
     val o = Tables(spark, dir, "orders")
       .select(col("o_orderkey").as("k"),
         floor(col("o_totalprice") * 100).cast("long").as("total_c"),
@@ -2293,16 +2286,6 @@ object Queries {
     */
   val JoinBuckets = 16
 
-  private def bjTmpfs: String = {
-    val base = new java.io.File("/dev/shm")
-    if (base.isDirectory && base.canWrite) "/dev/shm"
-    else System.getProperty("java.io.tmpdir")
-  }
-
-  private def bjRm(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(bjRm)); f.delete(): Unit
-  }
-
   /** Write a frame as a bucketed+sorted catalog table (external, on
     * tmpfs) with exactly one file per bucket — the layout under which
     * later joins and aggregations on the bucket key plan with no
@@ -2341,39 +2324,39 @@ object Queries {
     * Sort-free join plan — the part a results-only check cannot see.
     */
   def qBucketJoin(spark: SparkSession, dir: String): DataFrame = {
-    val tag = graft.Staging.token()
-    val tl = s"li_bkt_$tag"; val to = s"ord_bkt_$tag"
-    val root = s"$bjTmpfs/graft_bktjoin_$tag"
-    // the write-time sortBy is only USED by the planner when bucketed
-    // scans report their ordering — off by default since SPARK-28595
-    // (checking one-file-per-bucket costs a listing); this layout
-    // guarantees one file per bucket, so the check is safe here
-    val orderingConf = "spark.sql.legacy.bucketedTableScan.outputOrdering"
-    val prev = spark.conf.getOption(orderingConf)
-    spark.conf.set(orderingConf, "true")
-    try {
-      writeBucketed(Tables(spark, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount")),
-        "l_orderkey", tl, s"$root/l")
-      writeBucketed(Tables(spark, dir, "orders")
-        .select(col("o_orderkey"), col("o_orderpriority")),
-        "o_orderkey", to, s"$root/o")
-      val out = bucketJoined(spark, tl, to)
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n_li"),
-          sum(floor(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-            * 100).cast("long")).as("revenue_c"))
-        .orderBy("o_orderpriority")
-      val rows = out.collect().toIndexedSeq
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), out.schema)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(orderingConf, v)
-        case None => spark.conf.unset(orderingConf)
+    Scratch.withDir("bktjoin") { root =>
+      val tag = new java.io.File(root).getName.stripPrefix("graft_bktjoin_")
+      val tl = s"li_bkt_$tag"; val to = s"ord_bkt_$tag"
+      // the write-time sortBy is only USED by the planner when bucketed
+      // scans report their ordering — off by default since SPARK-28595
+      // (checking one-file-per-bucket costs a listing); this layout
+      // guarantees one file per bucket, so the check is safe here
+      val orderingConf = "spark.sql.legacy.bucketedTableScan.outputOrdering"
+      val prev = spark.conf.getOption(orderingConf)
+      spark.conf.set(orderingConf, "true")
+      try {
+        writeBucketed(Tables(spark, dir, "lineitem")
+          .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount")),
+          "l_orderkey", tl, s"$root/l")
+        writeBucketed(Tables(spark, dir, "orders")
+          .select(col("o_orderkey"), col("o_orderpriority")),
+          "o_orderkey", to, s"$root/o")
+        val out = bucketJoined(spark, tl, to)
+          .groupBy("o_orderpriority")
+          .agg(count(lit(1)).as("n_li"),
+            sum(floor(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
+              * 100).cast("long")).as("revenue_c"))
+          .orderBy("o_orderpriority")
+        val rows = out.collect().toIndexedSeq
+        spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), out.schema)
+      } finally {
+        prev match {
+          case Some(v) => spark.conf.set(orderingConf, v)
+          case None => spark.conf.unset(orderingConf)
+        }
+        spark.sql(s"DROP TABLE IF EXISTS $tl")
+        spark.sql(s"DROP TABLE IF EXISTS $to")
       }
-      spark.sql(s"DROP TABLE IF EXISTS $tl")
-      spark.sql(s"DROP TABLE IF EXISTS $to")
-      bjRm(new java.io.File(root))
     }
   }
 }

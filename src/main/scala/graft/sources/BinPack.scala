@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Scratch
 import graft.Tables
 
 /** BIN-PACKING COMPACTION — the table-maintenance action every
@@ -36,16 +37,6 @@ object BinPack {
   /** Target bins after compaction. */
   val NBins = 8L
 
-  private def tmpfsRoot: String = {
-    val base = new java.io.File("/dev/shm")
-    if (base.isDirectory && base.canWrite) "/dev/shm"
-    else System.getProperty("java.io.tmpdir")
-  }
-
-  private def rm(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-  }
-
   /** Staged store handle: per-file stats as (fid, lo_k, hi_k, n). */
   private[sources] final case class BStore(store: String, mk: Long,
       stats: Seq[(Long, Long, Long, Long)], binOf: Map[Long, Long],
@@ -55,15 +46,15 @@ object BinPack {
       stats.groupBy(s => binOf(s._1)).map { case (bin, ss) =>
         (bin, ss.map(_._2).min, ss.map(_._3).max, ss.map(_._4).sum)
       }.toSeq.sortBy(_._1)
-    def drop(): Unit = rm(new java.io.File(store))
+    def drop(): Unit = Scratch.rm(store)
   }
 
   /** Stage the 64-small-file layout (v1), plan the packing from the
     * stats metadata, and run the compaction rewrite (v2).
     */
   private[sources] def stage(spark: SparkSession, dir: String): BStore = {
-    val store = s"$tmpfsRoot/graft_binpack_${graft.Staging.token()}"
-    rm(new java.io.File(store))
+    val store = Scratch.path("binpack")
+    Scratch.rm(store)
     val o = Tables(spark, dir, "orders")
       .select(col("o_orderkey").as("k"),
         floor(col("o_totalprice") * 100).cast("long").as("total_c"))

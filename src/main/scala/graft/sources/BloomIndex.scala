@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Scratch
 import graft.Tables
 
 /** Per-file Bloom-filter POINT-LOOKUP index — the pruning class
@@ -45,22 +46,12 @@ object BloomIndex {
     */
   val Probes = 20L
 
-  private def tmpfsRoot: String = {
-    val base = new java.io.File("/dev/shm")
-    if (base.isDirectory && base.canWrite) "/dev/shm"
-    else System.getProperty("java.io.tmpdir")
-  }
-
-  private def rm(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-  }
-
   /** Staged store handle: root, file count, and the key maximum the
     * probe schedule derives from — shared with the spec.
     */
   private[graft] final case class BStore(store: String, filesTotal: Long,
       mk: Long) {
-    def drop(): Unit = rm(new java.io.File(store))
+    def drop(): Unit = Scratch.rm(store)
   }
 
   /** `graft_md5_prefix(i ':' key) % m` — one bloom position. */
@@ -71,8 +62,8 @@ object BloomIndex {
     * sparse bloom-word index and a tiny (p, m) sizing table beside it.
     */
   private[graft] def stage(spark: SparkSession, dir: String): BStore = {
-    val store = s"$tmpfsRoot/graft_bloom_${graft.Staging.token()}"
-    rm(new java.io.File(store))
+    val store = Scratch.path("bloom")
+    Scratch.rm(store)
     // one pass over orders (guide §1.2): the projection is lazily
     // checkpointed — the data write materializes it — and the sizing
     // table + key maximum come from ONE bounded aggregation whose rows

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Scratch
 import graft.Tables
 
 /** OPTIMISTIC CONCURRENCY — the ACID half of the table-format story
@@ -38,16 +39,6 @@ object CommitConflict {
   val DeltaA = 10L
   val DeltaB = 25L
   val DeltaC = -5L
-
-  private def tmpfsRoot: String = {
-    val base = new java.io.File("/dev/shm")
-    if (base.isDirectory && base.canWrite) "/dev/shm"
-    else System.getProperty("java.io.tmpdir")
-  }
-
-  private def rm(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-  }
 
   private val PPrefix = "p=([0-9]+)/".r
 
@@ -88,8 +79,8 @@ object CommitConflict {
 
   /** Stage the base store: one file per year partition, commit v1. */
   private[sources] def stage(spark: SparkSession, dir: String): String = {
-    val store = s"$tmpfsRoot/graft_occ_${graft.Staging.token()}"
-    rm(new java.io.File(store))
+    val store = Scratch.path("occ")
+    Scratch.rm(store)
     Tables(spark, dir, "orders")
       .select(col("o_orderkey").as("k"),
         floor(col("o_totalprice") * 100).cast("long").as("total_c"),
@@ -149,7 +140,7 @@ object CommitConflict {
         .orderBy("writer")
       val rows = out.collect().toIndexedSeq
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), out.schema)
-    } finally rm(new java.io.File(store))
+    } finally Scratch.rm(store)
   }
 
   /** Closed-form oracle: protocol outcomes from the conflict rules,

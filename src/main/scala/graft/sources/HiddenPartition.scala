@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Scratch
 import graft.Tables
 
 /** HIDDEN PARTITIONING — Iceberg's signature planning idea, the one
@@ -58,22 +59,12 @@ object HiddenPartition {
   val PmLo: Long = 1997L * 12 + (3 - 1)
   val PmHi: Long = 1997L * 12 + (7 - 1)
 
-  private def tmpfsRoot: String = {
-    val base = new java.io.File("/dev/shm")
-    if (base.isDirectory && base.canWrite) "/dev/shm"
-    else System.getProperty("java.io.tmpdir")
-  }
-
-  private def rm(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-  }
-
   /** Staged store handle: root plus the collected cell manifest
     * (bounded — one row per populated (pm, pb) cell).
     */
   private[sources] final case class HStore(store: String,
       cells: Seq[(Long, Long, Long)] = Nil) {
-    def drop(): Unit = rm(new java.io.File(store))
+    def drop(): Unit = Scratch.rm(store)
   }
 
   /** Write orders under the hidden (month, bucket) spec plus the cell
@@ -96,8 +87,8 @@ object HiddenPartition {
     * aggregates).
     */
   private[sources] def stageFrom(spark: SparkSession, o: DataFrame): HStore = {
-    val store = s"$tmpfsRoot/graft_hidpart_${graft.Staging.token()}"
-    rm(new java.io.File(store))
+    val store = Scratch.path("hidpart")
+    Scratch.rm(store)
     o.repartition(col("pm"), col("pb"))
       .write.mode(SaveMode.Overwrite).partitionBy("pm", "pb")
       .parquet(s"$store/data")

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Scratch
 import graft.Tables
 import graft.relational.Queries
 
@@ -51,12 +52,6 @@ object HiddenZOrder {
   /** Files per quarter cell: top [[FidBits]] bits of the z value. */
   val FidBits = 3
 
-  // staging helpers shared with the rest of the sources package —
-  // single definition in TableRefs so capacity/behavior tweaks can't
-  // silently diverge between ops
-  private def tmpfsRoot: String = TableRefs.tmpfsRoot
-  private def rm(f: java.io.File): Unit = TableRefs.rm(f)
-
   /** The raw projection the transforms apply over. */
   private def rawOrders(spark: SparkSession, dir: String): DataFrame =
     Tables(spark, dir, "orders").select(
@@ -96,15 +91,15 @@ object HiddenZOrder {
   private[sources] final case class HZStore(store: String, filesTotal: Long,
       afterQuarter: Seq[(Long, Long, Long)], hit: Seq[(Long, Long, Long)],
       cLo: Long, cHi: Long, tcLo: Long, tcHi: Long) {
-    def drop(): Unit = rm(new java.io.File(store))
+    def drop(): Unit = Scratch.rm(store)
   }
 
   /** Write the two-level layout + stats manifest and plan the query's
     * file list through both prune layers.
     */
   private[sources] def stage(spark: SparkSession, dir: String): HZStore = {
-    val store = s"$tmpfsRoot/graft_hidz_${graft.Staging.token()}"
-    rm(new java.io.File(store))
+    val store = Scratch.path("hidz")
+    Scratch.rm(store)
     // ONE pass over orders (guide §1.2/§5): maxima collected once and
     // baked into the transform as literals; the transformed base is
     // lazily checkpointed — the layout write materializes it — so the

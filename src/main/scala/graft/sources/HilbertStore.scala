@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Scratch
 import graft.Tables
 import graft.relational.Queries
 
@@ -103,12 +104,12 @@ object HilbertStore {
 
   private[graft] final case class Staged(store: String, filesTotal: Long,
       hitFids: Seq[Long], pkLo: Long, pkHi: Long, skLo: Long, skHi: Long) {
-    def drop(): Unit = TableRefs.rm(new java.io.File(store))
+    def drop(): Unit = Scratch.rm(store)
   }
 
   private[graft] def stage(spark: SparkSession, dir: String): Staged = {
-    val store = s"${TableRefs.tmpfsRoot}/graft_hstore_${graft.Staging.token()}"
-    TableRefs.rm(new java.io.File(store))
+    val store = Scratch.path("hstore")
+    Scratch.rm(store)
     val li = Tables(spark, dir, "lineitem")
       .select(col("l_partkey").as("pk"), col("l_suppkey").as("sk"),
         floor(col("l_extendedprice") * 100).cast("long").as("price_c"))

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Scratch
 import graft.Tables
 
 /** Incremental commit LOG with periodic CHECKPOINTS — the metadata
@@ -122,8 +123,8 @@ object LogStore {
     * [[logCompact]] and the streaming tail.
     */
   private[graft] def stageHistory(spark: SparkSession, dir: String): String = {
-    val root = s"$tmpfsRoot/graft_log_${graft.Staging.token()}"
-    rm(new java.io.File(root))
+    val root = Scratch.path("log")
+    Scratch.rm(root)
     val o = Tables(spark, dir, "orders")
       .select(year(col("o_orderdate")).cast("long").as("y"),
         col("o_orderkey").as("k"),
@@ -152,21 +153,11 @@ object LogStore {
     root
   }
 
-  private[graft] def dropRoot(root: String): Unit = rm(new java.io.File(root))
+  private[graft] def dropRoot(root: String): Unit = Scratch.rm(root)
 
   // ------------------------------------------------------------------
   //  src_log_compact — the op
   // ------------------------------------------------------------------
-
-  private def tmpfsRoot: String = {
-    val base = new java.io.File("/dev/shm")
-    if (base.isDirectory && base.canWrite) "/dev/shm"
-    else System.getProperty("java.io.tmpdir")
-  }
-
-  private def rm(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-  }
 
   /** src_log_compact — drive a 9-commit history through the delta
     * log: 7 year appends, a compaction commit (the first 3 year files
@@ -199,7 +190,7 @@ object LogStore {
         lit(v7.getLong(1)).as("v7_sum_pc"))
       val rows = out.collect().toIndexedSeq
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), out.schema)
-    } finally rm(new java.io.File(root))
+    } finally Scratch.rm(root)
   }
 
   /** Closed-form oracle: the commit history's outcome restated from

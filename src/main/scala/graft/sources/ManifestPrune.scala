@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Scratch
 import graft.Tables
 
 /** TWO-LEVEL METADATA PRUNING — the piece of the Iceberg metadata
@@ -29,20 +30,8 @@ object ManifestPrune {
   val MFiles = 64L
   val PerManifest = 8L
 
-  private def tmpfsRoot: String = {
-    val base = new java.io.File("/dev/shm")
-    if (base.isDirectory && base.canWrite) "/dev/shm"
-    else System.getProperty("java.io.tmpdir")
-  }
-
-  private def rm(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-  }
-
   def manifestPrune(spark: SparkSession, dir: String): DataFrame = {
-    val store = s"$tmpfsRoot/graft_mprune_${graft.Staging.token()}"
-    rm(new java.io.File(store))
-    try {
+    Scratch.withDir("mprune") { store =>
       val o = Tables(spark, dir, "orders")
         .select(col("o_orderkey").as("k"),
           floor(col("o_totalprice") * 100).cast("long").as("total_c"))
@@ -114,7 +103,7 @@ object ManifestPrune {
         lit(a.getLong(1)).as("sum_total_c"))
       val rows = out.collect().toIndexedSeq
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), out.schema)
-    } finally rm(new java.io.File(store))
+    }
   }
 
   /** Closed-form oracle: both metadata levels and the matched

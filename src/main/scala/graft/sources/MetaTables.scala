@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Scratch
 
 /** METADATA TABLES — the Iceberg `snapshots` / `files` / `refs`
   * introspection surface: the table's own bookkeeping exposed as a
@@ -35,9 +36,7 @@ object MetaTables {
 
   def metaTables(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val root = s"${TableRefs.tmpfsRoot}/graft_meta_${graft.Staging.token()}"
-    TableRefs.rm(new java.io.File(root))
-    try {
+    Scratch.withDir("meta") { root =>
       val o = TableRefs.ordersYkp(spark, dir)
       val (y0, _) = TableRefs.yearBounds(spark, dir)
       val base = TableRefs.writeYears(spark, root, o, y0, y0 + 2)
@@ -69,7 +68,7 @@ object MetaTables {
           coalesce(col("refs"), lit("")).as("refs"))
         .orderBy("version", "y")
         .localCheckpoint()
-    } finally TableRefs.rm(new java.io.File(root))
+    }
   }
 
   /** Closed-form oracle: v1 = rel over years [y0,y0+2], v2 = main over

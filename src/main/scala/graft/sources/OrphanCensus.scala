@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Scratch
 
 /** DISTRIBUTED orphan census — the scan half of orphan GC at the
   * scale where it actually hurts: a 100 TB table has 10⁶-10⁸ physical
@@ -36,9 +37,7 @@ object OrphanCensus {
 
   def orphanCensus(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val root = s"${TableRefs.tmpfsRoot}/graft_ocen_${graft.Staging.token()}"
-    TableRefs.rm(new java.io.File(root))
-    try {
+    Scratch.withDir("ocen") { root =>
       val o = TableRefs.ordersYkp(spark, dir)
       val (y0, _) = TableRefs.yearBounds(spark, dir)
       val base = TableRefs.writeYears(spark, root, o, y0, y0 + 2)
@@ -100,7 +99,7 @@ object OrphanCensus {
             .cast("long")).as("n_orphan_young"))
         .orderBy("y")
         .localCheckpoint()
-    } finally TableRefs.rm(new java.io.File(root))
+    }
   }
 
   /** Closed-form oracle: the staged layout per year offset d —

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Scratch
 
 /** ORPHAN-FILE GC — the table-format hygiene job every object-store
   * table needs at 100 TB: failed or abandoned write attempts leave
@@ -46,9 +47,7 @@ object OrphanGc {
   val GateMillis = 3600L * 1000L
 
   def orphanGc(spark: SparkSession, dir: String): DataFrame = {
-    val root = s"${TableRefs.tmpfsRoot}/graft_ogc_${graft.Staging.token()}"
-    TableRefs.rm(new java.io.File(root))
-    try {
+    Scratch.withDir("ogc") { root =>
       val o = TableRefs.ordersYkp(spark, dir)
       val (y0, _) = TableRefs.yearBounds(spark, dir)
       // v1: base years [y0, y0+2]; main starts here
@@ -98,7 +97,7 @@ object OrphanGc {
         lit(nAudit).as("n_rows_audit"), lit(sAudit).as("sum_pc_audit"))
       val rows = out.collect().toIndexedSeq
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), out.schema)
-    } finally TableRefs.rm(new java.io.File(root))
+    }
   }
 
   /** Closed-form oracle: the layout arithmetic (one file per staged

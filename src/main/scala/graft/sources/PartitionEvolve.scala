@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Scratch
 import graft.Tables
 
 /** PARTITION-SPEC EVOLUTION at the manifest seam — the Iceberg idea
@@ -37,23 +38,11 @@ object PartitionEvolve {
   /** Years at-or-below this wrote under spec 1 (by year). */
   val SpecCut = 1997L
 
-  private def tmpfsRoot: String = {
-    val base = new java.io.File("/dev/shm")
-    if (base.isDirectory && base.canWrite) "/dev/shm"
-    else System.getProperty("java.io.tmpdir")
-  }
-
-  private def rm(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-  }
-
   private val S1Path = "ps=1/p=([0-9]+)/".r
   private val S2Path = "ps=2/p=([0-9]+)/m=([0-9]+)/".r
 
   def partitionEvolve(spark: SparkSession, dir: String): DataFrame = {
-    val store = s"$tmpfsRoot/graft_pevolve_${graft.Staging.token()}"
-    rm(new java.io.File(store))
-    try {
+    Scratch.withDir("pevolve") { store =>
       val base = Tables(spark, dir, "orders")
         .select(col("o_orderkey").as("k"),
           floor(col("o_totalprice") * 100).cast("long").as("total_c"),
@@ -108,7 +97,7 @@ object PartitionEvolve {
           col("rows_read"), col("n_match"), col("sum_total_c"))
       val rows = agg.collect().toIndexedSeq
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), agg.schema)
-    } finally rm(new java.io.File(store))
+    }
   }
 
   /** Closed-form oracle: the two specs' pruning arithmetic plus the

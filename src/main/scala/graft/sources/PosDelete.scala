@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Scratch
 import graft.Tables
 
 /** POSITION DELETES — the second of Iceberg v2's two delete-file
@@ -40,19 +41,9 @@ object PosDelete {
   /** Key-range files the table is laid out as. */
   val NFiles = 8L
 
-  private def rm(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-  }
-
-  private def tmpfsRoot: String = {
-    val base = new java.io.File("/dev/shm")
-    if (base.isDirectory && base.canWrite) "/dev/shm"
-    else System.getProperty("java.io.tmpdir")
-  }
-
   /** Staged store handle. */
   private[sources] final case class PDStore(store: String, v1: Int, v2: Int) {
-    def drop(): Unit = rm(new java.io.File(store))
+    def drop(): Unit = Scratch.rm(store)
   }
 
   /** The data scan WITH the parquet metadata columns that position
@@ -70,8 +61,8 @@ object PosDelete {
     * data files untouched.
     */
   private[sources] def stage(spark: SparkSession, dir: String): PDStore = {
-    val store = s"$tmpfsRoot/graft_posdel_${graft.Staging.token()}"
-    rm(new java.io.File(store))
+    val store = Scratch.path("posdel")
+    Scratch.rm(store)
     val o = Tables(spark, dir, "orders")
       .select(col("o_orderkey").as("k"),
         floor(col("o_totalprice") * 100).cast("long").as("total_c"))

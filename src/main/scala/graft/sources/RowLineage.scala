@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Scratch
 import graft.Tables
 
 /** ROW LINEAGE — the Iceberg-v3 addition the rest of the table-format
@@ -34,20 +35,8 @@ import graft.Tables
   */
 object RowLineage {
 
-  private def rm(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-  }
-
-  private def tmpfsRoot: String = {
-    val base = new java.io.File("/dev/shm")
-    if (base.isDirectory && base.canWrite) "/dev/shm"
-    else System.getProperty("java.io.tmpdir")
-  }
-
   def rowLineage(spark: SparkSession, dir: String): DataFrame = {
-    val store = s"$tmpfsRoot/graft_lineage_${graft.Staging.token()}"
-    rm(new java.io.File(store))
-    try {
+    Scratch.withDir("lineage") { store =>
       val base = Tables(spark, dir, "orders")
         .select(col("o_orderkey").as("k"), col("o_custkey").as("ck"),
           floor(col("o_totalprice") * 100).cast("long").as("total_c"),
@@ -108,7 +97,7 @@ object RowLineage {
         .orderBy("created_seq", "updated_seq")
       val rows = out.collect().toIndexedSeq
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), out.schema)
-    } finally rm(new java.io.File(store))
+    }
   }
 
   /** Closed-form oracle: the three lineage cohorts restated from the

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Scratch
 import graft.Tables
 
 /** Iceberg-style SCHEMA EVOLUTION at the [[SnapshotStore]] manifest
@@ -35,16 +36,6 @@ import graft.Tables
 object SchemaEvolve {
 
   final case class Field(id: Int, name: String, tpe: String)
-
-  private def tmpfsRoot: String = {
-    val base = new java.io.File("/dev/shm")
-    if (base.isDirectory && base.canWrite) "/dev/shm"
-    else System.getProperty("java.io.tmpdir")
-  }
-
-  private def rm(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-  }
 
   /** Commit a schema version (metadata lives under an underscore dir —
     * [[SnapshotStore.listDataFiles]] never absorbs it as data).
@@ -104,8 +95,8 @@ object SchemaEvolve {
     * snapshot = all three generations, schemas v1..v3 committed).
     */
   private[graft] def stage(spark: SparkSession, dir: String): String = {
-    val store = s"$tmpfsRoot/graft_sevolve_${graft.Staging.token()}"
-    rm(new java.io.File(store))
+    val store = Scratch.path("sevolve")
+    Scratch.rm(store)
     new java.io.File(store).mkdirs()
     val d = Tables(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
@@ -142,7 +133,7 @@ object SchemaEvolve {
   }
 
   private[graft] def dropStore(store: String): Unit =
-    rm(new java.io.File(store))
+    Scratch.rm(store)
 
   /** src_schema_evolve — the full lifecycle: three generations under
     * three schemas, one id-mapped read across all of them, aggregated.

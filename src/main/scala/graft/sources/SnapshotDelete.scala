@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Scratch
 
 /** Row-level DELETE on the snapshot store WITHOUT rewriting data files
   * — the Iceberg-v2 equality-delete idea, completing the table-format
@@ -21,10 +22,6 @@ import org.apache.spark.sql.functions._
   * file lists byte-identical across all three versions).
   */
 object SnapshotDelete {
-
-  private def rm(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-  }
 
   /** Stage orders as v1 and commit the two delete versions; returns
     * the store root (v1 = full table, v2 = minus k%10==3, v3 = minus
@@ -64,7 +61,7 @@ object SnapshotDelete {
       }.reduce(_ unionByName _).orderBy("version")
       val rows = agg.collect().toIndexedSeq
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), agg.schema)
-    } finally rm(new java.io.File(store))
+    } finally Scratch.rm(store)
   }
 
   /** src_delete_compact — COMPACTION absorbs the delete vectors: the
@@ -104,7 +101,7 @@ object SnapshotDelete {
         .orderBy("version")
       val rows = agg.collect().toIndexedSeq
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), agg.schema)
-    } finally rm(new java.io.File(store))
+    } finally Scratch.rm(store)
   }
 
   /** src_erasure_proof — the RIGHT-TO-BE-FORGOTTEN flow certified at
@@ -182,7 +179,7 @@ object SnapshotDelete {
         lit(live.getLong(1)).as("sum_live_total_c"))
       val rows = out.collect().toIndexedSeq
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), out.schema)
-    } finally rm(new java.io.File(store))
+    } finally Scratch.rm(store)
   }
 
   /** Closed-form oracle of [[erasureProof]]: subject pick, all three

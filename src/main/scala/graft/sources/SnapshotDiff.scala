@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Scratch
 
 /** INCREMENTAL CHANGELOG SCAN between two snapshot versions — the
   * Iceberg `changelog` / Delta CDF idea: a downstream consumer of a
@@ -27,12 +28,6 @@ import org.apache.spark.sql.functions._
   * the touched partitions' rows.
   */
 object SnapshotDiff {
-
-  // staging helpers shared with the rest of the sources package —
-  // single definition in TableRefs so capacity/behavior tweaks can't
-  // silently diverge between ops
-  private def tmpfsRoot: String = TableRefs.tmpfsRoot
-  private def rm(f: java.io.File): Unit = TableRefs.rm(f)
 
   /** The diff frame between two committed versions: (k, op, total_c)
     * where total_c is the post-image for I/U/N and the pre-image for D.
@@ -64,9 +59,7 @@ object SnapshotDiff {
     * manifests.
     */
   def snapshotDiff(spark: SparkSession, dir: String): DataFrame = {
-    val store = s"$tmpfsRoot/graft_sdiff_${graft.Staging.token()}"
-    rm(new java.io.File(store))
-    try {
+    Scratch.withDir("sdiff") { store =>
       val (v1, v2, _) = TableMerge.runMerge(spark, dir, store)
       val agg = diff(spark, store, v1, v2)
         .groupBy("op")
@@ -75,7 +68,7 @@ object SnapshotDiff {
         .orderBy("op")
       val rows = agg.collect().toIndexedSeq
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), agg.schema)
-    } finally rm(new java.io.File(store))
+    }
   }
 
   /** stream_snapshot_tail — the CHANGELOG STREAMING SOURCE, the read
@@ -155,8 +148,8 @@ object SnapshotDiff {
       val rows = agg.collect().toIndexedSeq
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), agg.schema)
     } finally {
-      rm(new java.io.File(store)); rm(new java.io.File(outRoot))
-      rm(new java.io.File(s"${store}_ckpt"))
+      Scratch.rm(store); Scratch.rm(outRoot)
+      Scratch.rm(s"${store}_ckpt")
     }
   }
 

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Scratch
 import graft.Tables
 
 /** Manifest-level statistics pruning — the Iceberg idea that
@@ -23,16 +24,6 @@ object StatsPrune {
   /** Files per partition (orderkey-range split). */
   val PruneFiles = 4L
 
-  private def tmpfsRoot: String = {
-    val base = new java.io.File("/dev/shm")
-    if (base.isDirectory && base.canWrite) "/dev/shm"
-    else System.getProperty("java.io.tmpdir")
-  }
-
-  private def rm(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-  }
-
   /** Staged store handle shared by the batch op and its streaming
     * twin: root, stats-cell count, the key maximum the bands are
     * fractions of, and the collected per-file stats manifest (bounded
@@ -40,7 +31,7 @@ object StatsPrune {
     */
   private[graft] final case class PStore(store: String, filesTotal: Long,
       mk: Long, stats: Seq[(Long, Long, Long, Long)] = Nil) {
-    def drop(): Unit = rm(new java.io.File(store))
+    def drop(): Unit = Scratch.rm(store)
   }
 
   /** Write orders as (year, orderkey-range) files with the per-file
@@ -57,8 +48,8 @@ object StatsPrune {
     * planner gets them driver-side for free.
     */
   private[graft] def stage(spark: SparkSession, dir: String): PStore = {
-    val store = s"$tmpfsRoot/graft_sprune_${graft.Staging.token()}"
-    rm(new java.io.File(store))
+    val store = Scratch.path("sprune")
+    Scratch.rm(store)
     val o = Tables(spark, dir, "orders")
       .select(col("o_orderkey").as("k"),
         floor(col("o_totalprice") * 100).cast("long").as("total_c"),

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Scratch
 import graft.Tables
 
 /** CDC MERGE (upsert + delete) against a [[SnapshotStore]]-versioned
@@ -38,16 +39,6 @@ object TableMerge {
     * oracle stay in lock-step by construction.
     */
   val InsOffset = 1000000000000L
-
-  private def tmpfsRoot: String = {
-    val base = new java.io.File("/dev/shm")
-    if (base.isDirectory && base.canWrite) "/dev/shm"
-    else System.getProperty("java.io.tmpdir")
-  }
-
-  private def rm(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-  }
 
   /** The base table: one row per order, partitioned by order year. */
   private[sources] def baseTable(spark: SparkSession, dir: String): DataFrame =
@@ -195,14 +186,14 @@ object TableMerge {
   /** Stage the base and return the store path — streaming-twin entry. */
   private[graft] def stageStore(spark: SparkSession, dir: String,
       tag: String): String = {
-    val store = s"$tmpfsRoot/graft_${tag}_${graft.Staging.token()}"
-    rm(new java.io.File(store))
+    val store = Scratch.path(tag)
+    Scratch.rm(store)
     stageBase(spark, dir, store): Unit
     store
   }
 
   private[graft] def dropStore(store: String): Unit =
-    rm(new java.io.File(store))
+    Scratch.rm(store)
 
   /** Exactly-once streaming CDC application — the foreachBatch body:
     * skip a replayed batch entirely (its previous attempt committed),
@@ -222,11 +213,9 @@ object TableMerge {
     * leaked untouched-partition rewrite all hash-mismatch.
     */
   def snapshotMerge(spark: SparkSession, dir: String): DataFrame = {
-    val store = s"$tmpfsRoot/graft_tmerge_${graft.Staging.token()}"
-    rm(new java.io.File(store))
-    try {
+    Scratch.withDir("tmerge") { store =>
       runMerge(spark, dir, store): Unit
       mergeReport(spark, store)
-    } finally rm(new java.io.File(store))
+    }
   }
 }

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Scratch
 import graft.Tables
 
 /** Named refs (branches + tags) over [[SnapshotStore]] versions, and
@@ -91,19 +92,6 @@ object Refs {
 /** The src_branch_tag / src_wap operator pair. */
 object TableRefs {
 
-  // `private[graft]` (not [sources]): the ops package stages the
-  // persisted graph-ANN index through the same helpers — one
-  // definition, no drift
-  private[graft] def tmpfsRoot: String = {
-    val base = new java.io.File("/dev/shm")
-    if (base.isDirectory && base.canWrite) "/dev/shm"
-    else System.getProperty("java.io.tmpdir")
-  }
-
-  private[graft] def rm(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-  }
-
   /** orders as (y, k, pc) — the shared staging projection. */
   private[sources] def ordersYkp(spark: SparkSession, dir: String): DataFrame =
     Tables(spark, dir, "orders")
@@ -142,9 +130,7 @@ object TableRefs {
     * branch's years, or a manifest/ref mix-up all hash-mismatch.
     */
   def branchTag(spark: SparkSession, dir: String): DataFrame = {
-    val root = s"$tmpfsRoot/graft_refs_${graft.Staging.token()}"
-    rm(new java.io.File(root))
-    try {
+    Scratch.withDir("refs") { root =>
       val o = ordersYkp(spark, dir)
       val (y0, _) = yearBounds(spark, dir)
       // v1: base years [y0, y0+2]; tag rel + both branch heads start here
@@ -176,7 +162,7 @@ object TableRefs {
       import spark.implicits._
       perRef.toDF("ref", "version", "n_files", "n_rows", "sum_pc")
         .coalesce(1).orderBy("ref")
-    } finally rm(new java.io.File(root))
+    }
   }
 
   /** Closed-form oracle for [[branchTag]]: the three refs' year
@@ -234,9 +220,7 @@ object TableRefs {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val root = s"$tmpfsRoot/graft_swap_${graft.Staging.token()}"
-    rm(new java.io.File(root))
-    try {
+    Scratch.withDir("swap") { root =>
       val o = ordersYkp(spark, dir).withColumn("yd", col("y"))
       val (y0, _) = yearBounds(spark, dir)
       val base = writeYears(spark, root,
@@ -291,7 +275,7 @@ object TableRefs {
       q.stop()
       results.toSeq.sortBy(_._1).toDF("batch_year_off", "violations",
         "published", "head_rows", "head_sum_pc", "head_max_y")
-    } finally rm(new java.io.File(root))
+    }
   }
 
   /** Closed-form oracle for [[streamWap]]: per-batch protocol outcomes
@@ -336,9 +320,7 @@ object TableRefs {
     * versions, both audits' violation counts, and the head aggregate.
     */
   def wap(spark: SparkSession, dir: String): DataFrame = {
-    val root = s"$tmpfsRoot/graft_wap_${graft.Staging.token()}"
-    rm(new java.io.File(root))
-    try {
+    Scratch.withDir("wap") { root =>
       val o = ordersYkp(spark, dir)
         .withColumn("yd", col("y")) // declared partition year
       val (y0, _) = yearBounds(spark, dir)
@@ -396,7 +378,7 @@ object TableRefs {
         lit(head.getLong(2)).as("head_max_y"))
       val rows = out.collect().toIndexedSeq
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), out.schema)
-    } finally rm(new java.io.File(root))
+    }
   }
 
   /** Closed-form oracle for [[wap]]: the protocol's outcome restated

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Scratch
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -59,10 +60,7 @@ object VolumeQueries {
     * 100 TB volume instead of all of them.
     */
   def volumeZonemap(spark: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File("/dev/shm")
-    val root = if (base.isDirectory && base.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val path = s"$root/graft_zonemap_${graft.Staging.token()}.csv"
+    val path = Scratch.path("zonemap") + ".csv"
     try {
       VolumeSource.buildZonemap(spark, path): Unit
       val df = spark.read.format("graft.sources.VolumeSource")
@@ -77,7 +75,7 @@ object VolumeQueries {
           col("n_vox"), col("sum_v"), col("min_v"))
       val rows = agg.collect().toIndexedSeq
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), agg.schema)
-    } finally { new java.io.File(path).delete(): Unit }
+    } finally Scratch.rm(path)
   }
 
   /** Pyramid sink: the octree write path — parquet partitioned by
@@ -220,23 +218,16 @@ object VolumeQueries {
     * file count collapses to ≤ nf, every file ≤ the row target).
     */
   def volumeCompact(spark: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File("/dev/shm")
-    val root = if (base.isDirectory && base.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val frag = s"$root/graft_vcmp_frag_${graft.Staging.token()}"
-    val comp = s"$root/graft_vcmp_${graft.Staging.token()}"
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
+    Scratch.withDir("vcmp_frag") { frag =>
+      Scratch.withDir("vcmp") { comp =>
+        fragmentStore(spark, dir, frag)
+        compactStore(spark, frag, comp)
+        spark.read.parquet(comp)
+          .select(col("level").cast("long").as("level"),
+            col("c").cast("long").as("c"), col("z"), col("y"), col("x"), col("v"))
+          .orderBy("level", "c", "z", "y", "x").localCheckpoint(true)
+      }
     }
-    rm(new java.io.File(frag))
-    fragmentStore(spark, dir, frag)
-    compactStore(spark, frag, comp)
-    val back = spark.read.parquet(comp)
-      .select(col("level").cast("long").as("level"),
-        col("c").cast("long").as("c"), col("z"), col("y"), col("x"), col("v"))
-      .orderBy("level", "c", "z", "y", "x").localCheckpoint(true)
-    rm(new java.io.File(frag)); rm(new java.io.File(comp))
-    back
   }
 
   /** src_volume_snapshot — snapshot isolation + time travel over the
@@ -253,23 +244,15 @@ object VolumeQueries {
     * without disturbing v2.
     */
   def volumeSnapshot(spark: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File("/dev/shm")
-    val root = if (base.isDirectory && base.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val store = s"$root/graft_vsnap_${graft.Staging.token()}"
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
+    Scratch.withDir("vsnap") { store =>
+      fragmentStore(spark, dir, store)
+      val v1 = SnapshotStore.commit(store, SnapshotStore.listDataFiles(store))
+      SnapshotStore.commit(store, compactVersion(spark, store, v1)): Unit
+      SnapshotStore.read(spark, store, v1)
+        .select(col("level").cast("long").as("level"),
+          col("c").cast("long").as("c"), col("z"), col("y"), col("x"), col("v"))
+        .orderBy("level", "c", "z", "y", "x").localCheckpoint(true)
     }
-    rm(new java.io.File(store))
-    fragmentStore(spark, dir, store)
-    val v1 = SnapshotStore.commit(store, SnapshotStore.listDataFiles(store))
-    SnapshotStore.commit(store, compactVersion(spark, store, v1)): Unit
-    val back = SnapshotStore.read(spark, store, v1)
-      .select(col("level").cast("long").as("level"),
-        col("c").cast("long").as("c"), col("z"), col("y"), col("x"), col("v"))
-      .orderBy("level", "c", "z", "y", "x").localCheckpoint(true)
-    rm(new java.io.File(store))
-    back
   }
 
   /** src_pyramid_sink — the pyramid sink as its own ORACLE row: build
@@ -280,23 +263,14 @@ object VolumeQueries {
     * partition-column type drift, level mixing — hash-mismatches.
     */
   def pyramidSink(spark: SparkSession, dir: String): DataFrame = {
-    // staged on tmpfs, reclaimed once the read-back is checkpointed
-    val base = new java.io.File("/dev/shm")
-    val root = if (base.isDirectory && base.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val tmp = s"$root/graft_pyr_sink_${graft.Staging.token()}"
-    try {
+    // the read-back is checkpointed before the staging dir goes
+    Scratch.withDir("pyr_sink") { tmp =>
       writePyramid(graft.octree.Pyramid(graft.VoxelGrid(spark, dir)), tmp)
       spark.read.parquet(tmp)
         .select(col("level").cast("long").as("level"),
           col("c").cast("long").as("c"), col("z"), col("y"), col("x"), col("v"))
         .localCheckpoint(true)
         .orderBy("level", "c", "z", "y", "x")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(tmp))
     }
   }
 
@@ -313,11 +287,7 @@ object VolumeQueries {
     * lossless end to end.
     */
   def volumeSink(spark: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File("/dev/shm")
-    val root = if (base.isDirectory && base.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val tmp = s"$root/graft_vsink_${graft.Staging.token()}"
-    try {
+    Scratch.withDir("vsink") { tmp =>
       graft.octree.Addressing.blockify(
           graft.octree.Pyramid(graft.VoxelGrid(spark, dir)))
         .select("level", "c", "bz", "by", "bx", "lz", "ly", "lx", "v")
@@ -325,11 +295,6 @@ object VolumeQueries {
         .mode(SaveMode.Overwrite).save()
       VolumeSink.parseVoxels(spark, tmp).localCheckpoint(true)
         .orderBy("level", "c", "z", "y", "x")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(tmp))
     }
   }
 
@@ -343,23 +308,15 @@ object VolumeQueries {
     * `gen_block_from_n5_zarr`:330 read direction). Shares the
     * oct_pyramid oracle verbatim — a green row proves the bytes on
     * disk hold exactly the pyramid the relational model claims.
-    * Staging lives on tmpfs, reclaimed once the parsed frame is
-    * checkpointed executor-side.
+    * The container is staged under [[graft.Scratch]] and removed when
+    * the op returns or throws; the parsed frame is checkpointed first,
+    * so the result reads nothing from it.
     */
   def n5Bytes(spark: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File("/dev/shm")
-    val root = if (base.isDirectory && base.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val out = s"$root/graft_n5_${graft.Staging.token()}"
-    try {
+    Scratch.withDir("n5") { out =>
       N5Binary.writeContainer(spark, dir, out)
       N5Binary.parseVoxels(spark, out).localCheckpoint(true)
         .orderBy("level", "c", "z", "y", "x")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(out))
     }
   }
 
@@ -371,19 +328,10 @@ object VolumeQueries {
     * discovery model and the physical container agree row for row.
     */
   def n5Discover(spark: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File("/dev/shm")
-    val root = if (base.isDirectory && base.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val out = s"$root/graft_n5d_${graft.Staging.token()}"
-    try {
+    Scratch.withDir("n5d") { out =>
       N5Binary.writeContainer(spark, dir, out)
       N5Binary.discoverLevels(spark, out).localCheckpoint(true)
         .orderBy("level", "c")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(out))
     }
   }
 
@@ -398,19 +346,10 @@ object VolumeQueries {
     * oct_pyramid oracle verbatim.
     */
   def zarrBytes(spark: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File("/dev/shm")
-    val root = if (base.isDirectory && base.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val out = s"$root/graft_zarr_${graft.Staging.token()}"
-    try {
+    Scratch.withDir("zarr") { out =>
       ZarrBinary.writeContainer(spark, dir, out)
       ZarrBinary.parseVoxels(spark, out).localCheckpoint(true)
         .orderBy("level", "c", "z", "y", "x")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(out))
     }
   }
 
@@ -420,19 +359,10 @@ object VolumeQueries {
     * two container flavors and the relational model agree row for row.
     */
   def zarrDiscover(spark: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File("/dev/shm")
-    val root = if (base.isDirectory && base.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val out = s"$root/graft_zarrd_${graft.Staging.token()}"
-    try {
+    Scratch.withDir("zarrd") { out =>
       ZarrBinary.writeContainer(spark, dir, out)
       ZarrBinary.discoverLevels(spark, out).localCheckpoint(true)
         .orderBy("level", "c")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(out))
     }
   }
 
@@ -443,19 +373,10 @@ object VolumeQueries {
     * to. Shares the oct_pyramid oracle like both v2 flavors.
     */
   def zarr3Bytes(spark: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File("/dev/shm")
-    val root = if (base.isDirectory && base.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val out = s"$root/graft_zarr3_${graft.Staging.token()}"
-    try {
+    Scratch.withDir("zarr3") { out =>
       Zarr3Binary.writeContainer(spark, dir, out)
       Zarr3Binary.parseVoxels(spark, out).localCheckpoint(true)
         .orderBy("level", "c", "z", "y", "x")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(out))
     }
   }
 
@@ -464,19 +385,10 @@ object VolumeQueries {
     * oracle (all three container catalogs agree row for row).
     */
   def zarr3Discover(spark: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File("/dev/shm")
-    val root = if (base.isDirectory && base.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val out = s"$root/graft_zarr3d_${graft.Staging.token()}"
-    try {
+    Scratch.withDir("zarr3d") { out =>
       Zarr3Binary.writeContainer(spark, dir, out)
       Zarr3Binary.discoverLevels(spark, out).localCheckpoint(true)
         .orderBy("level", "c")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(out))
     }
   }
 
@@ -491,14 +403,8 @@ object VolumeQueries {
     * sums would all drift on any corruption).
     */
   def jsonlScan(spark: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File("/dev/shm")
-    val root = if (base.isDirectory && base.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val tmp = s"$root/graft_jsonl_${graft.Staging.token()}"
     val docs = graft.Tables(spark, dir, "documents")
-    try {
-      // write INSIDE the try: a mid-write failure must not leak the
-      // pid-keyed tmpfs staging dir (tmpfs doubles as the shuffle dir)
+    Scratch.withDir("jsonl") { tmp =>
       docs.write.mode("overwrite").json(tmp)
       // the aggregate is a handful of rows — materialize it on the
       // driver so the corpus-sized JSONL copy can be reclaimed from
@@ -513,11 +419,6 @@ object VolumeQueries {
         .orderBy("source")
       spark.createDataFrame(
         spark.sparkContext.parallelize(agg.collect().toIndexedSeq, 1), agg.schema)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(tmp))
     }
   }
 
@@ -532,15 +433,11 @@ object VolumeQueries {
     * + the same concat — any mangled byte flips the hash.
     */
   def csvScan(spark: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File("/dev/shm")
-    val root = if (base.isDirectory && base.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val tmp = s"$root/graft_csv_${graft.Staging.token()}"
     graft.functions.GraftFunctions.register(spark)
     val docs = graft.Tables(spark, dir, "documents")
       .withColumn("text2", concat(col("text"), lit(",\"\nx")))
       .select(col("doc_id"), col("source"), col("text2"))
-    try {
+    Scratch.withDir("csv") { tmp =>
       // the WRITER trims leading/trailing whitespace by default —
       // silent corruption for text ending in spaces/newlines; both
       // trims must be off for a lossless round trip (spec-pinned)
@@ -561,11 +458,6 @@ object VolumeQueries {
         .orderBy("source")
       spark.createDataFrame(
         spark.sparkContext.parallelize(agg.collect().toIndexedSeq, 1), agg.schema)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(tmp))
     }
   }
 
@@ -595,14 +487,10 @@ object VolumeQueries {
     * same plan, two writers.
     */
   def csvBadRecords(spark: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File("/dev/shm")
-    val root = if (base.isDirectory && base.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val tmp = s"$root/graft_badcsv_${graft.Staging.token()}"
     val o = graft.Tables(spark, dir, "orders")
       .select(col("o_orderkey").as("k"),
         floor(col("o_totalprice") * 100).cast("long").as("pc"))
-    try {
+    Scratch.withDir("badcsv") { tmp =>
       // distributed render: every 37th key writes a malformed numeric
       o.select(when(col("k") % 37 === 0,
           concat(lit("BAD_"), col("k").cast("string"), lit(","),
@@ -631,11 +519,6 @@ object VolumeQueries {
           .as("sum_good_pc"))
       val rows = agg.collect().toIndexedSeq
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), agg.schema)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(tmp))
     }
   }
 
@@ -661,15 +544,11 @@ object VolumeQueries {
     * arm inherits filter/column pruning for free.
     */
   def orcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File("/dev/shm")
-    val root = if (base.isDirectory && base.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val tmp = s"$root/graft_orc_${graft.Staging.token()}"
     import graft.relational.Queries.cents
     val li = graft.Tables(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"),
         col("l_extendedprice"), col("l_discount"), col("l_shipdate"))
-    try {
+    Scratch.withDir("orc") { tmp =>
       li.write.mode("overwrite").option("compression", "zlib").orc(tmp)
       val agg = spark.read.schema(li.schema).orc(tmp)
         .groupBy("l_returnflag")
@@ -682,11 +561,6 @@ object VolumeQueries {
         .orderBy("l_returnflag")
       spark.createDataFrame(
         spark.sparkContext.parallelize(agg.collect().toIndexedSeq, 1), agg.schema)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(tmp))
     }
   }
 
@@ -702,19 +576,10 @@ object VolumeQueries {
     * [[Jp2Binary]].
     */
   def ingestDispatch(spark: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File("/dev/shm")
-    val root = if (base.isDirectory && base.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val out = s"$root/graft_ingest_${graft.Staging.token()}"
-    try {
+    Scratch.withDir("ingest") { out =>
       IngestDispatch.stageAll(spark, dir, out)
       IngestDispatch.discover(spark, out).localCheckpoint(true)
         .orderBy("input")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(out))
     }
   }
 
@@ -727,19 +592,10 @@ object VolumeQueries {
     * losslessly.
     */
   def sliceIngest(spark: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File("/dev/shm")
-    val root = if (base.isDirectory && base.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val out = s"$root/graft_slices_${graft.Staging.token()}"
-    try {
+    Scratch.withDir("slices") { out =>
       IngestDispatch.stageSlices(spark, dir, out)
       IngestDispatch.parseSliceVoxels(spark, out).localCheckpoint(true)
         .orderBy("c", "z", "y", "x")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(out))
     }
   }
 
@@ -752,19 +608,10 @@ object VolumeQueries {
     * row proves genuine entropy-coded pixels ingest losslessly.
     */
   def jp2Ingest(spark: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File("/dev/shm")
-    val root = if (base.isDirectory && base.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val out = s"$root/graft_jp2_${graft.Staging.token()}"
-    try {
+    Scratch.withDir("jp2") { out =>
       IngestDispatch.stageSlices(spark, dir, out)
       IngestDispatch.parseJp2Voxels(spark, out).localCheckpoint(true)
         .orderBy("c", "z", "y", "x")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(out))
     }
   }
 
@@ -777,19 +624,10 @@ object VolumeQueries {
     * direction (slices tif, slices jp2, stack, N5, Zarr).
     */
   def stackIngest(spark: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File("/dev/shm")
-    val root = if (base.isDirectory && base.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val out = s"$root/graft_stack_${graft.Staging.token()}"
-    try {
+    Scratch.withDir("stack") { out =>
       IngestDispatch.stageStacks(spark, dir, out)
       IngestDispatch.parseStackVoxels(spark, out).localCheckpoint(true)
         .orderBy("c", "z", "y", "x")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(out))
     }
   }
 
@@ -822,11 +660,7 @@ object VolumeQueries {
   def tfrecordSink(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     graft.functions.GraftFunctions.register(spark)
-    val base = new java.io.File("/dev/shm")
-    val root = if (base.isDirectory && base.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val tmp = s"$root/graft_tfrec_${graft.Staging.token()}"
-    try {
+    Scratch.withDir("tfrec") { tmp =>
       new java.io.File(tmp).mkdirs()
       val nShards = TfShards
       graft.Tables(spark, dir, "documents")
@@ -875,11 +709,6 @@ object VolumeQueries {
       // the aggregate is ≤ shards rows — pin it before the staging
       // dir (tmpfs, shared with shuffle) is reclaimed
       agg.localCheckpoint(true).orderBy("shard")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(tmp))
     }
   }
 
@@ -900,11 +729,7 @@ object VolumeQueries {
   def wdsSink(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     graft.functions.GraftFunctions.register(spark)
-    val base = new java.io.File("/dev/shm")
-    val root = if (base.isDirectory && base.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val tmp = s"$root/graft_wds_${graft.Staging.token()}"
-    try {
+    Scratch.withDir("wds") { tmp =>
       new java.io.File(tmp).mkdirs()
       val nShards = TfShards
       graft.Tables(spark, dir, "documents")
@@ -956,11 +781,6 @@ object VolumeQueries {
           sum(col("wh")).as("text_cksum"), sum(col("lh")).as("lang_cksum"))
         .orderBy("shard")
       agg.localCheckpoint(true).orderBy("shard")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(tmp))
     }
   }
 

@@ -164,12 +164,7 @@ class VolumeSinkWrite(path: String, truncate: Boolean)
 
   override def toBatch: BatchWrite = {
     val root = new java.io.File(path)
-    if (truncate && root.isDirectory) {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(root)
-    }
+    if (truncate && root.isDirectory) graft.Scratch.rm(root)
     root.mkdirs()
     new VolumeSinkBatchWrite(path)
   }

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Scratch
 import graft.Tables
 import graft.relational.Queries
 
@@ -31,31 +32,21 @@ import graft.relational.Queries
   */
 object ZOrderStore {
 
-  private def tmpfsRoot: String = {
-    val base = new java.io.File("/dev/shm")
-    if (base.isDirectory && base.canWrite) "/dev/shm"
-    else System.getProperty("java.io.tmpdir")
-  }
-
-  private def rm(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-  }
-
   /** Staged store handle: root, per-file stats cells, stats-planned
     * hit files, and the box bounds — shared by the op and the
     * plan-audit spec.
     */
   private[graft] final case class Staged(store: String, filesTotal: Long,
       hitFids: Seq[Long], pkLo: Long, pkHi: Long, skLo: Long, skHi: Long) {
-    def drop(): Unit = rm(new java.io.File(store))
+    def drop(): Unit = Scratch.rm(store)
   }
 
   /** Write the z-clustered store + stats table and plan the box
     * query's file list from the stats.
     */
   private[graft] def stage(spark: SparkSession, dir: String): Staged = {
-    val store = s"$tmpfsRoot/graft_zstore_${graft.Staging.token()}"
-    rm(new java.io.File(store))
+    val store = Scratch.path("zstore")
+    Scratch.rm(store)
     val li = Tables(spark, dir, "lineitem")
       .select(col("l_partkey").as("pk"), col("l_suppkey").as("sk"),
         floor(col("l_extendedprice") * 100).cast("long").as("price_c"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.Scratch
 import graft.Tables
 import graft.relational.Queries
 
@@ -311,14 +312,8 @@ object EventStreams {
     * reclaimed once the small result frame is materialized.
     */
   def tumblingFile(spark: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File("/dev/shm")
-    val root = if (base.isDirectory && base.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val tmp = s"$root/graft_stream_files_${graft.Staging.token()}"
     val ev = typedEvents(spark, dir).toDF()
-    try {
-      // write INSIDE the try: a mid-write failure must not leak the
-      // pid-keyed tmpfs staging dir (tmpfs doubles as the shuffle dir)
+    Scratch.withDir("stream_files") { tmp =>
       ev.repartition(8).write.mode("overwrite").parquet(tmp)
       val agg = spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "2")
@@ -340,11 +335,6 @@ object EventStreams {
       val res = spark.table(sink).orderBy("bucket_h", "event_type")
       spark.createDataFrame(
         spark.sparkContext.parallelize(res.collect().toIndexedSeq, 1), res.schema)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(tmp))
     }
   }
 
@@ -479,32 +469,23 @@ object EventStreams {
   def volumeIngest(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val base = new java.io.File("/dev/shm")
-    val tmproot = if (base.isDirectory && base.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val store = s"$tmproot/graft_vsing_${graft.Staging.token()}"
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
+    Scratch.withDir("vsing") { store =>
+      new java.io.File(store).mkdirs()
+      val rows = graft.octree.Pyramid(graft.VoxelGrid(spark, dir))
+        .as[Vox].collect().toSeq
+      val input = MemoryStream[Vox]
+      val q = input.toDS().toDF().writeStream
+        .foreachBatch(graft.sources.VolumeQueries.ingestBatch(store) _)
+        .start()
+      try rows.grouped(math.max(1, rows.size / 3 + 1)).foreach { chunk =>
+        input.addData(chunk); q.processAllAvailable()
+      } finally q.stop()
+      graft.sources.SnapshotStore
+        .read(spark, store, graft.sources.SnapshotStore.latest(store))
+        .select(col("level").cast("long").as("level"),
+          col("c").cast("long").as("c"), col("z"), col("y"), col("x"), col("v"))
+        .orderBy("level", "c", "z", "y", "x").localCheckpoint(true)
     }
-    rm(new java.io.File(store))
-    new java.io.File(store).mkdirs()
-    val rows = graft.octree.Pyramid(graft.VoxelGrid(spark, dir))
-      .as[Vox].collect().toSeq
-    val input = MemoryStream[Vox]
-    val q = input.toDS().toDF().writeStream
-      .foreachBatch(graft.sources.VolumeQueries.ingestBatch(store) _)
-      .start()
-    rows.grouped(math.max(1, rows.size / 3 + 1)).foreach { chunk =>
-      input.addData(chunk); q.processAllAvailable()
-    }
-    q.stop()
-    val back = graft.sources.SnapshotStore
-      .read(spark, store, graft.sources.SnapshotStore.latest(store))
-      .select(col("level").cast("long").as("level"),
-        col("c").cast("long").as("c"), col("z"), col("y"), col("x"), col("v"))
-      .orderBy("level", "c", "z", "y", "x").localCheckpoint(true)
-    rm(new java.io.File(store))
-    back
   }
 
   /** stream_join — stream-static enrichment: the event stream joined
@@ -1648,12 +1629,8 @@ object EventStreams {
 
   def sessionFile(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val base = new java.io.File("/dev/shm")
-    val root = if (base.isDirectory && base.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    val tmp = s"$root/graft_stream_sess_${graft.Staging.token()}"
     val ev = typedEvents(spark, dir)
-    try {
+    Scratch.withDir("stream_sess") { tmp =>
       // bounded driver work: two scalars for the slice bounds
       val mm = ev.toDF().agg(min(col("sec")), max(col("sec"))).collect()(0)
       val (lo, hi) = (mm.getLong(0), mm.getLong(1))
@@ -1676,11 +1653,6 @@ object EventStreams {
         s"file source drained in $nBatches batches; expected a real multi-batch run")
       finalizeSessionSink(spark.table(sink)).localCheckpoint(true)
         .orderBy("user_id", "session_start")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(tmp))
     }
   }
 

@@ -23,20 +23,11 @@ class OctreePipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  override def afterAll(): Unit = { spark.stop(); rm(new java.io.File(tmp)) }
+  override def afterAll(): Unit = { spark.stop(); Scratch.rm(tmp) }
 
   import org.apache.spark.sql.functions._
 
-  private val tmp = {
-    val base = new java.io.File("/dev/shm")
-    val root = if (base.isDirectory && base.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    s"$root/graft_octp_spec_${ProcessHandle.current().pid()}"
-  }
-
-  private def rm(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-  }
+  private val tmp = Scratch.path("octp_spec")
 
   /** relpath -> MD5 of every file under root. */
   private def hashTree(root: String): Map[String, String] = {

@@ -308,8 +308,7 @@ class OctreeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("physical ktx files round-trip: bytes parse to the relational frames, voxels lossless") {
     val dir = "/root/testdata/sf0.001"
-    val out = java.nio.file.Files.createTempDirectory("graft_ktx_spec").toString
-    try {
+    Scratch.withDir("ktx_spec") { out =>
       KtxBinary.writeBlocks(spark, dir, out)
       // 1. the probe frame decoded from raw bytes equals the
       //    oracle-verified relational ktxParse frame, row for row
@@ -334,11 +333,6 @@ class OctreeSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(f.isFile, s"missing ktx file for $p")
         assert(f.length() === bytes, s"file_bytes mismatch for $p")
       }
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(out))
     }
   }
 
@@ -349,8 +343,7 @@ class OctreeSpec extends AnyFunSuite with BeforeAndAfterAll {
     // predicted here by an INDEPENDENT driver-side dense-array
     // reimplementation of the numpy sort semantics
     val dir = "/root/testdata/sf0.001"
-    val out = java.nio.file.Files.createTempDirectory("graft_ktx_mip_spec").toString
-    try {
+    Scratch.withDir("ktx_mip_spec") { out =>
       KtxBinary.writeBlocks(spark, dir, out)
       val got = KtxBinary.parseMipVoxels(spark, out).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
@@ -384,18 +377,12 @@ class OctreeSpec extends AnyFunSuite with BeforeAndAfterAll {
         }
       assert(got.nonEmpty)
       assert(got === want.toSet)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(out))
     }
   }
 
   test("physical tiff files round-trip: deflate strips parse back to the exact voxel grid") {
     val dir = "/root/testdata/sf0.001"
-    val out = java.nio.file.Files.createTempDirectory("graft_tiff_spec").toString
-    try {
+    Scratch.withDir("tiff_spec") { out =>
       TiffBinary.writeBlocks(spark, dir, out)
       // 1. bytes decode back to exactly the source volume model
       val want = VoxelGrid(spark, dir).orderBy("c", "z", "y", "x")
@@ -447,11 +434,6 @@ class OctreeSpec extends AnyFunSuite with BeforeAndAfterAll {
           ifd = getU32(bytes, ifd.toInt + 2 + n * 12)
         }
       }
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(out))
     }
   }
 
@@ -477,28 +459,23 @@ class OctreeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("conv_tiled_tiff rewrite: strip and tiled parses agree on real staged files") {
     val dir = "/root/testdata/sf0.001"
-    val strip = java.nio.file.Files.createTempDirectory("graft_rt_strip_spec").toString
-    val tiled = java.nio.file.Files.createTempDirectory("graft_rt_tiled_spec").toString
-    try {
-      TiffBinary.writeBlocks(spark, dir, strip)
-      TiffBinary.convTiledDir(spark, strip, tiled, 16)
-      val a = TiffBinary.parseVoxels(spark, strip).collect().map(_.toSeq)
-      val b = TiffBinary.parseVoxelsTiled(spark, tiled).collect().map(_.toSeq)
-      assert(a.nonEmpty)
-      assert(b.toSeq === a.toSeq)
-      // the tiled mirror holds exactly the strip tree's files
-      def rels(root: String): Set[String] = {
-        val p = new java.io.File(root).getAbsolutePath
-        def walk(f: java.io.File): Seq[java.io.File] =
-          if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk) else Seq(f)
-        walk(new java.io.File(root)).map(_.getAbsolutePath.stripPrefix(p)).toSet
+    Scratch.withDir("rt_strip_spec") { strip =>
+      Scratch.withDir("rt_tiled_spec") { tiled =>
+        TiffBinary.writeBlocks(spark, dir, strip)
+        TiffBinary.convTiledDir(spark, strip, tiled, 16)
+        val a = TiffBinary.parseVoxels(spark, strip).collect().map(_.toSeq)
+        val b = TiffBinary.parseVoxelsTiled(spark, tiled).collect().map(_.toSeq)
+        assert(a.nonEmpty)
+        assert(b.toSeq === a.toSeq)
+        // the tiled mirror holds exactly the strip tree's files
+        def rels(root: String): Set[String] = {
+          val p = new java.io.File(root).getAbsolutePath
+          def walk(f: java.io.File): Seq[java.io.File] =
+            if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk) else Seq(f)
+          walk(new java.io.File(root)).map(_.getAbsolutePath.stripPrefix(p)).toSet
+        }
+        assert(rels(tiled) === rels(strip))
       }
-      assert(rels(tiled) === rels(strip))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(strip)); rm(new java.io.File(tiled))
     }
   }
 }

@@ -1595,16 +1595,17 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val a = t15.mkString(" ")                      // 15 tokens
     val b = (t15 ++ Seq("u16", "u17")).mkString(" ") // 17 tokens, J = 15/17
     val c = (1 to 20).map(i => f"zz$i%02d").mkString(" ") // unrelated
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ngram_spec").toString
-    Seq((1L, "en", a, "synthetic"), (2L, "en", b, "synthetic"),
-        (3L, "en", c, "synthetic"))
-      .toDF("doc_id", "lang", "text", "source")
-      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val got = graft.ops.Dedup.ngramJaccard(spark, tmp).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(5))).toMap
-    assert(got.contains((1L, 2L)), "straddling near-dup pair must be found")
-    assert(got((1L, 2L)) === ((15L, 17L))) // inter=15, uni=17
-    assert(!got.keySet.exists { case (x, y) => x == 3L || y == 3L })
+    Scratch.withDir("ngram_spec") { tmp =>
+      Seq((1L, "en", a, "synthetic"), (2L, "en", b, "synthetic"),
+          (3L, "en", c, "synthetic"))
+        .toDF("doc_id", "lang", "text", "source")
+        .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      val got = graft.ops.Dedup.ngramJaccard(spark, tmp).collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(5))).toMap
+      assert(got.contains((1L, 2L)), "straddling near-dup pair must be found")
+      assert(got((1L, 2L)) === ((15L, 17L))) // inter=15, uni=17
+      assert(!got.keySet.exists { case (x, y) => x == 3L || y == 3L })
+    }
   }
 
   test("dedup_cluster labels connected near-dup components with min id") {
@@ -1614,14 +1615,15 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val b = (t15 ++ Seq("u16", "u17")).mkString(" ")
     val c = (t15 ++ Seq("u16", "u17", "u18", "u19")).mkString(" ")
     val d = (1 to 20).map(i => f"zz$i%02d").mkString(" ") // singleton
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cluster_spec").toString
-    Seq((10L, "en", a, "s"), (11L, "en", b, "s"), (12L, "en", c, "s"),
-        (13L, "en", d, "s"))
-      .toDF("doc_id", "lang", "text", "source")
-      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val got = graft.ops.Dedup.cluster(spark, tmp).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(got === Set((10L, 10L, 3L), (11L, 10L, 3L), (12L, 10L, 3L), (13L, 13L, 1L)))
+    Scratch.withDir("cluster_spec") { tmp =>
+      Seq((10L, "en", a, "s"), (11L, "en", b, "s"), (12L, "en", c, "s"),
+          (13L, "en", d, "s"))
+        .toDF("doc_id", "lang", "text", "source")
+        .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      val got = graft.ops.Dedup.cluster(spark, tmp).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(got === Set((10L, 10L, 3L), (11L, 10L, 3L), (12L, 10L, 3L), (13L, 13L, 1L)))
+    }
   }
 
   test("sample_budget: bucket-threshold selection equals the global greedy prefix") {
@@ -1690,26 +1692,27 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       (1 to 25).map(i => f"$prefix$i%02dword").mkString(" ")
     val benchText = longText("bench")
     val corpusText = longText("corpus")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_pincr_spec").toString
-    Seq(
-      (97L, "en", benchText, "s"),            // benchmark doc (mod 97)
-      (1L, "en", corpusText, "s"),            // retained old corpus
-      (8L, "en", "x", "s"),                   // batch: fails quality
-      (12L, "en", corpusText, "s"),           // batch: near-dup of old 1
-      (4L, "en", benchText, "s"),             // batch: contaminated
-      (16L, "en", longText("fresh"), "s"))    // batch: admitted
-      .toDF("doc_id", "lang", "text", "source")
-      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val got = graft.ops.Pipeline.incr(spark, tmp).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getLong(5), r.getString(6))).toMap
-    assert(got(8L) === ((0L, -1L, -1L, -1L, 0L, "quality")))
-    assert(got(12L) === ((1L, 1L, 1L, -1L, 0L, "dup")))
-    // contaminated: all 23 shingles of the benchmark doc hit
-    assert(got(4L)._1 === 1L && got(4L)._3 === -1L &&
-      got(4L)._4 >= 3L && got(4L)._6 === "contaminated")
-    assert(got(16L) === ((1L, 0L, -1L, 0L, 1L, "admitted")))
-    assert(got.size === 4) // 97 (benchmark) and 1 (old) are not batch rows
+    Scratch.withDir("pincr_spec") { tmp =>
+      Seq(
+        (97L, "en", benchText, "s"),            // benchmark doc (mod 97)
+        (1L, "en", corpusText, "s"),            // retained old corpus
+        (8L, "en", "x", "s"),                   // batch: fails quality
+        (12L, "en", corpusText, "s"),           // batch: near-dup of old 1
+        (4L, "en", benchText, "s"),             // batch: contaminated
+        (16L, "en", longText("fresh"), "s"))    // batch: admitted
+        .toDF("doc_id", "lang", "text", "source")
+        .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      val got = graft.ops.Pipeline.incr(spark, tmp).collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
+          r.getLong(4), r.getLong(5), r.getString(6))).toMap
+      assert(got(8L) === ((0L, -1L, -1L, -1L, 0L, "quality")))
+      assert(got(12L) === ((1L, 1L, 1L, -1L, 0L, "dup")))
+      // contaminated: all 23 shingles of the benchmark doc hit
+      assert(got(4L)._1 === 1L && got(4L)._3 === -1L &&
+        got(4L)._4 >= 3L && got(4L)._6 === "contaminated")
+      assert(got(16L) === ((1L, 0L, -1L, 0L, 1L, "admitted")))
+      assert(got.size === 4) // 97 (benchmark) and 1 (old) are not batch rows
+    }
   }
 
   test("the band index survives a parquet round trip with identical verdicts") {
@@ -1718,13 +1721,14 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // and the admission table must be bit-identical
     val inline = graft.ops.Dedup.incremental(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bandidx_spec").toString
-    graft.ops.Dedup.incrementalBands(spark, dir)
-      .write.mode("overwrite").parquet(s"$tmp/band_index.parquet")
-    val reloaded = spark.read.parquet(s"$tmp/band_index.parquet")
-    val viaDisk = graft.ops.Dedup.incrementalVs(spark, dir, reloaded).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    assert(inline.nonEmpty && viaDisk.toSeq === inline.toSeq)
+    Scratch.withDir("bandidx_spec") { tmp =>
+      graft.ops.Dedup.incrementalBands(spark, dir)
+        .write.mode("overwrite").parquet(s"$tmp/band_index.parquet")
+      val reloaded = spark.read.parquet(s"$tmp/band_index.parquet")
+      val viaDisk = graft.ops.Dedup.incrementalVs(spark, dir, reloaded).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      assert(inline.nonEmpty && viaDisk.toSeq === inline.toSeq)
+    }
   }
 
   test("dedup_incremental admits against the corpus index with first-occurrence self-dup resolution") {
@@ -1732,22 +1736,23 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ta = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
     val tb = "kilo lima mike november oscar papa quebec romeo sierra tango"
     val tc = "uniform victor whiskey xray yankee zulu anchor breeze canyon dune"
-    val tmp = java.nio.file.Files.createTempDirectory("graft_incr_spec").toString
-    // old corpus: 1 (=A), 5 (unique); new batch (%4==0): 4 (=A, dup of
-    // OLD 1), 8 (=B, first occurrence in batch), 12 (=B, dup of
-    // EARLIER-IN-BATCH 8), 16 (=C, unique -> kept)
-    Seq((1L, "en", ta, "s"), (5L, "en", tc + " extra stray tokens here", "s"),
-        (4L, "en", ta, "s"), (8L, "en", tb, "s"), (12L, "en", tb, "s"),
-        (16L, "en", "one two three four five six seven eight nine ten", "s"))
-      .toDF("doc_id", "lang", "text", "source")
-      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val got = graft.ops.Dedup.incremental(spark, tmp).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    assert(got === Set(
-      (4L, 1L, 1L, 0L),   // candidate {1}, verified dup of old 1
-      (8L, 0L, -1L, 1L),  // later batch twin 12 is NOT its candidate
-      (12L, 1L, 8L, 0L),  // resolves to its earlier in-batch twin
-      (16L, 0L, -1L, 1L)))
+    Scratch.withDir("incr_spec") { tmp =>
+      // old corpus: 1 (=A), 5 (unique); new batch (%4==0): 4 (=A, dup of
+      // OLD 1), 8 (=B, first occurrence in batch), 12 (=B, dup of
+      // EARLIER-IN-BATCH 8), 16 (=C, unique -> kept)
+      Seq((1L, "en", ta, "s"), (5L, "en", tc + " extra stray tokens here", "s"),
+          (4L, "en", ta, "s"), (8L, "en", tb, "s"), (12L, "en", tb, "s"),
+          (16L, "en", "one two three four five six seven eight nine ten", "s"))
+        .toDF("doc_id", "lang", "text", "source")
+        .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      val got = graft.ops.Dedup.incremental(spark, tmp).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+      assert(got === Set(
+        (4L, 1L, 1L, 0L),   // candidate {1}, verified dup of old 1
+        (8L, 0L, -1L, 1L),  // later batch twin 12 is NOT its candidate
+        (12L, 1L, 8L, 0L),  // resolves to its earlier in-batch twin
+        (16L, 0L, -1L, 1L)))
+    }
   }
 
   test("dedup_keep_best keeps the highest-quality cluster member, not the min id") {
@@ -1759,26 +1764,27 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // composite quality score is strictly highest on the LARGEST id
     val c = (t15 ++ Seq("the", "and", "of", "to", "is", "in")).mkString(" ")
     val d = (1 to 20).map(i => f"zz$i%02d").mkString(" ") // singleton
-    val tmp = java.nio.file.Files.createTempDirectory("graft_keepbest_spec").toString
-    Seq((10L, "en", a, "s"), (11L, "en", b, "s"), (12L, "en", c, "s"),
-        (13L, "en", d, "s"))
-      .toDF("doc_id", "lang", "text", "source")
-      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val rows = graft.ops.Dedup.keepBest(spark, tmp).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getLong(5)))
-    // survivor re-derived from the frame's own scores: argmax by
-    // (score_u, -doc_id) per cluster
-    rows.groupBy(_._2).foreach { case (_, members) =>
-      val expect = members.maxBy(m => (m._4, -m._1))._1
-      assert(members.forall(_._5 === expect), s"survivor mismatch in $members")
-      assert(members.forall(m => (m._6 === 1L) === (m._1 === expect)))
+    Scratch.withDir("keepbest_spec") { tmp =>
+      Seq((10L, "en", a, "s"), (11L, "en", b, "s"), (12L, "en", c, "s"),
+          (13L, "en", d, "s"))
+        .toDF("doc_id", "lang", "text", "source")
+        .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      val rows = graft.ops.Dedup.keepBest(spark, tmp).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+          r.getLong(4), r.getLong(5)))
+      // survivor re-derived from the frame's own scores: argmax by
+      // (score_u, -doc_id) per cluster
+      rows.groupBy(_._2).foreach { case (_, members) =>
+        val expect = members.maxBy(m => (m._4, -m._1))._1
+        assert(members.forall(_._5 === expect), s"survivor mismatch in $members")
+        assert(members.forall(m => (m._6 === 1L) === (m._1 === expect)))
+      }
+      // and the fixture is non-trivial: cluster {10,11,12} keeps 12
+      // (best score), NOT the min id 10 that dedup_cluster would pick
+      val trio = rows.filter(r => Set(10L, 11L, 12L).contains(r._1))
+      assert(trio.length === 3 && trio.forall(_._5 === 12L))
+      assert(rows.find(_._1 === 13L).get._6 === 1L)
     }
-    // and the fixture is non-trivial: cluster {10,11,12} keeps 12
-    // (best score), NOT the min id 10 that dedup_cluster would pick
-    val trio = rows.filter(r => Set(10L, 11L, 12L).contains(r._1))
-    assert(trio.length === 3 && trio.forall(_._5 === 12L))
-    assert(rows.find(_._1 === 13L).get._6 === 1L)
   }
 
   test("dedup_curve sweeps monotonically and agrees with ngram_jaccard at tau=0.5") {
@@ -1814,30 +1820,31 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val b = (t15 ++ Seq("u16", "u17")).mkString(" ")
     val c = (t15 ++ Seq("v16", "v17")).mkString(" ")
     val d = (1 to 20).map(i => f"zz$i%02d").mkString(" ") // singleton
-    val tmp = java.nio.file.Files.createTempDirectory("graft_softdedup_spec").toString
-    Seq((10L, "en", a, "s"), (11L, "en", b, "s"), (12L, "en", c, "s"),
-        (13L, "en", d, "s"))
-      .toDF("doc_id", "lang", "text", "source")
-      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val rows = graft.ops.Sampling.softDedup(spark, tmp).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getLong(5)))
-    assert(rows.map(_._1).toSet === Set(10L, 11L, 12L, 13L))
-    // exactly one survivor per cluster, chosen by (u_hash, doc_id) min
-    // — NOT the min id, unless the hash happens to rank it first
-    rows.groupBy(_._2).foreach { case (_, members) =>
-      val expect = members.minBy(m => (m._4, m._1))._1
-      assert(members.count(_._5 === 1L) === 1)
-      assert(members.find(_._5 === 1L).get._1 === expect)
-      // the survivor carries the full cluster mass; others carry none
-      members.foreach { m =>
-        assert(m._6 === (if (m._1 === expect) m._3 else 0L))
+    Scratch.withDir("softdedup_spec") { tmp =>
+      Seq((10L, "en", a, "s"), (11L, "en", b, "s"), (12L, "en", c, "s"),
+          (13L, "en", d, "s"))
+        .toDF("doc_id", "lang", "text", "source")
+        .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      val rows = graft.ops.Sampling.softDedup(spark, tmp).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+          r.getLong(4), r.getLong(5)))
+      assert(rows.map(_._1).toSet === Set(10L, 11L, 12L, 13L))
+      // exactly one survivor per cluster, chosen by (u_hash, doc_id) min
+      // — NOT the min id, unless the hash happens to rank it first
+      rows.groupBy(_._2).foreach { case (_, members) =>
+        val expect = members.minBy(m => (m._4, m._1))._1
+        assert(members.count(_._5 === 1L) === 1)
+        assert(members.find(_._5 === 1L).get._1 === expect)
+        // the survivor carries the full cluster mass; others carry none
+        members.foreach { m =>
+          assert(m._6 === (if (m._1 === expect) m._3 else 0L))
+        }
       }
+      // Horvitz-Thompson invariant: total carried weight == corpus size
+      assert(rows.map(_._6).sum === rows.length.toLong)
+      // the hash is the spec's own md5 re-derivation (engine-independent)
+      rows.foreach(m => assert(m._4 === md5Int(s"sd:${m._1}")))
     }
-    // Horvitz-Thompson invariant: total carried weight == corpus size
-    assert(rows.map(_._6).sum === rows.length.toLong)
-    // the hash is the spec's own md5 re-derivation (engine-independent)
-    rows.foreach(m => assert(m._4 === md5Int(s"sd:${m._1}")))
   }
 
   test("connected components converge on a deep chain within default rounds") {

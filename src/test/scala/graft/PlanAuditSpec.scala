@@ -333,8 +333,7 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     // against parsed .zarray metadata. The metadata side is
     // O(levels × channels); the chunk side is the 100 TB side — a
     // SortMergeJoin here would shuffle every payload byte on (c, s).
-    val out = java.nio.file.Files.createTempDirectory("graft_zarr_plan").toString
-    try {
+    Scratch.withDir("zarr_plan") { out =>
       graft.sources.ZarrBinary.writeContainer(spark, dir, out)
       val p = graft.sources.ZarrBinary.parseVoxels(spark, out)
         .queryExecution.explainString(FormattedMode)
@@ -342,11 +341,6 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
         "chunk-metadata join is not a broadcast hash join")
       assert(!p.contains("SortMergeJoin"),
         "chunk bytes are shuffle-sorted for the metadata join")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(out))
     }
   }
 
@@ -421,12 +415,7 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(plan.toLowerCase.contains("dynamicpruning"),
         "no dynamicpruning subquery reached the fact scan")
       assert(df.collect().nonEmpty)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(store))
-    }
+    } finally Scratch.rm(store)
   }
 
   test("src_zorder_store read-back: the catalog scan opens ONLY the stats-planned files and pushes the box") {
@@ -487,9 +476,9 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("q_bucket_join: co-located bucketed tables join with no Exchange, no Sort") {
     import graft.relational.Queries
-    val tag = graft.Staging.token()
+    val root = Scratch.path("bktjoin_audit")
+    val tag = new java.io.File(root).getName.stripPrefix("graft_bktjoin_audit_")
     val tl = s"li_bkt_audit_$tag"; val to = s"ord_bkt_audit_$tag"
-    val root = s"/dev/shm/graft_bktjoin_audit_$tag"
     try {
       Queries.writeBucketed(Tables(spark, dir, "lineitem")
         .select(org.apache.spark.sql.functions.col("l_orderkey"),
@@ -514,10 +503,7 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.conf.unset("spark.sql.legacy.bucketedTableScan.outputOrdering")
       spark.sql(s"DROP TABLE IF EXISTS $tl")
       spark.sql(s"DROP TABLE IF EXISTS $to")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(root))
+      Scratch.rm(root)
     }
   }
 }

@@ -212,39 +212,40 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val all = pyr.collect().map(_.toString).toSeq.sorted
     val b0 = pyr.filter(col("z") % 2 === 0).localCheckpoint()
     val b1 = pyr.filter(col("z") % 2 =!= 0).localCheckpoint()
-    val store = java.nio.file.Files.createTempDirectory("graft-sing").toString
-    def tableRows: Seq[String] =
-      SnapshotStore.read(spark, store, SnapshotStore.latest(store))
-        .select(col("level").cast("long"), col("c").cast("long"),
-          col("z"), col("y"), col("x"), col("v"))
-        .collect().map(_.toString).toSeq.sorted
-    // batch 0 commits normally
-    VolumeQueries.ingestBatch(store)(b0, 0L)
-    assert(SnapshotStore.batchOf(store, SnapshotStore.latest(store)) === Some(0L))
-    assert(tableRows === b0.select(col("level").cast("long"), col("c").cast("long"),
-      col("z"), col("y"), col("x"), col("v")).collect().map(_.toString).toSeq.sorted)
-    // batch 1's FIRST attempt dies between file append and manifest
-    // commit: orphan files on disk, invisible to readers
-    b1.write.mode(org.apache.spark.sql.SaveMode.Append)
-      .partitionBy("level", "c").parquet(store)
-    val orphaned = SnapshotStore.listDataFiles(store).toSet
-    assert(orphaned.size > SnapshotStore.files(store, SnapshotStore.latest(store)).size)
-    assert(tableRows.size === b0.count())
-    // the replay lands batch 1 exactly once (orphans stay invisible)
-    VolumeQueries.ingestBatch(store)(b1, 1L)
-    assert(tableRows === all)
-    // a replay AFTER the successful commit is a complete no-op
-    val vs = SnapshotStore.versions(store)
-    val fs = SnapshotStore.listDataFiles(store)
-    VolumeQueries.ingestBatch(store)(b1, 1L)
-    assert(SnapshotStore.versions(store) === vs)
-    assert(SnapshotStore.listDataFiles(store) === fs)
-    // vacuum reclaims the crashed attempt's orphans; the table is intact
-    val live = SnapshotStore.files(store, SnapshotStore.latest(store)).toSet
-    val dead = SnapshotStore.expire(store, SnapshotStore.latest(store))
-    assert(dead.nonEmpty && dead.toSet.intersect(live).isEmpty)
-    assert(SnapshotStore.listDataFiles(store).toSet === live)
-    assert(tableRows === all)
+    Scratch.withDir("sing") { store =>
+      def tableRows: Seq[String] =
+        SnapshotStore.read(spark, store, SnapshotStore.latest(store))
+          .select(col("level").cast("long"), col("c").cast("long"),
+            col("z"), col("y"), col("x"), col("v"))
+          .collect().map(_.toString).toSeq.sorted
+      // batch 0 commits normally
+      VolumeQueries.ingestBatch(store)(b0, 0L)
+      assert(SnapshotStore.batchOf(store, SnapshotStore.latest(store)) === Some(0L))
+      assert(tableRows === b0.select(col("level").cast("long"), col("c").cast("long"),
+        col("z"), col("y"), col("x"), col("v")).collect().map(_.toString).toSeq.sorted)
+      // batch 1's FIRST attempt dies between file append and manifest
+      // commit: orphan files on disk, invisible to readers
+      b1.write.mode(org.apache.spark.sql.SaveMode.Append)
+        .partitionBy("level", "c").parquet(store)
+      val orphaned = SnapshotStore.listDataFiles(store).toSet
+      assert(orphaned.size > SnapshotStore.files(store, SnapshotStore.latest(store)).size)
+      assert(tableRows.size === b0.count())
+      // the replay lands batch 1 exactly once (orphans stay invisible)
+      VolumeQueries.ingestBatch(store)(b1, 1L)
+      assert(tableRows === all)
+      // a replay AFTER the successful commit is a complete no-op
+      val vs = SnapshotStore.versions(store)
+      val fs = SnapshotStore.listDataFiles(store)
+      VolumeQueries.ingestBatch(store)(b1, 1L)
+      assert(SnapshotStore.versions(store) === vs)
+      assert(SnapshotStore.listDataFiles(store) === fs)
+      // vacuum reclaims the crashed attempt's orphans; the table is intact
+      val live = SnapshotStore.files(store, SnapshotStore.latest(store)).toSet
+      val dead = SnapshotStore.expire(store, SnapshotStore.latest(store))
+      assert(dead.nonEmpty && dead.toSet.intersect(live).isEmpty)
+      assert(SnapshotStore.listDataFiles(store).toSet === live)
+      assert(tableRows === all)
+    }
   }
 
   test("stream_card refreshes across triggers and converges to the batch card") {
@@ -537,51 +538,52 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     import graft.streaming.EventStreams.{Ev, SessionOut, sessionizeStream}
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_sess_ckpt_").toString
-    val evs = allEvents.sortBy(e => (e.sec, e.event_id))
-    // cut at the first event past 1/3 of the stream that CONTINUES its
-    // user's open session (within the 30-min gap): that session is
-    // guaranteed open across the restart
-    val lastSec = scala.collection.mutable.Map.empty[Long, Long]
-    var cut = -1
-    for ((e, i) <- evs.zipWithIndex) {
-      if (cut < 0 && i >= evs.size / 3 &&
-          lastSec.get(e.user_id).exists(l => e.sec - l <= 1800)) cut = i
-      lastSec(e.user_id) = e.sec
-    }
-    assert(cut > 0, "corpus has no session spanning a 1/3+ cut")
-    val (b1, b2) = evs.splitAt(cut)
+    Scratch.withDir("sess_ckpt") { ckpt =>
+      val evs = allEvents.sortBy(e => (e.sec, e.event_id))
+      // cut at the first event past 1/3 of the stream that CONTINUES its
+      // user's open session (within the 30-min gap): that session is
+      // guaranteed open across the restart
+      val lastSec = scala.collection.mutable.Map.empty[Long, Long]
+      var cut = -1
+      for ((e, i) <- evs.zipWithIndex) {
+        if (cut < 0 && i >= evs.size / 3 &&
+            lastSec.get(e.user_id).exists(l => e.sec - l <= 1800)) cut = i
+        lastSec(e.user_id) = e.sec
+      }
+      assert(cut > 0, "corpus has no session spanning a 1/3+ cut")
+      val (b1, b2) = evs.splitAt(cut)
 
-    val got = new scala.collection.mutable.ArrayBuffer[SessionOut]()
-    // ONE source instance across both runs: the checkpoint's offset
-    // log is per-source, so the restarted query resumes from run 1's
-    // committed offset and reads only the blocks added since
-    val input = MemoryStream[Ev]
-    def drainRun(batch: Seq[Ev]): Unit = {
-      input.addData(batch)
-      val q = sessionizeStream(input.toDS())
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Update())
-        .foreachBatch { (df: org.apache.spark.sql.Dataset[SessionOut], _: Long) =>
-          val snap = df.collect()
-          got.synchronized { got ++= snap }; ()
-        }
-        .start()
-      q.processAllAvailable(); q.stop()
-    }
-    drainRun(b1) // run 1: state checkpointed, query stopped
-    drainRun(b2) // run 2: fresh query, SAME checkpoint — state restored
+      val got = new scala.collection.mutable.ArrayBuffer[SessionOut]()
+      // ONE source instance across both runs: the checkpoint's offset
+      // log is per-source, so the restarted query resumes from run 1's
+      // committed offset and reads only the blocks added since
+      val input = MemoryStream[Ev]
+      def drainRun(batch: Seq[Ev]): Unit = {
+        input.addData(batch)
+        val q = sessionizeStream(input.toDS())
+          .writeStream
+          .option("checkpointLocation", ckpt)
+          .outputMode(OutputMode.Update())
+          .foreachBatch { (df: org.apache.spark.sql.Dataset[SessionOut], _: Long) =>
+            val snap = df.collect()
+            got.synchronized { got ++= snap }; ()
+          }
+          .start()
+        q.processAllAvailable(); q.stop()
+      }
+      drainRun(b1) // run 1: state checkpointed, query stopped
+      drainRun(b2) // run 2: fresh query, SAME checkpoint — state restored
 
-    // finalize Update-mode snapshots: a session's final row is its
-    // max-n_events snapshot (same rule as finalizeSessionSink)
-    val finalized = got.groupBy(s => (s.user_id, s.session_start))
-      .values.map(_.maxBy(_.n_events)).toSet
-    val expected = allEvents.groupBy(_.user_id).flatMap { case (uid, es) =>
-      EventStreams.sessionsOf(uid, es)
-    }.toSet
-    assert(finalized === expected,
-      "restarted run diverged from the uninterrupted sessionization")
+      // finalize Update-mode snapshots: a session's final row is its
+      // max-n_events snapshot (same rule as finalizeSessionSink)
+      val finalized = got.groupBy(s => (s.user_id, s.session_start))
+        .values.map(_.maxBy(_.n_events)).toSet
+      val expected = allEvents.groupBy(_.user_id).flatMap { case (uid, es) =>
+        EventStreams.sessionsOf(uid, es)
+      }.toSet
+      assert(finalized === expected,
+        "restarted run diverged from the uninterrupted sessionization")
+    }
   }
 
   test("dedup_wm state survives a checkpointed restart (exactly-once across runs)") {
@@ -590,32 +592,33 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     import graft.streaming.EventStreams.{Ev, dedupWmStream}
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_dwm_ckpt_").toString
-    def drainRun(input: MemoryStream[Ev]): Seq[(Long, String)] = {
-      val buf = new scala.collection.mutable.ArrayBuffer[(Long, String)]()
-      val q = dedupWmStream(input.toDS())
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append())
-        .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val snap = df.collect().map(r => (r.getLong(0), r.getString(1)))
-          buf.synchronized { buf ++= snap }; ()
-        }
-        .start()
-      q.processAllAvailable(); q.stop()
-      buf.toSeq
+    Scratch.withDir("dwm_ckpt") { ckpt =>
+      def drainRun(input: MemoryStream[Ev]): Seq[(Long, String)] = {
+        val buf = new scala.collection.mutable.ArrayBuffer[(Long, String)]()
+        val q = dedupWmStream(input.toDS())
+          .writeStream
+          .option("checkpointLocation", ckpt)
+          .outputMode(OutputMode.Append())
+          .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+            val snap = df.collect().map(r => (r.getLong(0), r.getString(1)))
+            buf.synchronized { buf ++= snap }; ()
+          }
+          .start()
+        q.processAllAvailable(); q.stop()
+        buf.toSeq
+      }
+      val input = MemoryStream[Ev]
+      input.addData(Ev(1, 1, 1000, 10, "view"), Ev(2, 2, 1000, 10, "view"))
+      val a = drainRun(input)
+      // duplicate of (1, view) inside the watermark window + one new key:
+      // only the RESTORED state store can suppress the duplicate
+      input.addData(Ev(3, 1, 1100, 10, "view"), Ev(4, 3, 1200, 10, "view"))
+      val b = drainRun(input)
+      assert(a.toSet === Set((1L, "view"), (2L, "view")))
+      assert(b.toSet === Set((3L, "view")),
+        s"run 2 must emit ONLY the new key (lost state would re-emit (1,view)); got ${b.toSet}")
+      assert(a.length + b.length === 3, "exactly-once across the restart")
     }
-    val input = MemoryStream[Ev]
-    input.addData(Ev(1, 1, 1000, 10, "view"), Ev(2, 2, 1000, 10, "view"))
-    val a = drainRun(input)
-    // duplicate of (1, view) inside the watermark window + one new key:
-    // only the RESTORED state store can suppress the duplicate
-    input.addData(Ev(3, 1, 1100, 10, "view"), Ev(4, 3, 1200, 10, "view"))
-    val b = drainRun(input)
-    assert(a.toSet === Set((1L, "view"), (2L, "view")))
-    assert(b.toSet === Set((3L, "view")),
-      s"run 2 must emit ONLY the new key (lost state would re-emit (1,view)); got ${b.toSet}")
-    assert(a.length + b.length === 3, "exactly-once across the restart")
   }
 
   test("stream_funnel stages set once, respect windows, and advance across triggers") {
@@ -735,32 +738,33 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val evs = Tables(spark, dir, "events")
       .select(col("event_type"), col("user_id")).as[(String, Long)].collect().toSeq
     val (b1, b2) = evs.splitAt(evs.size / 2)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_kmv_ckpt_").toString
-    val input = MemoryStream[(String, Long)]
-    val last = new scala.collection.mutable.ArrayBuffer[(String, Long, Long)]()
-    def drain(): Unit = {
-      val agg = input.toDS().toDF("event_type", "user_id")
-        .withColumn("h", expr("graft_md5_prefix(cast(user_id as string))"))
-        .groupBy("event_type")
-        .agg(expr(s"graft_kmv_kth(h, ${ops.Sampling.KmvK})").as("kmv"))
-        .select(col("event_type"), col("kmv.k_used").as("k_used"),
-          col("kmv.kth_hash").as("kth_hash"))
-      val q = agg.writeStream
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Complete())
-        .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val snap = df.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-          last.synchronized { last.clear(); last ++= snap }; ()
-        }
-        .start()
-      q.processAllAvailable(); q.stop()
+    Scratch.withDir("kmv_ckpt") { ckpt =>
+      val input = MemoryStream[(String, Long)]
+      val last = new scala.collection.mutable.ArrayBuffer[(String, Long, Long)]()
+      def drain(): Unit = {
+        val agg = input.toDS().toDF("event_type", "user_id")
+          .withColumn("h", expr("graft_md5_prefix(cast(user_id as string))"))
+          .groupBy("event_type")
+          .agg(expr(s"graft_kmv_kth(h, ${ops.Sampling.KmvK})").as("kmv"))
+          .select(col("event_type"), col("kmv.k_used").as("k_used"),
+            col("kmv.kth_hash").as("kth_hash"))
+        val q = agg.writeStream
+          .option("checkpointLocation", ckpt)
+          .outputMode(OutputMode.Complete())
+          .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+            val snap = df.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+            last.synchronized { last.clear(); last ++= snap }; ()
+          }
+          .start()
+        q.processAllAvailable(); q.stop()
+      }
+      input.addData(b1); drain()
+      input.addData(b2); drain()
+      val batch = rows(ops.Sampling.kmvDistinct(spark, dir)
+        .select("event_type", "k_used", "kth_hash"), "event_type", "k_used", "kth_hash")
+      assert(last.map(t => Seq[Any](t._1, t._2, t._3)).toSet === batch,
+        "restored sketch buffers diverged from the full-corpus batch sketch")
     }
-    input.addData(b1); drain()
-    input.addData(b2); drain()
-    val batch = rows(ops.Sampling.kmvDistinct(spark, dir)
-      .select("event_type", "k_used", "kth_hash"), "event_type", "k_used", "kth_hash")
-    assert(last.map(t => Seq[Any](t._1, t._2, t._3)).toSet === batch,
-      "restored sketch buffers diverged from the full-corpus batch sketch")
   }
 
   test("retention state survives a checkpointed restart (mapGroupsWithState recovery)") {
@@ -775,38 +779,39 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val sqlCtx = spark.sqlContext
     val days = allEvents.map(e => (e.user_id, e.sec / 86400L))
     val (b1, b2) = days.splitAt(days.size / 2)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ret_ckpt_").toString
-    val input = MemoryStream[(Long, Long)]
-    val last = new scala.collection.mutable.HashMap[Long, (Long, Long)]()
-    def drain(): Unit = {
-      val snaps = input.toDS()
-        .groupByKey(_._1)
-        .mapGroupsWithState[RetSt, (Long, Long, Long)](GroupStateTimeout.NoTimeout()) {
-          (uid: Long, it: Iterator[(Long, Long)], state: GroupState[RetSt]) =>
-            val st = advanceRetention(state.getOption, it.map(_._2).toSeq)
-            state.update(st)
-            (uid, st.cohort, st.mask)
-        }.toDF("user_id", "cohort", "mask")
-      val q = snaps.writeStream
-        .option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Update())
-        .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          df.collect().foreach { r =>
-            last.synchronized { last(r.getLong(0)) = (r.getLong(1), r.getLong(2)) }
-          }; ()
-        }
-        .start()
-      q.processAllAvailable(); q.stop()
+    Scratch.withDir("ret_ckpt") { ckpt =>
+      val input = MemoryStream[(Long, Long)]
+      val last = new scala.collection.mutable.HashMap[Long, (Long, Long)]()
+      def drain(): Unit = {
+        val snaps = input.toDS()
+          .groupByKey(_._1)
+          .mapGroupsWithState[RetSt, (Long, Long, Long)](GroupStateTimeout.NoTimeout()) {
+            (uid: Long, it: Iterator[(Long, Long)], state: GroupState[RetSt]) =>
+              val st = advanceRetention(state.getOption, it.map(_._2).toSeq)
+              state.update(st)
+              (uid, st.cohort, st.mask)
+          }.toDF("user_id", "cohort", "mask")
+        val q = snaps.writeStream
+          .option("checkpointLocation", ckpt)
+          .outputMode(OutputMode.Update())
+          .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+            df.collect().foreach { r =>
+              last.synchronized { last(r.getLong(0)) = (r.getLong(1), r.getLong(2)) }
+            }; ()
+          }
+          .start()
+        q.processAllAvailable(); q.stop()
+      }
+      input.addData(b1); drain()
+      input.addData(b2); drain()
+      // the restored-and-advanced state must equal a single fold over
+      // the whole corpus (order-independent below the offset cap)
+      val expect = days.groupBy(_._1).map { case (u, ds) =>
+        val st = advanceRetention(None, ds.map(_._2))
+        u -> ((st.cohort, st.mask))
+      }
+      assert(last.toMap === expect, "restored retention state diverged")
     }
-    input.addData(b1); drain()
-    input.addData(b2); drain()
-    // the restored-and-advanced state must equal a single fold over
-    // the whole corpus (order-independent below the offset cap)
-    val expect = days.groupBy(_._1).map { case (u, ds) =>
-      val st = advanceRetention(None, ds.map(_._2))
-      u -> ((st.cohort, st.mask))
-    }
-    assert(last.toMap === expect, "restored retention state diverged")
   }
 
   test("stream_dedup_wm suppresses in-window dups, evicts state, re-admits after eviction") {
@@ -878,44 +883,46 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // come out identical (Complete-mode agg state merges per doc)
     val ta = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
     val tb = "kilo lima mike november oscar papa quebec romeo sierra tango"
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sincr2_spec").toString
-    Seq((1L, "en", ta, "s"), (4L, "en", ta, "s"),
-        (8L, "en", tb, "s"), (12L, "en", tb, "s"))
-      .toDF("doc_id", "lang", "text", "source")
-      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    // drive the operator's internals with a split feed: reuse the
-    // public op for the expectation, then a manual two-trigger run
-    val expect = EventStreams.incrDedup(spark, tmp).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    assert(expect === Set((4L, 1L, 1L, 0L), (8L, 0L, -1L, 1L), (12L, 0L, -1L, 1L)))
-    val newDocs = Tables(spark, tmp, "documents")
-      .filter(col("doc_id") % 4 === 0)
-      .select(col("doc_id"), col("text"), col("source"))
-      .as[EventStreams.Doc].collect().toSeq.sortBy(_.doc_id)
-    val (h1, h2) = newDocs.splitAt(1)
-    val got = EventStreams.incrDedupDriven(spark, tmp, Seq(h1, h2)).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    assert(got === expect)
+    Scratch.withDir("sincr2_spec") { tmp =>
+      Seq((1L, "en", ta, "s"), (4L, "en", ta, "s"),
+          (8L, "en", tb, "s"), (12L, "en", tb, "s"))
+        .toDF("doc_id", "lang", "text", "source")
+        .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      // drive the operator's internals with a split feed: reuse the
+      // public op for the expectation, then a manual two-trigger run
+      val expect = EventStreams.incrDedup(spark, tmp).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+      assert(expect === Set((4L, 1L, 1L, 0L), (8L, 0L, -1L, 1L), (12L, 0L, -1L, 1L)))
+      val newDocs = Tables(spark, tmp, "documents")
+        .filter(col("doc_id") % 4 === 0)
+        .select(col("doc_id"), col("text"), col("source"))
+        .as[EventStreams.Doc].collect().toSeq.sortBy(_.doc_id)
+      val (h1, h2) = newDocs.splitAt(1)
+      val got = EventStreams.incrDedupDriven(spark, tmp, Seq(h1, h2)).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+      assert(got === expect)
+    }
   }
 
   test("stream_incr_dedup admits against the static index only (no in-batch arm)") {
     import spark.implicits._
     val ta = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
     val tb = "kilo lima mike november oscar papa quebec romeo sierra tango"
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sincr_spec").toString
-    // old corpus: 1 (=A); new batch: 4 (=A, dup of old 1), 8 and 12
-    // (=B twins with NO old counterpart -> BOTH kept live, unlike the
-    // batch twin where 12 resolves to earlier-in-batch 8)
-    Seq((1L, "en", ta, "s"), (4L, "en", ta, "s"),
-        (8L, "en", tb, "s"), (12L, "en", tb, "s"))
-      .toDF("doc_id", "lang", "text", "source")
-      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val live = EventStreams.incrDedup(spark, tmp).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    assert(live === Set((4L, 1L, 1L, 0L), (8L, 0L, -1L, 1L), (12L, 0L, -1L, 1L)))
-    val batch = graft.ops.Dedup.incremental(spark, tmp).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    assert(batch === Set((4L, 1L, 1L, 0L), (8L, 0L, -1L, 1L), (12L, 1L, 8L, 0L)))
+    Scratch.withDir("sincr_spec") { tmp =>
+      // old corpus: 1 (=A); new batch: 4 (=A, dup of old 1), 8 and 12
+      // (=B twins with NO old counterpart -> BOTH kept live, unlike the
+      // batch twin where 12 resolves to earlier-in-batch 8)
+      Seq((1L, "en", ta, "s"), (4L, "en", ta, "s"),
+          (8L, "en", tb, "s"), (12L, "en", tb, "s"))
+        .toDF("doc_id", "lang", "text", "source")
+        .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      val live = EventStreams.incrDedup(spark, tmp).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+      assert(live === Set((4L, 1L, 1L, 0L), (8L, 0L, -1L, 1L), (12L, 0L, -1L, 1L)))
+      val batch = graft.ops.Dedup.incremental(spark, tmp).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+      assert(batch === Set((4L, 1L, 1L, 0L), (8L, 0L, -1L, 1L), (12L, 1L, 8L, 0L)))
+    }
   }
 
   test("stream_range_join and stream_asof equal their batch twins on the bounded drain") {

@@ -51,16 +51,10 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private def withBothEncodings(f: (String, String) => Unit): Unit = {
-    val root = java.nio.file.Files.createTempDirectory("graft_ts_enc").toFile
-    try {
-      val (dNs, dUs) = (s"${root.getPath}/ns", s"${root.getPath}/us")
+    Scratch.withDir("ts_enc") { root =>
+      val (dNs, dUs) = (s"$root/ns", s"$root/us")
       writeEvents(dNs, "ns"); writeEvents(dUs, "us")
       f(dNs, dUs)
-    } finally {
-      def rm(x: java.io.File): Unit = {
-        Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(): Unit
-      }
-      rm(root)
     }
   }
 

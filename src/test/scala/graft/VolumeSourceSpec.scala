@@ -66,7 +66,7 @@ class VolumeSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("value zonemap prunes blocks at plan time and loses no matching voxel") {
-    val path = s"/tmp/graft_zm_spec_${graft.Staging.token()}.csv"
+    val path = Scratch.path("zm_spec") + ".csv"
     try {
       val n = VolumeSource.buildZonemap(spark, path)
       assert(n <= 128L && n > 0L)
@@ -95,7 +95,7 @@ class VolumeSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       val expectBoth = zm.count { case ((c, _, _, _), (_, vmax)) =>
         c == 0L && vmax >= thr }
       assert(both.rdd.getNumPartitions === expectBoth)
-    } finally { new java.io.File(path).delete(): Unit }
+    } finally Scratch.rm(path)
   }
 
   test("level option selects the pyramid scale and still prunes blocks") {
@@ -118,21 +118,20 @@ class VolumeSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("pyramid sink round-trips partitioned by (level, c)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pyr").toString
-    val pyr = graft.octree.Pyramid(VolumeGridFixture(spark))
-    VolumeQueries.writePyramid(pyr, dir)
-    val back = spark.read.parquet(dir)
-    assert(back.count() === pyr.count())
-    val lvl1 = VolumeQueries.readLevel(spark, dir, 1)
-    // partition-column type is inferred on read; compare as strings
-    assert(lvl1.select("level").distinct().collect().map(_.get(0).toString).toSeq === Seq("1"))
+    Scratch.withDir("pyr") { dir =>
+      val pyr = graft.octree.Pyramid(VolumeGridFixture(spark))
+      VolumeQueries.writePyramid(pyr, dir)
+      val back = spark.read.parquet(dir)
+      assert(back.count() === pyr.count())
+      val lvl1 = VolumeQueries.readLevel(spark, dir, 1)
+      // partition-column type is inferred on read; compare as strings
+      assert(lvl1.select("level").distinct().collect().map(_.get(0).toString).toSeq === Seq("1"))
+    }
   }
 
   test("pyramid and volume sink rows remove their staging directories") {
     val sf = "/root/testdata/sf0.001"
-    val shm = new java.io.File("/dev/shm")
-    val root = if (shm.isDirectory && shm.canWrite) shm
-      else new java.io.File(System.getProperty("java.io.tmpdir"))
+    val root = new java.io.File(Scratch.root)
     val pid = ProcessHandle.current().pid()
     def staged = Option(root.list()).toSeq.flatten.filter(n =>
       n.startsWith(s"graft_pyr_sink_${pid}_") || n.startsWith(s"graft_vsink_${pid}_")).toSet
@@ -224,45 +223,47 @@ class VolumeSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
         x <- 0L until 16L)
       yield (c, z, y, x, z * 256 + y * 16 + x + 1)).toDF("c", "z", "y", "x", "v")
     val pyr = graft.octree.Pyramid(wide).localCheckpoint()
-    val frag = java.nio.file.Files.createTempDirectory("graft-cmp-frag").toString
-    val comp = java.nio.file.Files.createTempDirectory("graft-cmp").toString
-    (0 until VolumeQueries.CompactWaves).foreach { k =>
-      pyr.filter(pmod(col("z"), lit(VolumeQueries.CompactWaves.toLong)) === k.toLong)
-        .write.mode(org.apache.spark.sql.SaveMode.Append)
-        .partitionBy("level", "c").parquet(frag)
+    Scratch.withDir("cmp_frag") { frag =>
+      Scratch.withDir("cmp") { comp =>
+        (0 until VolumeQueries.CompactWaves).foreach { k =>
+          pyr.filter(pmod(col("z"), lit(VolumeQueries.CompactWaves.toLong)) === k.toLong)
+            .write.mode(org.apache.spark.sql.SaveMode.Append)
+            .partitionBy("level", "c").parquet(frag)
+        }
+        VolumeQueries.compactStore(spark, frag, comp)
+        def filesPerDir(root: String): Map[String, Seq[java.io.File]] =
+          Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
+            .filter(f => f.isDirectory && f.getName.startsWith("level="))
+            .flatMap(l => Option(l.listFiles()).getOrElse(Array.empty)
+              .filter(_.isDirectory)
+              .map(c => s"${l.getName}/${c.getName}" ->
+                Option(c.listFiles()).getOrElse(Array.empty)
+                  .filter(_.getName.endsWith(".parquet")).toSeq))
+            .toMap
+        val fragF = filesPerDir(frag)
+        val compF = filesPerDir(comp)
+        assert(fragF.keySet === compF.keySet)
+        val target = VolumeQueries.CompactTargetRows
+        fragF.keySet.foreach { d =>
+          val rows = compF(d).map(f => spark.read.parquet(f.getPath).count())
+          val nf = (rows.sum + target - 1) / target
+          // never more files than needed modulo the hard row cap; never
+          // more than the fragmented state
+          assert(compF(d).size <= 2 * nf, s"$d over file budget")
+          assert(compF(d).size <= fragF(d).size, s"$d grew")
+          rows.foreach(r => assert(r <= target, s"$d has an oversized file"))
+        }
+        // the fixture really was fragmented, and compaction really collapsed
+        assert(fragF.values.map(_.size).max >= VolumeQueries.CompactWaves)
+        assert(compF.values.map(_.size).sum < fragF.values.map(_.size).sum)
+        // lossless: identical voxel multiset
+        val a = spark.read.parquet(frag).select("level", "c", "z", "y", "x", "v")
+          .orderBy("level", "c", "z", "y", "x").collect().toSeq
+        val b = spark.read.parquet(comp).select("level", "c", "z", "y", "x", "v")
+          .orderBy("level", "c", "z", "y", "x").collect().toSeq
+        assert(a.map(_.toString) === b.map(_.toString))
+      }
     }
-    VolumeQueries.compactStore(spark, frag, comp)
-    def filesPerDir(root: String): Map[String, Seq[java.io.File]] =
-      Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith("level="))
-        .flatMap(l => Option(l.listFiles()).getOrElse(Array.empty)
-          .filter(_.isDirectory)
-          .map(c => s"${l.getName}/${c.getName}" ->
-            Option(c.listFiles()).getOrElse(Array.empty)
-              .filter(_.getName.endsWith(".parquet")).toSeq))
-        .toMap
-    val fragF = filesPerDir(frag)
-    val compF = filesPerDir(comp)
-    assert(fragF.keySet === compF.keySet)
-    val target = VolumeQueries.CompactTargetRows
-    fragF.keySet.foreach { d =>
-      val rows = compF(d).map(f => spark.read.parquet(f.getPath).count())
-      val nf = (rows.sum + target - 1) / target
-      // never more files than needed modulo the hard row cap; never
-      // more than the fragmented state
-      assert(compF(d).size <= 2 * nf, s"$d over file budget")
-      assert(compF(d).size <= fragF(d).size, s"$d grew")
-      rows.foreach(r => assert(r <= target, s"$d has an oversized file"))
-    }
-    // the fixture really was fragmented, and compaction really collapsed
-    assert(fragF.values.map(_.size).max >= VolumeQueries.CompactWaves)
-    assert(compF.values.map(_.size).sum < fragF.values.map(_.size).sum)
-    // lossless: identical voxel multiset
-    val a = spark.read.parquet(frag).select("level", "c", "z", "y", "x", "v")
-      .orderBy("level", "c", "z", "y", "x").collect().toSeq
-    val b = spark.read.parquet(comp).select("level", "c", "z", "y", "x", "v")
-      .orderBy("level", "c", "z", "y", "x").collect().toSeq
-    assert(a.map(_.toString) === b.map(_.toString))
   }
 
   test("snapshot store: rewrite isolation, time travel, and vacuum safety") {
@@ -272,40 +273,41 @@ class VolumeSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
         x <- 0L until 16L)
       yield (c, z, y, x, z * 256 + y * 16 + x + 1)).toDF("c", "z", "y", "x", "v")
     val pyr = graft.octree.Pyramid(wide).localCheckpoint()
-    val store = java.nio.file.Files.createTempDirectory("graft-snap").toString
-    (0 until VolumeQueries.CompactWaves).foreach { k =>
-      pyr.filter(pmod(col("z"), lit(VolumeQueries.CompactWaves.toLong)) === k.toLong)
-        .write.mode(org.apache.spark.sql.SaveMode.Append)
-        .partitionBy("level", "c").parquet(store)
-    }
-    val v1 = SnapshotStore.commit(store, SnapshotStore.listDataFiles(store))
-    val v2 = SnapshotStore.commit(store,
-      VolumeQueries.compactVersion(spark, store, v1))
-    assert(SnapshotStore.latest(store) === v2)
-    val f1 = SnapshotStore.files(store, v1).toSet
-    val f2 = SnapshotStore.files(store, v2).toSet
-    // the rewrite produced a wholly new file set; both are live on disk
-    assert(f1.nonEmpty && f2.nonEmpty && f1.intersect(f2).isEmpty)
-    assert((f1 ++ f2).subsetOf(SnapshotStore.listDataFiles(store).toSet))
-    def voxels(v: Int): Seq[String] =
-      SnapshotStore.read(spark, store, v)
+    Scratch.withDir("snap") { store =>
+      (0 until VolumeQueries.CompactWaves).foreach { k =>
+        pyr.filter(pmod(col("z"), lit(VolumeQueries.CompactWaves.toLong)) === k.toLong)
+          .write.mode(org.apache.spark.sql.SaveMode.Append)
+          .partitionBy("level", "c").parquet(store)
+      }
+      val v1 = SnapshotStore.commit(store, SnapshotStore.listDataFiles(store))
+      val v2 = SnapshotStore.commit(store,
+        VolumeQueries.compactVersion(spark, store, v1))
+      assert(SnapshotStore.latest(store) === v2)
+      val f1 = SnapshotStore.files(store, v1).toSet
+      val f2 = SnapshotStore.files(store, v2).toSet
+      // the rewrite produced a wholly new file set; both are live on disk
+      assert(f1.nonEmpty && f2.nonEmpty && f1.intersect(f2).isEmpty)
+      assert((f1 ++ f2).subsetOf(SnapshotStore.listDataFiles(store).toSet))
+      def voxels(v: Int): Seq[String] =
+        SnapshotStore.read(spark, store, v)
+          .select(col("level").cast("long"), col("c").cast("long"),
+            col("z"), col("y"), col("x"), col("v"))
+          .orderBy("level", "c", "z", "y", "x").collect().map(_.toString).toSeq
+      val expected = pyr
         .select(col("level").cast("long"), col("c").cast("long"),
           col("z"), col("y"), col("x"), col("v"))
         .orderBy("level", "c", "z", "y", "x").collect().map(_.toString).toSeq
-    val expected = pyr
-      .select(col("level").cast("long"), col("c").cast("long"),
-        col("z"), col("y"), col("x"), col("v"))
-      .orderBy("level", "c", "z", "y", "x").collect().map(_.toString).toSeq
-    // time travel BEHIND the rewrite and the rewritten head both read
-    // exactly the pyramid
-    assert(voxels(v1) === expected)
-    assert(voxels(v2) === expected)
-    // vacuum: v1's files reclaimed, v1's manifest gone, v2 untouched
-    val dead = SnapshotStore.expire(store, v2)
-    assert(dead.toSet === f1)
-    assert(SnapshotStore.versions(store) === Seq(v2))
-    assert(SnapshotStore.listDataFiles(store).toSet === f2)
-    assert(voxels(v2) === expected)
+      // time travel BEHIND the rewrite and the rewritten head both read
+      // exactly the pyramid
+      assert(voxels(v1) === expected)
+      assert(voxels(v2) === expected)
+      // vacuum: v1's files reclaimed, v1's manifest gone, v2 untouched
+      val dead = SnapshotStore.expire(store, v2)
+      assert(dead.toSet === f1)
+      assert(SnapshotStore.versions(store) === Seq(v2))
+      assert(SnapshotStore.listDataFiles(store).toSet === f2)
+      assert(voxels(v2) === expected)
+    }
   }
 
   test("CSV staging round-trips hostile text (quotes, commas, newlines) losslessly") {
@@ -313,44 +315,46 @@ class VolumeSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rows = Seq((1L, "a,b,c"), (2L, "he said \"hi\" twice"),
       (3L, "line1\nline2\r\nline3"), (4L, "trailing,\"\n"))
     val df = rows.toDF("id", "t")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-csv-spec").toString
-    // without the two whitespace options the WRITER trims the trailing
-    // newline of row 4 inside its quotes — this spec pins the fix
-    df.write.mode("overwrite").option("header", "true")
-      .option("ignoreLeadingWhiteSpace", "false")
-      .option("ignoreTrailingWhiteSpace", "false")
-      .option("quote", "\"").option("escape", "\"").csv(tmp)
-    val back = spark.read.schema(df.schema)
-      .option("header", "true").option("multiLine", "true")
-      .option("ignoreLeadingWhiteSpace", "false")
-      .option("ignoreTrailingWhiteSpace", "false")
-      .option("quote", "\"").option("escape", "\"").csv(tmp)
-      .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
-    assert(back === rows.sortBy(_._1))
+    Scratch.withDir("csv_spec") { tmp =>
+      // without the two whitespace options the WRITER trims the trailing
+      // newline of row 4 inside its quotes — this spec pins the fix
+      df.write.mode("overwrite").option("header", "true")
+        .option("ignoreLeadingWhiteSpace", "false")
+        .option("ignoreTrailingWhiteSpace", "false")
+        .option("quote", "\"").option("escape", "\"").csv(tmp)
+      val back = spark.read.schema(df.schema)
+        .option("header", "true").option("multiLine", "true")
+        .option("ignoreLeadingWhiteSpace", "false")
+        .option("ignoreTrailingWhiteSpace", "false")
+        .option("quote", "\"").option("escape", "\"").csv(tmp)
+        .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
+      assert(back === rows.sortBy(_._1))
+    }
   }
 
   test("snapshot store: unrepresentable file names rejected, empty store errors") {
     import graft.sources.SnapshotStore
-    val store = java.nio.file.Files.createTempDirectory("graft-snap-edge").toString
-    // latest() on a store with no committed version: a DESCRIPTIVE
-    // error, not an opaque empty-max UnsupportedOperationException
-    val e = intercept[IllegalArgumentException](SnapshotStore.latest(store))
-    assert(e.getMessage.contains(store))
-    // the hand-written manifest splits its array on ',': names the
-    // format cannot represent must be rejected AT COMMIT, never
-    // corrupt the manifest silently
-    for (bad <- Seq("a,b.parquet", "a\"b.parquet", "a\nb.parquet"))
-      intercept[IllegalArgumentException](SnapshotStore.commit(store, Seq(bad)))
-    assert(SnapshotStore.versions(store).isEmpty) // nothing half-committed
-    val v = SnapshotStore.commit(store, Seq("level=0/c=0/part-0.parquet"))
-    assert(SnapshotStore.latest(store) === v)
-    assert(SnapshotStore.files(store, v) === Seq("level=0/c=0/part-0.parquet"))
+    Scratch.withDir("snap_edge") { store =>
+      new java.io.File(store).mkdirs()
+      // latest() on a store with no committed version: a DESCRIPTIVE
+      // error, not an opaque empty-max UnsupportedOperationException
+      val e = intercept[IllegalArgumentException](SnapshotStore.latest(store))
+      assert(e.getMessage.contains(store))
+      // the hand-written manifest splits its array on ',': names the
+      // format cannot represent must be rejected AT COMMIT, never
+      // corrupt the manifest silently
+      for (bad <- Seq("a,b.parquet", "a\"b.parquet", "a\nb.parquet"))
+        intercept[IllegalArgumentException](SnapshotStore.commit(store, Seq(bad)))
+      assert(SnapshotStore.versions(store).isEmpty) // nothing half-committed
+      val v = SnapshotStore.commit(store, Seq("level=0/c=0/part-0.parquet"))
+      assert(SnapshotStore.latest(store) === v)
+      assert(SnapshotStore.files(store, v) === Seq("level=0/c=0/part-0.parquet"))
+    }
   }
 
   test("physical n5 container round-trips: chunk bytes parse back to the exact arthur pyramid") {
     val dir = "/root/testdata/sf0.001"
-    val out = java.nio.file.Files.createTempDirectory("graft_n5_spec").toString
-    try {
+    Scratch.withDir("n5_spec") { out =>
       N5Binary.writeContainer(spark, dir, out)
       // 1. every level's voxels decoded from bytes == the pyramid frame
       val want = graft.octree.Pyramid(graft.VoxelGrid(spark, dir))
@@ -388,19 +392,13 @@ class VolumeSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       // 5. the root pixelResolution attribute reads back
       //    (get_pixel_resolution_n5_zarr's probe)
       assert(N5Binary.pixelResolution(out) === N5Binary.PixelResolution)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(out))
     }
   }
 
   test("physical zarr container round-trips: chunk bytes parse back to the exact arthur pyramid") {
     import graft.sources.ZarrBinary
     val dir = "/root/testdata/sf0.001"
-    val out = java.nio.file.Files.createTempDirectory("graft_zarr_spec").toString
-    try {
+    Scratch.withDir("zarr_spec") { out =>
       ZarrBinary.writeContainer(spark, dir, out)
       // 1. every level's voxels decoded from bytes == the pyramid frame
       val want = graft.octree.Pyramid(graft.VoxelGrid(spark, dir))
@@ -439,11 +437,6 @@ class VolumeSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(inf.finished() && n === l * l * l * 2)
       // 5. the root .zattrs pixelResolution reads back
       assert(ZarrBinary.pixelResolution(out) === ZarrBinary.PixelResolution)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(out))
     }
   }
 
@@ -452,8 +445,7 @@ class VolumeSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     // v3 standardizes) must parse back to the same pyramid as "."
     import graft.sources.ZarrBinary
     val dir = "/root/testdata/sf0.001"
-    val out = java.nio.file.Files.createTempDirectory("graft_zarr_nested").toString
-    try {
+    Scratch.withDir("zarr_nested") { out =>
       ZarrBinary.writeContainer(spark, dir, out, separator = "/")
       // chunks are nested directories now, not flat dot-files
       assert(new java.io.File(s"$out/c0/s0").listFiles()
@@ -467,11 +459,6 @@ class VolumeSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       val txt = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(s"$out/c0/s0/.zarray")), "UTF-8")
       assert(txt.contains(""""dimension_separator":"/""""))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(out))
     }
   }
 
@@ -481,8 +468,7 @@ class VolumeSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     // id in .zarray per array via the same broadcast-joined metadata
     import graft.sources.ZarrBinary
     val dir = "/root/testdata/sf0.001"
-    val out = java.nio.file.Files.createTempDirectory("graft_zarr_gzip").toString
-    try {
+    Scratch.withDir("zarr_gzip") { out =>
       ZarrBinary.writeContainer(spark, dir, out, compressor = "gzip")
       // chunk payloads are genuinely gzip-framed (magic 1f 8b)
       def chunks(root: java.io.File): Seq[java.io.File] =
@@ -495,18 +481,12 @@ class VolumeSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       val got = ZarrBinary.parseVoxels(spark, out).collect().map(_.toSeq)
       assert(got.nonEmpty)
       assert(got.toSeq === want.toSeq)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(out))
     }
   }
 
   test("zarr decode is C-order on a non-cubic chunk (axis mixups cannot hide)") {
     import graft.sources.ZarrBinary
-    val out = java.nio.file.Files.createTempDirectory("graft_zarr_order").toString
-    try {
+    Scratch.withDir("zarr_order") { out =>
       // hand-write a one-chunk array of shape (2, 3, 4): value encodes
       // the coordinate as z·100 + y·10 + x + 1, C-order serialization
       val (dz, dy, dx) = (2, 3, 4)
@@ -533,11 +513,6 @@ class VolumeSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       val want = (for (z <- 0 until dz; y <- 0 until dy; x <- 0 until dx)
         yield (z.toLong, y.toLong, x.toLong, (z * 100 + y * 10 + x + 1).toLong)).toSet
       assert(got === want)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(out))
     }
   }
 
@@ -553,8 +528,7 @@ class VolumeSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
         (s, o) => N5Binary.parseVoxels(s, o)),
       ("zarr", (s, d, o) => graft.sources.ZarrBinary.writeContainer(s, d, o),
         (s, o) => graft.sources.ZarrBinary.parseVoxels(s, o)))) {
-      val out = java.nio.file.Files.createTempDirectory(s"graft_corrupt_$name").toString
-      try {
+      Scratch.withDir(s"corrupt_$name") { out =>
         write(spark, dir, out)
         // find one chunk file and truncate it mid-payload
         def chunks(root: java.io.File): Seq[java.io.File] =
@@ -573,11 +547,6 @@ class VolumeSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
             c.getMessage.contains("chunk") || c.getMessage.contains("Unexpected") ||
             c.isInstanceOf[java.io.IOException])),
           s"$name corruption surfaced as: ${chain(e).map(_.getClass.getSimpleName)}")
-      } finally {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(new java.io.File(out))
       }
     }
   }
@@ -618,8 +587,7 @@ class VolumeSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("ingest dispatch: every staged arm sniffs to the reference catalog, slices ingest losslessly") {
     val dir = "/root/testdata/sf0.001"
-    val out = java.nio.file.Files.createTempDirectory("graft_ingest_spec").toString
-    try {
+    Scratch.withDir("ingest_spec") { out =>
       graft.sources.IngestDispatch.stageAll(spark, dir, out)
       val rows = graft.sources.IngestDispatch.discover(spark, out).collect()
         .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getLong(3),
@@ -657,11 +625,6 @@ class VolumeSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
         .collect().map(_.toSeq)
       assert(gotStack.nonEmpty)
       assert(gotStack.toSeq === want.toSeq)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(out))
     }
   }
 
@@ -743,8 +706,7 @@ class VolumeSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("zarr v3 containers round-trip: zarr.json metadata + c/ chunk keys + codec pipeline") {
     import graft.sources.Zarr3Binary
     val dir = "/root/testdata/sf0.001"
-    val out = java.nio.file.Files.createTempDirectory("graft_zarr3_spec").toString
-    try {
+    Scratch.withDir("zarr3_spec") { out =>
       Zarr3Binary.writeContainer(spark, dir, out)
       // voxels decoded from bytes == the pyramid frame (same bar as v2)
       val want = graft.octree.Pyramid(graft.VoxelGrid(spark, dir))
@@ -774,29 +736,12 @@ class VolumeSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert((head(0) & 0xff) === 0x1f && (head(1) & 0xff) === 0x8b, "not gzip-framed")
       // root attributes ride inline in the v3 document
       assert(Zarr3Binary.pixelResolution(out) === Zarr3Binary.PixelResolution)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(out))
     }
-  }
-
-  private def rmAll(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmAll)); f.delete(): Unit
-  }
-
-  private def sinkTmp(tag: String): String = {
-    val base = new java.io.File("/dev/shm")
-    val root = if (base.isDirectory && base.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    s"$root/graft_vsink_spec_${ProcessHandle.current().pid()}_$tag"
   }
 
   test("DSV2 sink: Spark plans the clustering+sort and each block lands in ONE file") {
     import graft.sources.VolumeSink
-    val out = sinkTmp("plan")
-    try {
+    Scratch.withDir("vsink_spec_plan") { out =>
       val pyr = graft.octree.Pyramid(graft.VoxelGrid(spark, "/root/testdata/sf0.001"))
       val blocked = graft.octree.Addressing.blockify(pyr)
         .select("level", "c", "bz", "by", "bx", "lz", "ly", "lx", "v")
@@ -822,12 +767,11 @@ class VolumeSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       val want = pyr.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5))).sorted.toSeq
       assert(got === want)
-    } finally rmAll(new java.io.File(out))
+    }
   }
 
   test("DSV2 sink: duplicate blocks abort instead of silently overwriting") {
-    val out = sinkTmp("dup")
-    try {
+    Scratch.withDir("vsink_spec_dup") { out =>
       val pyr = graft.octree.Pyramid(graft.VoxelGrid(spark, "/root/testdata/sf0.001"))
       val blocked = graft.octree.Addressing.blockify(pyr)
         .select("level", "c", "bz", "by", "bx", "lz", "ly", "lx", "v")
@@ -845,12 +789,11 @@ class VolumeSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
           x.getClass.getName) ++ msgs(x.getCause))
       assert(msgs(e).exists(m => m.contains("FileAlreadyExists") || m.contains("exists")),
         e.toString)
-    } finally rmAll(new java.io.File(out))
+    }
   }
 
   test("DSV2 sink: a wrong input schema is rejected at write planning") {
-    val out = sinkTmp("schema")
-    try {
+    Scratch.withDir("vsink_spec_schema") { out =>
       val e = intercept[Exception] {
         spark.range(3).toDF("level")
           .write.format("graft.sources.VolumeSink").option("path", out)
@@ -863,6 +806,6 @@ class VolumeSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
         (e.getMessage.contains("INCOMPATIBLE_DATA_FOR_TABLE") ||
           e.getMessage.contains("VolumeSink expects columns")),
         e.toString)
-    } finally rmAll(new java.io.File(out))
+    }
   }
 }

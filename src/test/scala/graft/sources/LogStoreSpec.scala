@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Scratch
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Delta-log reconstruction: checkpoint+tail equals the naive full
@@ -9,19 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class LogStoreSpec extends AnyFunSuite {
 
-  private def rm(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-  }
-
-  private def freshRoot(): String = {
-    val r = s"${System.getProperty("java.io.tmpdir")}/graft_logspec_${graft.Staging.token()}"
-    new java.io.File(r).mkdirs()
-    r
-  }
+  private def withRoot[T](body: String => T): T =
+    Scratch.withDir("logspec") { r => new java.io.File(r).mkdirs(); body(r) }
 
   test("checkpoint+tail state equals the naive fold at every version") {
-    val root = freshRoot()
-    try {
+    withRoot { root =>
       // a 10-commit history with adds, removes, and a rewrite
       val deltas: Seq[(Seq[String], Seq[String])] = Seq(
         (Seq("a1"), Nil), (Seq("a2"), Nil), (Seq("a3"), Nil),
@@ -46,6 +39,6 @@ class LogStoreSpec extends AnyFunSuite {
       intercept[IllegalArgumentException] {
         LogStore.commitDelta(root, Seq("bad,name"), Nil)
       }
-    } finally rm(new java.io.File(root))
+    }
   }
 }

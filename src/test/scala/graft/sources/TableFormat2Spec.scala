@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Scratch
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -177,12 +178,7 @@ class TableFormat2Spec extends AnyFunSuite with BeforeAndAfterAll {
         .agg(count(lit(1)), sum("total_c")).collect()(0)
       assert(after.getLong(0) == before.getLong(0) &&
         after.getLong(1) == before.getLong(1))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(store))
-    }
+    } finally Scratch.rm(store)
   }
 
   test("row lineage: per-row ids and seqs survive the copy-on-write") {

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Scratch
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -24,10 +25,6 @@ class TableFormat3Spec extends AnyFunSuite with BeforeAndAfterAll {
     .getOrCreate()
 
   override def afterAll(): Unit = spark.stop()
-
-  private def rm(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-  }
 
   test("eq-delete sequencing: reinsert survives its older delete; naive application swallows it; compaction folds the debt") {
     val store = EqDelete.stage(spark, dir)
@@ -91,9 +88,7 @@ class TableFormat3Spec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("orphan gc: age-gated, manifest-driven, committed files untouchable, idempotent") {
-    val root = s"/tmp/graft_ogc_spec_${ProcessHandle.current().pid()}"
-    rm(new java.io.File(root))
-    try {
+    Scratch.withDir("ogc_spec") { root =>
       val o = TableRefs.ordersYkp(spark, dir)
       val (y0, _) = TableRefs.yearBounds(spark, dir)
       val base = TableRefs.writeYears(spark, root, o, y0, y0 + 1)
@@ -125,7 +120,7 @@ class TableFormat3Spec extends AnyFunSuite with BeforeAndAfterAll {
       // a second sweep finds nothing new to reclaim
       val (again, keptAgain) = SnapshotStore.orphanGc(root, cutoff)
       assert(again.isEmpty && keptAgain.toSet === orphYoung.toSet)
-    } finally rm(new java.io.File(root))
+    }
   }
 
   test("distributed orphan census matches the staged layout closed-form") {
@@ -158,9 +153,7 @@ class TableFormat3Spec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("orphan gc live set protects committed delete files wherever they live") {
-    val root = s"/tmp/graft_ogcdel_spec_${ProcessHandle.current().pid()}"
-    rm(new java.io.File(root))
-    try {
+    Scratch.withDir("ogcdel_spec") { root =>
       val o = TableRefs.ordersYkp(spark, dir)
       val (y0, _) = TableRefs.yearBounds(spark, dir)
       val base = TableRefs.writeYears(spark, root, o, y0, y0)
@@ -183,7 +176,7 @@ class TableFormat3Spec extends AnyFunSuite with BeforeAndAfterAll {
         s"gc reclaimed manifest-referenced files: $reclaimed")
       assert(delFiles.forall(f => new java.io.File(s"$root/$f").exists()),
         "a committed delete file vanished")
-    } finally rm(new java.io.File(root))
+    }
   }
 
   test("hidden+zorder composition: both prune layers active, no false negatives, files z-sorted") {

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Scratch
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -24,14 +25,8 @@ class TableMergeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private def rm(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-  }
-
   test("merge rewrites ONLY touched partitions; v1 time travel intact") {
-    val store = s"/tmp/graft_tmerge_spec_${ProcessHandle.current().pid()}"
-    rm(new java.io.File(store))
-    try {
+    Scratch.withDir("tmerge_spec") { store =>
       val (v1, v2, touched) = TableMerge.runMerge(spark, dir, store)
       // at smoke scale not every target year necessarily receives a
       // changeset hit — but touched must be a nonempty subset, and
@@ -83,15 +78,13 @@ class TableMergeSpec extends AnyFunSuite with BeforeAndAfterAll {
       val s2b = SnapshotStore.read(spark, store, v2)
         .agg(sum(col("total_c")), sum(col("k"))).collect()(0)
       assert(s2b === s2, "v2 read changed after expire")
-    } finally rm(new java.io.File(store))
+    }
   }
 
   test("cdc batches apply exactly once: replay is a no-op, batches compose to the one-shot merge") {
     import org.apache.spark.sql.functions._
-    val s1 = s"/tmp/graft_cdc_spec1_${ProcessHandle.current().pid()}"
-    val s2 = s"/tmp/graft_cdc_spec2_${ProcessHandle.current().pid()}"
-    rm(new java.io.File(s1)); rm(new java.io.File(s2))
-    try {
+    Scratch.withDir("cdc_spec") { d =>
+      val (s1, s2) = (s"$d/1", s"$d/2")
       // one-shot reference
       TableMerge.runMerge(spark, dir, s1)
       val ref = TableMerge.mergeReport(spark, s1).collect().map(_.toSeq).toSet
@@ -113,7 +106,7 @@ class TableMergeSpec extends AnyFunSuite with BeforeAndAfterAll {
       TableMerge.cdcBatch(s2)(df(waves(2)), 2L)
       val got = TableMerge.mergeReport(spark, s2).collect().map(_.toSeq).toSet
       assert(got === ref, "batched CDC diverged from the one-shot merge")
-    } finally { rm(new java.io.File(s1)); rm(new java.io.File(s2)) }
+    }
   }
 
   test("equality deletes: no data file rewritten, head hides keys, time travel keeps them") {
@@ -147,14 +140,12 @@ class TableMergeSpec extends AnyFunSuite with BeforeAndAfterAll {
       val after = SnapshotStore.readWithDeletes(spark, store, 3, "k")
         .agg(sum("k")).collect()(0).getLong(0)
       assert(after === before, "expire broke the delete-applied head read")
-    } finally rm(new java.io.File(store))
+    } finally Scratch.rm(store)
   }
 
   test("snapshot diff stays within churned files and reconciles v1 -> v2") {
     import org.apache.spark.sql.functions._
-    val store = s"/tmp/graft_sdiff_spec_${graft.Staging.token()}"
-    rm(new java.io.File(store))
-    try {
+    Scratch.withDir("sdiff_spec") { store =>
       val (v1, v2, touched) = TableMerge.runMerge(spark, dir, store)
       // the churn set is manifest arithmetic and only touched partitions
       val f1 = SnapshotStore.files(store, v1).toSet
@@ -185,7 +176,7 @@ class TableMergeSpec extends AnyFunSuite with BeforeAndAfterAll {
           case _ => assert(v2keys(k) && v1keys(k), s"$op key $k")
         }
       }
-    } finally rm(new java.io.File(store))
+    }
   }
 
   test("delete compaction: v4 plain read equals v3 delete-applied read, v3 stays readable") {
@@ -203,9 +194,7 @@ class TableMergeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("ivm delta maintenance lands on the actual merged table") {
-    val store = s"/tmp/graft_ivm_spec_${graft.Staging.token()}"
-    rm(new java.io.File(store))
-    try {
+    Scratch.withDir("ivm_spec") { store =>
       TableMerge.runMerge(spark, dir, store)
       val merged = TableMerge.mergeReport(spark, store).collect()
         .map(_.toSeq).toSet
@@ -213,7 +202,7 @@ class TableMergeSpec extends AnyFunSuite with BeforeAndAfterAll {
         .map(_.toSeq).toSet
       assert(maintained === merged,
         "delta-maintained MV diverged from the merged table")
-    } finally rm(new java.io.File(store))
+    }
   }
 
   test("live ivm: replayed batch is a no-op, drained MV equals the merged table") {
@@ -221,8 +210,7 @@ class TableMergeSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val store = TableMerge.stageStore(spark, dir, "sivm_spec")
     val mvStore = s"${store}_mv"
-    val ref = s"/tmp/graft_ivm_ref_${graft.Staging.token()}"
-    rm(new java.io.File(ref))
+    val ref = Scratch.path("ivm_ref")
     try {
       val v1 = SnapshotStore.read(spark, store, 1)
         .select(col("k"), col("total_c"), col("p").cast("long").as("p"))
@@ -250,10 +238,7 @@ class TableMergeSpec extends AnyFunSuite with BeforeAndAfterAll {
       TableMerge.runMerge(spark, dir, ref)
       val want = TableMerge.mergeReport(spark, ref).collect().map(_.toSeq).toSet
       assert(got === want, "live-maintained MV diverged from the merged table")
-    } finally {
-      rm(new java.io.File(store)); rm(new java.io.File(mvStore))
-      rm(new java.io.File(ref))
-    }
+    } finally { Scratch.rm(store); Scratch.rm(mvStore); Scratch.rm(ref) }
   }
 
   test("partition evolution: old-spec files over-read at year granularity, new-spec prune to months") {

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Scratch
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -21,15 +22,8 @@ class TableRefsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private def freshRoot(): String = {
-    val r = s"${System.getProperty("java.io.tmpdir")}/graft_refspec_${graft.Staging.token()}"
-    new java.io.File(r).mkdirs()
-    r
-  }
-
-  private def rm(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-  }
+  private def withRoot[T](body: String => T): T =
+    Scratch.withDir("refspec") { r => new java.io.File(r).mkdirs(); body(r) }
 
   private def writeBatch(root: String, b: Long, n: Long): Seq[String] = {
     val before = SnapshotStore.listDataFiles(root).toSet
@@ -40,8 +34,7 @@ class TableRefsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("tag frozen, branch divergence, ref-aware vacuum") {
-    val root = freshRoot()
-    try {
+    withRoot { root =>
       val f1 = writeBatch(root, 1, 10)
       val v1 = SnapshotStore.commit(root, f1)
       Refs.set(root, "rel", v1); Refs.set(root, "main", v1)
@@ -78,12 +71,11 @@ class TableRefsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(Refs.read(spark, root, "rel").count() === 10)
       assert(Refs.read(spark, root, "main").count() === 20)
       assert(Refs.read(spark, root, "dev").count() === 20)
-    } finally rm(new java.io.File(root))
+    }
   }
 
   test("failed audit never moves main; publish is a pointer swap") {
-    val root = freshRoot()
-    try {
+    withRoot { root =>
       val f1 = writeBatch(root, 1, 8)
       val v1 = SnapshotStore.commit(root, f1)
       Refs.set(root, "main", v1)
@@ -114,6 +106,6 @@ class TableRefsSpec extends AnyFunSuite with BeforeAndAfterAll {
       intercept[IllegalArgumentException] {
         Refs.set(root, "../evil", 1)
       }
-    } finally rm(new java.io.File(root))
+    }
   }
 }
