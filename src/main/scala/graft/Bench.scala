@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, xxhash64}
 
 /** Benchmark main: runs the headline query set on
@@ -97,29 +97,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-      // wide fused projections (16-table LSH plane hashing) exceed the
-      // 64KB default and fell back to INTERPRETED eval (33s of task
-      // time on a 2000-row stage); the generated code is
-      // method-split, so letting it through keeps codegen
-      .config("spark.sql.codegen.hugeMethodLimit", (1 << 23).toString)
-      // shuffle/spill on tmpfs: the host's disk has multi-second stalls
-      // that block shuffle-file IO (observed 80s pauses at ~0% CPU).
-      // SPARK_GRAFT_LOCAL_DIR overrides for shuffle-fabric A/Bs (e.g.
-      // the dedup_substring byte-vs-pass tradeoff measured on real
-      // disk — SURVEY §6).
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", s"${Scratch.root}/graft-spark"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-bench", cpus.toInt)
 
     // THE BENCH CONTRACT: a benched query's time must include its
     // declared computation. Disable the per-JVM persisted-artifact

@@ -2,79 +2,25 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{AlnumTokens, CharBigrams, CharWindows, FloatDot, FloatDotQuant, FloatL2, FloatL2Quant, KmvKthHash, LongDot, Md5PrefixLong, SecondMax, TokenNgrams, WindowHashes}
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import graft.functions._
 
-/** Session-extensions injection of the engine's native functions and
-  * planner rules — the cluster-wide deployment path: a user adds
-  * `spark.sql.extensions=graft.GraftExtensions` to spark-submit and
-  * every session (including plain `spark.sql`) sees
-  * `graft_second_max` / `graft_md5_prefix` / `graft_kmv_kth` without
-  * any driver-side registration call, plus the
-  * [[graft.plans.SecondMaxRewrite]] optimizer rule that rewrites the
-  * naive collect_list+sort second-max idiom to the native bounded
-  * aggregate. ([[graft.functions.GraftFunctions.register]] remains as
-  * the idempotent per-session fallback used by the query library
-  * itself.)
+/** The engine's one install path: its native functions, planner rules
+  * and as-of strategy, injected into a session as extensions. Every
+  * [[GraftSession]] carries them; a cluster user gets the same session
+  * by adding `spark.sql.extensions=graft.GraftExtensions` to
+  * spark-submit. A session built without them cannot resolve
+  * `graft_*` (the first call fails with `UNRESOLVED_ROUTINE`) and
+  * plans the naive shapes the rules would rewrite.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(name: String, clazz: Class[_]) =
-    new ExpressionInfo(clazz.getName, name)
-
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("graft_second_max"),
-      info("graft_second_max", classOf[SecondMax]),
-      (exprs: Seq[Expression]) => SecondMax(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("graft_md5_prefix"),
-      info("graft_md5_prefix", classOf[Md5PrefixLong]),
-      (exprs: Seq[Expression]) => Md5PrefixLong(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("graft_kmv_kth"),
-      info("graft_kmv_kth", classOf[KmvKthHash]),
-      (exprs: Seq[Expression]) => graft.functions.GraftFunctions.kmvBuilder(exprs)))
-    ext.injectFunction((FunctionIdentifier("graft_fdot"),
-      info("graft_fdot", classOf[FloatDot]),
-      (exprs: Seq[Expression]) => FloatDot(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("graft_char_bigrams"),
-      info("graft_char_bigrams", classOf[CharBigrams]),
-      (exprs: Seq[Expression]) => CharBigrams(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("graft_window_hashes"),
-      info("graft_window_hashes", classOf[WindowHashes]),
-      (exprs: Seq[Expression]) => WindowHashes.builder(exprs)))
-    ext.injectFunction((FunctionIdentifier("graft_char_windows"),
-      info("graft_char_windows", classOf[CharWindows]),
-      (exprs: Seq[Expression]) => CharWindows.builder(exprs)))
-    ext.injectFunction((FunctionIdentifier("graft_token_ngrams"),
-      info("graft_token_ngrams", classOf[TokenNgrams]),
-      (exprs: Seq[Expression]) => TokenNgrams.builder(exprs)))
-    ext.injectFunction((FunctionIdentifier("graft_alnum_tokens"),
-      info("graft_alnum_tokens", classOf[AlnumTokens]),
-      (exprs: Seq[Expression]) => AlnumTokens(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("graft_ldot"),
-      info("graft_ldot", classOf[LongDot]),
-      (exprs: Seq[Expression]) => LongDot(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("graft_fdotq"),
-      info("graft_fdotq", classOf[FloatDotQuant]),
-      (exprs: Seq[Expression]) => FloatDotQuant(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("graft_fl2"),
-      info("graft_fl2", classOf[FloatL2]),
-      (exprs: Seq[Expression]) => FloatL2(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("graft_fl2q"),
-      info("graft_fl2q", classOf[FloatL2Quant]),
-      (exprs: Seq[Expression]) => FloatL2Quant(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("graft_pq_argmin"),
-      info("graft_pq_argmin", classOf[graft.functions.PqArgmin]),
-      (exprs: Seq[Expression]) => graft.functions.GraftFunctions.pqArgminBuilder(exprs)))
-    ext.injectFunction((FunctionIdentifier("graft_argmin_l2"),
-      info("graft_argmin_l2", classOf[graft.functions.ArgminL2]),
-      (exprs: Seq[Expression]) => graft.functions.ArgminL2(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("graft_vlsum"),
-      info("graft_vlsum", classOf[graft.functions.VecSumLong]),
-      (exprs: Seq[Expression]) =>
-        graft.functions.VecSumLong(exprs(0)).toAggregateExpression()))
-    ext.injectFunction((FunctionIdentifier("graft_topk_min"),
-      info("graft_topk_min", classOf[graft.functions.TopKMin]),
-      (exprs: Seq[Expression]) => graft.functions.GraftFunctions.topkBuilder(exprs)))
+    GraftExtensions.functions.foreach { case (name, clazz, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(clazz.getName, name), builder))
+    }
     // planner seam: rewrite the naive collect_list+sort second-max
     // idiom to the native two-slot aggregate (see SecondMaxRewrite)
     ext.injectOptimizerRule(_ => graft.plans.SecondMaxRewrite)
@@ -85,4 +31,27 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // (logical AsOfJoin node -> one-pass sort-merge AsOfJoinExec)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
   }
+}
+
+object GraftExtensions {
+  /** Every native function: (SQL name, implementing class, builder). */
+  val functions: Seq[(String, Class[_], FunctionBuilder)] = Seq(
+    ("graft_second_max", classOf[SecondMax], e => SecondMax(e.head)),
+    ("graft_md5_prefix", classOf[Md5PrefixLong], e => Md5PrefixLong(e.head)),
+    ("graft_kmv_kth", classOf[KmvKthHash], GraftFunctions.kmvBuilder),
+    ("graft_fdot", classOf[FloatDot], e => FloatDot(e(0), e(1))),
+    ("graft_char_bigrams", classOf[CharBigrams], e => CharBigrams(e.head)),
+    ("graft_window_hashes", classOf[WindowHashes], WindowHashes.builder),
+    ("graft_char_windows", classOf[CharWindows], CharWindows.builder),
+    ("graft_token_ngrams", classOf[TokenNgrams], TokenNgrams.builder),
+    ("graft_alnum_tokens", classOf[AlnumTokens], e => AlnumTokens(e.head)),
+    ("graft_ldot", classOf[LongDot], e => LongDot(e(0), e(1))),
+    ("graft_hilbert", classOf[HilbertIndex], e => HilbertIndex(e(0), e(1), e(2))),
+    ("graft_fdotq", classOf[FloatDotQuant], e => FloatDotQuant(e(0), e(1))),
+    ("graft_fl2", classOf[FloatL2], e => FloatL2(e(0), e(1))),
+    ("graft_fl2q", classOf[FloatL2Quant], e => FloatL2Quant(e(0), e(1))),
+    ("graft_pq_argmin", classOf[PqArgmin], GraftFunctions.pqArgminBuilder),
+    ("graft_argmin_l2", classOf[ArgminL2], e => ArgminL2(e(0), e(1))),
+    ("graft_vlsum", classOf[VecSumLong], e => VecSumLong(e(0)).toAggregateExpression()),
+    ("graft_topk_min", classOf[TopKMin], GraftFunctions.topkBuilder))
 }

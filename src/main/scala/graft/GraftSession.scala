@@ -2,11 +2,17 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the engine's standard tuning.
+/** The one session factory: every main (`Verify`, `Bench`, `Explain`)
+  * and every test builds its session here, so the session the oracle
+  * gate certifies is the one the benchmark times. It always carries
+  * [[GraftExtensions]], the engine's only install path for its native
+  * functions, planner rules and as-of strategy.
   *
   * local[N] here; on a real cluster the same conf scales by sizing
   * `spark.sql.shuffle.partitions` to ~2-3x total cores. AQE re-plans
   * skewed joins and coalesces small shuffle partitions at runtime.
+  * `SPARK_LOCAL_DIRS`, Spark's own override, replaces the
+  * `spark.local.dir` set here.
   */
 object GraftSession {
   def apply(appName: String = "graft", cores: Int = 32): SparkSession = {
@@ -22,6 +28,11 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
+      // wide fused projections (16-table LSH plane hashing) exceed the
+      // 64KB default and fell back to INTERPRETED eval (33s of task
+      // time on a 2000-row stage); the generated code is
+      // method-split, so letting it through keeps codegen
+      .config("spark.sql.codegen.hugeMethodLimit", (1 << 23).toString)
       // shuffle/spill on tmpfs: the host's disk has multi-second stalls
       // that block shuffle-file IO (observed 80s pauses at ~0% CPU)
       .config("spark.local.dir", s"${Scratch.root}/graft-spark")

@@ -16,11 +16,10 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // every operator loads its tables through here, so this is the one
-    // seam that guarantees the engine's native functions (graft_fdot
-    // and friends) are registered before any Column built from
-    // call_function reaches analysis; idempotent and O(1)
-    graft.functions.GraftFunctions.register(spark)
+    // The engine's native functions (graft_fdot and friends) are not
+    // registered here: the session carries them from GraftExtensions
+    // (see GraftSession), so a session without the extension fails the
+    // first graft_* call with UNRESOLVED_ROUTINE.
     // events.ts has shipped in two physical encodings across testdata
     // generations: INT64 TIMESTAMP(NANOS) — which Spark's TimestampType
     // (micros) rejects, so nanosAsLong surfaces it as a raw BIGINT of

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
@@ -65,90 +63,11 @@ case class SecondMax(child: Expression)
     copy(child = newChild)
 }
 
+/** Builders of the native functions whose trailing arguments are
+  * plan-time literals; [[graft.GraftExtensions.functions]] binds them.
+  */
 object GraftFunctions {
-  /** Idempotently register the engine's native functions with a
-    * session (temp-function registry; an extensions-based injection
-    * would do the same for spark.sql users cluster-wide).
-    */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier("graft_second_max"))) {
-      registry.createOrReplaceTempFunction(
-        "graft_second_max", exprs => SecondMax(exprs.head), "built-in")
-    }
-    if (!registry.functionExists(FunctionIdentifier("graft_md5_prefix"))) {
-      registry.createOrReplaceTempFunction(
-        "graft_md5_prefix", exprs => Md5PrefixLong(exprs.head), "built-in")
-    }
-    if (!registry.functionExists(FunctionIdentifier("graft_kmv_kth"))) {
-      registry.createOrReplaceTempFunction(
-        "graft_kmv_kth", kmvBuilder, "built-in")
-    }
-    if (!registry.functionExists(FunctionIdentifier("graft_fdot"))) {
-      registry.createOrReplaceTempFunction(
-        "graft_fdot", exprs => FloatDot(exprs(0), exprs(1)), "built-in")
-    }
-    if (!registry.functionExists(FunctionIdentifier("graft_char_bigrams"))) {
-      registry.createOrReplaceTempFunction(
-        "graft_char_bigrams", exprs => CharBigrams(exprs.head), "built-in")
-    }
-    if (!registry.functionExists(FunctionIdentifier("graft_window_hashes"))) {
-      registry.createOrReplaceTempFunction(
-        "graft_window_hashes", WindowHashes.builder, "built-in")
-    }
-    if (!registry.functionExists(FunctionIdentifier("graft_char_windows"))) {
-      registry.createOrReplaceTempFunction(
-        "graft_char_windows", CharWindows.builder, "built-in")
-    }
-    if (!registry.functionExists(FunctionIdentifier("graft_token_ngrams"))) {
-      registry.createOrReplaceTempFunction(
-        "graft_token_ngrams", TokenNgrams.builder, "built-in")
-    }
-    if (!registry.functionExists(FunctionIdentifier("graft_alnum_tokens"))) {
-      registry.createOrReplaceTempFunction(
-        "graft_alnum_tokens", exprs => AlnumTokens(exprs.head), "built-in")
-    }
-    if (!registry.functionExists(FunctionIdentifier("graft_ldot"))) {
-      registry.createOrReplaceTempFunction(
-        "graft_ldot", exprs => LongDot(exprs(0), exprs(1)), "built-in")
-    }
-    if (!registry.functionExists(FunctionIdentifier("graft_hilbert"))) {
-      registry.createOrReplaceTempFunction(
-        "graft_hilbert",
-        exprs => HilbertIndex(exprs(0), exprs(1), exprs(2)), "built-in")
-    }
-    if (!registry.functionExists(FunctionIdentifier("graft_fdotq"))) {
-      registry.createOrReplaceTempFunction(
-        "graft_fdotq", exprs => FloatDotQuant(exprs(0), exprs(1)), "built-in")
-    }
-    if (!registry.functionExists(FunctionIdentifier("graft_fl2"))) {
-      registry.createOrReplaceTempFunction(
-        "graft_fl2", exprs => FloatL2(exprs(0), exprs(1)), "built-in")
-    }
-    if (!registry.functionExists(FunctionIdentifier("graft_fl2q"))) {
-      registry.createOrReplaceTempFunction(
-        "graft_fl2q", exprs => FloatL2Quant(exprs(0), exprs(1)), "built-in")
-    }
-    if (!registry.functionExists(FunctionIdentifier("graft_pq_argmin"))) {
-      registry.createOrReplaceTempFunction(
-        "graft_pq_argmin", pqArgminBuilder _, "built-in")
-    }
-    if (!registry.functionExists(FunctionIdentifier("graft_argmin_l2"))) {
-      registry.createOrReplaceTempFunction(
-        "graft_argmin_l2", exprs => ArgminL2(exprs(0), exprs(1)), "built-in")
-    }
-    if (!registry.functionExists(FunctionIdentifier("graft_vlsum"))) {
-      registry.createOrReplaceTempFunction(
-        "graft_vlsum", exprs => VecSumLong(exprs(0)).toAggregateExpression(),
-        "built-in")
-    }
-    if (!registry.functionExists(FunctionIdentifier("graft_topk_min"))) {
-      registry.createOrReplaceTempFunction(
-        "graft_topk_min", topkBuilder _, "built-in")
-    }
-  }
-
-  /** Shared graft_topk_min(x, K) builder (K is a plan-time literal). */
+  /** graft_topk_min(x, K) builder (K is a plan-time literal). */
   def topkBuilder(exprs: Seq[Expression]): Expression = {
     if (exprs.length != 2)
       throw new IllegalArgumentException(
@@ -156,9 +75,8 @@ object GraftFunctions {
     TopKMin(exprs.head, foldInt(exprs(1), "K")).toAggregateExpression()
   }
 
-  /** Shared graft_pq_argmin builder (temp-function registry and
-    * session-extensions injection): the trailing ks / mode arguments
-    * are plan-time literals lifted into expression parameters.
+  /** graft_pq_argmin builder: the trailing ks / mode arguments are
+    * plan-time literals lifted into expression parameters.
     */
   def pqArgminBuilder(exprs: Seq[Expression]): PqArgmin =
     PqArgmin(exprs(0), exprs(1), exprs(2),
@@ -177,9 +95,7 @@ object GraftFunctions {
     }
   }
 
-  /** Shared graft_kmv_kth(hash, K) builder (temp-function registry and
-    * [[graft.GraftExtensions]] injection resolve identically).
-    */
+  /** graft_kmv_kth(hash, K) builder (K is a plan-time INT literal). */
   def kmvBuilder(exprs: Seq[Expression]): Expression = {
     if (exprs.length != 2)
       throw new IllegalArgumentException(

@@ -75,9 +75,7 @@ case class WindowHashes(child: Expression, l: Int) extends UnaryExpression {
 }
 
 object WindowHashes {
-  /** Shared builder (temp-function registry and extensions injection):
-    * extracts the required INT-literal window length.
-    */
+  /** Shared builder: extracts the required INT-literal window length. */
   def builder(exprs: Seq[Expression]): Expression = {
     if (exprs.length != 2)
       throw new IllegalArgumentException(

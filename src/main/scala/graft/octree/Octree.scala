@@ -122,7 +122,6 @@ object Downsample {
   val kernels = Seq("second_max", "area", "mean_nz", "max", "arthur")
 
   def apply(voxels: DataFrame, kernel: String, xyOnly: Boolean = false): DataFrame = {
-    graft.functions.GraftFunctions.register(voxels.sparkSession)
     val z = if (xyOnly) col("z") else shiftright(col("z"), 1)
     val grouped = voxels.groupBy(
       col("c"), z.as("z"), shiftright(col("y"), 1).as("y"), shiftright(col("x"), 1).as("x"))

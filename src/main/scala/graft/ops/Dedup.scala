@@ -128,7 +128,6 @@ object Dedup {
   }
 
   private def verifiedCandidatesBuild(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val cands = bandCandidates(signatures(spark, dir))
     // Decouple parallelism from file layout: a single-file table scans
     // as 1-2 partitions, which would serialize the intersect work.
@@ -208,7 +207,6 @@ object Dedup {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private def signaturesBuild(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val sigAggs = (0 until MinhashK).map { j =>
       val (aj, bj) = perm(j)
       min(expr(s"($aj * h + $bj) % $MinhashP")).as(s"mh$j")
@@ -326,7 +324,6 @@ object Dedup {
     * that — see the r9 broadcast-OOM sweep finding).
     */
   def containment(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     containmentOf(Tables(spark, dir, "documents")
       .repartition(spark.sparkContext.defaultParallelism, col("doc_id")))
   }
@@ -404,7 +401,6 @@ object Dedup {
     * per-bit majority vote of per-token md5-int hashes.
     */
   def simhash(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val fp = (0 until 32).map { i =>
       s"cast(sum(CASE WHEN (shiftright(h, $i) & 1) = 1 THEN 1 ELSE -1 END) > 0 as bigint) * ${1L << i}"
     }.mkString(" + ")
@@ -658,7 +654,6 @@ object Dedup {
     * a per-doc count. No pair products anywhere.
     */
   def decontaminate(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val sh = Tables(spark, dir, "documents")
       .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
       .withColumn("t", expr(toksExpr))
@@ -704,7 +699,6 @@ object Dedup {
     * engines because the bit arithmetic is the same md5-prefix math.
     */
   def bloomDecontaminate(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val sh = Tables(spark, dir, "documents")
       .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
       .withColumn("t", expr(toksExpr))
@@ -813,7 +807,6 @@ object Dedup {
   }
 
   def substring(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables(spark, dir, "documents")
     // the window frame feeds BOTH the duplicate count and the mark
     // join: checkpoint it so the explode (the expensive stage) runs
@@ -851,7 +844,6 @@ object Dedup {
     * purely the 30-char-vs-8-byte shuffle key.
     */
   def substringHashed(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables(spark, dir, "documents")
     val L = SubstrL
     // the corpus pass never materializes window TEXT at all: the
@@ -953,7 +945,6 @@ object Dedup {
     * writes it to parquet, reloads it, and proves identical verdicts.
     */
   private[graft] def incrementalBands(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val bandCols = (0 until MinhashK / 2).map { j =>
       concat_ws(":", col(s"mh${2 * j}"), col(s"mh${2 * j + 1}"))
     }
@@ -970,7 +961,6 @@ object Dedup {
     */
   private[graft] def incrementalVs(spark: SparkSession, dir: String,
       banded: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val probe = banded.filter(col("is_new"))
       .select(col("doc_id").as("doc_new"), col("band_i"), col("band_v"))
     val index = banded.select(col("doc_id").as("doc_idx"),

@@ -22,7 +22,6 @@ import graft.Tables
 object Pipeline {
 
   def clean(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val cleaned = TextAnalysis.withMasked(
       TextAnalysis.withRuleFlags(Tables(spark, dir, "documents"))
         .filter(col("keep") === 1))
@@ -68,7 +67,6 @@ object Pipeline {
     * [[export]] (which serializes them to shards).
     */
   private[ops] def survivorsWithText(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     import TextAnalysis.toksExpr
     val masked = TextAnalysis.withMasked(
       TextAnalysis.withRuleFlags(Tables(spark, dir, "documents"))
@@ -195,7 +193,6 @@ object Pipeline {
     * `partitionBy(shard)` on the same key.
     */
   def shard(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     train(spark, dir)
       .withColumn("shard",
         expr(s"graft_md5_prefix(concat('shard:', cast(doc_id as string))) % $NShards"))
@@ -218,7 +215,6 @@ object Pipeline {
     * the whole card is a single corpus traversal.
     */
   def card(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     cardDf(Tables(spark, dir, "documents")).orderBy("source", "split")
   }
 
@@ -303,7 +299,6 @@ object Pipeline {
     * beyond the (persistable) signature build.
     */
   def incr(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     import graft.ops.Dedup
     val docs = Tables(spark, dir, "documents")
     val isBatch = col("doc_id") % 4 === 0 && col("doc_id") % 97 =!= 0

@@ -33,7 +33,6 @@ object Sampling {
     * shuffle.
     */
   def stratified(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val w = Window.partitionBy("source").orderBy(col("samp_hash"), col("doc_id"))
     Tables(spark, dir, "documents")
       .select(col("doc_id"), col("source"),
@@ -54,7 +53,6 @@ object Sampling {
     * DeclarativeAggregate with the same contents).
     */
   def kmvDistinct(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // ONE scan: distinct (event_type, user_id) — needed anyway for the
     // exact ride-along columns — then every aggregate reads that set.
     // The sketch itself ([[graft.functions.KmvKthHash]], bounded
@@ -117,7 +115,6 @@ object Sampling {
     * tie-break; map-side prunable exactly like any top-k.
     */
   def prioritySample(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables(spark, dir, "documents")
       .select(col("doc_id"), col("n_chars").as("w"),
         expr("graft_md5_prefix(concat('p:', cast(doc_id as string)))").as("h"))
@@ -152,7 +149,6 @@ object Sampling {
     * pipeline drops it and with it the per-user shuffle).
     */
   def cmsTopk(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val ev = Tables(spark, dir, "events")
       .select(col("user_id"))
     def h(j: Int, u: String) =
@@ -191,7 +187,6 @@ object Sampling {
     * dataset card reports. One map-side-combined aggregation.
     */
   def split(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables(spark, dir, "documents")
       .select(col("doc_id"), col("source"), col("n_chars"),
         expr("graft_md5_prefix(concat('split:', cast(doc_id as string))) % 100")
@@ -227,7 +222,6 @@ object Sampling {
     * per-source quota filter then tightens it broadcast-side).
     */
   def mixture(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables(spark, dir, "documents")
       .select(col("doc_id"), col("source"),
         expr("graft_md5_prefix(concat(source, ':', cast(doc_id as string)))").as("samp_hash"))
@@ -407,7 +401,6 @@ object Sampling {
     * WindowGroupLimit map-side-pruned top-k pattern.
     */
   def diverse(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables(spark, dir, "embeddings")
     val nbits = Similarity.lshBits(emb.count())
     val w = Window.partitionBy("bucket").orderBy(col("samp_hash"), col("vec_id"))
@@ -472,7 +465,6 @@ object Sampling {
   }
 
   def coreset(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     import graft.ops.Similarity.{cosUPre, dot}
     val base = Tables(spark, dir, "embeddings")
       .repartition(spark.sparkContext.defaultParallelism, col("vec_id"))
@@ -521,7 +513,6 @@ object Sampling {
     * the milli-floored estimate beside the exact count.
     */
   def hllDistinct(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val pairs = Tables(spark, dir, "events")
       .select(col("event_type"), col("user_id")).distinct()
       .withColumn("h", expr("graft_md5_prefix(cast(user_id as string))"))
@@ -569,7 +560,6 @@ object Sampling {
     * column, 8 bytes a register, no raw-id rescan.
     */
   def hllMerge(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Scratch.withDir("hllcube") { tmp =>
       val pairs = Tables(spark, dir, "events")
         .withColumn("sec", graft.relational.Queries.nsToSec(col("ts")))
@@ -652,7 +642,6 @@ object Sampling {
       .orderBy("source")
 
   def diversity(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     diversityReport(Tables(spark, dir, "documents")
       .select(col("source"), explode(expr(TextAnalysis.toksExpr)).as("t"))
       .groupBy("source", "t").agg(count(lit(1)).as("c")))
@@ -674,7 +663,6 @@ object Sampling {
     * downstream).
     */
   def classBalance(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val v = Tables(spark, dir, "embeddings").select(col("vec_id"), col("label"))
     val counts = v.groupBy("label").agg(count(lit(1)).as("n"))
     val mx = counts.agg(max(col("n")).as("max_n"))
@@ -773,7 +761,6 @@ object Sampling {
     */
   def kmvOverlap(spark: SparkSession, dir: String): DataFrame = {
     import graft.relational.Queries
-    graft.functions.GraftFunctions.register(spark)
     val dh = Tables(spark, dir, "events")
       .select(col("event_type"),
         concat(col("user_id").cast("string"), lit("@"),
@@ -900,7 +887,6 @@ object Sampling {
     */
   def negatives(spark: SparkSession, dir: String): DataFrame = {
     import graft.ops.Similarity
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables(spark, dir, "embeddings")
     val n = emb.count()
     val pmod = Similarity.ivfProbeMod(n)
@@ -955,7 +941,6 @@ object Sampling {
     * no new corpus pass beyond the pair graph it already shares.
     */
   def softDedup(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val clusters = Dedup.cluster(spark, dir)
     val hashed = clusters.select(col("doc_id"), col("cluster"), col("cluster_size"),
       expr("graft_md5_prefix(concat('sd:', cast(doc_id as string)))").as("u_hash"))
@@ -1007,7 +992,6 @@ object Sampling {
     * window).
     */
   def dsir(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables(spark, dir, "documents")
       .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
     val tf = docs
@@ -1076,7 +1060,6 @@ object Sampling {
     * prefix sums.
     */
   def budget(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val toks = graft.ops.TextAnalysis.toksExpr
     val d = Tables(spark, dir, "documents")
       .select(col("doc_id"),

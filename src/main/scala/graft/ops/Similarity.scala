@@ -876,7 +876,6 @@ object Similarity {
     * is the LSH bucket, exactly [[graft.ops.Dedup.embed]]'s.
     */
   def splitLeakage(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val nbits = lshBits(emb(spark, dir).count())
     val base = embPar(spark, dir)
       .withColumn("bucket", bucketN(col("embedding"), nbits))

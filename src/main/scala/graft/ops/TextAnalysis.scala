@@ -115,7 +115,6 @@ object TextAnalysis {
     * md5-derived ints — exact integer math shared with the oracle.
     */
   def fingerprint(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables(spark, dir, "documents")
       .withColumn("t", expr(toksExpr))
       .select(col("doc_id"),
@@ -485,7 +484,6 @@ object TextAnalysis {
     * broadcast, no second pass — the whole point of hashing features.
     */
   def hashEmbed(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables(spark, dir, "documents")
       .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
       .withColumn("t", expr(toksExpr))
@@ -605,7 +603,6 @@ object TextAnalysis {
     * [[ccnetBuckets]] (the CCNet head/middle/tail split).
     */
   private[ops] def charLmScores(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables(spark, dir, "documents")
       .select(col("doc_id"), explode(expr("graft_char_bigrams(text)")).as("bg"))
     val c2 = docs.groupBy("bg").agg(count(lit(1)).as("c2"))
@@ -672,7 +669,6 @@ object TextAnalysis {
     * cumulative read runs on the 10-row decile frame.
     */
   def vocabGrowth(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables(spark, dir, "documents")
     val mx = docs.agg(max(col("doc_id")).as("mx"))
     val toks = docs.select(col("doc_id"), explode(expr(toksExpr)).as("tok"))
@@ -717,7 +713,6 @@ object TextAnalysis {
     * are map-side-combined aggregations; nothing scales quadratically.
     */
   def nbClassify(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables(spark, dir, "documents")
       .withColumn("is_train",
         expr(s"graft_md5_prefix(concat('nb:', cast(doc_id as string))) % 100 < $NbTrainPct"))
@@ -961,7 +956,6 @@ object TextAnalysis {
     */
   def cdcChunks(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(spark)
     val base = Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"),
         length(col("text")).cast("long").as("n"))
@@ -1027,7 +1021,6 @@ object TextAnalysis {
     * map-side-combines, nothing is all-pairs.
     */
   def winnow(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     winnowOf(Tables(spark, dir, "documents"))
   }
 

@@ -50,8 +50,7 @@ case class AsOfJoin(left: LogicalPlan, right: LogicalPlan,
 }
 
 /** Maps the logical [[AsOfJoin]] to [[AsOfJoinExec]] — injected via
-  * [[graft.GraftExtensions]] and (idempotently) via
-  * `spark.experimental.extraStrategies`.
+  * [[graft.GraftExtensions]], the only place it is installed.
   *
   * The exec reads keys/times via `UnsafeRow.getLong`, which silently
   * yields 0 for a null slot — a null key would become a real (0, 0)

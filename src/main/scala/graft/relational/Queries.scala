@@ -571,10 +571,7 @@ object Queries {
     * at all. Shares q_asof_tolerance's oracle VERBATIM.
     */
   def qAsofToleranceNative(spark: SparkSession, dir: String): DataFrame = {
-    import graft.plans.{AsOfJoin, AsOfJoinStrategy}
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
+    import graft.plans.AsOfJoin
     val ev = Tables(spark, dir, "events").select(
       col("event_id"),
       (col("user_id") % 100 + 1).cast("long").as("key"),
@@ -1869,16 +1866,11 @@ object Queries {
     * → one-pass sort-merge exec. Shares q_asof's oracle VERBATIM, so
     * one green row certifies two independent implementations (the
     * union-and-window composition and the native operator) against
-    * the same SQL. The strategy arrives via [[graft.GraftExtensions]]
-    * on extension-loaded sessions and idempotently via
-    * `spark.experimental.extraStrategies` here (public API, works on
-    * any session).
+    * the same SQL. The strategy arrives via [[graft.GraftExtensions]],
+    * which every [[graft.GraftSession]] carries.
     */
   def qAsofNative(spark: SparkSession, dir: String): DataFrame = {
-    import graft.plans.{AsOfJoin, AsOfJoinStrategy}
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
+    import graft.plans.AsOfJoin
     val ev = Tables(spark, dir, "events").select(
       col("event_id"),
       (col("user_id") % 100 + 1).cast("long").as("key"),
@@ -1908,10 +1900,7 @@ object Queries {
     * certifies both directions' independent implementations.
     */
   def qAsofFwdNative(spark: SparkSession, dir: String): DataFrame = {
-    import graft.plans.{AsOfJoin, AsOfJoinStrategy}
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
+    import graft.plans.AsOfJoin
     val ev = Tables(spark, dir, "events").select(
       col("event_id"),
       (col("user_id") % 100 + 1).cast("long").as("key"),

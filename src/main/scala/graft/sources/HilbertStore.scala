@@ -53,7 +53,6 @@ object HilbertStore {
     */
   private[graft] def hilbertExprCol(df: DataFrame, xCol: String,
       yCol: String, bits: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.withColumn("hd", expr(s"graft_hilbert($xCol, $yCol, $bits)"))
   }
 

@@ -433,7 +433,6 @@ object VolumeQueries {
     * + the same concat — any mangled byte flips the hash.
     */
   def csvScan(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = graft.Tables(spark, dir, "documents")
       .withColumn("text2", concat(col("text"), lit(",\"\nx")))
       .select(col("doc_id"), col("source"), col("text2"))
@@ -659,7 +658,6 @@ object VolumeQueries {
     */
   def tfrecordSink(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     Scratch.withDir("tfrec") { tmp =>
       new java.io.File(tmp).mkdirs()
       val nShards = TfShards
@@ -728,7 +726,6 @@ object VolumeQueries {
     */
   def wdsSink(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     Scratch.withDir("wds") { tmp =>
       new java.io.File(tmp).mkdirs()
       val nShards = TfShards

@@ -397,7 +397,6 @@ object EventStreams {
   def annTopk(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables(spark, dir, "embeddings")
     val corpus = emb
       .select(col("vec_id"), col("embedding"),
@@ -570,7 +569,6 @@ object EventStreams {
   def cmsStream(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     import graft.ops.Sampling.{CmsDepth, CmsWidth}
     val users = Tables(spark, dir, "events")
       .select(col("user_id")).as[Long].collect().toSeq
@@ -605,7 +603,6 @@ object EventStreams {
   def hllStream(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     import graft.ops.Sampling.HllM
     val evs = Tables(spark, dir, "events")
       .select(col("event_type"), col("user_id")).as[(String, Long)].collect().toSeq
@@ -1771,7 +1768,6 @@ object EventStreams {
   def kmvStream(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val evs = Tables(spark, dir, "events")
       .select(col("event_type"), col("user_id")).as[(String, Long)].collect().toSeq
     val input = MemoryStream[(String, Long)]
@@ -1803,7 +1799,6 @@ object EventStreams {
   def diversityStream(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("source"))
       .as[Doc].collect().toSeq
@@ -1858,7 +1853,6 @@ object EventStreams {
   def cardStream(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("source")).as[Doc].collect().toSeq
     val input = MemoryStream[Doc]
@@ -1928,7 +1922,6 @@ object EventStreams {
       feeds: Seq[Seq[Doc]]): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     import graft.ops.{Dedup, TextAnalysis}
     val bandCols = (0 until Dedup.MinhashK / 2).map { j =>
       concat_ws(":", col(s"mh${2 * j}"), col(s"mh${2 * j + 1}"))

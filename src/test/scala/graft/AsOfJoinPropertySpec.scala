@@ -16,17 +16,7 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
   */
 class AsOfJoinPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  @transient lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    if (!s.experimental.extraStrategies.contains(graft.plans.AsOfJoinStrategy))
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ graft.plans.AsOfJoinStrategy
-    s
-  }
+  @transient lazy val spark: SparkSession = GraftSession("AsOfJoinPropertySpec", 4)
 
   override def afterAll(): Unit = spark.stop()
 

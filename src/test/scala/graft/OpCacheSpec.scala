@@ -15,12 +15,7 @@ class OpCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   val dir = "/root/testdata/sf0.001"
 
-  @transient lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  @transient lazy val spark: SparkSession = GraftSession("OpCacheSpec", 4)
 
   override def afterAll(): Unit = spark.stop()
 

@@ -14,12 +14,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   val dir = "/root/testdata/sf0.001"
 
-  @transient lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  @transient lazy val spark: SparkSession = GraftSession("OpsSpec", 4)
 
   override def afterAll(): Unit = spark.stop()
 
@@ -60,7 +55,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("CharBigrams kernel equals the SQL substring form, incl. supplementary plane") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val samples = Seq("", "a", "ab", "abca", "héllo wörld", "日本語テキスト",
       "a😀b🚀c", "😀🚀", "  spaces  x")
     val df = samples.toDF("text")
@@ -80,7 +74,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("WindowHashes kernel equals xxhash64(substring) per position, incl. multibyte") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val samples = Seq("", "abc", "abcdef", "ababababab", "héllo wörld héllo",
       "日本語テキストの日本語", "a😀b🚀c😀d🚀e", "x" * 40)
     val df = samples.toDF("text")
@@ -99,7 +92,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("CharWindows kernel equals the SQL substring-window form, incl. multibyte") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val samples = Seq("", "ab", "abcdef", "héllo wörld", "日本語テキスト",
       "a😀b🚀c😀d", "z" * 35)
     val df = samples.toDF("text")
@@ -118,7 +110,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("TokenNgrams kernel equals the SQL concat_ws form") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val samples: Seq[Seq[String]] = Seq(
       Seq(), Seq("a"), Seq("a", "b"), Seq("the", "quick", "brown", "fox"),
       Seq("wörd", "日本", "😀", "x"), Seq.fill(40)("tok"))
@@ -134,7 +125,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("AlnumTokens kernel equals the regexp_extract_all(lower) form") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val samples = Seq("", "Hello, World! 42", "  a  b  ", "ALLCAPS",
       "mixed123CASE456", "héllo wörld", "İstanbul Kelvin",
       "日本語 abc 123", "a😀b", "tabs\tand\nnewlines")
@@ -148,7 +138,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("LongDot kernel equals the aggregate(zip_with) long form") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val samples: Seq[(Seq[Long], Seq[Long])] = Seq(
       (Seq(), Seq()), (Seq(1L, 2L, 3L), Seq(4L, -5L, 6L)),
       (Seq(1000000L, -999999L), Seq(2000000L, 3L)),
@@ -167,7 +156,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("quantized-vector kernels equal their HOF double-fold forms bit-for-bit") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val fl: Seq[Seq[Float]] = Seq(
       Seq(0.1f, -0.2f, 0.3f), Seq(1e-7f, 2e7f, -3.3f), Seq(0f, 0f, 0f))
     val qs: Seq[Seq[Long]] = Seq(
@@ -192,7 +180,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("pq argmin kernel equals the join-formulation encode (all modes, ties, dropped subspaces)") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     val M = 4; val D = 3; val Ks = 64
     // deterministic pseudo-random floats; vec 7 gets integer-valued
     // elements so mode 2 is exercised on its contract domain too
@@ -282,7 +269,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("argmin_l2 kernel equals the min_by join formulation (incl. duplicate-centroid ties)") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     def mk(seed: Long): Array[Double] =
       (0 until 4).map(j => math.floor(math.sin(seed * 13 + j * 5) * 1e6)).toArray
     val vecs = (0L until 30L).map(i => (i, mk(i))).toDF("vec_id", "vq")
@@ -311,7 +297,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("vlsum aggregate equals the long-form explode + groupBy rebuild") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     // skewed groups incl. a singleton; values exercise negatives and
     // partial-merge boundaries (4 shuffle partitions)
     val rows = (0L until 200L).map { i =>
@@ -2324,7 +2309,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
     }
     val expected = docs.map { case (id, t) => id -> prints(t) }.toMap
-    graft.functions.GraftFunctions.register(spark)
     val ids = docs.map(_._1).toSet
     val got = ops.TextAnalysis.winnow(spark, dir).collect()
       .filter(r => ids(r.getAs[Long]("doc_id")))
@@ -2349,7 +2333,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       (2L, "mm nn oo pp quartz zebra qq rr ss tt uu vv"),
       (3L, "totally disjoint content here with no overlap at all")
     ).toDF("doc_id", "text")
-    graft.functions.GraftFunctions.register(spark)
     val rows = ops.TextAnalysis.winnowOf(df).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("n_shared")).toMap
     assert(rows(1L) > 0 && rows(2L) > 0, "the guaranteed shared print is missing")
@@ -2365,7 +2348,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val host = quote + " " + (0 until 120).map(i => s"beta$i").mkString(" ")
     val other = (0 until 40).map(i => s"gamma$i").mkString(" ")
     val df = Seq((1L, quote), (2L, host), (3L, other)).toDF("doc_id", "text")
-    graft.functions.GraftFunctions.register(spark)
     val got = ops.Dedup.containmentOf(df).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got === Set((1L, 2L)), "exactly quote ⊑ host, never the reverse")

@@ -16,12 +16,7 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   val dir = "/root/testdata/sf0.001"
 
-  @transient lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  @transient lazy val spark: SparkSession = GraftSession("PlanAuditSpec", 4)
 
   override def afterAll(): Unit = spark.stop()
 
@@ -289,7 +284,6 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the seed frame is checkpointed inside coreset, so audit the
     // factored-out un-checkpointed plan directly
     import org.apache.spark.sql.functions.col
-    graft.functions.GraftFunctions.register(spark)
     val base = Tables(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"),
         ops.Similarity.dot(col("embedding"), col("embedding")).as("vn2"))
@@ -380,7 +374,6 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     // second Window node would mean the explode+regroup crept back
     // (the full op checkpoints the print set, so audit the selection
     // subplan directly)
-    graft.functions.GraftFunctions.register(spark)
     val tw = graft.ops.TextAnalysis.winnowSel(Tables(spark, dir, "documents"))
       .queryExecution.explainString(FormattedMode)
     assert("""\(\d+\) Window""".r.findAllIn(tw).length === 1,

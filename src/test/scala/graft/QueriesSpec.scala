@@ -10,14 +10,18 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   val dir = "/root/testdata/sf0.001"
 
-  @transient lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  @transient lazy val spark: SparkSession = GraftSession("QueriesSpec", 4)
 
   override def afterAll(): Unit = spark.stop()
+
+  /** Runs `body` with RangeJoinRewrite switched off, so a cross-filter
+    * reference plans as the nested-loop join it spells out and is never
+    * the bucketed rewrite it is compared with.
+    */
+  private def withoutRangeJoinRewrite[T](body: => T): T = {
+    spark.conf.set("spark.graft.rangeJoin.enabled", "false")
+    try body finally spark.conf.unset("spark.graft.rangeJoin.enabled")
+  }
 
   test("match_recognize equals a hand-rolled leftmost pattern scan") {
     import spark.implicits._
@@ -378,10 +382,7 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("native as-of join runs shuffle-free over key-bucketed tables") {
     import org.apache.spark.sql.functions._
-    import graft.plans.{AsOfJoin, AsOfJoinStrategy}
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
+    import graft.plans.AsOfJoin
     // the declared ClusteredDistribution means a key-bucketed layout
     // satisfies the operator's requirement outright: no Exchange at
     // all, only the local sorts - the 100 TB repeated-as-of path
@@ -442,6 +443,12 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(wide.map(_.getAs[Long]("bucket_h")).toSet === long.keySet.map(_._1))
   }
 
+  test("the as-of strategy is planned once after a native as-of query") {
+    Queries.qAsofNative(spark, dir)
+    val n = spark.sessionState.planner.strategies.count(_ eq graft.plans.AsOfJoinStrategy)
+    assert(n === 1)
+  }
+
   test("native as-of join plans AsOfJoinExec and equals the union-and-window twin") {
     val native = Queries.qAsofNative(spark, dir)
     val phys = native.queryExecution.executedPlan.toString
@@ -458,10 +465,7 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("native as-of join tie semantics: inclusive bound, max tie on equal times") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    import graft.plans.{AsOfJoin, AsOfJoinStrategy}
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
+    import graft.plans.AsOfJoin
     val l = Seq((1L, 10L, 100L), (2L, 10L, 99L), (3L, 20L, 50L), (4L, 30L, 7L))
       .toDF("lid", "lkey", "lt")
     // key 10: orders at t=100 (ids 5 and 6 - equal time, max tie wins,
@@ -495,11 +499,11 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filter(col("o_orderpriority") === "1-URGENT")
       .select(col("o_orderkey"),
         expr("(unix_micros(cast(o_orderdate as timestamp)) div 1000000)").as("lo"))
-    val naive = ev.crossJoin(iv)
+    val naive = withoutRangeJoinRewrite(ev.crossJoin(iv)
       .filter(col("t") >= col("lo") && col("t") < col("lo") + 7L * 86400L)
       .groupBy("event_id")
       .agg(count(lit(1)).as("n"), min("o_orderkey").as("mn"), sum("o_orderkey").as("sm"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))))
     assert(got.nonEmpty && got.toSet === naive.toSet)
   }
 
@@ -516,13 +520,13 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
         .select(col("o_orderkey").as(k),
           expr("(unix_micros(cast(o_orderdate as timestamp)) div 1000000)").as(lo))
         .withColumn(hi, col(lo) + days * 86400L)
-    val naive = side("1-URGENT", 7L, "a_key", "a_lo", "a_hi")
+    val naive = withoutRangeJoinRewrite(side("1-URGENT", 7L, "a_key", "a_lo", "a_hi")
       .crossJoin(side("2-HIGH", 10L, "b_key", "b_lo", "b_hi"))
       .filter(col("a_lo") < col("b_hi") && col("b_lo") < col("a_hi"))
       .groupBy("a_key")
       .agg(count(lit(1)).as("n"), min("b_key").as("mn"),
         sum(expr("least(a_hi, b_hi) - greatest(a_lo, b_lo)")).as("s"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))))
     assert(got.nonEmpty && got.toSet === naive.toSet)
   }
 

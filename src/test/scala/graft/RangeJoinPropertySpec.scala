@@ -16,24 +16,9 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
   */
 class RangeJoinPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  @transient private var prev: Option[SparkSession] = None
-  @transient lazy val spark: SparkSession = {
-    prev = SparkSession.getActiveSession
-    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master("local[2]").appName("graft-rangejoin-prop")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
+  @transient lazy val spark: SparkSession = GraftSession("RangeJoinPropertySpec", 2)
 
-  override def afterAll(): Unit = {
-    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-    prev.foreach { a =>
-      SparkSession.setActiveSession(a); SparkSession.setDefaultSession(a)
-    }
-  }
+  override def afterAll(): Unit = spark.stop()
 
   private def check(prop: Prop, n: Int): Unit = {
     val res = SCTest.check(

@@ -27,8 +27,12 @@ class RetrySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   val dir = "/root/testdata/sf0.001"
 
+  // local[4, 4] (four task attempts) is the one master GraftSession
+  // does not build; the extensions still go in, so any suite's session
+  // that getOrCreate hands back in this JVM resolves graft_*
   @transient lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4, 4]")
+    .withExtensions(new GraftExtensions)
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")

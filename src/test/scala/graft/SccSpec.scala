@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.GraftSession
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -14,12 +15,7 @@ import org.scalatest.BeforeAndAfterAll
   */
 class SccSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  @transient lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  @transient lazy val spark: SparkSession = GraftSession("SccSpec", 4)
 
   override def afterAll(): Unit = spark.stop()
 

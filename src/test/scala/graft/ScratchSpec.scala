@@ -11,12 +11,7 @@ import org.scalatest.BeforeAndAfterAll
   */
 class ScratchSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  @transient lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  @transient lazy val spark: SparkSession = GraftSession("ScratchSpec", 2)
 
   override def afterAll(): Unit = spark.stop()
 

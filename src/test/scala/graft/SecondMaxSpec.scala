@@ -11,12 +11,7 @@ import org.scalatest.BeforeAndAfterAll
   */
 class SecondMaxSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  @transient lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  @transient lazy val spark: SparkSession = GraftSession("SecondMaxSpec", 2)
 
   override def afterAll(): Unit = spark.stop()
 
@@ -48,7 +43,6 @@ class SecondMaxSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("graft_fdot matches the higher-order formulation bit for bit") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(42)
     val rows = (0 until 200).map { i =>
       val n = if (i % 17 == 0) 0 else 64

@@ -16,12 +16,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   val dir = "/root/testdata/sf0.001"
 
-  @transient lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  @transient lazy val spark: SparkSession = GraftSession("StreamingSpec", 4)
 
   override def afterAll(): Unit = spark.stop()
 
@@ -163,7 +158,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables(spark, dir, "embeddings")
     val corpus = emb
       .select(col("vec_id"), col("embedding"),
@@ -252,7 +246,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("source"))
       .as[EventStreams.Doc].collect().toSeq
@@ -349,7 +342,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val docs = Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("source"))
       .as[EventStreams.Doc].collect().toSeq
@@ -374,7 +366,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val evs = Tables(spark, dir, "events")
       .select(col("event_type"), col("user_id")).as[(String, Long)].collect().toSeq
     // two batches → the sketch buffer round-trips the state store
@@ -734,7 +725,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val evs = Tables(spark, dir, "events")
       .select(col("event_type"), col("user_id")).as[(String, Long)].collect().toSeq
     val (b1, b2) = evs.splitAt(evs.size / 2)
@@ -1027,7 +1017,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     import graft.ops.Sampling.{CmsDepth, CmsWidth}
     val users = Tables(spark, dir, "events").select("user_id").as[Long].collect().toSeq
     val (b1, b2) = users.splitAt(users.size / 2)
@@ -1124,9 +1113,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    if (!spark.experimental.extraStrategies.contains(graft.plans.AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.AsOfJoinStrategy
     // the static right side: stream_asof's orders projection
     val ord = Tables(spark, dir, "orders").select(
         col("o_custkey").cast("long").as("key"),

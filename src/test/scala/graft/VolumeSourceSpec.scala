@@ -8,12 +8,11 @@ import graft.sources.{N5Binary, VolumeQueries, VolumeSource}
 
 class VolumeSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  @transient lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.adaptive.enabled", "false") // keep scan partition counts observable
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  @transient lazy val spark: SparkSession = {
+    val s = GraftSession("VolumeSourceSpec", 4)
+    s.conf.set("spark.sql.adaptive.enabled", "false") // keep scan partition counts observable
+    s
+  }
 
   override def afterAll(): Unit = spark.stop()
 
@@ -661,7 +660,6 @@ class VolumeSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val total = got.map(_.getAs[Long]("n_records")).sum
     assert(total === 500L)
     // parsed sums must equal the table's own aggregates per shard
-    graft.functions.GraftFunctions.register(spark)
     val want = Tables(spark, dir, "documents")
       .withColumn("shard", expr(
         s"graft_md5_prefix(concat('shard:', cast(doc_id as string))) % ${VolumeQueries.TfShards}"))

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.GraftSession
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,12 +15,7 @@ class HilbertSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   val dir = "/root/testdata/sf0.001"
 
-  @transient lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  @transient lazy val spark: SparkSession = GraftSession("HilbertSpec", 4)
 
   override def afterAll(): Unit = spark.stop()
 
@@ -39,6 +35,14 @@ class HilbertSpec extends AnyFunSuite with BeforeAndAfterAll {
       s >>= 1
     }
     d
+  }
+
+  test("graft_hilbert resolves in plain SQL and equals the textbook loop") {
+    val pts = Seq((0L, 0L), (1L, 0L), (0L, 1L), (3L, 2L), (7L, 7L), (5L, 1L))
+    pts.foreach { case (x, y) =>
+      val d = spark.sql(s"SELECT graft_hilbert(${x}L, ${y}L, 3)").collect()(0).getLong(0)
+      assert(d === xy2d(3, x, y), s"graft_hilbert($x, $y, 3)")
+    }
   }
 
   test("column chain equals the textbook loop and is a true Hilbert curve on the full grid") {

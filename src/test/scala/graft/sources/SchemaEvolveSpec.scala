@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.GraftSession
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,12 +15,7 @@ class SchemaEvolveSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   val dir = "/root/testdata/sf0.001"
 
-  @transient lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  @transient lazy val spark: SparkSession = GraftSession("SchemaEvolveSpec", 4)
 
   override def afterAll(): Unit = spark.stop()
 

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Scratch
+import graft.{GraftSession, Scratch}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -13,12 +13,7 @@ import org.scalatest.BeforeAndAfterAll
   */
 class TableRefsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  @transient lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  @transient lazy val spark: SparkSession = GraftSession("TableRefsSpec", 4)
 
   override def afterAll(): Unit = spark.stop()
 
