@@ -153,9 +153,7 @@ object Pipeline {
           }
           if (os != null) os.close()
         }
-      val agg = spark.read.format("binaryFile").load(s"$tmp/*.tfrecord")
-        .select(col("path"), col("content"))
-        .as[(String, Array[Byte])]
+      val agg = graft.octree.TreeFiles.read(spark, tmp, ".tfrecord")
         .flatMap { case (path, bytes) =>
           val shard = path.substring(path.lastIndexOf("shard-") + 6)
             .stripSuffix(".tfrecord").toLong

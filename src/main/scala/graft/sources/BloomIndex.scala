@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Scratch
 import graft.Tables
 
 /** Per-file Bloom-filter POINT-LOOKUP index — the pruning class
@@ -46,83 +45,55 @@ object BloomIndex {
     */
   val Probes = 20L
 
-  /** Staged store handle: root, file count, and the key maximum the
-    * probe schedule derives from — shared with the spec.
-    */
-  private[graft] final case class BStore(store: String, filesTotal: Long,
-      mk: Long) {
-    def drop(): Unit = Scratch.rm(store)
-  }
-
   /** `graft_md5_prefix(i ':' key) % m` — one bloom position. */
   private def posExpr(i: Int, key: String, m: String): String =
     s"graft_md5_prefix(concat(cast($i as string), ':', cast($key as string))) % $m"
 
-  /** Write orders date-partitioned (p = order year) with the per-file
-    * sparse bloom-word index and a tiny (p, m) sizing table beside it.
+  /** Write orders date-partitioned (p = order year) on the
+    * [[ManifestTable]] core, whose stats size each file's filter
+    * (m = BitsPerKey * keys in file; orderkey is the primary key, so
+    * keys = rows) and carry its key maximum; then the per-file sparse
+    * bloom-word index beside the data.
     */
-  private[graft] def stage(spark: SparkSession, dir: String): BStore = {
-    val store = Scratch.path("bloom")
-    Scratch.rm(store)
-    // one pass over orders (guide §1.2): the projection is lazily
-    // checkpointed — the data write materializes it — and the sizing
-    // table + key maximum come from ONE bounded aggregation whose rows
-    // are collected once (the old shape re-scanned orders for fm, for
-    // the index's fm broadcast, for max(k), and for fm.count())
-    val o = Tables(spark, dir, "orders")
-      .select(col("o_orderkey").as("k"),
-        floor(col("o_totalprice") * 100).cast("long").as("price_c"),
-        year(col("o_orderdate")).cast("long").as("p"))
-      .localCheckpoint(eager = false)
-    o.repartition(col("p"))
-      .write.mode(SaveMode.Overwrite).partitionBy("p")
-      .parquet(s"$store/data")
-    // per-file filter sizing: m = BitsPerKey * keys-in-file (orderkey
-    // is the primary key, so keys = rows); max(k) rides the same job
-    val fmRows = o.groupBy("p")
-      .agg((count(lit(1)) * BitsPerKey).as("m"), max("k").as("mxk"))
-      .collect().toIndexedSeq
-    val fm = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        fmRows.map(r => org.apache.spark.sql.Row(r.getLong(0), r.getLong(1))), 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("p",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("m",
-          org.apache.spark.sql.types.LongType, nullable = false))))
-    fm.write.mode(SaveMode.Overwrite).parquet(s"$store/fm")
+  private[graft] def stage(spark: SparkSession, dir: String): ManifestTable = {
+    val t = ManifestTable.write("bloom", Tables(spark, dir, "orders")
+        .select(col("o_orderkey").as("k"),
+          floor(col("o_totalprice") * 100).cast("long").as("price_c"),
+          year(col("o_orderdate")).cast("long").as("p")),
+      Seq("p"), Nil, (count(lit(1)) * BitsPerKey).as("m"), max("k").as("mxk"))
     // the index: distinct bloom positions -> sparse non-zero words,
     // built with a map-side-combinable two-level bit_or aggregation
-    val positions = o.join(broadcast(fm), Seq("p"))
+    t.pinned.join(broadcast(t.statsFrame.select("p", "m")), Seq("p"))
       .select(col("p"), explode(array((0 until BloomK).map(i =>
         expr(posExpr(i, "k", "m"))): _*)).as("pos"))
       .distinct()
-    positions
       .select(col("p"), (col("pos") / 64L).cast("long").as("widx"),
         expr("shiftleft(1L, cast(pos % 64 as int))").as("bit"))
       .groupBy("p", "widx").agg(expr("bit_or(bit)").as("word"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$store/index")
-    BStore(store, fmRows.length.toLong, fmRows.map(_.getLong(2)).max)
+      .write.mode(SaveMode.Overwrite).parquet(s"${t.store}/index")
+    t
   }
 
+  /** The key maximum the probe schedule derives from. */
+  private[graft] def keyMax(t: ManifestTable): Long = t.max("mxk")
+
   /** The default 20-probe batch. */
-  private[graft] def defaultProbes(spark: SparkSession, st: BStore): DataFrame =
+  private[graft] def defaultProbes(spark: SparkSession, t: ManifestTable): DataFrame =
     spark.range(1, Probes + 1)
-      .select(((col("id") * st.mk) / 16L).cast("long").as("pk"))
+      .select(((col("id") * keyMax(t)) / 16L).cast("long").as("pk"))
 
   /** Plan the probe batch from the persisted index: bloom-hit
     * (probe, file) pairs. A probe hits a file iff EVERY one of its
     * distinct positions has its bit set — a missing word is a zero
     * word (sparse = dense semantics).
     */
-  private[graft] def planProbes(spark: SparkSession, st: BStore): DataFrame =
-    planProbeFrame(spark, st, defaultProbes(spark, st))
+  private[graft] def planProbes(spark: SparkSession, t: ManifestTable): DataFrame =
+    planProbeFrame(spark, t, defaultProbes(spark, t))
 
-  private[graft] def planProbeFrame(spark: SparkSession, st: BStore,
+  private[graft] def planProbeFrame(spark: SparkSession, t: ManifestTable,
       probes: DataFrame): DataFrame = {
-    val fm = spark.read.parquet(s"${st.store}/fm")
-    val index = spark.read.parquet(s"${st.store}/index")
-    val pb = probes.crossJoin(broadcast(fm))
+    val index = spark.read.parquet(s"${t.store}/index")
+    val pb = probes.crossJoin(broadcast(t.statsFrame.select("p", "m")))
       .select(col("pk"), col("p"), explode(array((0 until BloomK).map(i =>
         expr(posExpr(i, "pk", "m"))): _*)).as("pos"))
       .distinct()
@@ -147,53 +118,40 @@ object BloomIndex {
     * n_match/sum; an over- or under-probing plan breaks files_hit.
     */
   def bloomIndex(spark: SparkSession, dir: String): DataFrame = {
-    val st = stage(spark, dir)
-    // servePerProbe already materializes the bounded per-probe frame
-    // (single partition, probe_key-ordered); re-sorting is a no-op
-    // narrow pass, NOT a second driver round-trip.
-    try servePerProbe(spark, st, defaultProbes(spark, st)).orderBy("probe_key")
-    finally st.drop()
+    val t = stage(spark, dir)
+    // servePerProbe returns the bounded per-probe rows already built
+    // on the driver in probe_key order
+    try servePerProbe(spark, t, defaultProbes(spark, t)).orderBy("probe_key")
+    finally t.drop()
   }
 
   /** Serve ONE probe batch: plan from the index, read only bloom-hit
     * files, return the certified per-probe rows — the seam the batch
     * op and the streaming lookup loop share.
     */
-  private[graft] def servePerProbe(spark: SparkSession, st: BStore,
+  private[graft] def servePerProbe(spark: SparkSession, t: ManifestTable,
       probes: DataFrame): DataFrame = {
-      import spark.implicits._
-      // the bloom plan is bounded metadata (probes × hit files):
-      // collect it ONCE and derive the file list and per-probe
-      // files_hit driver-side (was: a cached frame + a distinct
-      // collect + a three-way broadcast-join collect)
-      val probeKeys = probes.collect().map(_.getLong(0)).sorted
-      val hitRows = planProbeFrame(spark, st, probes).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      val hitFiles = hitRows.map(_._2).distinct.sorted
-      val filesHit = hitRows.groupBy(_._1).view.mapValues(_.length.toLong).toMap
-      // the pruned read: only bloom-hit partitions are opened; the
-      // per-probe file restriction is the broadcast hits join
-      val matched: Map[Long, (Long, Long)] =
-        if (hitFiles.isEmpty) Map.empty
-        else spark.read.option("basePath", s"${st.store}/data")
-          .parquet(hitFiles.map(p => s"${st.store}/data/p=$p").toIndexedSeq: _*)
-          .join(broadcast(hitRows.toSeq.toDF("pk", "p")), Seq("p"))
-          .filter(col("k") === col("pk"))
-          .groupBy("pk")
-          .agg(count(lit(1)).as("n_match"),
-            sum(col("price_c")).as("sum_price_c"))
-          .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
-          .toMap
-      val out = probeKeys.map { pk =>
-        val (nm, spc) = matched.getOrElse(pk, (0L, 0L))
-        (pk, st.filesTotal, filesHit.getOrElse(pk, 0L), nm, spc)
-      }.toIndexedSeq
-      spark.createDataFrame(spark.sparkContext.parallelize(out, 1).map(t =>
-          org.apache.spark.sql.Row(t._1, t._2, t._3, t._4, t._5)),
-        org.apache.spark.sql.types.StructType(
-          Seq("probe_key", "files_total", "files_hit", "n_match",
-            "sum_price_c").map(n => org.apache.spark.sql.types.StructField(
-            n, org.apache.spark.sql.types.LongType, nullable = false))))
+    import spark.implicits._
+    // the bloom plan is bounded metadata (probes × hit files):
+    // collect it ONCE and derive the file list and per-probe
+    // files_hit driver-side
+    val probeKeys = probes.collect().map(_.getLong(0)).sorted
+    val hitRows = planProbeFrame(spark, t, probes).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    val hitFiles = hitRows.map(_._2).toSet
+    val filesHit = hitRows.groupBy(_._1).view.mapValues(_.length.toLong).toMap
+    // the pruned read: only bloom-hit partitions are opened; the
+    // per-probe file restriction is the broadcast hits join
+    val matched = t.read(t.stats.filter(r => hitFiles(r.getAs[Long]("p"))))
+      .join(broadcast(hitRows.toSeq.toDF("pk", "p")), Seq("p"))
+      .filter(col("k") === col("pk"))
+      .groupBy("pk")
+      .agg(count(lit(1)).as("n_match"), sum(col("price_c")).as("sum_price_c"))
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    probeKeys.toSeq.map { pk =>
+      val (nm, spc) = matched.getOrElse(pk, (0L, 0L))
+      (pk, t.stats.length.toLong, filesHit.getOrElse(pk, 0L), nm, spc)
+    }.toDF("probe_key", "files_total", "files_hit", "n_match", "sum_price_c")
   }
 
   /** Closed-form oracle: the identical index + probe arithmetic from

@@ -1,8 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Scratch
 import graft.Tables
 import graft.relational.Queries
 
@@ -28,14 +27,8 @@ import graft.relational.Queries
   * plan dump — and n_match / sum_total_c certify no file holding a
   * match was pruned (the date predicate keeps filtering inside
   * boundary quarters: rows_read > n_match is the honest cell-grain
-  * cost, exactly as in [[HiddenPartition]]).
-  *
-  * Scale shape: both prune layers are driver-side arithmetic over
-  * bounded metadata (the cell/file stats manifest); the read is one
-  * pruned scan with the box predicate pushed into parquet row-group
-  * pruning inside the surviving z-sorted files; the layout write is
-  * one shuffle keyed by (cell, fid). No stage touches more than
-  * O(selectivity) of the table after the write.
+  * cost, exactly as in [[HiddenPartition]]). Both prune layers are
+  * driver-side filters over the one [[ManifestTable]] stats manifest.
   */
 object HiddenZOrder {
 
@@ -61,123 +54,68 @@ object HiddenZOrder {
       (year(col("o_orderdate")).cast("long") * 4 +
         floor((month(col("o_orderdate")) - 1) / 3.0).cast("long")).as("pq"))
 
-  /** The normalization maxima (mc, mtc), one tiny agg job. */
-  private def maxima(spark: SparkSession, dir: String): (Long, Long) = {
-    val r = rawOrders(spark, dir).agg(max("c"), max("total_c")).collect()(0)
-    (r.getLong(0), r.getLong(1))
-  }
-
   /** Orders with the quarter transform and the z assignment applied:
-    * (c, total_c, d, pq, z, fid). The maxima are baked in as literals
-    * (collected once by the caller) — the old crossJoin(broadcast(mx))
-    * re-ran the max-subquery broadcast inside EVERY execution that
-    * referenced the frame.
+    * (c, total_c, d, pq, z, fid). The normalization maxima (mc, mtc)
+    * are collected first (one tiny agg job) and baked in as literals.
     */
-  private[sources] def baseWith(spark: SparkSession, dir: String,
-      mc: Long, mtc: Long): DataFrame =
-    rawOrders(spark, dir)
-      .withColumn("cn", expr(s"(c * ${1L << Queries.ZBits}) div ${mc + 1}L"))
-      .withColumn("tn", expr(s"(total_c * ${1L << Queries.ZBits}) div ${mtc + 1}L"))
+  private[sources] def base(spark: SparkSession, dir: String): DataFrame = {
+    val o = rawOrders(spark, dir)
+    val r = o.agg(max("c"), max("total_c")).collect()(0)
+    o.withColumn("cn", expr(s"(c * ${1L << Queries.ZBits}) div ${r.getLong(0) + 1}L"))
+      .withColumn("tn", expr(s"(total_c * ${1L << Queries.ZBits}) div ${r.getLong(1) + 1}L"))
       .withColumn("z", expr(Queries.zInterleaveExpr("cn", "tn")))
       .withColumn("fid", expr(s"z div ${1L << (2 * Queries.ZBits - FidBits)}"))
       .select("c", "total_c", "d", "pq", "z", "fid")
-
-  private[sources] def base(spark: SparkSession, dir: String): DataFrame = {
-    val (mc, mtc) = maxima(spark, dir)
-    baseWith(spark, dir, mc, mtc)
   }
 
-  /** Staged store handle plus the planner's metadata. */
-  private[sources] final case class HZStore(store: String, filesTotal: Long,
-      afterQuarter: Seq[(Long, Long, Long)], hit: Seq[(Long, Long, Long)],
-      cLo: Long, cHi: Long, tcLo: Long, tcHi: Long) {
-    def drop(): Unit = Scratch.rm(store)
-  }
-
-  /** Write the two-level layout + stats manifest and plan the query's
-    * file list through both prune layers.
+  /** Write the two-level layout: (quarter cell, z file) partitions,
+    * z-sorted inside each file, with per-file envelopes on BOTH
+    * clustered dimensions.
     */
-  private[sources] def stage(spark: SparkSession, dir: String): HZStore = {
-    val store = Scratch.path("hidz")
-    Scratch.rm(store)
-    // ONE pass over orders (guide §1.2/§5): maxima collected once and
-    // baked into the transform as literals; the transformed base is
-    // lazily checkpointed — the layout write materializes it — so the
-    // stats aggregation reads pinned blocks instead of re-scanning
-    // parquet and re-running the z interleave; the bounded stats
-    // manifest is collected ONCE and both prune layers run driver-side
-    // over the collected rows (was: three extra base recomputes plus a
-    // count job and two collect jobs over the stats parquet).
-    val (mc, mtc) = maxima(spark, dir)
-    val b = baseWith(spark, dir, mc, mtc).localCheckpoint(eager = false)
-    // one shuffle keyed by (cell, fid); z-sorted within each file for
-    // tight row-group envelopes inside tight file envelopes
-    // the sort leads with the partition columns so the partitioned
-    // write's required ordering is already satisfied — otherwise the
-    // writer re-sorts by (pq, fid) alone (non-stable) and the z order
-    // inside each file is destroyed
-    b.repartition(col("pq"), col("fid"))
-      .sortWithinPartitions("pq", "fid", "z")
-      .write.mode(SaveMode.Overwrite).partitionBy("pq", "fid")
-      .parquet(s"$store/data")
-    // the stats manifest: per-(cell, file) envelopes on BOTH clustered
-    // dimensions — the metadata an Iceberg manifest keeps per file
-    val statsDf = b.groupBy("pq", "fid")
-      .agg(min("c").as("lo_c"), max("c").as("hi_c"),
-        min("total_c").as("lo_tc"), max("total_c").as("hi_tc"),
-        count(lit(1)).as("n_rows"))
-    val statsRows = statsDf.collect().toIndexedSeq
-    spark.createDataFrame(spark.sparkContext.parallelize(statsRows, 1),
-        statsDf.schema)
-      .write.mode(SaveMode.Overwrite).parquet(s"$store/stats")
+  private[sources] def stage(spark: SparkSession, dir: String): ManifestTable =
+    ManifestTable.write("hidz", base(spark, dir), Seq("pq", "fid"), Seq("z"),
+      min("c").as("lo_c"), max("c").as("hi_c"),
+      min("total_c").as("lo_tc"), max("total_c").as("hi_tc"),
+      count(lit(1)).as("n_rows"))
 
-    val (cLo, cHi) = ((30L * mc) / 100L, (45L * mc) / 100L)
-    val (tcLo, tcHi) = ((20L * mtc) / 100L, (50L * mtc) / 100L)
-    val filesTotal = statsRows.length.toLong
-    // level 1: the raw date range derives a quarter interval through
-    // the transform (quarter numbers are order-preserving in date)
-    val afterQ = statsRows
-      .filter(r => r.getLong(0) >= PqLo && r.getLong(0) <= PqHi)
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(6)))
-    // level 2: within surviving cells, stats-envelope overlap on the
-    // (custkey, price) box
-    val hit = statsRows
-      .filter(r => r.getLong(0) >= PqLo && r.getLong(0) <= PqHi &&
-        r.getLong(3) >= cLo && r.getLong(2) <= cHi &&
-        r.getLong(5) >= tcLo && r.getLong(4) <= tcHi)
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(6)))
-    HZStore(store, filesTotal, afterQ, hit, cLo, cHi, tcLo, tcHi)
+  /** The (custkey, price) box (cLo, cHi, tcLo, tcHi): fixed fractions
+    * of the maxima, which are the largest file envelopes.
+    */
+  private[sources] def box(t: ManifestTable): (Long, Long, Long, Long) = {
+    val (mc, mtc) = (t.max("hi_c"), t.max("hi_tc"))
+    ((30L * mc) / 100L, (45L * mc) / 100L, (20L * mtc) / 100L, (50L * mtc) / 100L)
+  }
+
+  /** Level 1: the raw date range derives a quarter interval through
+    * the transform (quarter numbers are order-preserving in date).
+    */
+  private[sources] def afterQuarter(t: ManifestTable): Seq[Row] =
+    t.stats.filter(r => r.getAs[Long]("pq") >= PqLo && r.getAs[Long]("pq") <= PqHi)
+
+  /** Level 2: within surviving cells, stats-envelope overlap on the
+    * (custkey, price) box.
+    */
+  private[sources] def plan(t: ManifestTable): Seq[Row] = {
+    val (cLo, cHi, tcLo, tcHi) = box(t)
+    afterQuarter(t).filter(r =>
+      r.getAs[Long]("hi_c") >= cLo && r.getAs[Long]("lo_c") <= cHi &&
+        r.getAs[Long]("hi_tc") >= tcLo && r.getAs[Long]("lo_tc") <= tcHi)
   }
 
   def hiddenZorder(spark: SparkSession, dir: String): DataFrame = {
-    val st = stage(spark, dir)
+    val t = stage(spark, dir)
     try {
-      val pruned =
-        if (st.hit.isEmpty)
-          spark.range(0).select(lit(0L).as("c"), lit(0L).as("total_c"),
-            lit(null).cast("timestamp").as("d"))
-        else spark.read.option("basePath", s"${st.store}/data")
-          .parquet(st.hit.map { case (pq, fid, _) =>
-            s"${st.store}/data/pq=$pq/fid=$fid" }: _*)
+      val (cLo, cHi, tcLo, tcHi) = box(t)
+      val hit = plan(t)
       val isMatch = col("d") >= lit(DLo).cast("timestamp") &&
         col("d") <= lit(DHi).cast("timestamp") &&
-        col("c").between(st.cLo, st.cHi) &&
-        col("total_c").between(st.tcLo, st.tcHi)
-      val a = pruned.agg(
-        count(lit(1)).as("rows_read"),
-        coalesce(sum(when(isMatch, 1L).otherwise(0L)), lit(0L)).as("n_match"),
-        coalesce(sum(when(isMatch, col("total_c"))), lit(0L))
-          .as("sum_total_c")).collect()(0)
-      val out = spark.range(1).select(
-        lit(st.filesTotal).as("files_total"),
-        lit(st.afterQuarter.length.toLong).as("files_after_quarter"),
-        lit(st.hit.length.toLong).as("files_read"),
-        lit(a.getLong(0)).as("rows_read"),
-        lit(a.getLong(1)).as("n_match"),
-        lit(a.getLong(2)).as("sum_total_c"))
-      val rows = out.collect().toIndexedSeq
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), out.schema)
-    } finally st.drop()
+        col("c").between(cLo, cHi) && col("total_c").between(tcLo, tcHi)
+      val Seq(rr, nm, stc) = t.tally(hit, isMatch, "total_c")
+      ManifestTable.row(spark, "files_total" -> t.stats.length.toLong,
+        "files_after_quarter" -> afterQuarter(t).length.toLong,
+        "files_read" -> hit.length.toLong, "rows_read" -> rr,
+        "n_match" -> nm, "sum_total_c" -> stc)
+    } finally t.drop()
   }
 
   /** Closed-form oracle: transform, z assignment, per-file envelopes,

@@ -1,9 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Scratch
-import graft.Tables
 import graft.relational.Queries
 
 /** HILBERT-curve clustering — the locality upgrade over the Morton
@@ -27,10 +25,8 @@ import graft.relational.Queries
   * no UDF, whole-stage codegen'd, and the SAME unrolled chain is
   * emitted as SQL for the oracle so the two engines cannot drift.
   *
-  * Scale shape: identical to the z twin — scan-side integer
-  * arithmetic against a broadcast maxima row, one shuffle keyed by
-  * file id, a 64-cell stats aggregate, O(selectivity) files opened by
-  * the planned read. The spec measures the locality claim directly:
+  * Stage and serve are the z twin's ([[ZOrderStore.serve]]); only
+  * the curve differs. The spec measures the locality claim directly:
   * the same box over both layouts, hilbert files_read ≤ zorder
   * files_read.
   */
@@ -44,12 +40,12 @@ object HilbertStore {
     "CASE WHEN rx = 1 AND ry = 1 THEN 2 WHEN rx = 1 THEN 3 " +
       "WHEN ry = 1 THEN 1 ELSE 0 END"
 
-  /** The Spark-side position: ONE native codegen'd expression
-    * ([[graft.functions.HilbertIndex]]) — the unrolled column chain
-    * below is kept for the spec's independent cross-check, but the
-    * hot path must not pay its plan-size blowup (the rotation makes
-    * each level reference the previous one several times; measured:
-    * 15 s → z-order parity after the swap).
+  /** The Spark-side position, as [[Hilbert]] computes it: ONE native
+    * codegen'd expression ([[graft.functions.HilbertIndex]]) — the
+    * unrolled column chain below is kept for the spec's independent
+    * cross-check, but the hot path must not pay its plan-size blowup
+    * (the rotation makes each level reference the previous one
+    * several times; measured: 15 s → z-order parity after the swap).
     */
   private[graft] def hilbertExprCol(df: DataFrame, xCol: String,
       yCol: String, bits: Int): DataFrame = {
@@ -101,70 +97,15 @@ object HilbertStore {
     }.mkString(",\n")
   }
 
-  private[graft] final case class Staged(store: String, filesTotal: Long,
-      hitFids: Seq[Long], pkLo: Long, pkHi: Long, skLo: Long, skHi: Long) {
-    def drop(): Unit = Scratch.rm(store)
-  }
+  /** The Hilbert walk as a [[ZOrderStore.Curve]]. */
+  private[graft] val Hilbert = ZOrderStore.Curve("hstore",
+    s"graft_hilbert(pkn, skn, ${Queries.ZBits})")
 
-  private[graft] def stage(spark: SparkSession, dir: String): Staged = {
-    val store = Scratch.path("hstore")
-    Scratch.rm(store)
-    val li = Tables(spark, dir, "lineitem")
-      .select(col("l_partkey").as("pk"), col("l_suppkey").as("sk"),
-        floor(col("l_extendedprice") * 100).cast("long").as("price_c"))
-    val mx = li.agg(max("pk").as("mpk"), max("sk").as("msk"))
-    val norm = li.crossJoin(broadcast(mx))
-      .withColumn("pkn", expr(s"(pk * ${1L << Queries.ZBits}) div (mpk + 1L)"))
-      .withColumn("skn", expr(s"(sk * ${1L << Queries.ZBits}) div (msk + 1L)"))
-    val withH = hilbertExprCol(norm, "pkn", "skn", Queries.ZBits)
-      .withColumn("fid", expr(s"hd div ${1L << (2 * Queries.ZBits - 6)}"))
-    withH.select("pk", "sk", "price_c", "hd", "fid")
-      .repartition(col("fid"))
-      .sortWithinPartitions("fid", "hd")
-      .write.mode(SaveMode.Overwrite).partitionBy("fid")
-      .parquet(s"$store/data")
-    withH.groupBy("fid")
-      .agg(min("pk").as("lo_pk"), max("pk").as("hi_pk"),
-        min("sk").as("lo_sk"), max("sk").as("hi_sk"),
-        count(lit(1)).as("n_rows"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$store/stats")
-    val b = mx.select(expr("(30L * mpk) div 100L"), expr("(35L * mpk) div 100L"),
-      expr("(30L * msk) div 100L"), expr("(35L * msk) div 100L")).collect()(0)
-    val (pkLo, pkHi, skLo, skHi) =
-      (b.getLong(0), b.getLong(1), b.getLong(2), b.getLong(3))
-    val stats = spark.read.parquet(s"$store/stats")
-    val hit = stats.filter(col("hi_pk") >= pkLo && col("lo_pk") <= pkHi &&
-        col("hi_sk") >= skLo && col("lo_sk") <= skHi)
-      .select("fid").collect().map(_.getLong(0)).sorted.toIndexedSeq
-    Staged(store, stats.count(), hit, pkLo, pkHi, skLo, skHi)
-  }
-
-  /** src_hilbert_store — write the Hilbert layout, then serve the 2-D
-    * box query from the stats-planned pruned read.
+  /** src_hilbert_store — the z twin's stage and serve on the Hilbert
+    * layout.
     */
-  def hilbertStore(spark: SparkSession, dir: String): DataFrame = {
-    val st = stage(spark, dir)
-    try {
-      val pruned =
-        if (st.hitFids.isEmpty)
-          spark.range(0).select(lit(0L).as("pk"), lit(0L).as("sk"),
-            lit(0L).as("price_c"))
-        else spark.read.option("basePath", s"${st.store}/data")
-          .parquet(st.hitFids.map(f => s"${st.store}/data/fid=$f"): _*)
-      val isMatch = col("pk") >= st.pkLo && col("pk") <= st.pkHi &&
-        col("sk") >= st.skLo && col("sk") <= st.skHi
-      val agg = pruned
-        .agg(count(lit(1)).as("rows_read"),
-          sum(when(isMatch, 1L).otherwise(0L)).as("n_match"),
-          coalesce(sum(when(isMatch, col("price_c"))), lit(0L)).as("sum_price_c"),
-          coalesce(sum(when(isMatch, col("pk"))), lit(0L)).as("sum_pk"))
-        .select(lit(st.filesTotal).as("files_total"),
-          lit(st.hitFids.length.toLong).as("files_read"),
-          col("rows_read"), col("n_match"), col("sum_price_c"), col("sum_pk"))
-      val rows = agg.collect().toIndexedSeq
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), agg.schema)
-    } finally st.drop()
-  }
+  def hilbertStore(spark: SparkSession, dir: String): DataFrame =
+    ZOrderStore.serve(spark, dir, Hilbert)
 
   /** Closed-form oracle: the same normalize → Hilbert chain → file
     * cut → stats plan → matched aggregates from `lineitem`, the

@@ -1,8 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Scratch
 import graft.Tables
 
 /** TWO-LEVEL METADATA PRUNING — the piece of the Iceberg metadata
@@ -18,11 +17,14 @@ import graft.Tables
   * metadata itself gets data-skipping.
   *
   * Layout here: 64 key-range data files grouped into 8 manifests of 8
-  * contiguous files each; the emitted row certifies BOTH metadata
-  * levels (manifests_read, files_read — over- or under-pruning at
-  * either level hash-mismatches) and the answer (rows_read, exact
-  * matched aggregate). The oracle restates the whole tree from
-  * `orders` in closed form.
+  * contiguous files each. Both levels are [[ManifestTable]]s: the
+  * data files with their per-file stats, and the manifests — those
+  * stats rows partitioned by `mid` — whose own stats are the manifest
+  * list. The emitted row certifies BOTH metadata levels
+  * (manifests_read, files_read — over- or under-pruning at either
+  * level hash-mismatches) and the answer (rows_read, exact matched
+  * aggregate). The oracle restates the whole tree from `orders` in
+  * closed form.
   */
 object ManifestPrune {
 
@@ -31,79 +33,40 @@ object ManifestPrune {
   val PerManifest = 8L
 
   def manifestPrune(spark: SparkSession, dir: String): DataFrame = {
-    Scratch.withDir("mprune") { store =>
-      val o = Tables(spark, dir, "orders")
-        .select(col("o_orderkey").as("k"),
-          floor(col("o_totalprice") * 100).cast("long").as("total_c"))
-      val mk = o.agg(max("k")).collect()(0).getLong(0)
-      // one pass over orders (guide §1.2): the fid-stamped frame is
-      // lazily checkpointed — the data write materializes it — so the
-      // stats aggregation reads pinned blocks instead of re-scanning
-      val b = o.withColumn("fid", expr(s"(k * $MFiles) div (${mk + 1}L)"))
-        .localCheckpoint(eager = false)
-      b.repartition(col("fid")).sortWithinPartitions("fid", "k")
-        .write.mode(SaveMode.Overwrite).partitionBy("fid")
-        .parquet(s"$store/data")
-
-      // file stats grouped into manifest FILES (one parquet per mid)…
-      // BOUNDED metadata (MFiles rows): computed once, collected, the
-      // manifest files written from the collected rows and the
-      // manifest LIST derived driver-side (was: two more full
-      // recomputes of b — one per metadata write/aggregate)
-      val statsDf = b.groupBy("fid")
-        .agg(min("k").as("lo_k"), max("k").as("hi_k"),
-          count(lit(1)).as("n_rows"))
-        .withColumn("mid", expr(s"fid div $PerManifest"))
-      val statsRows = statsDf.collect().toIndexedSeq
-      spark.createDataFrame(spark.sparkContext.parallelize(statsRows, 1),
-          statsDf.schema)
-        .repartition(col("mid"))
-        .write.mode(SaveMode.Overwrite).partitionBy("mid")
-        .parquet(s"$store/_meta/manifests")
-      // …indexed by the manifest LIST (envelope per manifest)
-      val mlist = statsRows.groupBy(_.getLong(4)).map { case (mid, rs) =>
-        (mid, rs.map(_.getLong(1)).min, rs.map(_.getLong(2)).max,
-          rs.length.toLong)
-      }.toSeq.sortBy(_._1)
-
-      // hierarchical plan for the 30–35 % key band
-      val (loB, hiB) = ((30L * mk) / 100L, (35L * mk) / 100L)
-      // level 1: one metadata read (the list), drop whole manifests
-      val mHit = mlist.filter(m => m._3 >= loB && m._2 <= hiB).map(_._1)
-      // level 2: read ONLY the surviving manifests' entries (empty-plan
-      // arm: a band overlapping no manifest reads no metadata at all)
-      val fHit =
-        if (mHit.isEmpty) Array.empty[(Long, Long)]
-        else spark.read
-          .option("basePath", s"$store/_meta/manifests")
-          .parquet(mHit.map(m => s"$store/_meta/manifests/mid=$m")
-            .toIndexedSeq: _*)
-          .filter(col("hi_k") >= loB && col("lo_k") <= hiB)
-          .select("fid", "n_rows").collect()
-          .map(r => (r.getLong(0), r.getLong(1)))
-      // level 3: open only the surviving data files
-      val pruned =
-        if (fHit.isEmpty)
-          spark.range(0).select(lit(0L).as("k"), lit(0L).as("total_c"))
-        else spark.read.option("basePath", s"$store/data")
-          .parquet(fHit.map(f => s"$store/data/fid=${f._1}").toIndexedSeq: _*)
-      val a = pruned.agg(
-        coalesce(sum(when(col("k").between(loB, hiB), 1L).otherwise(0L)),
-          lit(0L)).as("n_match"),
-        coalesce(sum(when(col("k").between(loB, hiB), col("total_c"))),
-          lit(0L)).as("sum_total_c")).collect()(0)
-
-      val out = spark.range(1).select(
-        lit(mlist.length.toLong).as("manifests_total"),
-        lit(mHit.length.toLong).as("manifests_read"),
-        lit(MFiles).as("files_total"),
-        lit(fHit.length.toLong).as("files_read"),
-        lit(fHit.map(_._2).sum).as("rows_read"),
-        lit(a.getLong(0)).as("n_match"),
-        lit(a.getLong(1)).as("sum_total_c"))
-      val rows = out.collect().toIndexedSeq
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), out.schema)
-    }
+    val o = Tables(spark, dir, "orders")
+      .select(col("o_orderkey").as("k"),
+        floor(col("o_totalprice") * 100).cast("long").as("total_c"))
+    val mk = o.agg(max("k")).collect()(0).getLong(0)
+    val files = ManifestTable.write("mprune",
+      o.withColumn("fid", expr(s"(k * $MFiles) div (${mk + 1}L)")),
+      Seq("fid"), Seq("k"),
+      min("k").as("lo_k"), max("k").as("hi_k"), count(lit(1)).as("n_rows"))
+    try {
+      val manifests = ManifestTable.write("mprune_meta",
+        files.statsFrame.withColumn("mid", expr(s"fid div $PerManifest")),
+        Seq("mid"), Seq("fid"),
+        min("lo_k").as("lo_k"), max("hi_k").as("hi_k"))
+      try {
+        // hierarchical plan for the 30–35 % key band
+        val (loB, hiB) = ((30L * mk) / 100L, (35L * mk) / 100L)
+        def overlaps(r: Row): Boolean =
+          r.getAs[Long]("hi_k") >= loB && r.getAs[Long]("lo_k") <= hiB
+        // level 1: the manifest list, drop whole manifests
+        val mHit = manifests.stats.filter(overlaps)
+        // level 2: read ONLY the surviving manifests' entries
+        val fHit = manifests.read(mHit).collect().toSeq.filter(overlaps)
+        // level 3: open only the surviving data files
+        val Seq(_, nm, stc) =
+          files.tally(fHit, col("k").between(loB, hiB), "total_c")
+        ManifestTable.row(spark,
+          "manifests_total" -> manifests.stats.length.toLong,
+          "manifests_read" -> mHit.length.toLong,
+          "files_total" -> MFiles,
+          "files_read" -> fHit.length.toLong,
+          "rows_read" -> fHit.map(_.getAs[Long]("n_rows")).sum,
+          "n_match" -> nm, "sum_total_c" -> stc)
+      } finally manifests.drop()
+    } finally files.drop()
   }
 
   /** Closed-form oracle: both metadata levels and the matched

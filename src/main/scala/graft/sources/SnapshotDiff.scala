@@ -142,7 +142,9 @@ object SnapshotDiff {
         input.addData(w); q.processAllAvailable()
       }
       q.stop()
-      val agg = spark.read.parquet(s"$outRoot/diff-v*")
+      val diffs = Option(new java.io.File(outRoot).list()).toSeq.flatten
+        .filter(_.startsWith("diff-v")).sorted.map(d => s"$outRoot/$d")
+      val agg = spark.read.parquet(diffs: _*)
         .select("version", "op", "n_keys", "sum_key", "sum_total_c")
         .orderBy("version", "op")
       val rows = agg.collect().toIndexedSeq

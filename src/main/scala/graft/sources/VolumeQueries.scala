@@ -641,10 +641,10 @@ object VolumeQueries {
     * ([[TfRecordBinary]] — length-prefixed masked-CRC32C framing,
     * hand-encoded `tf.train.Example` protobuf payloads, the format
     * every TF/JAX data loader reads), then re-ingest them with a
-    * distributed binaryFile scan that re-parses every record from
-    * bytes alone — both CRCs verified per record, the Example walked
-    * by a generic tag/wire-type decoder (an independent reader, not a
-    * byte-mirror of the writer). The per-shard aggregate (record
+    * distributed [[graft.octree.TreeFiles]] read that re-parses every
+    * record from bytes alone — both CRCs verified per record, the
+    * Example walked by a generic tag/wire-type decoder (an independent
+    * reader, not a byte-mirror of the writer). The per-shard aggregate (record
     * count, parsed-field sums, rank-weighted text hash, TOTAL BYTES)
     * is predicted by the DuckDB oracle from the parquet table alone —
     * including the byte totals via exact varint-size arithmetic — so
@@ -653,8 +653,8 @@ object VolumeQueries {
     * Scale shape: shard assignment is the content-independent hash
     * rule (`md5('shard:'||doc_id) % shards`); each executor streams
     * its shard's records straight to the file (no per-shard buffering
-    * beyond one record); the read-back is one distributed binaryFile
-    * scan, payload bytes never touch the driver.
+    * beyond one record); the read-back is one distributed
+    * [[graft.octree.TreeFiles]] read, payload bytes never touch the driver.
     */
   def tfrecordSink(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -683,9 +683,7 @@ object VolumeQueries {
           }
           if (os != null) os.close()
         }
-      val agg = spark.read.format("binaryFile").load(s"$tmp/*.tfrecord")
-        .select(col("path"), col("content"))
-        .as[(String, Array[Byte])]
+      val agg = graft.octree.TreeFiles.read(spark, tmp, ".tfrecord")
         .flatMap { case (path, bytes) =>
           val shard = path.substring(path.lastIndexOf("shard-") + 6)
             .stripSuffix(".tfrecord").toLong
@@ -716,9 +714,9 @@ object VolumeQueries {
     * fields) whose members share a zero-padded basename key per
     * sample (`00000042.txt` = text, `00000042.cls` = lang, the
     * classic WDS classification layout) — then re-ingest with a
-    * distributed binaryFile scan that re-parses every archive from
-    * bytes alone, header checksums verified per member, samples
-    * re-assembled by key. Per-shard aggregates INCLUDING the total
+    * distributed [[graft.octree.TreeFiles]] read that re-parses every
+    * archive from bytes alone, header checksums verified per member,
+    * samples re-assembled by key. Per-shard aggregates INCLUDING the total
     * archive bytes (header + 512-padding + trailer arithmetic) are
     * predicted by the oracle from the parquet table, so a green row
     * certifies the container layout end to end. Same shard rule and
@@ -752,9 +750,7 @@ object VolumeQueries {
           }
           close()
         }
-      val agg = spark.read.format("binaryFile").load(s"$tmp/*.tar")
-        .select(col("path"), col("content"))
-        .as[(String, Array[Byte])]
+      val agg = graft.octree.TreeFiles.read(spark, tmp, ".tar")
         .flatMap { case (path, bytes) =>
           val shard = path.substring(path.lastIndexOf("shard-") + 6)
             .stripSuffix(".tar").toLong

@@ -1,19 +1,18 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Scratch
 import graft.Tables
 import graft.relational.Queries
 
 /** The PHYSICAL twin of [[graft.relational.Queries.qZorderSkip]]: that
   * op proves the Z-order pruning arithmetic in a report; this one
   * actually WRITES the layout and serves a query from it. lineitem is
-  * clustered on the Morton interleave of min-max-normalized
-  * (l_partkey, l_suppkey) — files cut on the top 6 z bits (64
-  * curve-aligned quadrant unions, rows z-sorted within each file, the
-  * shape Delta's OPTIMIZE ZORDER produces) — with an Iceberg-style
-  * per-file min/max stats table committed beside the data. A 2-D box
+  * clustered on a 2-D curve position of min-max-normalized
+  * (l_partkey, l_suppkey) — files cut on the top 6 curve bits (64
+  * curve-aligned ranges, rows curve-sorted within each file, the
+  * shape Delta's OPTIMIZE ZORDER produces) — on the [[ManifestTable]]
+  * core with per-file min/max envelopes on both dimensions. A 2-D box
   * predicate then plans its file list FROM THE STATS and reads only
   * the overlapping files. The emitted row carries files_total /
   * files_read / rows_read plus the exact matched-row aggregates, and
@@ -21,107 +20,76 @@ import graft.relational.Queries
   * pruned-away file that contained a match would hash-mismatch the
   * aggregates, an under-pruned plan would hash-mismatch files_read.
   *
-  * Scale shape: file assignment is scan-side integer arithmetic
-  * against a broadcast 1-row maxima frame (no global sort, no driver
-  * work on data rows); the write is one shuffle keyed by fid (each
-  * file's rows colocate, so `partitionBy` emits exactly one file per
-  * fid); the stats table is a [[Queries.ZFiles]]-cell aggregate; the
-  * pruned read opens O(selectivity) files of a 100 TB table and its
-  * box predicate is additionally pushed into the parquet scan for
-  * row-group pruning inside the surviving files.
+  * The curve is the one parameter: the Morton interleave here, the
+  * Hilbert walk in [[HilbertStore]]. Min-max normalization comes
+  * before either (qZorderSkip's measured lesson: unnormalized, the
+  * wide column monopolizes the curve's high bits and the narrow one
+  * never prunes).
   */
 object ZOrderStore {
 
-  /** Staged store handle: root, per-file stats cells, stats-planned
-    * hit files, and the box bounds — shared by the op and the
-    * plan-audit spec.
+  /** A clustering curve: the scratch prefix of its store and its
+    * position expression over the normalized grid columns `pkn`, `skn`.
     */
-  private[graft] final case class Staged(store: String, filesTotal: Long,
-      hitFids: Seq[Long], pkLo: Long, pkHi: Long, skLo: Long, skHi: Long) {
-    def drop(): Unit = Scratch.rm(store)
-  }
+  private[graft] final case class Curve(prefix: String, position: String)
 
-  /** Write the z-clustered store + stats table and plan the box
-    * query's file list from the stats.
-    */
-  private[graft] def stage(spark: SparkSession, dir: String): Staged = {
-    val store = Scratch.path("zstore")
-    Scratch.rm(store)
+  private[graft] val Morton = Curve("zstore", Queries.zInterleaveExpr("pkn", "skn"))
+
+  /** Write lineitem clustered on `curve` with the per-file envelopes. */
+  private[graft] def stage(spark: SparkSession, dir: String,
+      curve: Curve = Morton): ManifestTable = {
     val li = Tables(spark, dir, "lineitem")
       .select(col("l_partkey").as("pk"), col("l_suppkey").as("sk"),
         floor(col("l_extendedprice") * 100).cast("long").as("price_c"))
-    val mx = li.agg(max("pk").as("mpk"), max("sk").as("msk"))
-    // min-max normalization before the interleave (qZorderSkip's
-    // measured lesson: unnormalized, the wide column monopolizes the
-    // curve's high bits and the narrow one never prunes)
-    val withZ = li.crossJoin(broadcast(mx))
-      .withColumn("pkn", expr(s"(pk * ${1L << Queries.ZBits}) div (mpk + 1L)"))
-      .withColumn("skn", expr(s"(sk * ${1L << Queries.ZBits}) div (msk + 1L)"))
-      .withColumn("z", expr(Queries.zInterleaveExpr("pkn", "skn")))
-      .withColumn("fid", expr(s"z div ${1L << (2 * Queries.ZBits - 6)}"))
-    // one shuffle keyed by fid colocates each file's rows, so
-    // partitionBy writes exactly ONE z-sorted file per fid — tight
-    // row-group envelopes inside tight file envelopes
-    // the sort leads with fid so the partitioned write's required
-    // ordering is already satisfied — otherwise the writer re-sorts by
-    // fid alone (non-stable) and the z order inside each file is
-    // destroyed (caught by the hidden+zorder composition spec, which
-    // asserts physical z-sortedness; the same write shape lives here)
-    withZ.select("pk", "sk", "price_c", "z", "fid")
-      .repartition(col("fid"))
-      .sortWithinPartitions("fid", "z")
-      .write.mode(SaveMode.Overwrite).partitionBy("fid")
-      .parquet(s"$store/data")
-    // the "manifest": per-file min/max envelopes on BOTH clustered
-    // dimensions — what Iceberg manifests keep per data file
-    withZ.groupBy("fid")
-      .agg(min("pk").as("lo_pk"), max("pk").as("hi_pk"),
-        min("sk").as("lo_sk"), max("sk").as("hi_sk"),
-        count(lit(1)).as("n_rows"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$store/stats")
-
-    val b = mx.select(expr("(30L * mpk) div 100L"), expr("(35L * mpk) div 100L"),
-      expr("(30L * msk) div 100L"), expr("(35L * msk) div 100L")).collect()(0)
-    val (pkLo, pkHi, skLo, skHi) =
-      (b.getLong(0), b.getLong(1), b.getLong(2), b.getLong(3))
-    val stats = spark.read.parquet(s"$store/stats")
-    // plan from the stats: a file is read iff its envelope overlaps
-    // the box on EVERY constrained dimension — bounded driver-side
-    // metadata, the same order a manifest planner holds
-    val hit = stats.filter(col("hi_pk") >= pkLo && col("lo_pk") <= pkHi &&
-        col("hi_sk") >= skLo && col("lo_sk") <= skHi)
-      .select("fid").collect().map(_.getLong(0)).sorted.toIndexedSeq
-    Staged(store, stats.count(), hit, pkLo, pkHi, skLo, skHi)
+    val mx = li.agg(max("pk"), max("sk")).collect()(0)
+    ManifestTable.write(curve.prefix,
+      li.withColumn("pkn", expr(s"(pk * ${1L << Queries.ZBits}) div ${mx.getLong(0) + 1}L"))
+        .withColumn("skn", expr(s"(sk * ${1L << Queries.ZBits}) div ${mx.getLong(1) + 1}L"))
+        .withColumn("cd", expr(curve.position))
+        .withColumn("fid", expr(s"cd div ${1L << (2 * Queries.ZBits - 6)}"))
+        .select("pk", "sk", "price_c", "cd", "fid"),
+      Seq("fid"), Seq("cd"),
+      min("pk").as("lo_pk"), max("pk").as("hi_pk"),
+      min("sk").as("lo_sk"), max("sk").as("hi_sk"), count(lit(1)).as("n_rows"))
   }
 
-  /** src_zorder_store — write the Z-order layout, then serve the 2-D
-    * box query from the stats-planned pruned read.
+  /** The box (pkLo, pkHi, skLo, skHi): 30–35 % of each key maximum,
+    * the maxima being the largest file envelopes.
     */
-  def zorderStore(spark: SparkSession, dir: String): DataFrame = {
-    val st = stage(spark, dir)
-    try {
-      // empty plan arm: zero stats hits must emit the zero aggregate,
-      // not call spark.read.parquet with no paths
-      val pruned =
-        if (st.hitFids.isEmpty)
-          spark.range(0).select(lit(0L).as("pk"), lit(0L).as("sk"),
-            lit(0L).as("price_c"))
-        else spark.read.option("basePath", s"${st.store}/data")
-          .parquet(st.hitFids.map(f => s"${st.store}/data/fid=$f"): _*)
-      val isMatch = col("pk") >= st.pkLo && col("pk") <= st.pkHi &&
-        col("sk") >= st.skLo && col("sk") <= st.skHi
-      val agg = pruned
-        .agg(count(lit(1)).as("rows_read"),
-          sum(when(isMatch, 1L).otherwise(0L)).as("n_match"),
-          coalesce(sum(when(isMatch, col("price_c"))), lit(0L)).as("sum_price_c"),
-          coalesce(sum(when(isMatch, col("pk"))), lit(0L)).as("sum_pk"))
-        .select(lit(st.filesTotal).as("files_total"),
-          lit(st.hitFids.length.toLong).as("files_read"),
-          col("rows_read"), col("n_match"), col("sum_price_c"), col("sum_pk"))
-      val rows = agg.collect().toIndexedSeq
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), agg.schema)
-    } finally st.drop()
+  private[graft] def box(t: ManifestTable): (Long, Long, Long, Long) = {
+    val (mpk, msk) = (t.max("hi_pk"), t.max("hi_sk"))
+    ((30L * mpk) / 100L, (35L * mpk) / 100L, (30L * msk) / 100L, (35L * msk) / 100L)
   }
+
+  /** A file is read iff its envelope overlaps the box on EVERY
+    * constrained dimension.
+    */
+  private[graft] def plan(t: ManifestTable): Seq[Row] = {
+    val (pkLo, pkHi, skLo, skHi) = box(t)
+    t.stats.filter(r => r.getAs[Long]("hi_pk") >= pkLo && r.getAs[Long]("lo_pk") <= pkHi &&
+      r.getAs[Long]("hi_sk") >= skLo && r.getAs[Long]("lo_sk") <= skHi)
+  }
+
+  /** Write the `curve` layout, then serve the 2-D box query from the
+    * stats-planned pruned read.
+    */
+  private[graft] def serve(spark: SparkSession, dir: String, curve: Curve): DataFrame = {
+    val t = stage(spark, dir, curve)
+    try {
+      val (pkLo, pkHi, skLo, skHi) = box(t)
+      val hit = plan(t)
+      val Seq(rr, nm, spc, spk) = t.tally(hit,
+        col("pk").between(pkLo, pkHi) && col("sk").between(skLo, skHi),
+        "price_c", "pk")
+      ManifestTable.row(spark, "files_total" -> t.stats.length.toLong,
+        "files_read" -> hit.length.toLong, "rows_read" -> rr,
+        "n_match" -> nm, "sum_price_c" -> spc, "sum_pk" -> spk)
+    } finally t.drop()
+  }
+
+  /** src_zorder_store — the Morton layout. */
+  def zorderStore(spark: SparkSession, dir: String): DataFrame =
+    serve(spark, dir, Morton)
 
   /** Closed-form oracle: the same layout + plan arithmetic from
     * `lineitem`, sharing [[Queries.zInterleaveSql]] with the report op.

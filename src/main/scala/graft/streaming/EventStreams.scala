@@ -877,6 +877,7 @@ object EventStreams {
     import graft.sources.StatsPrune
     val st = StatsPrune.stage(spark, dir)
     try {
+      val mk = StatsPrune.keyMax(st)
       val results = scala.collection.mutable.ArrayBuffer
         .empty[(Long, Long, Long, Long, Long, Long, Long)]
       val input = MemoryStream[RQ]
@@ -885,12 +886,11 @@ object EventStreams {
           // a micro-batch carries a BOUNDED set of query descriptors;
           // each plans from the stats — never a full scan
           batch.collect().sortBy(_.qid).foreach { rq =>
-            val loB = rq.loPct * st.mk / 100L
-            val hiB = rq.hiPct * st.mk / 100L
-            val (fr, rr, nm, stc, sk) =
-              StatsPrune.servePlanned(spark, st, loB, hiB)
+            val loB = rq.loPct * mk / 100L
+            val hiB = rq.hiPct * mk / 100L
+            val (fr, rr, nm, stc, sk) = StatsPrune.servePlanned(st, loB, hiB)
             results.synchronized {
-              results += ((rq.qid, st.filesTotal, fr, rr, nm, stc, sk)): Unit
+              results += ((rq.qid, st.stats.length.toLong, fr, rr, nm, stc, sk)): Unit
             }
           }
         }
@@ -1001,8 +1001,8 @@ object EventStreams {
         }
         .start()
       // the default 20-probe key set, served across three triggers
-      val keys = (1L to BloomIndex.Probes)
-        .map(i => (i * st.mk) / 16L)
+      val mk = BloomIndex.keyMax(st)
+      val keys = (1L to BloomIndex.Probes).map(i => (i * mk) / 16L)
       input.addData(keys.slice(0, 7)); q.processAllAvailable()
       input.addData(keys.slice(7, 14)); q.processAllAvailable()
       input.addData(keys.slice(14, keys.length.toInt)); q.processAllAvailable()

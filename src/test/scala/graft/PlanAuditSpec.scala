@@ -413,17 +413,21 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("src_zorder_store read-back: the catalog scan opens ONLY the stats-planned files and pushes the box") {
     import org.apache.spark.sql.functions._
-    val st = graft.sources.ZOrderStore.stage(spark, dir)
+    import graft.sources.ZOrderStore
+    val st = ZOrderStore.stage(spark, dir)
     try {
-      assert(st.hitFids.nonEmpty && st.hitFids.length < st.filesTotal,
+      val hit = ZOrderStore.plan(st)
+      val hitFids = hit.map(_.getAs[Long]("fid"))
+      val (pkLo, pkHi, skLo, skHi) = ZOrderStore.box(st)
+      assert(hit.nonEmpty && hit.length < st.stats.length,
         "the stats plan did not prune (or pruned everything)")
-      // the read a manifest-planning engine issues: the fid list from
-      // the stats becomes a partition predicate, the box rides along
+      // the read a manifest-planning engine issues: the planned files,
+      // their fid list as a partition predicate, the box riding along
       // for parquet row-group pruning
-      val df = spark.read.parquet(s"${st.store}/data")
-        .filter(col("fid").isin(st.hitFids: _*) &&
-          col("pk") >= st.pkLo && col("pk") <= st.pkHi &&
-          col("sk") >= st.skLo && col("sk") <= st.skHi)
+      val df = st.read(hit)
+        .filter(col("fid").isin(hitFids: _*) &&
+          col("pk") >= pkLo && col("pk") <= pkHi &&
+          col("sk") >= skLo && col("sk") <= skHi)
         .agg(count(lit(1)).as("n"), sum("price_c").as("s"))
       df.collect()
       // AQE nests the executed plan inside AdaptiveSparkPlanExec /
@@ -440,7 +444,7 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
       }.getOrElse(fail("no FileSourceScanExec in the read-back plan"))
       // one z-sorted file per fid: files opened == stats-planned fids,
       // Exchange-free on the scan side (partition pruning at plan time)
-      assert(scan.metrics("numFiles").value === st.hitFids.length.toLong,
+      assert(scan.metrics("numFiles").value === hit.length.toLong,
         "the scan opened files outside the stats plan")
       val plan = df.queryExecution.explainString(FormattedMode)
       assert(plan.contains("PartitionFilters") && plan.contains("fid"),

@@ -29,7 +29,7 @@ class BloomIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
         .select(col("o_orderkey").as("k"),
           year(col("o_orderdate")).cast("long").as("p"))
         .crossJoin(spark.range(1, BloomIndex.Probes + 1)
-          .select(((col("id") * st.mk) / 16L).cast("long").as("pk")))
+          .select(((col("id") * BloomIndex.keyMax(st)) / 16L).cast("long").as("pk")))
         .filter(col("k") === col("pk"))
         .select("pk", "p")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -45,7 +45,7 @@ class BloomIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
           s"${truth.size} true pairs")
       val perProbe = hits.groupBy(_._1).view.mapValues(_.size)
       perProbe.foreach { case (pk, n) =>
-        assert(n <= 3, s"probe $pk opened $n of ${st.filesTotal} files")
+        assert(n <= 3, s"probe $pk opened $n of ${st.stats.length} files")
       }
     } finally st.drop()
   }
@@ -59,7 +59,7 @@ class BloomIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
         .select(col("o_orderkey").as("k"),
           floor(col("o_totalprice") * 100).cast("long").as("price_c"))
         .crossJoin(spark.range(1, BloomIndex.Probes + 1)
-          .select(((col("id") * st.mk) / 16L).cast("long").as("pk")))
+          .select(((col("id") * BloomIndex.keyMax(st)) / 16L).cast("long").as("pk")))
         .filter(col("k") === col("pk"))
         .groupBy("pk")
         .agg(count(lit(1)).as("n"), sum("price_c").as("s"))
@@ -71,8 +71,9 @@ class BloomIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       // a probe beyond the key maximum exists in the schedule and
       // resolves to zero matches through the all-files-reject path
-      assert(out.keys.exists(_ > st.mk))
-      out.filter(_._1 > st.mk).foreach { case (pk, (n, _)) =>
+      val mk = BloomIndex.keyMax(st)
+      assert(out.keys.exists(_ > mk))
+      out.filter(_._1 > mk).foreach { case (pk, (n, _)) =>
         assert(n === 0L, s"absent probe $pk matched $n rows")
       }
 

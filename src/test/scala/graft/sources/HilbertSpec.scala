@@ -77,18 +77,18 @@ class HilbertSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("hilbert layout prunes at least as well as z-order on the shared box") {
-    val h = HilbertStore.stage(spark, dir)
+    val h = ZOrderStore.stage(spark, dir, HilbertStore.Hilbert)
     val z = ZOrderStore.stage(spark, dir)
     try {
-      assert(h.filesTotal === z.filesTotal,
+      val (hHit, zHit) = (ZOrderStore.plan(h), ZOrderStore.plan(z))
+      assert(h.stats.length === z.stats.length,
         "layouts cut different file counts — the comparison is void")
-      assert((h.pkLo, h.pkHi, h.skLo, h.skHi) ===
-        ((z.pkLo, z.pkHi, z.skLo, z.skHi)), "box drifted between twins")
-      assert(h.hitFids.nonEmpty && h.hitFids.length < h.filesTotal,
+      assert(ZOrderStore.box(h) === ZOrderStore.box(z), "box drifted between twins")
+      assert(hHit.nonEmpty && hHit.length < h.stats.length,
         "hilbert stats pruned nothing")
-      info(s"box over ${h.filesTotal} files: hilbert reads " +
-        s"${h.hitFids.length}, z-order reads ${z.hitFids.length}")
-      assert(h.hitFids.length <= z.hitFids.length,
+      info(s"box over ${h.stats.length} files: hilbert reads " +
+        s"${hHit.length}, z-order reads ${zHit.length}")
+      assert(hHit.length <= zHit.length,
         "hilbert lost to z-order on its home ground")
     } finally { h.drop(); z.drop() }
   }

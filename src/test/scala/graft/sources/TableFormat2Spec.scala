@@ -38,26 +38,21 @@ class TableFormat2Spec extends AnyFunSuite with BeforeAndAfterAll {
         Buckets
 
       // plan from the cell manifest via the transforms
-      val cells = spark.read.parquet(s"${st.store}/cells")
-      val hit = cells
-        .filter(col("pm") >= PmLo && col("pm") <= PmHi && col("pb") === kb)
-        .select("pm", "pb").collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
+      val hit = plan(st, kb)
       // every planned cell is inside the derived predicate box
-      hit.foreach { case (pm, pb) =>
-        assert(pm >= PmLo && pm <= PmHi && pb == kb)
+      hit.foreach { r =>
+        assert(r.getAs[Long]("pm") >= PmLo && r.getAs[Long]("pm") <= PmHi &&
+          r.getAs[Long]("pb") == kb)
       }
       // the derived plan is a strict subset of the table's cells —
       // the pruning a raw-column query gets for free under hidden
       // partitioning
-      assert(hit.length.toLong < cells.count(),
+      assert(hit.length < st.stats.length,
         "hidden-partition plan did not prune anything")
 
       // no lost matches: pruned read's match set == full-scan match set
       // d is TIMESTAMP_NTZ in the testdata — collect it as epoch micros
-      val pruned = spark.read.option("basePath", s"${st.store}/data")
-        .parquet(hit.map { case (pm, pb) =>
-          s"${st.store}/data/pm=$pm/pb=$pb" }.toIndexedSeq: _*)
+      val pruned = st.read(hit)
         .filter(col("c") === k && inWin)
         .select(col("c"), unix_micros(col("d").cast("timestamp")).as("du"),
           col("total_c")).collect()

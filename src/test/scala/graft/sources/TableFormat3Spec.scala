@@ -177,38 +177,31 @@ class TableFormat3Spec extends AnyFunSuite with BeforeAndAfterAll {
   test("hidden+zorder composition: both prune layers active, no false negatives, files z-sorted") {
     val st = HiddenZOrder.stage(spark, dir)
     try {
+      val afterQuarter = HiddenZOrder.afterQuarter(st)
+      val hit = HiddenZOrder.plan(st)
       // both layers genuinely prune — an inactive layer collapses one
       // of these strict inequalities
-      assert(st.hit.length < st.afterQuarter.length,
+      assert(hit.length < afterQuarter.length,
         "the z-order stats layer pruned nothing inside the quarter cells")
-      assert(st.afterQuarter.length < st.filesTotal,
+      assert(afterQuarter.length < st.stats.length,
         "the quarter-transform layer pruned nothing")
       // level-2 survivors are a subset of level-1 survivors
-      assert(st.hit.map(h => (h._1, h._2)).toSet
-        .subsetOf(st.afterQuarter.map(h => (h._1, h._2)).toSet))
+      assert(hit.toSet.subsetOf(afterQuarter.toSet))
       // no false negative: the pruned read's matched aggregate equals
       // the full-table computation
-      val full = HiddenZOrder.base(spark, dir)
-        .filter(col("d") >= lit(HiddenZOrder.DLo).cast("timestamp") &&
-          col("d") <= lit(HiddenZOrder.DHi).cast("timestamp") &&
-          col("c").between(st.cLo, st.cHi) &&
-          col("total_c").between(st.tcLo, st.tcHi))
+      val (cLo, cHi, tcLo, tcHi) = HiddenZOrder.box(st)
+      val inBox = col("d") >= lit(HiddenZOrder.DLo).cast("timestamp") &&
+        col("d") <= lit(HiddenZOrder.DHi).cast("timestamp") &&
+        col("c").between(cLo, cHi) && col("total_c").between(tcLo, tcHi)
+      val full = HiddenZOrder.base(spark, dir).filter(inBox)
         .agg(count(lit(1)), sum("total_c")).collect()(0)
       assert(full.getLong(0) > 0, "the box query is vacuous at spec scale")
-      val pruned = spark.read.option("basePath", s"${st.store}/data")
-        .parquet(st.hit.map { case (pq, fid, _) =>
-          s"${st.store}/data/pq=$pq/fid=$fid" }: _*)
-        .filter(col("d") >= lit(HiddenZOrder.DLo).cast("timestamp") &&
-          col("d") <= lit(HiddenZOrder.DHi).cast("timestamp") &&
-          col("c").between(st.cLo, st.cHi) &&
-          col("total_c").between(st.tcLo, st.tcHi))
+      val pruned = st.read(hit).filter(inBox)
         .agg(count(lit(1)), sum("total_c")).collect()(0)
       assert(pruned === full, "a pruned file contained a match")
       // physical clustering: rows inside one file are z-sorted (the
       // row-group-envelope tightness the layout promises)
-      val (pq0, fid0, _) = st.hit.head
-      val zs = spark.read.parquet(s"${st.store}/data/pq=$pq0/fid=$fid0")
-        .select("z").collect().map(_.getLong(0))
+      val zs = st.read(hit.take(1)).select("z").collect().map(_.getLong(0))
       assert(zs.sameElements(zs.sorted), "file rows are not z-sorted")
     } finally st.drop()
   }
