@@ -107,19 +107,16 @@ object BinPack {
       val (loB, hiB) = ((30L * mk) / 100L, (35L * mk) / 100L)
       val hitBefore = stats.filter(s => s._3 >= loB && s._2 <= hiB)
       val hitAfter = binStats.filter(s => s._3 >= loB && s._2 <= hiB)
-      // empty-plan arm: a band overlapping no bin emits the zero row
-      val prunedAfter =
-        if (hitAfter.isEmpty)
-          spark.range(0).select(lit(0L).as("k"), lit(0L).as("total_c"))
-        else spark.read.option("basePath", s"$store/data2")
-          .parquet(hitAfter.map(s => s"$store/data2/bin=${s._1}"): _*)
-      val m = prunedAfter
+      val after = SnapshotStore.read(spark, store, st.v2)
+      // the planned bins as a partition filter: only they open, and a
+      // band overlapping no bin reads zero rows
+      val m = after.filter(col("bin").isin(hitAfter.map(_._1): _*))
         .agg(coalesce(sum(when(col("k").between(loB, hiB), 1L).otherwise(0L)),
             lit(0L)).as("n_match"),
           coalesce(sum(when(col("k").between(loB, hiB), col("total_c"))),
             lit(0L)).as("sum_total_c")).collect()(0)
       // rewrite losslessness: the compacted version's full aggregate
-      val full = SnapshotStore.read(spark, store, st.v2)
+      val full = after
         .agg(count(lit(1)).as("n"), sum("k").as("s")).collect()(0)
 
       val out = spark.range(1).select(

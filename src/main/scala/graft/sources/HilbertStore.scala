@@ -40,17 +40,16 @@ object HilbertStore {
     "CASE WHEN rx = 1 AND ry = 1 THEN 2 WHEN rx = 1 THEN 3 " +
       "WHEN ry = 1 THEN 1 ELSE 0 END"
 
-  /** The Spark-side position, as [[Hilbert]] computes it: ONE native
-    * codegen'd expression ([[graft.functions.HilbertIndex]]) — the
-    * unrolled column chain below is kept for the spec's independent
-    * cross-check, but the hot path must not pay its plan-size blowup
-    * (the rotation makes each level reference the previous one
-    * several times; measured: 15 s → z-order parity after the swap).
+  /** The Spark-side position of the grid columns `x`, `y`, as
+    * [[Hilbert]] computes it: ONE native codegen'd expression
+    * ([[graft.functions.HilbertIndex]]) — the unrolled column chain
+    * below is kept for the spec's independent cross-check, but the hot
+    * path must not pay its plan-size blowup (the rotation makes each
+    * level reference the previous one several times; measured: 15 s →
+    * z-order parity after the swap).
     */
-  private[graft] def hilbertExprCol(df: DataFrame, xCol: String,
-      yCol: String, bits: Int): DataFrame = {
-    df.withColumn("hd", expr(s"graft_hilbert($xCol, $yCol, $bits)"))
-  }
+  private[graft] def position(x: String, y: String, bits: Int): String =
+    s"graft_hilbert($x, $y, $bits)"
 
   /** The unrolled column chain — the spec's second, plan-level
     * formulation of the same walk (adds hd to `df`).
@@ -99,7 +98,7 @@ object HilbertStore {
 
   /** The Hilbert walk as a [[ZOrderStore.Curve]]. */
   private[graft] val Hilbert = ZOrderStore.Curve("hstore",
-    s"graft_hilbert(pkn, skn, ${Queries.ZBits})")
+    position("pkn", "skn", Queries.ZBits))
 
   /** src_hilbert_store — the z twin's stage and serve on the Hilbert
     * layout.

@@ -47,15 +47,12 @@ private[graft] final case class ManifestTable(store: String,
   def statsFrame: DataFrame = spark.createDataFrame(stats.asJava, statsSchema)
 
   /** The data files of the given rows (any rows carrying the partition
-    * columns, usually planned stats rows). The schema is known, so no
-    * file is opened to infer it. With no files, a zero-row frame with
-    * the data schema: `spark.read.parquet()` with zero paths throws.
+    * columns, usually planned stats rows), read as [[ManifestTable.readFiles]].
     */
   def read(files: Seq[Row]): DataFrame =
-    if (files.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
-    else spark.read.schema(schema).option("basePath", s"$store/data")
-      .parquet(files.map(r =>
-        partCols.map(c => s"$c=${r.getAs[Any](c)}").mkString(s"$store/data/", "/", "")): _*)
+    ManifestTable.readFiles(spark, s"$store/data", files.map(r =>
+      partCols.map(c => s"$c=${r.getAs[Any](c)}").mkString(s"$store/data/", "/", "")),
+      schema)
 
   /** Read `files` and tally them in one aggregate: rows read, rows
     * matching `isMatch`, then the matching rows' sum of each of `sums`.
@@ -100,6 +97,21 @@ private[graft] object ManifestTable {
     t.statsFrame.write.mode(SaveMode.Overwrite).parquet(s"$store/stats")
     t
   }
+
+  /** The parquet `paths` (files or partition directories under `base`,
+    * whose `<col>=<v>` directories become columns) read with the known
+    * `schema`, so no file is opened to infer it. With no paths — a plan
+    * that kept nothing — a zero-row frame with that schema:
+    * `spark.read.parquet()` with zero paths throws.
+    */
+  def readFiles(spark: SparkSession, base: String, paths: Seq[String],
+      schema: StructType): DataFrame =
+    if (paths.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
+    else spark.read.schema(schema).option("basePath", base).parquet(paths: _*)
+
+  /** A schema of long columns. */
+  def longs(cols: String*): StructType =
+    StructType(cols.map(StructField(_, LongType)))
 
   /** One certified output row of longs, built on the driver. */
   def row(spark: SparkSession, cols: (String, Long)*): DataFrame =

@@ -75,13 +75,8 @@ object PartitionEvolve {
         y * 100 + m >= QLo && y * 100 + m <= QHi }
 
       def rd(paths: Seq[String], base: String): DataFrame =
-        if (paths.isEmpty)
-          spark.range(0).select(lit(0L).as("k"), lit(0L).as("total_c"),
-            lit(0L).as("p"), lit(0L).as("m"))
-        else spark.read.option("basePath", base)
-          .parquet(paths.map(f => s"$store/$f"): _*)
-          .select(col("k"), col("total_c"),
-            col("p").cast("long").as("p"), col("m").cast("long").as("m"))
+        ManifestTable.readFiles(spark, base, paths.map(f => s"$store/$f"),
+          ManifestTable.longs("k", "total_c", "p", "m"))
       val r1 = rd(s1Hit.map(_._1), s"$store/ps=1")
       val r2 = rd(s2Hit.map(_._1), s"$store/ps=2")
       val inRange = col("p") * 100 + col("m") >= QLo &&

@@ -55,18 +55,11 @@ object RowLineage {
       val v1Files = SnapshotStore.files(store, v1)
       val touchedFiles = v1Files.filter(f =>
         touched.exists(p => f.startsWith(s"p=$p/")))
-      // empty-touch arm: a changeset touching no existing partition
-      // merges against the empty frame instead of a zero-path read
-      val cur =
-        if (touchedFiles.isEmpty)
-          spark.range(0).select(lit(0L).as("k"), lit(0L).as("ck"),
-            lit(0L).as("total_c"), lit(0L).as("p"), lit(0L).as("row_id"),
-            lit(0L).as("created_seq"), lit(0L).as("updated_seq"))
-        else spark.read.option("basePath", store)
-          .parquet(touchedFiles.map(f => s"$store/$f"): _*)
-          .select(col("k"), col("ck"), col("total_c"),
-            col("p").cast("long").as("p"), col("row_id"),
-            col("created_seq"), col("updated_seq"))
+      // a changeset touching no existing partition merges against
+      // the zero-row frame
+      val cur = ManifestTable.readFiles(spark, store,
+        touchedFiles.map(f => s"$store/$f"), ManifestTable.longs("k", "ck",
+          "total_c", "p", "row_id", "created_seq", "updated_seq"))
       val gone = cs.filter(col("op").isin("D", "U")).select("k")
       // carried rows: rewritten file, lineage UNCHANGED
       val carried = cur.join(gone, Seq("k"), "left_anti")

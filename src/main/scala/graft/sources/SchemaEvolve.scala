@@ -100,35 +100,36 @@ object SchemaEvolve {
     new java.io.File(store).mkdirs()
     val d = Tables(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
+    // each generation appends its files under its own sv= directory
+    // and commits the whole data set as the next snapshot
+    def writeGen(sv: Int, gen: DataFrame): Unit = {
+      gen.withColumn("sv", lit(sv)).write.mode(SaveMode.Append)
+        .partitionBy("sv").parquet(s"$store/data")
+      SnapshotStore.commit(store, SnapshotStore.listDataFiles(store)): Unit
+    }
 
     // v1: {1: doc_id, 2: source, 3: n_chars}
     writeSchema(store, 1, Seq(Field(1, "doc_id", "bigint"),
       Field(2, "source", "string"), Field(3, "n_chars", "bigint")))
-    d.filter(col("doc_id") % 3 === 0)
-      .select(col("doc_id"), col("source"), col("n_chars"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$store/data/sv=1")
-    SnapshotStore.commit(store, SnapshotStore.listDataFiles(store)): Unit
+    writeGen(1, d.filter(col("doc_id") % 3 === 0)
+      .select(col("doc_id"), col("source"), col("n_chars")))
 
     // v2: RENAME n_chars → size_chars (id 3 kept), ADD lang (id 4)
     writeSchema(store, 2, Seq(Field(1, "doc_id", "bigint"),
       Field(2, "source", "string"), Field(3, "size_chars", "bigint"),
       Field(4, "lang", "string")))
-    d.filter(col("doc_id") % 3 === 1)
+    writeGen(2, d.filter(col("doc_id") % 3 === 1)
       .select(col("doc_id"), col("source"),
-        col("n_chars").as("size_chars"), col("lang"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$store/data/sv=2")
-    SnapshotStore.commit(store, SnapshotStore.listDataFiles(store)): Unit
+        col("n_chars").as("size_chars"), col("lang")))
 
     // v3: DROP source (id 2), RE-ADD source (id 5, new derivation) —
     // same name, different field; old id-2 data must stay shadowed
     writeSchema(store, 3, Seq(Field(1, "doc_id", "bigint"),
       Field(3, "size_chars", "bigint"), Field(4, "lang", "string"),
       Field(5, "source", "string")))
-    d.filter(col("doc_id") % 3 === 2)
+    writeGen(3, d.filter(col("doc_id") % 3 === 2)
       .select(col("doc_id"), col("n_chars").as("size_chars"),
-        col("lang"), upper(col("source")).as("source"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$store/data/sv=3")
-    SnapshotStore.commit(store, SnapshotStore.listDataFiles(store)): Unit
+        col("lang"), upper(col("source")).as("source")))
     store
   }
 

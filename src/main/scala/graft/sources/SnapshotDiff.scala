@@ -37,11 +37,8 @@ object SnapshotDiff {
     val f1 = SnapshotStore.files(store, v1).toSet
     val f2 = SnapshotStore.files(store, v2).toSet
     def rd(fs: Seq[String]): DataFrame =
-      if (fs.isEmpty)
-        spark.range(0).select(lit(0L).as("k"), lit(0L).as("total_c"))
-      else spark.read.option("basePath", store)
-        .parquet(fs.sorted.map(f => s"$store/$f"): _*)
-        .select(col("k"), col("total_c"))
+      ManifestTable.readFiles(spark, store, fs.sorted.map(f => s"$store/$f"),
+        ManifestTable.longs("k", "total_c"))
     val removed = rd((f1 -- f2).toSeq)
     val added = rd((f2 -- f1).toSeq)
     removed.select(col("k"), col("total_c").as("tc_old"))

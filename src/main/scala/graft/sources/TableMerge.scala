@@ -93,15 +93,9 @@ object TableMerge {
     val touchedFiles = v1Files.filter(f =>
       touched.exists(p => f.startsWith(s"p=$p/")))
     val untouched = v1Files.filterNot(touchedFiles.toSet)
-    val cur =
-      if (touchedFiles.isEmpty)
-        spark.emptyDataFrame
-          .withColumn("k", lit(0L)).withColumn("ck", lit(0L))
-          .withColumn("total_c", lit(0L)).withColumn("p", lit(0L))
-          .limit(0)
-      else spark.read.option("basePath", store)
-        .parquet(touchedFiles.map(f => s"$store/$f"): _*)
-        .select(col("k"), col("ck"), col("total_c"), col("p").cast("long").as("p"))
+    val cur = ManifestTable.readFiles(spark, store,
+      touchedFiles.map(f => s"$store/$f"),
+      ManifestTable.longs("k", "ck", "total_c", "p"))
     // MERGE semantics: D/U keys leave, U/I rows enter — one key-keyed
     // anti join over ONLY the touched partitions' rows
     val gone = cs.filter(col("op").isin("D", "U")).select(col("k"))

@@ -421,10 +421,11 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
       val (pkLo, pkHi, skLo, skHi) = ZOrderStore.box(st)
       assert(hit.nonEmpty && hit.length < st.stats.length,
         "the stats plan did not prune (or pruned everything)")
-      // the read a manifest-planning engine issues: the planned files,
-      // their fid list as a partition predicate, the box riding along
+      // the read a manifest-planning engine issues: the whole table,
+      // the fid list from the stats as a partition predicate that must
+      // cut the scan down to the planned files, the box riding along
       // for parquet row-group pruning
-      val df = st.read(hit)
+      val df = st.read(st.stats)
         .filter(col("fid").isin(hitFids: _*) &&
           col("pk") >= pkLo && col("pk") <= pkHi &&
           col("sk") >= skLo && col("sk") <= skHi)

@@ -59,7 +59,7 @@ class HilbertSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     // the hot path's native expression is a THIRD formulation — it
     // must agree with the chain cell-for-cell
-    val viaExpr = HilbertStore.hilbertExprCol(grid, "gx", "gy", bits)
+    val viaExpr = grid.withColumn("hd", expr(HilbertStore.position("gx", "gy", bits)))
       .select("gx", "gy", "hd").as[(Long, Long, Long)].collect().toSet
     assert(viaExpr === got.toSet,
       "native expression diverged from the unrolled chain")

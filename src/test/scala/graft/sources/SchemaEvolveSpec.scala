@@ -26,7 +26,8 @@ class SchemaEvolveSpec extends AnyFunSuite with BeforeAndAfterAll {
         spark, store, SnapshotStore.latest(store), 3).cache()
 
       // gen-1 files RAW still carry a non-null id-2 'source' column…
-      val raw1 = spark.read.parquet(s"$store/data/sv=1")
+      val raw1 = spark.read.parquet(
+        SnapshotStore.files(store, 1).map(f => s"$store/$f"): _*)
       assert(raw1.columns.contains("source"))
       assert(raw1.filter(col("source").isNotNull).count() > 0)
       // …but under schema v3 every gen-1/gen-2 row reads source NULL:

@@ -37,17 +37,25 @@ class TableFormat2Spec extends AnyFunSuite with BeforeAndAfterAll {
         org.apache.spark.unsafe.types.UTF8String.fromString(s"hp:$k")) %
         Buckets
 
-      // plan from the cell manifest via the transforms
-      val hit = plan(st, kb)
+      // plan from the persisted cell manifest via the transforms,
+      // with the spec's own predicate
+      val cells = spark.read.parquet(s"${st.store}/stats")
+      val expected = cells
+        .filter(col("pm") >= PmLo && col("pm") <= PmHi && col("pb") === kb)
+        .select("pm", "pb").collect()
+        .map(r => (r.getLong(0), r.getLong(1)))
       // every planned cell is inside the derived predicate box
-      hit.foreach { r =>
-        assert(r.getAs[Long]("pm") >= PmLo && r.getAs[Long]("pm") <= PmHi &&
-          r.getAs[Long]("pb") == kb)
+      expected.foreach { case (pm, pb) =>
+        assert(pm >= PmLo && pm <= PmHi && pb == kb)
       }
+      // the store's own plan over its collected stats is the same cells
+      val hit = plan(st, kb)
+      assert(hit.map(r => (r.getAs[Long]("pm"), r.getAs[Long]("pb"))).sorted ===
+        expected.toSeq.sorted, "the store's plan differs from the manifest's")
       // the derived plan is a strict subset of the table's cells —
       // the pruning a raw-column query gets for free under hidden
       // partitioning
-      assert(hit.length < st.stats.length,
+      assert(hit.length.toLong < cells.count(),
         "hidden-partition plan did not prune anything")
 
       // no lost matches: pruned read's match set == full-scan match set

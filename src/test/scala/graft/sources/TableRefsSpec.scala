@@ -24,7 +24,7 @@ class TableRefsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val before = SnapshotStore.listDataFiles(root).toSet
     spark.range(n).select((col("id") + b * 1000L).as("v"), lit(b).as("b"))
       .coalesce(1)
-      .write.mode(SaveMode.Append).parquet(s"$root/data/b=$b")
+      .write.mode(SaveMode.Append).partitionBy("b").parquet(s"$root/data")
     SnapshotStore.listDataFiles(root).filterNot(before)
   }
 
