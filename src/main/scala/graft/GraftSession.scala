@@ -15,6 +15,10 @@ import org.apache.spark.sql.SparkSession
   * `spark.local.dir` set here.
   */
 object GraftSession {
+  /** Spark's generated-code cache size and the entries it gets here. */
+  val CodegenCacheConf = "spark.sql.codegen.cache.maxEntries"
+  val CodegenCacheEntries = 2000
+
   def apply(appName: String = "graft", cores: Int = 32): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
@@ -33,6 +37,12 @@ object GraftSession {
       // time on a 2000-row stage); the generated code is
       // method-split, so letting it through keeps codegen
       .config("spark.sql.codegen.hugeMethodLimit", (1 << 23).toString)
+      // a pass over several queries generates more distinct classes
+      // than the 100 Spark's code cache holds, so every pass evicted
+      // and recompiled (and JIT-compiled) 80 to 90 of them. The cache
+      // is sized once per JVM, by the first session that generates
+      // code, hence a static conf set here and not an option
+      .config(CodegenCacheConf, CodegenCacheEntries.toString)
       // shuffle/spill on tmpfs: the host's disk has multi-second stalls
       // that block shuffle-file IO (observed 80s pauses at ~0% CPU)
       .config("spark.local.dir", s"${Scratch.root}/graft-spark")

@@ -1,6 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.{col, unix_micros}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
@@ -30,10 +36,41 @@ object Tables {
     // does its time math in exact integer space (see Queries.nsToSec).
     // The DuckDB oracles are grain-agnostic the same way: epoch_ns(ts)
     // yields epoch nanos for both TIMESTAMP and TIMESTAMP_NS columns.
-    if (name == "events") {
+    val path = s"$dir/$name.parquet"
+    if (name == "events")
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      normalizeEventTs(spark.read.parquet(s"$dir/$name.parquet"))
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    val df = footerReader(spark, path).parquet(path)
+    if (name == "events") normalizeEventTs(df) else df
+  }
+
+  /** A reader of the parquet at `path` — a file, or a Spark-written
+    * directory whose first data file speaks for all (as with
+    * `mergeSchema` off) — given the schema Spark's inference would
+    * give it. That schema is read from the file's footer on the driver
+    * with Spark's own converter, so the session's `nanosAsLong` and
+    * TIMESTAMP_NTZ settings resolve as inference resolves them;
+    * inference itself runs a one-task job per read to fetch it.
+    * Nothing is cached: every call reads the footer. A path with no
+    * data file at its top level (missing, empty, or partitioned into
+    * `<col>=<v>` directories) gets the plain reader: Spark's inference
+    * then reads it, or fails with Spark's own error.
+    */
+  def footerReader(spark: SparkSession, path: String): DataFrameReader = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val file = if (!fs.exists(p)) None
+      else if (fs.getFileStatus(p).isFile) Some(p)
+      else fs.listStatus(p).iterator
+        .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
+          !f.getPath.getName.startsWith("."))
+        .map(_.getPath).minByOption(_.getName)
+    file.fold(spark.read) { f =>
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromPath(f, conf), ParquetMetadataConverter.NO_FILTER)
+      spark.read.schema(ParquetFileFormat.readSchemaFromFooter(new Footer(f, footer),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+    }
   }
 
   /** Rewrites a `ts` column of any supported physical grain to bigint

@@ -45,6 +45,11 @@ object BloomIndex {
     */
   val Probes = 20L
 
+  /** The columns [[stage]] writes the index with: read back with
+    * them, the index opens no file to infer its schema.
+    */
+  private val IndexCols = ManifestTable.longs("p", "widx", "word")
+
   /** `graft_md5_prefix(i ':' key) % m` — one bloom position. */
   private def posExpr(i: Int, key: String, m: String): String =
     s"graft_md5_prefix(concat(cast($i as string), ':', cast($key as string))) % $m"
@@ -92,7 +97,7 @@ object BloomIndex {
 
   private[graft] def planProbeFrame(spark: SparkSession, t: ManifestTable,
       probes: DataFrame): DataFrame = {
-    val index = spark.read.parquet(s"${t.store}/index")
+    val index = spark.read.schema(IndexCols).parquet(s"${t.store}/index")
     val pb = probes.crossJoin(broadcast(t.statsFrame.select("p", "m")))
       .select(col("pk"), col("p"), explode(array((0 until BloomK).map(i =>
         expr(posExpr(i, "pk", "m"))): _*)).as("pos"))

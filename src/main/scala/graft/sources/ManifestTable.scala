@@ -8,22 +8,21 @@ import graft.Scratch
 
 /** The one staged-store layout under the stats-planned table-format
   * ops: data files partitioned by the op's layout columns, and a
-  * per-file stats manifest beside them — what an Iceberg manifest
-  * keeps per data file. A reader plans its file list from the stats
-  * on the driver (an ordinary `filter` over [[stats]]) and opens only
-  * the files that survive ([[read]]); the files a 100 TB scan never
-  * opens are the point.
+  * per-file stats manifest held on the driver — what an Iceberg
+  * manifest keeps per data file. A reader plans its file list from
+  * the stats (an ordinary `filter` over [[stats]]) and opens only the
+  * files that survive ([[read]]); the files a 100 TB scan never opens
+  * are the point.
   *
-  * Store layout: `data/<col>=<v>/…` per partition-column value tuple,
-  * and `stats` (one row per data file, written from the collected
-  * rows). Only this module builds those paths.
+  * Store layout: `data/<col>=<v>/…` per partition-column value tuple.
+  * Only this module builds those paths.
   *
   * One pass over the source ([[write]]): the base is lazily
   * checkpointed, so the data write materializes it and the stats
   * aggregation reads pinned blocks instead of re-scanning the source
   * and re-running the layout transform. The stats are bounded
-  * metadata: collected once, the parquet manifest written from the
-  * collected rows, and the planner handed the same rows driver-side.
+  * metadata: collected once and handed to the planner driver-side,
+  * where every reader plans from them; they are not written out.
   * Key maxima a transform needs are collected by the caller before
   * the write and baked into its expressions as literals — a
   * `crossJoin(broadcast(mx))` would re-run the max subquery in every
@@ -70,8 +69,8 @@ private[graft] final case class ManifestTable(store: String,
 private[graft] object ManifestTable {
 
   /** Write `base` under a fresh scratch store partitioned by
-    * `partCols`, rows sorted by `clusterCols` inside each file, with
-    * the `stats` aggregates per file beside it.
+    * `partCols`, rows sorted by `clusterCols` inside each file, and
+    * collect the `stats` aggregates per file.
     */
   def write(prefix: String, base: DataFrame, partCols: Seq[String],
       clusterCols: Seq[String], stats: Column*): ManifestTable = {
@@ -90,12 +89,10 @@ private[graft] object ManifestTable {
       .write.mode(SaveMode.Overwrite).partitionBy(partCols: _*)
       .parquet(s"$store/data")
     val statsDf = b.groupBy(partCols.map(col): _*).agg(stats.head, stats.tail: _*)
-    val t = ManifestTable(store, partCols,
+    ManifestTable(store, partCols,
       StructType(b.schema.filterNot(f => partCols.contains(f.name)) ++
         partCols.map(b.schema(_))),
       statsDf.schema, statsDf.collect().toIndexedSeq, b)
-    t.statsFrame.write.mode(SaveMode.Overwrite).parquet(s"$store/stats")
-    t
   }
 
   /** The parquet `paths` (files or partition directories under `base`,

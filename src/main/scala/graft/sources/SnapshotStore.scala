@@ -1,6 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{StructField, StructType}
+import graft.Tables
 
 /** Versioned snapshot manifests over a partitioned parquet store —
   * the minimal table-format layer (the Iceberg/Delta idea) the volume
@@ -168,13 +170,18 @@ object SnapshotStore {
     val df = read(spark, root, v)
     val dels = deletesOf(root, v)
     if (dels.isEmpty) df
-    else {
-      val dk = spark.read.parquet(dels.map(f => s"$root/$f"): _*)
-        .select(keyCol).distinct()
-      df.join(org.apache.spark.sql.functions.broadcast(dk),
-        Seq(keyCol), "left_anti")
-    }
+    else df.join(org.apache.spark.sql.functions.broadcast(
+      deletedKeys(spark, root, dels, df.schema(keyCol))), Seq(keyCol), "left_anti")
   }
+
+  /** The distinct keys of the delete files `dels`. Their writers
+    * select the key column of the data, so its field is their schema,
+    * and reading them opens no file to infer one.
+    */
+  private def deletedKeys(spark: SparkSession, root: String,
+      dels: Seq[String], key: StructField): DataFrame =
+    spark.read.schema(StructType(Seq(key)))
+      .parquet(dels.map(d => s"$root/$d"): _*).distinct()
 
   /** Time-travel read with SEQUENCE-NUMBER delete semantics — the
     * full Iceberg-v2 equality-delete rule that [[readWithDeletes]]
@@ -203,16 +210,15 @@ object SnapshotStore {
     val delSeq = firstSeen(deletesOf(root, _))
     val dels = deletesOf(root, v)
     files(root, v).groupBy(dataSeq).toSeq.sortBy(_._1).map { case (seq, fs) =>
-      val df = spark.read.option("basePath", root)
-        .parquet(fs.map(f => s"$root/$f"): _*)
+      // the group's data columns as its first file's writer recorded
+      // them (the partition columns still come from the directories)
+      val df = Tables.footerReader(spark, s"$root/${fs.head}")
+        .option("basePath", root).parquet(fs.map(f => s"$root/$f"): _*)
       val applicable = dels.filter(d => delSeq(d) > seq)
       if (applicable.isEmpty) df
-      else {
-        val dk = spark.read.parquet(applicable.map(d => s"$root/$d"): _*)
-          .select(keyCol).distinct()
-        df.join(org.apache.spark.sql.functions.broadcast(dk),
-          Seq(keyCol), "left_anti")
-      }
+      else df.join(org.apache.spark.sql.functions.broadcast(
+        deletedKeys(spark, root, applicable, df.schema(keyCol))),
+        Seq(keyCol), "left_anti")
     }.reduce(_ unionByName _)
   }
 

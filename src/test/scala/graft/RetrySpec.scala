@@ -29,10 +29,13 @@ class RetrySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   // local[4, 4] (four task attempts) is the one master GraftSession
   // does not build; the extensions still go in, so any suite's session
-  // that getOrCreate hands back in this JVM resolves graft_*
+  // that getOrCreate hands back in this JVM resolves graft_*, and the
+  // code cache gets GraftSession's size in case this suite is the
+  // first in the JVM to generate code
   @transient lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4, 4]")
     .withExtensions(new GraftExtensions)
+    .config(GraftSession.CodegenCacheConf, GraftSession.CodegenCacheEntries.toString)
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")

@@ -74,6 +74,39 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** `Tables(spark, d, name)` against Spark's own inference of the same
+    * file: the schema it reads with, the schema it hands out, and the
+    * jobs building it submits (inference runs one).
+    */
+  private def checkRead(d: String, name: String): Unit = {
+    val path = s"$d/$name.parquet"
+    val jobs = SparkJobs.count(spark)(Tables(spark, d, name): Unit)
+    assert(jobs === 0, s"reading $path ran $jobs jobs")
+    // inference under the nanosAsLong setting the read left in place
+    val inferred = spark.read.parquet(path)
+    assert(Tables.footerReader(spark, path).parquet(path).schema === inferred.schema, path)
+    val expected = if (name == "events") Tables.normalizeEventTs(inferred) else inferred
+    assert(Tables(spark, d, name).schema === expected.schema, path)
+  }
+
+  test("every table reads with the inferred schema and submits no job") {
+    val d = "/root/testdata/sf0.001"
+    val names = new java.io.File(d).list().toSeq.filter(_.endsWith(".parquet"))
+      .map(_.stripSuffix(".parquet")).sorted
+    assert(names.toSet === Tables.names.toSet)
+    names.foreach(checkRead(d, _))
+    withBothEncodings { (dNs, dUs) =>
+      checkRead(dNs, "events"); checkRead(dUs, "events")
+    }
+  }
+
+  test("a missing table fails with Spark's own error") {
+    Scratch.withDir("no_table") { d =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](Tables(spark, d, "orders"))
+      assert(e.getCondition === "PATH_NOT_FOUND", e.getMessage)
+    }
+  }
+
   test("unsupported ts type is rejected loudly, not mis-bucketed") {
     import spark.implicits._
     val bad = Seq((1L, "x")).toDF("event_id", "ts")

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.{GraftSession, SparkEntry}
+import graft.{GraftSession, SparkEntry, SparkJobs}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -16,31 +16,6 @@ class ManifestTableSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  /** Jobs `body` starts, counted by a listener; a marker job after it
-    * guarantees every earlier event has been delivered.
-    */
-  private def jobsOf(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val marker = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull == "marker")
-          marker.countDown()
-        else jobs.incrementAndGet(): Unit
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobGroup("marker", "marker")
-      sc.parallelize(Seq(1), 1).count()
-      sc.clearJobGroup()
-      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(listener)
-    jobs.get
-  }
-
   /** Jobs per op measured before the ops moved onto the core: the
     * bound each row must stay at or below.
     */
@@ -53,7 +28,7 @@ class ManifestTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     // in the measured pass
     jobsBefore.foreach { case (q, _) => SparkEntry.queries(q)(spark, dir).collect() }
     val got = jobsBefore.map { case (q, _) =>
-      q -> jobsOf(SparkEntry.queries(q)(spark, dir).collect(): Unit)
+      q -> SparkJobs.count(spark)(SparkEntry.queries(q)(spark, dir).collect(): Unit)
     }
     info(got.map { case (q, n) => s"$q=$n" }.mkString(" "))
     got.zip(jobsBefore).foreach { case ((q, n), (_, bound)) =>

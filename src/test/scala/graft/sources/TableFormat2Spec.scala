@@ -37,9 +37,11 @@ class TableFormat2Spec extends AnyFunSuite with BeforeAndAfterAll {
         org.apache.spark.unsafe.types.UTF8String.fromString(s"hp:$k")) %
         Buckets
 
-      // plan from the persisted cell manifest via the transforms,
-      // with the spec's own predicate
-      val cells = spark.read.parquet(s"${st.store}/stats")
+      // plan from the cells the written data files carry (their own
+      // partition values), with the spec's own predicate
+      val cells = spark.read.parquet(s"${st.store}/data")
+        .select(col("pm").cast("long").as("pm"), col("pb").cast("long").as("pb"))
+        .distinct()
       val expected = cells
         .filter(col("pm") >= PmLo && col("pm") <= PmHi && col("pb") === kb)
         .select("pm", "pb").collect()
@@ -51,7 +53,7 @@ class TableFormat2Spec extends AnyFunSuite with BeforeAndAfterAll {
       // the store's own plan over its collected stats is the same cells
       val hit = plan(st, kb)
       assert(hit.map(r => (r.getAs[Long]("pm"), r.getAs[Long]("pb"))).sorted ===
-        expected.toSeq.sorted, "the store's plan differs from the manifest's")
+        expected.toSeq.sorted, "the store's plan differs from the data's cells")
       // the derived plan is a strict subset of the table's cells —
       // the pruning a raw-column query gets for free under hidden
       // partitioning
