@@ -104,30 +104,11 @@ object Dedup {
     * full threshold sweep), [[overlapMatrix]], and through
     * [[ngramJaccard]] by [[cluster]]/[[keepBest]]/[[dedupYield]].
     *
-    * PERSISTED once per (JVM, corpus dir) — the shared-index pattern
-    * ([[signatures]] one level down): six operators consume the same
-    * verified pair graph, and each was re-running the tokenize +
-    * band-join + exact array_intersect verify inside its own plan.
-    * The frame is a pure deterministic function of the corpus, so the
-    * persisted copy is bit-identical to an inline recompute; the
-    * verified near-dup pair list is exactly the artifact a production
-    * dedup deployment maintains between pipeline stages.
+    * Rebuilt per call and returned as a plan (each consumer reads it
+    * once): the tokenize + band-join + exact array_intersect verify
+    * runs inside the consumer's own action.
     */
-  private val vcCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def verifiedCandidates(spark: SparkSession, dir: String): DataFrame = {
-    // memoized via OpCache: the bench disables the memo, so a benched
-    // consumer's time includes this build (declared work), never a
-    // warm artifact read
-    val path = graft.OpCache.getOrBuild(vcCache, dir) {
-      graft.OpCache.buildArtifact("vc")(root =>
-        verifiedCandidatesBuild(spark, dir).write.parquet(root))
-    }
-    spark.read.parquet(path)
-  }
-
-  private def verifiedCandidatesBuild(spark: SparkSession, dir: String): DataFrame = {
     val cands = bandCandidates(signatures(spark, dir))
     // Decouple parallelism from file layout: a single-file table scans
     // as 1-2 partitions, which would serialize the intersect work.
@@ -191,22 +172,6 @@ object Dedup {
     * shuffle carries only partial minima (map-side combine).
     */
   private[graft] def signatures(spark: SparkSession, dir: String): DataFrame = {
-    // PERSISTED once per (JVM, corpus): eleven operators (plus the
-    // doc-graph family) consume the same minhash signature table, and
-    // each was re-running the shingle-explode-hash build inside its
-    // own plan — the shared-index pattern (graphIndex / keFrame)
-    // applied to the dedup family
-    val path = graft.OpCache.getOrBuild(sigCache, dir) {
-      graft.OpCache.buildArtifact("sig")(root =>
-        signaturesBuild(spark, dir).write.parquet(root))
-    }
-    spark.read.parquet(path)
-  }
-
-  private val sigCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def signaturesBuild(spark: SparkSession, dir: String): DataFrame = {
     val sigAggs = (0 until MinhashK).map { j =>
       val (aj, bj) = perm(j)
       min(expr(s"($aj * h + $bj) % $MinhashP")).as(s"mh$j")
@@ -448,33 +413,14 @@ object Dedup {
     clusterLabels(spark, dir).orderBy("doc_id")
 
   /** The ngram-Jaccard duplicate-cluster labeling (doc_id, cluster,
-    * cluster_size), PERSISTED once per (JVM, corpus dir): [[cluster]],
-    * [[keepBest]] and [[dedupYield]] all consume the same
-    * [[connectedComponents]] fixpoint over the same verified pair
-    * graph, and each was re-running the full alternating-star
-    * contraction (an iterative multi-action loop) inside its own call.
-    * The labeling is a pure deterministic function of the corpus; the
-    * persisted frame is bit-identical to an inline recompute — and the
-    * cluster-assignment table is precisely what a production dedup
-    * pipeline persists between the clustering and survivor-selection
-    * stages.
+    * cluster_size) that [[cluster]], [[keepBest]] and [[dedupYield]]
+    * consume: the [[connectedComponents]] fixpoint over the verified
+    * pair graph, rebuilt per call and returned as a plan.
     */
-  private val ccCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private[ops] def clusterLabels(spark: SparkSession, dir: String): DataFrame = {
-    val path = graft.OpCache.getOrBuild(ccCache, dir) {
-      graft.OpCache.buildArtifact("cc")(root =>
-        connectedComponents(
-          ngramJaccard(spark, dir).select(col("doc_a"), col("doc_b")),
-          Tables(spark, dir, "documents").select(col("doc_id")))
-          .write.parquet(root))
-    }
-    // plain parquet read, no eager checkpoint: the old per-call
-    // localCheckpoint paid one full extra materialization job per
-    // consumer over data that is already a persisted artifact
-    spark.read.parquet(path)
-  }
+  private[ops] def clusterLabels(spark: SparkSession, dir: String): DataFrame =
+    connectedComponents(
+      ngramJaccard(spark, dir).select(col("doc_a"), col("doc_b")),
+      Tables(spark, dir, "documents").select(col("doc_id")))
 
   /** Connected components over an undirected pair graph via
     * alternating large-star / small-star contraction (Kiveris et al.,

@@ -340,31 +340,17 @@ object Graph {
     * [[modularity]]: (canonical k-NN edge set, per-node labels after
     * [[LpRounds]] rounds) — ke is checkpointed once, labels ride it.
     */
-  /** The canonical k-NN edge frame, PERSISTED once per (JVM, corpus
-    * dir) — the graph family's shared index artifact: nine operators
-    * ride the same edge set, and before this cache each one rebuilt
-    * the LSH k-NN graph inside its own plan (the graphIndex lesson
-    * applied to the graph family). The first caller pays the build;
-    * every later op starts at a narrow 2-column scan.
+  /** The canonical k-NN edge frame (id_a < id_b) the graph family
+    * shares, derived from [[Similarity.knnGraph]] on every call.
     */
-  private val keCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private[ops] def keFrame(spark: SparkSession, dir: String): DataFrame = {
-    // bench mode disables the memo (OpCache): every benched graph op
-    // then pays the edge-set derivation — its declared work — per run
-    val path = graft.OpCache.getOrBuild(keCache, dir) {
-      graft.OpCache.buildArtifact("ke")(root =>
-        Similarity.knnGraph(spark, dir)
-          .select(least(col("vec_id"), col("nbr_id")).as("id_a"),
-            greatest(col("vec_id"), col("nbr_id")).as("id_b"))
-          .distinct()
-          .write.parquet(root))
-    }
-    // lazy: iterative consumers re-reference ke per round and want it
-    // pinned, but the pin can materialize inside their first action
-    spark.read.parquet(path).localCheckpoint(eager = false)
-  }
+  private[graft] def keFrame(spark: SparkSession, dir: String): DataFrame =
+    Similarity.knnGraph(spark, dir)
+      .select(least(col("vec_id"), col("nbr_id")).as("id_a"),
+        greatest(col("vec_id"), col("nbr_id")).as("id_b"))
+      .distinct()
+      // lazy: iterative consumers re-reference ke per round and want it
+      // pinned, but the pin can materialize inside their first action
+      .localCheckpoint(eager = false)
 
   private[ops] def lpCore(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val ke = keFrame(spark, dir)
@@ -461,46 +447,15 @@ object Graph {
     * map-side-combined; rounds lineage-truncated. Output is the
     * final assignment with community sizes.
     */
-  /** Phase-1 core shared by [[louvain]] and [[louvain2]]: the edge
-    * frame, degree table, edge count, and the assignment after
-    * [[LvRounds]] synchronous local-move rounds.
+  /** Phase-1 core shared by [[louvain]], [[louvain2]] and
+    * [[conductance]]: the edge frame, degree table, edge count, and
+    * the assignment after [[LvRounds]] synchronous local-move rounds
+    * — one k-NN graph build per call.
     */
   private[ops] def lvCore(spark: SparkSession,
       dir: String): (DataFrame, DataFrame, Long, DataFrame) = {
     val (ke, deg, m, asn, _) = lvCoreN(spark, dir, LvRounds, earlyExit = false)
     (ke, deg, m, asn)
-  }
-
-  /** The phase-1 Louvain assignment, PERSISTED once per (JVM, corpus
-    * dir) — the [[keFrame]] lesson applied one level up: louvain,
-    * louvain2, and conductance all ride the same [[LvRounds]]-round
-    * local-move result, and each used to re-run the three synchronous
-    * rounds inside its own plan. The assignment is a pure function of
-    * the corpus (the move rule is deterministic, ties broken on
-    * community id), so the persisted frame is bit-identical to an
-    * inline recompute — the first caller pays the rounds; every later
-    * op starts at a narrow 2-column scan. m rides the cache (one
-    * count job, same determinism); deg is one cheap aggregation over
-    * the already-checkpointed edge frame and is recomputed.
-    */
-  private val lvCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
-
-  private[ops] def lvCoreCached(spark: SparkSession,
-      dir: String): (DataFrame, DataFrame, Long, DataFrame) = {
-    val (path, m) = graft.OpCache.getOrBuild(lvCache, dir) {
-      var built: (String, Long) = null
-      graft.OpCache.buildArtifact("lv") { root =>
-        val (_, _, mm, asn) = lvCore(spark, dir)
-        asn.write.parquet(root)
-        built = (root, mm)
-      }
-      built
-    }
-    val ke = keFrame(spark, dir)
-    val und = ke.union(ke.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
-    val deg = und.groupBy(col("id_a").as("v")).agg(count(lit(1)).as("deg"))
-    (ke, deg, m, spark.read.parquet(path).localCheckpoint(eager = false))
   }
 
   /** The local-move loop itself, parametrized: up to `maxRounds`
@@ -622,7 +577,7 @@ object Graph {
     * cannot drift).
     */
   def conductance(spark: SparkSession, dir: String): DataFrame = {
-    val (ke, deg, m, asn) = lvCoreCached(spark, dir)
+    val (ke, deg, m, asn) = lvCore(spark, dir)
     val edges = ke
       .join(asn.select(col("v").as("id_a"), col("comm").as("ca")), Seq("id_a"))
       .join(asn.select(col("v").as("id_b"), col("comm").as("cb")), Seq("id_b"))
@@ -651,7 +606,7 @@ object Graph {
   }
 
   def louvain(spark: SparkSession, dir: String): DataFrame = {
-    val (_, _, _, asn) = lvCoreCached(spark, dir)
+    val (_, _, _, asn) = lvCore(spark, dir)
     val sizes = asn.groupBy("comm").agg(count(lit(1)).as("comm_size"))
     asn.join(sizes, Seq("comm"))
       .select(col("v").as("vec_id"), col("comm"), col("comm_size"))
@@ -782,7 +737,7 @@ object Graph {
     * id, bit-identical in the unrolled oracle.
     */
   def louvain2(spark: SparkSession, dir: String): DataFrame = {
-    val (ke, deg, m, asn) = lvCoreCached(spark, dir)
+    val (ke, deg, m, asn) = lvCore(spark, dir)
     // contraction: per-edge community pair → weighted undirected edges
     // checkpointed: the undirected union below references ce twice,
     // and each lazy reference would re-run BOTH assignment joins —

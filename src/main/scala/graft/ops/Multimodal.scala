@@ -187,30 +187,14 @@ object Multimodal {
     * DISTINCT-hash pair frame (lo_a, hi_a, lo_b, hi_b, hamming) —
     * shared by the pair expansion and the hash-level clustering.
     *
-    * The fingerprint frame is PERSISTED once per (JVM, corpus dir) —
-    * the shared-index pattern (Dedup.signatures / Graph.keFrame)
-    * applied to the image-fingerprint table: three operators (phash,
-    * phash_cluster, pipeline_mm) consume the same codec pass, and each
-    * was re-encoding and re-decoding every document's PNG inside its
-    * own plan. The pass is a pure deterministic function of the corpus
-    * (fixed raster, lossless PNG round-trip), so the persisted frame
-    * is bit-identical to an inline recompute; a production image-dedup
-    * deployment persists exactly this table.
+    * Both are rebuilt per call: phash, phash_cluster and pipeline_mm
+    * each run the codec pass in their own plan.
     */
-  private val phCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def phashFrames(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    // bench mode disables the memo (OpCache): a benched consumer
-    // re-runs the codec pass — its declared work — on every run
-    val path = graft.OpCache.getOrBuild(phCache, dir) {
-      graft.OpCache.buildArtifact("ph")(root =>
-        phashBuild(spark, dir).write.parquet(root))
-    }
     // lazy checkpoint: consumed multiple times by the band-pair join,
     // but materialization folds into the first consumer action instead
     // of a dedicated per-call job
-    val hashes = spark.read.parquet(path).localCheckpoint(eager = false)
+    val hashes = phashBuild(spark, dir).localCheckpoint(eager = false)
     (hashes, phashBandPairs(hashes))
   }
 

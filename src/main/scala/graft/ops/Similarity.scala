@@ -372,24 +372,6 @@ object Similarity {
     * so the pre-union dedup is exact.
     */
   def knnGraph(spark: SparkSession, dir: String): DataFrame = {
-    // PERSISTED once per (JVM, corpus): the ranked k-NN frame feeds
-    // nn-descent, label-error screening, and the whole embedding-graph
-    // family (via Graph.keFrame) — one LSH build per process, every
-    // later consumer starts at a narrow 4-column scan
-    // bench mode disables the memo (OpCache): sim_knn_graph and every
-    // consumer then pays the LSH build — its declared work — per run
-    val path = graft.OpCache.getOrBuild(knnCache, dir) {
-      graft.OpCache.buildArtifact("knn")(root =>
-        knnGraphBuild(spark, dir).write.parquet(root))
-    }
-    // the build ends ordered; restate the contract on the cached read
-    spark.read.parquet(path).orderBy("vec_id", "rank")
-  }
-
-  private val knnCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def knnGraphBuild(spark: SparkSession, dir: String): DataFrame = {
     val n = emb(spark, dir).count()
     val nbits = lshBits(n)
     val base = embPar(spark, dir)
@@ -501,24 +483,23 @@ object Similarity {
     * amortizes over the query stream, and a serve call's plan starts
     * at a narrow 3-column scan of n·[[KnnK]] rows. At cluster scale
     * the staging write is a table-format commit (the
-    * graft.sources snapshot store); here it is a tmpfs dir held for
-    * process lifetime — keyed by corpus dir so distinct SFs never
-    * share an index.
+    * graft.sources snapshot store); here it is a [[graft.Scratch.keep]]
+    * directory held for process lifetime — keyed by corpus dir so
+    * distinct SFs never share an index. It is the engine's one
+    * cross-call memo: the build is its own declared operator
+    * (sim_nndescent), and the OpsSpec serve-split test pins "a second
+    * serve call must not rebuild".
     */
   private val gidxCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   def graphIndex(spark: SparkSession, dir: String): DataFrame = {
-    // PINNED even under the bench: this is the one sanctioned
-    // build/serve split — the build IS its own benched declared
-    // operator (sim_nndescent), the serve ops' docstrings declare
-    // serving from a persisted index, and the OpsSpec serve-split test
-    // pins "a second serve call must not rebuild". Serving rows
-    // therefore measure the declared read path, not a hidden build.
-    val path = graft.OpCache.getOrBuildPinned(gidxCache, dir) {
-      graft.OpCache.buildArtifact("gidx")(root =>
-        nnDescent(spark, dir).write.parquet(root))
-    }
+    val path = gidxCache.computeIfAbsent(dir, _ => {
+      val root = graft.Scratch.keep("gidx")
+      try nnDescent(spark, dir).write.parquet(root)
+      catch { case e: Throwable => graft.Scratch.rm(root); throw e }
+      root
+    })
     spark.read.parquet(path)
   }
 
@@ -994,35 +975,9 @@ object Similarity {
     zip_with(v, c, (a, b) =>
       floor((a.cast("double") - b.cast("double")) * lit(1000000.0)).cast("double"))
 
-  /** The PERSISTED IVFPQ index — codes + refined codebook, written
-    * once per (JVM, corpus dir): the docstring above states the
-    * production contract ("the codes + centroids + one shared codebook
-    * ARE the persisted index artifact"), and the two consumers
-    * (sim_ivfpq_topk, sim_ivfpq_refine) each re-ran the coarse
-    * assignment + codebook training + two encode passes inside their
-    * own plans. Training is exact-integer deterministic, so the
-    * persisted index is bit-identical to an inline rebuild; serving
-    * (probe LUT + ADC join) stays per-query.
-    */
-  private val ivfpqIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def ivfpqIndex(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    // bench mode disables the memo (OpCache): sim_ivfpq_topk/refine
-    // then pay the training — their declared work — on every run
-    val root = graft.OpCache.getOrBuild(ivfpqIdxCache, dir) {
-      graft.OpCache.buildArtifact("ivfpq") { r =>
-        val (codes, cb1) = ivfpqIndexBuild(spark, dir)
-        codes.write.parquet(s"$r/codes")
-        cb1.write.parquet(s"$r/cb")
-      }
-    }
-    (spark.read.parquet(s"$root/codes"), spark.read.parquet(s"$root/cb"))
-  }
-
   /** The shared IVF-ADC stage of [[ivfpqTopk]] / [[ivfpqRefine]]:
-    * returns (scored, probes, base-with-norms). The index half rides
-    * [[ivfpqIndex]]; only the probe-side LUT + ADC join runs here.
+    * returns (scored, probes, base-with-norms). The index half is
+    * [[ivfpqIndex]]; the probe-side LUT + ADC join runs here.
     */
   private def ivfpqAdcScored(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
@@ -1063,9 +1018,10 @@ object Similarity {
 
   /** The IVFPQ index BUILD: coarse assignment, seed codebook, one
     * Lloyd refinement, final encode — returns (codes, refined
-    * codebook).
+    * codebook). sim_ivfpq_topk and sim_ivfpq_refine each train it in
+    * their own call; codes is read once, cb1 is checkpointed.
     */
-  private def ivfpqIndexBuild(spark: SparkSession, dir: String)
+  private[graft] def ivfpqIndex(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
     val n = emb(spark, dir).count()
     val (cents, _) = ivfCentsProbes(spark, dir)
@@ -2230,39 +2186,13 @@ object Similarity {
   /** The [[pcaPower]] fit: (means, centered long-form, final raw vr,
     * final unit component) — shared with [[pcaProject]].
     *
-    * The trained artifact (means, vr, unit component — three 64-row
-    * frames) is PERSISTED once per (JVM, corpus dir): embed_pca_power
-    * and embed_project each re-ran the full power iteration inside
-    * their own plans, and the train→apply contract (the pcaProject
-    * docstring) is precisely that the component is a stored model.
-    * All-integer arithmetic — the persisted copy is bit-identical to
-    * an inline refit. The centered long form is re-derived per caller
-    * (one scan), never persisted — it is corpus-sized.
+    * Refit per call: embed_pca_power and embed_project each run the
+    * power iteration in their own call. The centered long form that
+    * [[pcaProject]] applies the component to is the fit's own
+    * checkpointed frame, not a second corpus scan.
     */
-  private val pcaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def pcaFit(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    // bench mode disables the memo (OpCache): embed_pca_power and
-    // embed_project then pay the fit — their declared work — per run
-    val root = graft.OpCache.getOrBuild(pcaCache, dir) {
-      graft.OpCache.buildArtifact("pca") { r =>
-        val (means, vrFinal, vFinal) = pcaFitBuild(spark, dir)
-        means.write.parquet(s"$r/means")
-        vrFinal.write.parquet(s"$r/vr")
-        vFinal.write.parquet(s"$r/v")
-      }
-    }
-    val means = spark.read.parquet(s"$root/means")
-    val cent = embXq(spark, dir).join(broadcast(means), Seq("dim"))
-      .select(col("vec_id"), col("dim"), (col("xq") - col("mean_q")).as("cq"))
-    (means, cent,
-      spark.read.parquet(s"$root/vr"), spark.read.parquet(s"$root/v"))
-  }
-
-  private def pcaFitBuild(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) = {
     val n = emb(spark, dir).count()
     val xl = embXq(spark, dir)
     val means = embMeans(spark, dir, n)
@@ -2292,7 +2222,7 @@ object Similarity {
     val (vrFinal, vFinal) = (1 to PcaRounds).foldLeft((v0, v0)) {
       case ((_, v), _) => round(v)
     }
-    (means, vrFinal, vFinal)
+    (means, cent, vrFinal, vFinal)
   }
 
   def pcaPower(spark: SparkSession, dir: String): DataFrame = {

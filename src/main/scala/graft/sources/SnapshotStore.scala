@@ -235,11 +235,15 @@ object SnapshotStore {
     * list. `basePath` keeps the (level, c) partition columns; files
     * written after v — or files a later compaction superseded — are
     * invisible, files v references stay visible even after the live
-    * tree was rewritten.
+    * tree was rewritten. The data columns come from the first file's
+    * footer (no schema-inference job); a version with no files gets
+    * the plain reader, so it still fails with Spark's own error.
     */
-  def read(spark: SparkSession, root: String, v: Int): DataFrame =
-    spark.read.option("basePath", root)
-      .parquet(files(root, v).map(f => s"$root/$f"): _*)
+  def read(spark: SparkSession, root: String, v: Int): DataFrame = {
+    val fs = files(root, v)
+    fs.headOption.fold(spark.read)(f => Tables.footerReader(spark, s"$root/$f"))
+      .option("basePath", root).parquet(fs.map(f => s"$root/$f"): _*)
+  }
 
   /** Metadata-only ROLLBACK (Iceberg rollback_to_snapshot / Delta
     * RESTORE): commit a NEW version whose file list is exactly

@@ -1934,17 +1934,26 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     def synth(n: Long) = spark.range(n).select(col("id").as("vec_id"),
       expr("transform(sequence(1, 64), d -> cast(hash(id, d) as float))")
         .as("embedding"))
+    // one select per table, unioned: fusing every table's bucketT into
+    // one posexplode(array(...)) outgrows the 64 KB generated-method
+    // limit (see lshPlanesDf); with fallback off such a plan fails here
     def candidatePairs(n: Long): Long = {
       val nbits = Similarity.lshAnnBits(n)
-      synth(n)
-        .select(posexplode(array(
-          (0 until Similarity.LshTables).map(t =>
-            Similarity.bucketT(col("embedding"), t, nbits)): _*)).as(Seq("t", "bucket")))
+      val vecs = synth(n)
+      (0 until Similarity.LshTables).map(t =>
+          vecs.select(lit(t).as("t"),
+            Similarity.bucketT(col("embedding"), t, nbits).as("bucket")))
+        .reduce(_ union _)
         .groupBy("t", "bucket").agg(count(lit(1)).as("cnt"))
         .agg(sum(expr("cnt * (cnt - 1) div 2"))).collect()(0).getLong(0)
     }
-    val small = candidatePairs(16384)   // 10 bits: 1024 buckets/table
-    val big = candidatePairs(131072)    // 13 bits: 8192 buckets/table
+    val fallback = spark.conf.getOption("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    val (small, big) =
+      try (candidatePairs(16384),   // 10 bits: 1024 buckets/table
+        candidatePairs(131072))     // 13 bits: 8192 buckets/table
+      finally fallback.fold(spark.conf.unset("spark.sql.codegen.fallback"))(
+        spark.conf.set("spark.sql.codegen.fallback", _))
     assert(small > 0 && big > 0)
     // with scaled buckets the expectation is 8× (linear); the r4
     // fixed geometry would grow 64× — allow generous headroom
