@@ -28,6 +28,19 @@ object Graph {
   val PrBaseU = 150000L
   val PrInitU = 1000000L
 
+  /** The undirected near-dup candidate graph of the MinHash family:
+    * every [[Dedup.bandCandidates]] pair in both directions as
+    * (doc_a, doc_b), emitted from one pass over the pairs and pinned,
+    * so a consumer that joins or aggregates it several times runs the
+    * signature build once.
+    */
+  private def undPairs(spark: SparkSession, dir: String): DataFrame =
+    Dedup.bandCandidates(Dedup.signatures(spark, dir))
+      .select(inline(array(
+        struct(col("doc_a"), col("doc_b")),
+        struct(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))))
+      .localCheckpoint()
+
   /** graph_pagerank — [[PrRounds]] rounds of integer PageRank over
     * the UNDIRECTED near-dup candidate graph (the shared MinHash
     * band-collision edges of [[Dedup.bandCandidates]]), ranking the
@@ -40,11 +53,8 @@ object Graph {
     * `localCheckpoint` lineage truncation, never a driver collect.
     */
   def pagerank(spark: SparkSession, dir: String): DataFrame = {
-    val cand = Dedup.bandCandidates(Dedup.signatures(spark, dir))
     // undirected: both directions carry contributions
-    val edges = cand.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(cand.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .localCheckpoint()
+    val edges = undPairs(spark, dir).toDF("src", "dst")
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
     val verts = Tables(spark, dir, "documents").select(col("doc_id"))
     var rank = verts.withColumn("r", lit(PrInitU))
@@ -85,10 +95,7 @@ object Graph {
     * fixpoint loop.
     */
   def bfs(spark: SparkSession, dir: String): DataFrame = {
-    val cand = Dedup.bandCandidates(Dedup.signatures(spark, dir))
-    val edges = cand.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(cand.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .localCheckpoint()
+    val edges = undPairs(spark, dir).toDF("src", "dst")
     var dist = Tables(spark, dir, "documents").select(col("doc_id"))
       .filter(col("doc_id") % 97 === 0)
       .withColumn("dist", lit(0L))
@@ -129,9 +136,7 @@ object Graph {
     * shared by [[triangles]] and [[clusteringCoeff]].
     */
   private def triCore(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val cand = Dedup.bandCandidates(Dedup.signatures(spark, dir))
-      .select(col("doc_a"), col("doc_b"))
-    val und = cand.union(cand.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
+    val und = undPairs(spark, dir)
     val deg = und.groupBy(col("doc_a").as("v")).agg(count(lit(1)).as("deg"))
     // orient u -> w iff (deg u, u) < (deg w, w): lexicographic struct
     // comparison — exact at any id magnitude (a packed numeric key
@@ -287,10 +292,7 @@ object Graph {
     * of [[pagerank]]'s message rounds.
     */
   def kcore(spark: SparkSession, dir: String): DataFrame = {
-    val cand = Dedup.bandCandidates(Dedup.signatures(spark, dir))
-      .select(col("doc_a"), col("doc_b"))
-    val und = cand.union(cand.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .localCheckpoint()
+    val und = undPairs(spark, dir)
     var live = und.select(col("doc_a").as("v")).distinct()
     var liveDeg = und.groupBy(col("doc_a").as("v")).agg(count(lit(1)).as("deg"))
     for (_ <- 1 to KcoreRounds) {
@@ -348,9 +350,11 @@ object Graph {
       .select(least(col("vec_id"), col("nbr_id")).as("id_a"),
         greatest(col("vec_id"), col("nbr_id")).as("id_b"))
       .distinct()
-      // lazy: iterative consumers re-reference ke per round and want it
-      // pinned, but the pin can materialize inside their first action
-      .localCheckpoint(eager = false)
+      // eager: consumers join ke with itself and with frames derived
+      // from it, and a lazy pin that a broadcast job materializes while
+      // another stage over the same RDD is submitted can deadlock the
+      // driver (RDDCheckpointData vs DAGScheduler.getCacheLocs locks)
+      .localCheckpoint()
 
   private[ops] def lpCore(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val ke = keFrame(spark, dir)
@@ -491,15 +495,16 @@ object Graph {
     // isolated-vertex 0 baked in once): Σtot and the gain scoring both
     // need deg-by-v every round, and re-joining the degree table per
     // round cost two extra exchanges per round (5 joins/round → 3)
-    // lazy checkpoints: lineage truncation without a dedicated
-    // materialization job per round — the convergence probe (earlyExit)
-    // or the caller's terminal action computes and caches each frame
+    // eager checkpoints: each round joins asn on several sides, and a
+    // lazy pin materialized by one of those broadcasts can deadlock
+    // the driver (see keFrame); with earlyExit the convergence probe,
+    // which reads `next` once, materializes each round instead
     var asn = Tables(spark, dir, "embeddings")
       .select(col("vec_id").as("v"))
       .join(deg, Seq("v"), "left")
       .select(col("v"), col("v").as("comm"),
         coalesce(col("deg"), lit(0L)).as("dv"))
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     var prev: DataFrame = null // a_{t-2} once t ≥ 2
     var t = 0
     var nRounds = maxRounds.toLong
@@ -528,7 +533,7 @@ object Graph {
         .agg(max(struct(col("score"), (-col("comm")).as("nc"))).as("m"),
           max(col("dv")).as("dv")) // dv is constant per v — carried, not joined
         .select(col("v"), (-col("m.nc")).as("comm"), col("dv"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint(eager = !earlyExit)
       if (earlyExit) {
         // ONE action tests both exits: the mismatch counts vs a_{t-1}
         // and a_{t-2} come from a single three-way join aggregation
@@ -809,10 +814,7 @@ object Graph {
     * truncated per round; the seed frame is O(1).
     */
   def ppr(spark: SparkSession, dir: String): DataFrame = {
-    val cand = Dedup.bandCandidates(Dedup.signatures(spark, dir))
-    val edges = cand.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(cand.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .localCheckpoint()
+    val edges = undPairs(spark, dir).toDF("src", "dst")
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
     val seeds = edges.select(col("src").as("doc_id")).distinct()
       .orderBy("doc_id").limit(3)

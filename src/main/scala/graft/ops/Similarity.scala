@@ -599,7 +599,8 @@ object Similarity {
     * corpus size.
     */
   def labelErrors(spark: SparkSession, dir: String): DataFrame = {
-    val kn = knnGraph(spark, dir).select("vec_id", "nbr_id")
+    // pinned: the vote join and the neighbor count both read it
+    val kn = knnGraph(spark, dir).select("vec_id", "nbr_id").localCheckpoint()
     val labels = emb(spark, dir)
       .select(col("vec_id"), col("label").cast("long").as("label"))
     val lv = kn.join(labels.select(col("vec_id").as("nbr_id"), col("label").as("nl")),

@@ -46,7 +46,7 @@ class SharedBuildSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("graph_louvain builds its k-NN edge frame once") {
     // 62 jobs when the edge frame (and so the whole k-NN graph) was
     // built twice per call, once for the rounds and once for the
-    // result; 49 with one build
+    // result; 54 with one build and eager edge and assignment pins
     val jobs = SparkJobs.count(spark) {
       SparkEntry.queries("graph_louvain")(spark, dir).collect(): Unit
     }
