@@ -188,13 +188,7 @@ object KtxBinary {
         serialize(key._1, key._2, key._3,
           it.map(t => (t._4, t._5, t._6, t._7, t._8)).toSeq)
       }
-      .foreach { t =>
-        val (rel, name, bytes) = t
-        val d = new java.io.File(s"$outRoot/$rel")
-        d.mkdirs()
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$outRoot/$rel/$name"), bytes): Unit
-      }
+      .foreach { t => TreeFiles.write(outRoot, s"${t._1}/${t._2}", t._3) }
   }
 
   /** Level-generic decode of one file's mip-0 payload: (level,
@@ -283,7 +277,7 @@ object KtxBinary {
 
   /** Every `.ktx` file's bytes under `outRoot`, read on executors. */
   private def files(spark: SparkSession, outRoot: String) =
-    TreeFiles.read(spark, outRoot, ".ktx").map(_._2)
+    TreeFiles.read(spark, outRoot, _.endsWith(".ktx")).map(_._2)
 
   /** The oct_ktx_parse probe frame re-derived purely from read-back
     * file bytes — same schema, same probe positions, classification
@@ -323,7 +317,6 @@ object KtxBinary {
       }
       .toDF("bz", "by", "bx", "path", "probe", "pos", "mip", "region",
         "byte_in_mip", "byte_in_elem", "channel", "lz", "ly", "lx", "az", "ay", "ax")
-      .orderBy("bz", "by", "bx", "probe")
   }
 
   /** EVERY mip payload decoded back to mip-space absolute voxels
@@ -351,7 +344,6 @@ object KtxBinary {
         }
       }
       .toDF("mip", "c", "az", "ay", "ax", "v")
-      .orderBy("mip", "c", "az", "ay", "ax")
   }
 
   /** Mip-0 payloads decoded back to absolute voxels (c, z, y, x, v),
@@ -374,6 +366,5 @@ object KtxBinary {
           (f.bx - 1) * Leaf + lx, v)
       }
       .toDF("c", "z", "y", "x", "v")
-      .orderBy("c", "z", "y", "x")
   }
 }

@@ -99,9 +99,7 @@ object OctreePipeline {
             case Some(listed) => (level.toLong, relPath, listed, 0L)
             case None =>
               val b = bytes()
-              val f = new java.io.File(s"$outRoot/$relPath")
-              Option(f.getParentFile).foreach(_.mkdirs())
-              java.nio.file.Files.write(f.toPath, b)
+              TreeFiles.write(outRoot, relPath, b)
               (level.toLong, relPath, b.length.toLong, 1L)
           }
         }
@@ -125,10 +123,7 @@ object OctreePipeline {
       "oz: " + fmt(r.getDouble(2)), "sx: " + fmt(r.getDouble(3)),
       "sy: " + fmt(r.getDouble(4)), "sz: " + fmt(r.getDouble(5)),
       "nl: " + r.getLong(6).toString)
-    new java.io.File(outRoot).mkdirs()
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$outRoot/transform.txt"),
-      lines.mkString("\n").getBytes("UTF-8")): Unit
+    TreeFiles.write(outRoot, "transform.txt", lines.mkString("\n").getBytes("UTF-8"))
   }
 
   /** Parse of `transform.txt` back to the [[Geometry.transform]]
@@ -166,20 +161,12 @@ object OctreePipeline {
     */
   def parseTiffTree(spark: SparkSession, outRoot: String): DataFrame = {
     import spark.implicits._
-    TreeFiles.read(spark, outRoot, ".tif")
+    TreeFiles.read(spark, outRoot, _.endsWith(".tif"))
       .flatMap { case (rel, bytes) =>
         val (level, bz, by, bx, name) = blockOfPath(rel)
         val c = name.stripPrefix("default.").stripSuffix(".tif").toLong
-        TiffBinary.decodePages(bytes).flatMap { case (z, w, h, bits, comp, off, nb) =>
-          require(bits == 16 && comp == 8, s"unexpected page encoding ($bits, $comp)")
-          val raw = TiffBinary.inflate(
-            bytes.slice(off.toInt, (off + nb).toInt), (w * h * 2).toInt)
-          for {
-            y <- 0 until h.toInt; x <- 0 until w.toInt
-            v = TiffBinary.getU16(raw, (y * w.toInt + x) * 2)
-            if v > 0
-          } yield (level.toLong, c, bz * Leaf + z, by * Leaf + y, bx * Leaf + x, v.toLong)
-        }
+        TiffBinary.stripVoxels(bytes)((z, y, x, v) =>
+          (level.toLong, c, bz * Leaf + z, by * Leaf + y, bx * Leaf + x, v.toLong))
       }
       .toDF("level", "c", "z", "y", "x", "v")
   }
@@ -189,7 +176,7 @@ object OctreePipeline {
     */
   def parseKtxTree(spark: SparkSession, outRoot: String): DataFrame = {
     import spark.implicits._
-    TreeFiles.read(spark, outRoot, ".ktx")
+    TreeFiles.read(spark, outRoot, _.endsWith(".ktx"))
       .flatMap { case (_, bytes) =>
         val (level, bz, by, bx, vox) = KtxBinary.decodeMip0Any(bytes)
         vox.map { case (c, lz, ly, lx, v) =>

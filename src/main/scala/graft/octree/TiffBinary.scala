@@ -49,7 +49,7 @@ object TiffBinary {
     out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
   }
 
-  private[graft] def getU16(b: Array[Byte], off: Int): Int =
+  private def getU16(b: Array[Byte], off: Int): Int =
     (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
 
   private def getU32(b: Array[Byte], off: Int): Long =
@@ -236,16 +236,10 @@ object TiffBinary {
         val byChannel = it.toSeq.groupBy(_._4)
         val rel = pathOf(key._1, key._2, key._3).map(_.toString).mkString("/")
         byChannel.toSeq.sortBy(_._1).map { case (c, vs) =>
-          (rel, s"default.$c.tif", serialize(vs.map(t => (t._5, t._6, t._7, t._8))))
+          (s"$rel/default.$c.tif", serialize(vs.map(t => (t._5, t._6, t._7, t._8))))
         }
       }
-      .foreach { t =>
-        val (rel, name, bytes) = t
-        val d = new java.io.File(s"$outRoot/$rel")
-        d.mkdirs()
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$outRoot/$rel/$name"), bytes): Unit
-      }
+      .foreach { t => TreeFiles.write(outRoot, t._1, t._2) }
   }
 
   /** Per-page metadata of one file's bytes, by walking the real IFD
@@ -267,6 +261,27 @@ object TiffBinary {
       ifd = getU32(bytes, ifd.toInt + 2 + n * 12)
     }
     pages.result()
+  }
+
+  /** The strip-TIFF pixel decode every reader shares: walk the IFD
+    * chain, inflate each page's 16-bit deflate strip and return
+    * `f(page, y, x, v)` for every non-zero pixel, in page, row and
+    * column order. `f` has run on every pixel when this returns.
+    */
+  private[graft] def stripVoxels[T](bytes: Array[Byte])(f: (Int, Int, Int, Int) => T): Iterator[T] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[T]
+    decodePages(bytes).foreach { case (z, w, h, bits, comp, off, nb) =>
+      require(bits == 16 && comp == 8, s"unexpected page encoding ($bits, $comp)")
+      val (wi, n) = (w.toInt, (w * h).toInt)
+      val raw = inflate(bytes.slice(off.toInt, (off + nb).toInt), 2 * n)
+      var i = 0
+      while (i < n) {
+        val v = getU16(raw, 2 * i)
+        if (v > 0) out += f(z, i / wi, i % wi, v)
+        i += 1
+      }
+    }
+    out.iterator
   }
 
   /** Per-page dense rasters of one TILED file's bytes: walk the IFD
@@ -317,11 +332,8 @@ object TiffBinary {
     * layout. Pure bytes → bytes, so it runs per-file on executors.
     */
   private[graft] def convTiled(bytes: Array[Byte], t: Int): Array[Byte] = {
-    val pages = decodePages(bytes).map { case (_, w, h, bits, comp, off, nb) =>
-      require(bits == 16L && comp == 8L, s"unexpected page encoding ($bits, $comp)")
-      val raw = inflate(bytes.slice(off.toInt, (off + nb).toInt), (w * h * 2).toInt)
-      Array.tabulate(h.toInt, w.toInt)((y, x) => getU16(raw, (y * w.toInt + x) * 2).toLong)
-    }
+    val pages = decodePages(bytes).map(p => Array.ofDim[Long](p._3.toInt, p._2.toInt))
+    stripVoxels(bytes)((z, y, x, v) => pages(z)(y)(x) = v.toLong): Unit
     serializeTiledPages(pages, t)
   }
 
@@ -332,13 +344,11 @@ object TiffBinary {
     */
   def convTiledDir(spark: SparkSession, stripRoot: String, tiledRoot: String, t: Int): Unit =
     files(spark, stripRoot).foreach { case (rel, bytes) =>
-      val dst = new java.io.File(s"$tiledRoot/$rel")
-      dst.getParentFile.mkdirs()
-      java.nio.file.Files.write(dst.toPath, convTiled(bytes, t)): Unit
+      TreeFiles.write(tiledRoot, rel, convTiled(bytes, t))
     }
 
   private def files(spark: SparkSession, outRoot: String) =
-    TreeFiles.read(spark, outRoot, ".tif")
+    TreeFiles.read(spark, outRoot, _.endsWith(".tif"))
 
   /** (channel, 0-based bz, by, bx) of a leaf file from its
     * tree-relative path: the octant directory names and the
@@ -353,25 +363,18 @@ object TiffBinary {
     * file bytes (IFD walk + strip inflate), zeros dropped — must equal
     * the source [[VoxelGrid]] exactly. Block coords come from the
     * octant directory names, the channel from the reference's
-    * `default.<c>.tif` naming.
+    * `default.<c>.tif` naming. The frame carries no order: every
+    * consumer groups or sorts for itself.
     */
   def parseVoxels(spark: SparkSession, outRoot: String): DataFrame = {
     import spark.implicits._
     files(spark, outRoot)
       .flatMap { case (rel, bytes) =>
         val (c, bz, by, bx) = blockOf(rel)
-        decodePages(bytes).flatMap { case (z, w, h, bits, comp, off, nb) =>
-          require(bits == 16 && comp == 8, s"unexpected page encoding ($bits, $comp)")
-          val raw = inflate(bytes.slice(off.toInt, (off + nb).toInt), (w * h * 2).toInt)
-          for {
-            y <- 0 until h.toInt; x <- 0 until w.toInt
-            v = getU16(raw, (y * w.toInt + x) * 2)
-            if v > 0
-          } yield (c, bz * Leaf + z, by * Leaf + y, bx * Leaf + x, v.toLong)
-        }
+        stripVoxels(bytes)((z, y, x, v) =>
+          (c, bz * Leaf + z, by * Leaf + y, bx * Leaf + x, v.toLong))
       }
       .toDF("c", "z", "y", "x", "v")
-      .orderBy("c", "z", "y", "x")
   }
 
   /** [[parseVoxels]] for the TILED layout: same naming and coordinate
@@ -392,6 +395,5 @@ object TiffBinary {
         }
       }
       .toDF("c", "z", "y", "x", "v")
-      .orderBy("c", "z", "y", "x")
   }
 }

@@ -153,7 +153,7 @@ object Pipeline {
           }
           if (os != null) os.close()
         }
-      val agg = graft.octree.TreeFiles.read(spark, tmp, ".tfrecord")
+      val agg = graft.octree.TreeFiles.read(spark, tmp, _.endsWith(".tfrecord"))
         .flatMap { case (path, bytes) =>
           val shard = path.substring(path.lastIndexOf("shard-") + 6)
             .stripSuffix(".tfrecord").toLong

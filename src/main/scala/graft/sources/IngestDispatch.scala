@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.VoxelGrid
+import graft.octree.{TiffBinary, TreeFiles}
 
 /** The reference's multi-format ingest DISPATCH (tiff2octree.py main
   * :1279-1311): input dirs are probed as N5/Zarr first
@@ -16,7 +17,7 @@ import graft.VoxelGrid
   *
   * Re-expressed Spark-first: [[stageAll]] writes one volume through
   * every physical arm (multi-page strip TIFF stacks via
-  * [[graft.octree.TiffBinary]], per-z single-page `.tif` and `.jp2`
+  * [[TiffBinary]], per-z single-page `.tif` and `.jp2`
   * slice dirs, an [[N5Binary]] container), and [[discover]] runs the
   * dispatch chain per input PURELY from read-back bytes, emitting one
   * catalog row per input. Sniffing is header-bounded by design — the
@@ -81,12 +82,6 @@ object IngestDispatch {
     vox.unionByName(sent)
   }
 
-  private def writeFile(path: String, bytes: Array[Byte]): Unit = {
-    val f = new java.io.File(path)
-    f.getParentFile.mkdirs()
-    java.nio.file.Files.write(f.toPath, bytes): Unit
-  }
-
   /** Stage the slice-dir arms: one single-page file per (channel, z) —
     * `slices_tif/ch{c}/z%04d.tif` for both channels plus
     * `slices_jp2/ch0/z%04d.jp2` — one executor task per slice.
@@ -102,12 +97,12 @@ object IngestDispatch {
         it.foreach { case (_, _, y, x, v) => if (v > 0) page(y.toInt)(x.toInt) = v }
         val (c, z) = key
         val tif = (s"slices_tif/ch$c/z${"%04d".format(z)}.tif",
-          graft.octree.TiffBinary.serializePages(Seq(page)))
+          TiffBinary.serializePages(Seq(page)))
         if (c == 0L)
           Seq(tif, (s"slices_jp2/ch0/z${"%04d".format(z)}.jp2", Jp2Binary.serialize(page)))
         else Seq(tif)
       }
-      .foreach { t => writeFile(s"$root/${t._1}", t._2) }
+      .foreach { t => TreeFiles.write(root, t._1, t._2) }
   }
 
   /** Stage the stack arm: all z-pages of one channel in one
@@ -123,10 +118,10 @@ object IngestDispatch {
       .mapGroups { (c: Long, it: Iterator[(Long, Long, Long, Long, Long)]) =>
         val grid = Array.ofDim[Long](Grid, Grid, Grid)
         it.foreach { case (_, z, y, x, v) => if (v > 0) grid(z.toInt)(y.toInt)(x.toInt) = v }
-        (s"stack/ch$c.tif", graft.octree.TiffBinary.serializePages(
+        (s"stack/ch$c.tif", TiffBinary.serializePages(
           (0 until Grid).map(z => Array.tabulate(Grid, Grid)((y, x) => grid(z)(y)(x)))))
       }
-      .foreach { t => writeFile(s"$root/${t._1}", t._2) }
+      .foreach { t => TreeFiles.write(root, t._1, t._2) }
   }
 
   /** Stage the same volume through EVERY input arm under `root`:
@@ -321,49 +316,36 @@ object IngestDispatch {
       "stack/ch0.tif", "stack/ch1.tif", "zarr", "zarr3")
     spark.createDataset(inputs).repartition(inputs.size)
       .map(rel => sniff(root, rel))
-      .toDF().orderBy("input")
+      .toDF()
   }
 
   // ---------------------------------------------------------------- slice ingest
 
   /** The slice-dir READ direction (`gen_highest_resolution_blocks_from
-    * _slices` :1024 sorts the files and assigns z by position): a
-    * distributed binaryFile scan over both channels' staged `.tif`
-    * slices, each file decoded from bytes alone — channel from the
-    * `ch{c}` dir name, z from the sorted `z%04d` file name — must
-    * reproduce [[VoxelGrid]] exactly. The frame carries no order:
-    * every consumer groups or sorts for itself.
+    * _slices` :1024 sorts the files and assigns z by position): the
+    * staged `.tif` slices of both channels read through [[TreeFiles]],
+    * each file decoded from bytes alone — channel from the `ch{c}` dir
+    * name, z from the sorted `z%04d` file name — must reproduce
+    * [[VoxelGrid]] exactly. The frames of this and the other two parse
+    * functions carry no order: every consumer groups or sorts for
+    * itself.
     */
   def parseSliceVoxels(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.tif")
-      .option("recursiveFileLookup", "true")
-      .load(s"$root/slices_tif")
-      .select(col("path"), col("content")).as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val parts = path.split('/')
+    TreeFiles.read(spark, s"$root/slices_tif", _.endsWith(".tif"))
+      .flatMap { case (rel, bytes) =>
+        val parts = rel.split('/')
         val c = parts(parts.length - 2).stripPrefix("ch").toLong
         val z = parts.last.stripPrefix("z").stripSuffix(".tif").toLong
-        graft.octree.TiffBinary.decodePages(bytes).flatMap {
-          case (_, w, h, bits, comp, off, nb) =>
-            require(bits == 16 && comp == 8, s"unexpected page encoding ($bits, $comp)")
-            val raw = graft.octree.TiffBinary.inflate(
-              bytes.slice(off.toInt, (off + nb).toInt), (w * h * 2).toInt)
-            for {
-              y <- 0 until h.toInt; x <- 0 until w.toInt
-              v = graft.octree.TiffBinary.getU16(raw, 2 * (y * w.toInt + x))
-              if v > 0
-            } yield (c, z, y.toLong, x.toLong, v.toLong)
-        }
+        TiffBinary.stripVoxels(bytes)((_, y, x, v) => (c, z, y.toLong, x.toLong, v.toLong))
       }
       .toDF("c", "z", "y", "x", "v")
   }
 
   /** The STACK read direction (`stack_to_dask_array`
     * tiff2octree.py:628: one multi-page TIFF per channel, z = page
-    * index): a distributed binaryFile scan over the staged
-    * `stack/ch{c}.tif` files, every page decoded from bytes alone.
+    * index): the staged `stack/ch{c}.tif` files read through
+    * [[TreeFiles]], every page decoded from bytes alone.
     * A stack is an inherently serial container — one file = one task
     * — which is exactly why the reference (and this engine) prefer
     * slice dirs and chunked containers at scale; the arm exists
@@ -372,45 +354,28 @@ object IngestDispatch {
     */
   def parseStackVoxels(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.tif")
-      .load(s"$root/stack")
-      .select(col("path"), col("content")).as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val c = path.split('/').last.stripPrefix("ch").stripSuffix(".tif").toLong
-        graft.octree.TiffBinary.decodePages(bytes).zipWithIndex.flatMap {
-          case ((_, w, h, bits, comp, off, nb), z) =>
-            require(bits == 16 && comp == 8, s"unexpected page encoding ($bits, $comp)")
-            val raw = graft.octree.TiffBinary.inflate(
-              bytes.slice(off.toInt, (off + nb).toInt), (w * h * 2).toInt)
-            for {
-              y <- 0 until h.toInt; x <- 0 until w.toInt
-              v = graft.octree.TiffBinary.getU16(raw, 2 * (y * w.toInt + x))
-              if v > 0
-            } yield (c, z.toLong, y.toLong, x.toLong, v.toLong)
-        }
+    TreeFiles.read(spark, s"$root/stack", _.endsWith(".tif"))
+      .flatMap { case (rel, bytes) =>
+        val c = rel.split('/').last.stripPrefix("ch").stripSuffix(".tif").toLong
+        TiffBinary.stripVoxels(bytes)((z, y, x, v) =>
+          (c, z.toLong, y.toLong, x.toLong, v.toLong))
       }
       .toDF("c", "z", "y", "x", "v")
-      .orderBy("c", "z", "y", "x")
   }
 
   /** The `.jp2` slice READ direction — the role `get_image`
-    * (tiff2octree.py:532, glymur) plays in the reference: a
-    * distributed binaryFile scan over the staged channel-0 `.jp2`
-    * slices, each file's pixels decoded from bytes alone through the
+    * (tiff2octree.py:532, glymur) plays in the reference: the staged
+    * channel-0 `.jp2` slices read through [[TreeFiles]], each file's
+    * pixels decoded from bytes alone through the
     * REAL [[Jp2Codec]] entropy decoder (MQ + EBCOT), z from the
     * sorted file name; must reproduce the channel-0 [[VoxelGrid]]
     * exactly.
     */
   def parseJp2Voxels(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.jp2")
-      .option("recursiveFileLookup", "true")
-      .load(s"$root/slices_jp2")
-      .select(col("path"), col("content")).as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val parts = path.split('/')
+    TreeFiles.read(spark, s"$root/slices_jp2", _.endsWith(".jp2"))
+      .flatMap { case (rel, bytes) =>
+        val parts = rel.split('/')
         val c = parts(parts.length - 2).stripPrefix("ch").toLong
         val z = parts.last.stripPrefix("z").stripSuffix(".jp2").toLong
         val page = Jp2Binary.decode(bytes)
@@ -421,6 +386,5 @@ object IngestDispatch {
         } yield (c, z, y.toLong, x.toLong, v)
       }
       .toDF("c", "z", "y", "x", "v")
-      .orderBy("c", "z", "y", "x")
   }
 }

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.VoxelGrid
+import graft.octree.TreeFiles
 
 /** Physical N5 containers — the reference's PRIMARY input arm
   * (`n5_zarr_to_dask_array` tiff2octree.py:779 ingests them,
@@ -31,8 +32,9 @@ import graft.VoxelGrid
   * share the oct_pyramid oracle verbatim: a green row proves the
   * bytes on disk hold exactly the pyramid the relational model
   * claims. Chunk serialization is per-chunk `mapGroups` work on
-  * executors; parsing is a distributed `binaryFile` scan + per-file
-  * decode.
+  * executors; parsing reads the chunk files through
+  * [[graft.octree.TreeFiles]] and decodes each one on an executor.
+  * The parse and discover frames carry no order.
   */
 object N5Binary {
 
@@ -112,16 +114,10 @@ object N5Binary {
     */
   def writeContainer(spark: SparkSession, dir: String, outRoot: String): Unit = {
     import spark.implicits._
-    new java.io.File(outRoot).mkdirs()
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$outRoot/attributes.json"), rootAttrs.getBytes("UTF-8"))
-    for (c <- 0 until Channels; s <- 0 until Levels) {
-      val d = new java.io.File(s"$outRoot/c$c/s$s")
-      d.mkdirs()
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$outRoot/c$c/s$s/attributes.json"),
+    TreeFiles.write(outRoot, "attributes.json", rootAttrs.getBytes("UTF-8"))
+    for (c <- 0 until Channels; s <- 0 until Levels)
+      TreeFiles.write(outRoot, s"c$c/s$s/attributes.json",
         datasetAttrs(VoxelGrid.Grid >> s).getBytes("UTF-8"))
-    }
     graft.octree.Pyramid(VoxelGrid(spark, dir))
       // pyramid level L (1 = coarsest) lives in dataset s = Levels - L
       .select((lit(Levels.toLong) - col("level")).as("s"), col("c"),
@@ -133,22 +129,10 @@ object N5Binary {
         val vox = it.map(t => (t._3 % Leaf, t._4 % Leaf, t._5 % Leaf, t._6)).toSeq
         // chunk path components are grid positions in dimensions
         // order, FASTEST first: <gx>/<gy>/<gz>
-        (s"c$c/s$s/$gx/$gy", gz.toString, serializeChunk(vox))
+        (s"c$c/s$s/$gx/$gy/$gz", serializeChunk(vox))
       }
-      .foreach { t =>
-        val (rel, name, bytes) = t
-        val d = new java.io.File(s"$outRoot/$rel")
-        d.mkdirs()
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$outRoot/$rel/$name"), bytes): Unit
-      }
+      .foreach { t => TreeFiles.write(outRoot, t._1, t._2) }
   }
-
-  private def chunkFiles(spark: SparkSession, outRoot: String): DataFrame =
-    spark.read.format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .load(outRoot)
-      .filter(!col("path").endsWith("attributes.json"))
 
   /** Every chunk of every (channel, level) decoded back to pyramid
     * voxels (level, c, z, y, x, v) purely from read-back bytes —
@@ -158,10 +142,9 @@ object N5Binary {
     */
   def parseVoxels(spark: SparkSession, outRoot: String): DataFrame = {
     import spark.implicits._
-    chunkFiles(spark, outRoot).select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val parts = path.split('/')
+    TreeFiles.read(spark, outRoot, !_.endsWith("attributes.json"))
+      .flatMap { case (rel, bytes) =>
+        val parts = rel.split('/')
         val (gx, gy, gz) = (parts(parts.length - 3).toLong,
           parts(parts.length - 2).toLong, parts.last.toLong)
         val s = parts(parts.length - 4).stripPrefix("s").toInt
@@ -180,7 +163,6 @@ object N5Binary {
         } yield (level, c, gz * bsZ + iz, gy * bsY + iy, gx * bsX + ix, v.toLong)
       }
       .toDF("level", "c", "z", "y", "x", "v")
-      .orderBy("level", "c", "z", "y", "x")
   }
 
   /** Level/channel discovery purely from read-back `attributes.json`
@@ -191,17 +173,16 @@ object N5Binary {
     * addresses. Shares src_volume_levels' oracle shape.
     */
   def discoverLevels(spark: SparkSession, outRoot: String): DataFrame = {
+    import spark.implicits._
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "dimensions ARRAY<LONG>, blockSize ARRAY<LONG>, dataType STRING")
-    spark.read.format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", "attributes.json")
-      .load(outRoot)
-      .filter(col("path").rlike("/c[0-9]+/s[0-9]+/attributes.json$"))
-      .select(
-        regexp_extract(col("path"), "/s([0-9]+)/attributes\\.json$", 1)
-          .cast("long").as("level"),
-        regexp_extract(col("path"), "/c([0-9]+)/", 1).cast("long").as("c"),
+    TreeFiles.read(spark, outRoot, _.matches("c[0-9]+/s[0-9]+/attributes\\.json"))
+      .map { case (rel, bytes) =>
+        val parts = rel.split('/')
+        (parts(1).stripPrefix("s").toLong, parts(0).stripPrefix("c").toLong, bytes)
+      }
+      .toDF("level", "c", "content")
+      .select(col("level"), col("c"),
         from_json(col("content").cast("string"), schema).as("a"))
       .select(col("level"), col("c"),
         col("a.dimensions").getItem(0).as("edge"),
@@ -209,7 +190,6 @@ object N5Binary {
           ceil(col("a.dimensions").getItem(1) / col("a.blockSize").getItem(1)) *
           ceil(col("a.dimensions").getItem(2) / col("a.blockSize").getItem(2)))
           .cast("long").as("n_blocks"))
-      .orderBy("level", "c")
   }
 
   /** Root pixelResolution decoded from read-back bytes

@@ -86,6 +86,14 @@ object VolumeQueries {
   def writePyramid(pyramid: DataFrame, path: String): Unit =
     pyramid.write.mode(SaveMode.Overwrite).partitionBy("level", "c").parquet(path)
 
+  /** Every voxel of a (level, c)-partitioned pyramid store, read with
+    * the columns its writer wrote, all long: no schema-inference job,
+    * and the `level`/`c` partition values come back as long.
+    */
+  private[graft] def readStore(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema("level LONG, c LONG, z LONG, y LONG, x LONG, v LONG").parquet(path)
+      .select("level", "c", "z", "y", "x", "v")
+
   def readLevel(spark: SparkSession, path: String, level: Int): DataFrame =
     spark.read.parquet(path).filter(col("level") === level)
 
@@ -151,7 +159,7 @@ object VolumeQueries {
     */
   private[graft] def compactStore(spark: SparkSession, from: String,
       to: String): Unit =
-    compactPlan(spark.read.parquet(from))
+    compactPlan(readStore(spark, from))
       .write.option("maxRecordsPerFile", CompactTargetRows)
       .mode(SaveMode.Overwrite).partitionBy("level", "c").parquet(to)
 
@@ -222,10 +230,7 @@ object VolumeQueries {
       Scratch.withDir("vcmp") { comp =>
         fragmentStore(spark, dir, frag)
         compactStore(spark, frag, comp)
-        spark.read.parquet(comp)
-          .select(col("level").cast("long").as("level"),
-            col("c").cast("long").as("c"), col("z"), col("y"), col("x"), col("v"))
-          .orderBy("level", "c", "z", "y", "x").localCheckpoint(true)
+        readStore(spark, comp).orderBy("level", "c", "z", "y", "x").localCheckpoint(true)
       }
     }
   }
@@ -266,10 +271,7 @@ object VolumeQueries {
     // the read-back is checkpointed before the staging dir goes
     Scratch.withDir("pyr_sink") { tmp =>
       writePyramid(graft.octree.Pyramid(graft.VoxelGrid(spark, dir)), tmp)
-      spark.read.parquet(tmp)
-        .select(col("level").cast("long").as("level"),
-          col("c").cast("long").as("c"), col("z"), col("y"), col("x"), col("v"))
-        .localCheckpoint(true)
+      readStore(spark, tmp).localCheckpoint(true)
         .orderBy("level", "c", "z", "y", "x")
     }
   }
@@ -683,7 +685,7 @@ object VolumeQueries {
           }
           if (os != null) os.close()
         }
-      val agg = graft.octree.TreeFiles.read(spark, tmp, ".tfrecord")
+      val agg = graft.octree.TreeFiles.read(spark, tmp, _.endsWith(".tfrecord"))
         .flatMap { case (path, bytes) =>
           val shard = path.substring(path.lastIndexOf("shard-") + 6)
             .stripSuffix(".tfrecord").toLong
@@ -750,7 +752,7 @@ object VolumeQueries {
           }
           close()
         }
-      val agg = graft.octree.TreeFiles.read(spark, tmp, ".tar")
+      val agg = graft.octree.TreeFiles.read(spark, tmp, _.endsWith(".tar"))
         .flatMap { case (path, bytes) =>
           val shard = path.substring(path.lastIndexOf("shard-") + 6)
             .stripSuffix(".tar").toLong

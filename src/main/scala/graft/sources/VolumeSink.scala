@@ -99,20 +99,15 @@ object VolumeSink {
   }
 
   /** The written store decoded back to pyramid voxels
-    * (level, c, z, y, x, v) purely from chunk bytes — the round-trip
-    * direction the src_volume_sink oracle certifies against
-    * oct_pyramid's SQL.
+    * (level, c, z, y, x, v) purely from chunk bytes, read through
+    * [[graft.octree.TreeFiles]] — the round-trip direction the
+    * src_volume_sink oracle certifies against oct_pyramid's SQL.
     */
   def parseVoxels(spark: org.apache.spark.sql.SparkSession, root: String,
       leaf: Int = graft.VoxelGrid.Leaf): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.vox")
-      .option("recursiveFileLookup", "true")
-      .load(root)
-      .select(col("content")).as[Array[Byte]]
-      .flatMap { bytes =>
+    graft.octree.TreeFiles.read(spark, root, _.endsWith(".vox"))
+      .flatMap { case (_, bytes) =>
         val (level, c, bz, by, bx, vox) = decode(bytes)
         vox.map { case (lz, ly, lx, v) =>
           (level, c, (bz - 1) * leaf + lz, (by - 1) * leaf + ly, (bx - 1) * leaf + lx, v)
@@ -211,13 +206,11 @@ class VolumeSinkWriter(path: String, taskId: Long) extends DataWriter[InternalRo
 
   private def flush(): Unit = if (haveBlock) {
     val (level, c, bz, by, bx) = curKey
-    val dir = new java.io.File(s"$path/level=$level/c=$c")
-    dir.mkdirs()
-    val fin = s"${dir.getPath}/${VolumeSink.fileName(bz, by, bx)}"
+    val fin = s"level=$level/c=$c/${VolumeSink.fileName(bz, by, bx)}"
     val tmp = s"$fin.inprogress.$taskId"
-    java.nio.file.Files.write(java.nio.file.Paths.get(tmp),
-      VolumeSink.encode(level, c, bz, by, bx, buf.result())): Unit
-    staged += ((tmp, fin))
+    graft.octree.TreeFiles.write(path, tmp,
+      VolumeSink.encode(level, c, bz, by, bx, buf.result()))
+    staged += ((s"$path/$tmp", s"$path/$fin"))
     buf = Seq.newBuilder
     haveBlock = false
   }

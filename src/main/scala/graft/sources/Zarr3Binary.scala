@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.VoxelGrid
+import graft.octree.TreeFiles
 
 /** Physical Zarr v3 containers — the CURRENT Zarr spec (zarr-specs
   * v3.0), the format the ecosystem is migrating the v2 stores the
@@ -28,10 +29,10 @@ import graft.VoxelGrid
   * the codec pipeline (gzip-framed), missing chunks = fill_value 0.
   *
   * Same Spark shape as v2: bounded driver-side metadata write/walk,
-  * executor-side chunk serialization, distributed binaryFile re-parse
-  * broadcast-joined against the parsed metadata catalog; level
-  * payloads are the arthur pyramid so the oct_pyramid oracle is
-  * shared verbatim.
+  * executor-side chunk serialization, chunk files read back through
+  * [[graft.octree.TreeFiles]] and broadcast-joined against the parsed
+  * metadata catalog; level payloads are the arthur pyramid so the
+  * oct_pyramid oracle is shared verbatim.
   */
 object Zarr3Binary {
 
@@ -71,18 +72,11 @@ object Zarr3Binary {
     */
   def writeContainer(spark: SparkSession, dir: String, outRoot: String): Unit = {
     import spark.implicits._
-    new java.io.File(outRoot).mkdirs()
-    def put(rel: String, txt: String): Unit =
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$outRoot/$rel"), txt.getBytes("UTF-8")): Unit
+    def put(rel: String, txt: String): Unit = TreeFiles.write(outRoot, rel, txt.getBytes("UTF-8"))
     put("zarr.json", groupJson(withAttrs = true))
     for (c <- 0 until Channels) {
-      new java.io.File(s"$outRoot/c$c").mkdirs()
       put(s"c$c/zarr.json", groupJson(withAttrs = false))
-      for (s <- 0 until Levels) {
-        new java.io.File(s"$outRoot/c$c/s$s").mkdirs()
-        put(s"c$c/s$s/zarr.json", arrayJson(VoxelGrid.Grid >> s))
-      }
+      for (s <- 0 until Levels) put(s"c$c/s$s/zarr.json", arrayJson(VoxelGrid.Grid >> s))
     }
     graft.octree.Pyramid(VoxelGrid(spark, dir))
       .select((lit(Levels.toLong) - col("level")).as("s"), col("c"),
@@ -92,15 +86,9 @@ object Zarr3Binary {
       .mapGroups { (key: (Long, Long, Long, Long, Long), it: Iterator[(Long, Long, Long, Long, Long, Long)]) =>
         val (c, s, gz, gy, gx) = key
         val vox = it.map(t => (t._3 % Leaf, t._4 % Leaf, t._5 % Leaf, t._6)).toSeq
-        (s"c$c/s$s/c/$gz/$gy", gx.toString, serializeChunk(vox))
+        (s"c$c/s$s/c/$gz/$gy/$gx", serializeChunk(vox))
       }
-      .foreach { t =>
-        val (rel, name, bytes) = t
-        val d = new java.io.File(s"$outRoot/$rel")
-        d.mkdirs()
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$outRoot/$rel/$name"), bytes): Unit
-      }
+      .foreach { t => TreeFiles.write(outRoot, t._1, t._2) }
   }
 
   /** Parsed per-array catalog from read-back `zarr.json` bytes:
@@ -141,21 +129,14 @@ object Zarr3Binary {
     */
   def parseVoxels(spark: SparkSession, outRoot: String): DataFrame = {
     import spark.implicits._
-    val chunks = spark.read.format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .load(outRoot)
-      .filter(!col("path").rlike("/zarr\\.json$"))
-      .select(
-        regexp_extract(col("path"), "/c([0-9]+)/", 1).cast("long").as("c"),
-        regexp_extract(col("path"), "/s([0-9]+)/", 1).cast("long").as("s"),
-        regexp_extract(col("path"), "/c/([0-9]+)/([0-9]+)/([0-9]+)$", 1)
-          .cast("long").as("gz"),
-        regexp_extract(col("path"), "/c/([0-9]+)/([0-9]+)/([0-9]+)$", 2)
-          .cast("long").as("gy"),
-        regexp_extract(col("path"), "/c/([0-9]+)/([0-9]+)/([0-9]+)$", 3)
-          .cast("long").as("gx"),
-        col("content"))
-    chunks
+    TreeFiles.read(spark, outRoot,
+        _.matches("c[0-9]+/s[0-9]+/c/[0-9]+/[0-9]+/[0-9]+"))
+      .map { case (rel, bytes) =>
+        val p = rel.split('/')
+        (p(0).stripPrefix("c").toLong, p(1).stripPrefix("s").toLong,
+          p(3).toLong, p(4).toLong, p(5).toLong, bytes)
+      }
+      .toDF("c", "s", "gz", "gy", "gx", "content")
       .join(broadcast(arrayMeta(spark, outRoot)), Seq("c", "s"))
       .select(col("s"), col("c"), col("gz"), col("gy"), col("gx"),
         col("bsZ"), col("bsY"), col("bsX"), col("content"))
@@ -172,7 +153,6 @@ object Zarr3Binary {
         } yield (level, c, gz * bsZ + iz, gy * bsY + iy, gx * bsX + ix, v.toLong)
       }
       .toDF("level", "c", "z", "y", "x", "v")
-      .orderBy("level", "c", "z", "y", "x")
   }
 
   /** Level/channel discovery from read-back `zarr.json` bytes —
@@ -182,7 +162,6 @@ object Zarr3Binary {
   def discoverLevels(spark: SparkSession, outRoot: String): DataFrame =
     arrayMeta(spark, outRoot)
       .select(col("s").as("level"), col("c"), col("edge"), col("n_blocks"))
-      .orderBy("level", "c")
 
   /** Root pixelResolution from the v3 root document's attributes. */
   def pixelResolution(outRoot: String): Seq[Double] = {

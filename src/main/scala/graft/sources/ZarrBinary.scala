@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.VoxelGrid
+import graft.octree.TreeFiles
 
 /** Physical Zarr (v2) containers — the OTHER half of the reference's
   * primary input arm: `zarr.open(indir)` is tried FIRST and only
@@ -29,8 +30,9 @@ import graft.VoxelGrid
   * The level payloads are the `arthur` pyramid (the frames
   * oct_pyramid verifies), so parsing every level back from bytes
   * shares the oct_pyramid oracle verbatim. Chunk serialization is
-  * per-chunk `mapGroups` work on executors; parsing is a distributed
-  * `binaryFile` scan broadcast-joined with the parsed `.zarray`
+  * per-chunk `mapGroups` work on executors; parsing reads the chunk
+  * files through [[graft.octree.TreeFiles]] (which skips the dot-file
+  * metadata) and broadcast-joins them with the parsed `.zarray`
   * frames (array metadata is O(levels × channels) — tiny — while
   * chunk bytes are the 100 TB side, exactly the asymmetry a
   * broadcast join wants).
@@ -136,10 +138,7 @@ object ZarrBinary {
   def writeContainer(spark: SparkSession, dir: String, outRoot: String,
       separator: String = ".", compressor: String = "zlib"): Unit = {
     import spark.implicits._
-    new java.io.File(outRoot).mkdirs()
-    def put(rel: String, txt: String): Unit =
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$outRoot/$rel"), txt.getBytes("UTF-8")): Unit
+    def put(rel: String, txt: String): Unit = TreeFiles.write(outRoot, rel, txt.getBytes("UTF-8"))
     put(".zgroup", zgroup)
     put(".zattrs", zattrs)
     require(separator == "." || separator == "/",
@@ -147,12 +146,9 @@ object ZarrBinary {
     require(compressor == "zlib" || compressor == "gzip",
       s"unsupported compressor '$compressor'")
     for (c <- 0 until Channels) {
-      new java.io.File(s"$outRoot/c$c").mkdirs()
       put(s"c$c/.zgroup", zgroup)
-      for (s <- 0 until Levels) {
-        new java.io.File(s"$outRoot/c$c/s$s").mkdirs()
+      for (s <- 0 until Levels)
         put(s"c$c/s$s/.zarray", zarray(VoxelGrid.Grid >> s, separator, compressor))
-      }
     }
     graft.octree.Pyramid(VoxelGrid(spark, dir))
       // pyramid level L (1 = coarsest) lives in array s = Levels - L
@@ -165,16 +161,9 @@ object ZarrBinary {
         val vox = it.map(t => (t._3 % Leaf, t._4 % Leaf, t._5 % Leaf, t._6)).toSeq
         // chunk position in SHAPE order, flat file <gz>.<gy>.<gx> or
         // nested dirs <gz>/<gy>/<gx> per the separator
-        if (separator == ".") (s"c$c/s$s", s"$gz.$gy.$gx", serializeChunk(vox, compressor))
-        else (s"c$c/s$s/$gz/$gy", gx.toString, serializeChunk(vox, compressor))
+        (s"c$c/s$s/$gz$separator$gy$separator$gx", serializeChunk(vox, compressor))
       }
-      .foreach { t =>
-        val (rel, name, bytes) = t
-        val d = new java.io.File(s"$outRoot/$rel")
-        d.mkdirs()
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$outRoot/$rel/$name"), bytes): Unit
-      }
+      .foreach { t => TreeFiles.write(outRoot, t._1, t._2) }
   }
 
   /** Extracts a JSON long-array field from `.zarray` text. Bounded
@@ -233,24 +222,17 @@ object ZarrBinary {
     */
   def parseVoxels(spark: SparkSession, outRoot: String): DataFrame = {
     import spark.implicits._
-    val chunks = spark.read.format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .load(outRoot)
-      .filter(!col("path").rlike("/\\.(zarray|zgroup|zattrs)$"))
-      .select(
-        regexp_extract(col("path"), "/c([0-9]+)/", 1).cast("long").as("c"),
-        regexp_extract(col("path"), "/s([0-9]+)/", 1).cast("long").as("s"),
-        // flat "gz.gy.gx" files and nested "gz/gy/gx" dirs both match:
-        // the three grid coordinates are the last three dot- or
-        // slash-separated numeric components
-        regexp_extract(col("path"), "/([0-9]+)[./]([0-9]+)[./]([0-9]+)$", 1)
-          .cast("long").as("gz"),
-        regexp_extract(col("path"), "/([0-9]+)[./]([0-9]+)[./]([0-9]+)$", 2)
-          .cast("long").as("gy"),
-        regexp_extract(col("path"), "/([0-9]+)[./]([0-9]+)[./]([0-9]+)$", 3)
-          .cast("long").as("gx"),
-        col("content"))
-    chunks
+    // flat "gz.gy.gx" files and nested "gz/gy/gx" dirs both match:
+    // the three grid coordinates are the last three dot- or
+    // slash-separated components
+    TreeFiles.read(spark, outRoot,
+        _.matches("c[0-9]+/s[0-9]+/[0-9]+[./][0-9]+[./][0-9]+"))
+      .map { case (rel, bytes) =>
+        val p = rel.split("[./]")
+        (p(0).stripPrefix("c").toLong, p(1).stripPrefix("s").toLong,
+          p(2).toLong, p(3).toLong, p(4).toLong, bytes)
+      }
+      .toDF("c", "s", "gz", "gy", "gx", "content")
       .join(broadcast(arrayMeta(spark, outRoot)), Seq("c", "s"))
       .select(col("s"), col("c"), col("gz"), col("gy"), col("gx"),
         col("bsZ"), col("bsY"), col("bsX"), col("compressor"), col("content"))
@@ -273,7 +255,6 @@ object ZarrBinary {
         } yield (level, c, gz * bsZ + iz, gy * bsY + iy, gx * bsX + ix, v.toLong)
       }
       .toDF("level", "c", "z", "y", "x", "v")
-      .orderBy("level", "c", "z", "y", "x")
   }
 
   /** Level/channel discovery purely from read-back `.zarray` bytes —
@@ -285,7 +266,6 @@ object ZarrBinary {
   def discoverLevels(spark: SparkSession, outRoot: String): DataFrame =
     arrayMeta(spark, outRoot)
       .select(col("s").as("level"), col("c"), col("edge"), col("n_blocks"))
-      .orderBy("level", "c")
 
   /** Root pixelResolution decoded from read-back `.zattrs` bytes
     * (`get_pixel_resolution_n5_zarr` tiff2octree.py:694 reads

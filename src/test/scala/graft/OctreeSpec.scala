@@ -308,13 +308,15 @@ class OctreeSpec extends AnyFunSuite with BeforeAndAfterAll {
       // 1. the probe frame decoded from raw bytes equals the
       //    oracle-verified relational ktxParse frame, row for row
       val want = OctreeQueries.ktxParse(spark, dir).collect().map(_.toSeq)
-      val got = KtxBinary.parseProbes(spark, out).collect().map(_.toSeq)
+      val got = KtxBinary.parseProbes(spark, out).orderBy("bz", "by", "bx", "probe")
+        .collect().map(_.toSeq)
       assert(got.length === want.length)
       assert(got.toSeq === want.toSeq)
       // 2. mip-0 payloads decode back to the exact source voxel grid
       val voxWant = VoxelGrid(spark, dir).orderBy("c", "z", "y", "x")
         .collect().map(_.toSeq)
-      val voxGot = KtxBinary.parseVoxels(spark, out).collect().map(_.toSeq)
+      val voxGot = KtxBinary.parseVoxels(spark, out).orderBy("c", "z", "y", "x")
+        .collect().map(_.toSeq)
       assert(voxGot.toSeq === voxWant.toSeq)
       // 3. each file's on-disk size equals the header frame's
       //    file_bytes accounting
@@ -382,7 +384,8 @@ class OctreeSpec extends AnyFunSuite with BeforeAndAfterAll {
       // 1. bytes decode back to exactly the source volume model
       val want = VoxelGrid(spark, dir).orderBy("c", "z", "y", "x")
         .collect().map(_.toSeq)
-      val got = TiffBinary.parseVoxels(spark, out).collect().map(_.toSeq)
+      val got = TiffBinary.parseVoxels(spark, out).orderBy("c", "z", "y", "x")
+        .collect().map(_.toSeq)
       assert(got.length === want.length)
       assert(got.toSeq === want.toSeq)
       // 2. container shape: each octant dir holds exactly the files of
@@ -458,8 +461,10 @@ class OctreeSpec extends AnyFunSuite with BeforeAndAfterAll {
       Scratch.withDir("rt_tiled_spec") { tiled =>
         TiffBinary.writeBlocks(spark, dir, strip)
         TiffBinary.convTiledDir(spark, strip, tiled, 16)
-        val a = TiffBinary.parseVoxels(spark, strip).collect().map(_.toSeq)
-        val b = TiffBinary.parseVoxelsTiled(spark, tiled).collect().map(_.toSeq)
+        val a = TiffBinary.parseVoxels(spark, strip).orderBy("c", "z", "y", "x")
+          .collect().map(_.toSeq)
+        val b = TiffBinary.parseVoxelsTiled(spark, tiled).orderBy("c", "z", "y", "x")
+          .collect().map(_.toSeq)
         assert(a.nonEmpty)
         assert(b.toSeq === a.toSeq)
         // the tiled mirror holds exactly the strip tree's files

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -367,6 +368,19 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
           s"$path/$fn collects a frame on the driver")
       }
     }
+  }
+
+  test("no Hadoop binaryFile scan is left under src/main") {
+    // volume block files are listed on the driver and read on
+    // executors through octree/TreeFiles; a binaryFile scan pays
+    // Hadoop file-status and split costs on every tiny block file
+    val stream = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    val sources = try stream.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally stream.close()
+    val hits = sources.filter(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+      .contains("format(\"binaryFile\")"))
+    assert(sources.nonEmpty)
+    assert(hits.isEmpty, s"binaryFile scans in ${hits.mkString(", ")}")
   }
 
   test("r10b operators keep their scale contracts") {

@@ -128,6 +128,20 @@ class VolumeSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("pyramid store reads take the writer's schema: no inference job, long level and c") {
+    Scratch.withDir("pyr_schema") { dir =>
+      val pyr = graft.octree.Pyramid(VolumeGridFixture(spark))
+      VolumeQueries.writePyramid(pyr, dir)
+      var back: org.apache.spark.sql.DataFrame = null
+      assert(SparkJobs.count(spark) { back = VolumeQueries.readStore(spark, dir) } === 0)
+      // without a schema the same read pays a schema-inference job
+      assert(SparkJobs.count(spark)(spark.read.parquet(dir): Unit) === 1)
+      assert(back.dtypes.toSeq === pyr.dtypes.toSeq)
+      val cols = Seq("level", "c", "z", "y", "x").map(col)
+      assert(back.orderBy(cols: _*).collect().toSeq === pyr.orderBy(cols: _*).collect().toSeq)
+    }
+  }
+
   test("pyramid and volume sink rows remove their staging directories") {
     val sf = "/root/testdata/sf0.001"
     val root = new java.io.File(Scratch.root)
@@ -358,11 +372,12 @@ class VolumeSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       // 1. every level's voxels decoded from bytes == the pyramid frame
       val want = graft.octree.Pyramid(graft.VoxelGrid(spark, dir))
         .orderBy("level", "c", "z", "y", "x").collect().map(_.toSeq)
-      val got = N5Binary.parseVoxels(spark, out).collect().map(_.toSeq)
+      val got = N5Binary.parseVoxels(spark, out).orderBy("level", "c", "z", "y", "x")
+        .collect().map(_.toSeq)
       assert(got.nonEmpty)
       assert(got.toSeq === want.toSeq)
       // 2. discovery from attributes.json bytes == the full catalog
-      val levels = N5Binary.discoverLevels(spark, out).collect()
+      val levels = N5Binary.discoverLevels(spark, out).orderBy("level", "c").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
       assert(levels === (for (s <- 0L until 3L; c <- 0L until 2L) yield {
         val edge = 16L >> s
@@ -402,12 +417,13 @@ class VolumeSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       // 1. every level's voxels decoded from bytes == the pyramid frame
       val want = graft.octree.Pyramid(graft.VoxelGrid(spark, dir))
         .orderBy("level", "c", "z", "y", "x").collect().map(_.toSeq)
-      val got = ZarrBinary.parseVoxels(spark, out).collect().map(_.toSeq)
+      val got = ZarrBinary.parseVoxels(spark, out).orderBy("level", "c", "z", "y", "x")
+        .collect().map(_.toSeq)
       assert(got.nonEmpty)
       assert(got.toSeq === want.toSeq)
       // 2. discovery from .zarray bytes == the full catalog (same rows
       //    as the N5 flavor — the two containers are interchangeable)
-      val levels = ZarrBinary.discoverLevels(spark, out).collect()
+      val levels = ZarrBinary.discoverLevels(spark, out).orderBy("level", "c").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
       assert(levels === (for (s <- 0L until 3L; c <- 0L until 2L) yield {
         val edge = 16L >> s
@@ -451,7 +467,8 @@ class VolumeSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
         .exists(f => f.isDirectory && f.getName.forall(_.isDigit)))
       val want = graft.octree.Pyramid(graft.VoxelGrid(spark, dir))
         .orderBy("level", "c", "z", "y", "x").collect().map(_.toSeq)
-      val got = ZarrBinary.parseVoxels(spark, out).collect().map(_.toSeq)
+      val got = ZarrBinary.parseVoxels(spark, out).orderBy("level", "c", "z", "y", "x")
+        .collect().map(_.toSeq)
       assert(got.nonEmpty)
       assert(got.toSeq === want.toSeq)
       // and the .zarray advertises the separator
@@ -477,7 +494,8 @@ class VolumeSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert((head(0) & 0xff) === 0x1f && (head(1) & 0xff) === 0x8b)
       val want = graft.octree.Pyramid(graft.VoxelGrid(spark, dir))
         .orderBy("level", "c", "z", "y", "x").collect().map(_.toSeq)
-      val got = ZarrBinary.parseVoxels(spark, out).collect().map(_.toSeq)
+      val got = ZarrBinary.parseVoxels(spark, out).orderBy("level", "c", "z", "y", "x")
+        .collect().map(_.toSeq)
       assert(got.nonEmpty)
       assert(got.toSeq === want.toSeq)
     }
@@ -588,7 +606,7 @@ class VolumeSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = "/root/testdata/sf0.001"
     Scratch.withDir("ingest_spec") { out =>
       graft.sources.IngestDispatch.stageAll(spark, dir, out)
-      val rows = graft.sources.IngestDispatch.discover(spark, out).collect()
+      val rows = graft.sources.IngestDispatch.discover(spark, out).orderBy("input").collect()
         .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getLong(3),
           (r.getLong(4), r.getLong(5), r.getLong(6)), r.getLong(7), r.getLong(8),
           r.getLong(9), (r.getLong(10), r.getLong(11), r.getLong(12)))).toSeq
@@ -615,13 +633,13 @@ class VolumeSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       // decoder and matches the voxel model exactly
       val wantC0 = want.filter(_.head == 0L)
       val gotJp2 = graft.sources.IngestDispatch.parseJp2Voxels(spark, out)
-        .collect().map(_.toSeq)
+        .orderBy("c", "z", "y", "x").collect().map(_.toSeq)
       assert(gotJp2.nonEmpty)
       assert(gotJp2.toSeq === wantC0.toSeq)
       // the stack arm's multi-page read direction reproduces both
       // channels exactly (z = page index)
       val gotStack = graft.sources.IngestDispatch.parseStackVoxels(spark, out)
-        .collect().map(_.toSeq)
+        .orderBy("c", "z", "y", "x").collect().map(_.toSeq)
       assert(gotStack.nonEmpty)
       assert(gotStack.toSeq === want.toSeq)
     }
@@ -709,10 +727,11 @@ class VolumeSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       // voxels decoded from bytes == the pyramid frame (same bar as v2)
       val want = graft.octree.Pyramid(graft.VoxelGrid(spark, dir))
         .orderBy("level", "c", "z", "y", "x").collect().map(_.toSeq)
-      val got = Zarr3Binary.parseVoxels(spark, out).collect().map(_.toSeq)
+      val got = Zarr3Binary.parseVoxels(spark, out).orderBy("level", "c", "z", "y", "x")
+        .collect().map(_.toSeq)
       assert(got.nonEmpty && got.toSeq === want.toSeq)
       // catalog from zarr.json bytes == the shared container catalog
-      val levels = Zarr3Binary.discoverLevels(spark, out).collect()
+      val levels = Zarr3Binary.discoverLevels(spark, out).orderBy("level", "c").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
       assert(levels === (for (s <- 0L until 3L; c <- 0L until 2L) yield {
         val edge = 16L >> s
