@@ -69,10 +69,11 @@ object OctreePipeline {
   def writeTree(spark: SparkSession, pyr: DataFrame, outRoot: String,
       skipExisting: Boolean = false): DataFrame = {
     import spark.implicits._
-    // the resume anti-set: relpath -> length of what is already there
-    val doneB = spark.sparkContext.broadcast(
-      if (skipExisting && new java.io.File(outRoot).isDirectory) TreeFiles.list(outRoot).toMap
-      else Map.empty[String, Long])
+    // the resume anti-set: relpath -> length of what is already there,
+    // broadcast only on resume (a fresh convert skips nothing)
+    val doneB = Option.when(skipExisting)(spark.sparkContext.broadcast(
+      if (new java.io.File(outRoot).isDirectory) TreeFiles.list(outRoot).toMap
+      else Map.empty[String, Long]))
     val block = Seq(col("level"), col("bz"), col("by"), col("bx"))
     Addressing.blockify(pyr)
       .select(col("level"), col("bz"), col("by"), col("bx"),
@@ -95,7 +96,7 @@ object OctreePipeline {
         val ktx = (pre + KtxBinary.nameAt(level, bz, by, bx),
           () => KtxBinary.serializeAt(level, bz, by, bx, vox)._3)
         (tiffs :+ ktx).map { case (relPath, bytes) =>
-          doneB.value.get(relPath) match {
+          doneB.flatMap(_.value.get(relPath)) match {
             case Some(listed) => (level.toLong, relPath, listed, 0L)
             case None =>
               val b = bytes()

@@ -2,7 +2,7 @@ package graft.octree
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.VoxelGrid
+import graft.{VoxelGrid, Zlib}
 
 /** Physical `.tif` byte streams for the leaf blocks — the reference's
   * actual storage format, written and re-parsed at the byte level
@@ -56,33 +56,16 @@ object TiffBinary {
     (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) |
       ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
 
-  private def deflate(raw: Array[Byte]): Array[Byte] = {
-    val d = new java.util.zip.Deflater(6) // the reference's ZLIB level
-    d.setInput(raw); d.finish()
-    val buf = new Array[Byte](raw.length + 64)
-    val out = new java.io.ByteArrayOutputStream()
-    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-    d.end()
-    out.toByteArray
-  }
+  /** A strip or tile payload, inflated to exactly `rawLen` bytes. */
+  private[graft] def inflate(comp: Array[Byte], rawLen: Int): Array[Byte] =
+    Zlib.inflate(comp, rawLen)
 
-  private[graft] def inflate(comp: Array[Byte], rawLen: Int): Array[Byte] = {
-    val inf = new java.util.zip.Inflater()
-    inf.setInput(comp)
-    val raw = new Array[Byte](rawLen)
-    var off = 0
-    while (off < rawLen && !inf.finished()) {
-      val n = inf.inflate(raw, off, rawLen - off)
-      // inflate() == 0 with needsInput means the stream is TRUNCATED:
-      // no more input will ever arrive, so looping again would spin
-      // forever — fail loudly instead
-      require(n > 0 || !(inf.needsInput() || inf.needsDictionary()),
-        s"truncated deflate stream: $off of $rawLen bytes inflated")
-      off += n
-    }
-    inf.end()
-    require(off == rawLen, s"short inflate: $off of $rawLen")
-    raw
+  /** `f` run with one compressor at the reference's ZLIB level 6, which
+    * deflates every strip or tile of one file.
+    */
+  private def withDeflate[A](f: Zlib.Deflate => A): A = {
+    val d = new Zlib.Deflate(6)
+    try f(d) finally d.end()
   }
 
   // TIFF field types
@@ -100,25 +83,28 @@ object TiffBinary {
     * (strip offsets known by then).
     */
   private[graft] def serializePages(pages: Seq[Array[Array[Long]]]): Array[Byte] = {
-    val strips: Seq[Array[Byte]] = pages.map { page =>
-      val raw = new java.io.ByteArrayOutputStream()
-      for (row <- page; v <- row) putU16(raw, v.toInt)
-      deflate(raw.toByteArray)
-    }
-    val padded = strips.map(evenPad)
-    val out = new java.io.ByteArrayOutputStream()
-    out.write('I'); out.write('I'); putU16(out, 42)
-    val stripOffs = padded.scanLeft(8L)(_ + _.length)
-    putU32(out, stripOffs.last) // first IFD sits after all strip data
-    padded.foreach(out.write)
+    val strips: IndexedSeq[Array[Byte]] = withDeflate(d => pages.iterator.map { page =>
+      val raw = new Array[Byte](2 * page.iterator.map(_.length).sum)
+      var i = 0
+      for (row <- page; v <- row) {
+        raw(i) = v.toByte; raw(i + 1) = (v >> 8).toByte
+        i += 2
+      }
+      d(raw)
+    }.toIndexedSeq)
+    val stripOffs = strips.scanLeft(8L)((o, st) => o + st.length + st.length % 2)
     // one IFD per page: 10 ascending-sorted tags, 12 bytes each
     val ifdSize = 2 + 10 * 12 + 4
-    def entry(tag: Int, typ: Int, value: Long): Unit = {
-      putU16(out, tag); putU16(out, typ); putU32(out, 1L); putU32(out, value)
-    }
-    for (z <- pages.indices) {
-      val (h, w) = (pages(z).length.toLong, pages(z).head.length.toLong)
-      putU16(out, 10)
+    val out = java.nio.ByteBuffer.allocate((stripOffs.last + strips.length * ifdSize).toInt)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    out.put('I'.toByte).put('I'.toByte).putShort(42.toShort)
+    out.putInt(stripOffs.last.toInt) // first IFD sits after all strip data
+    strips.foreach { st => out.put(st); if (st.length % 2 == 1) out.put(0.toByte) }
+    def entry(tag: Int, typ: Int, value: Long): Unit =
+      out.putShort(tag.toShort).putShort(typ.toShort).putInt(1).putInt(value.toInt)
+    for ((page, z) <- pages.iterator.zipWithIndex) {
+      val (h, w) = (page.length.toLong, page.head.length.toLong)
+      out.putShort(10.toShort)
       entry(256, TLong, w)                       // ImageWidth
       entry(257, TLong, h)                       // ImageLength
       entry(258, TShort, 16L)                    // BitsPerSample
@@ -129,10 +115,10 @@ object TiffBinary {
       entry(278, TLong, h)                       // RowsPerStrip
       entry(279, TLong, strips(z).length.toLong) // StripByteCounts (true length, pad excluded)
       entry(339, TShort, 1L)                     // SampleFormat: unsigned
-      val next = if (z == pages.length - 1) 0L else stripOffs.last + (z + 1).toLong * ifdSize
-      putU32(out, next)
+      val next = if (z == strips.length - 1) 0L else stripOffs.last + (z + 1).toLong * ifdSize
+      out.putInt(next.toInt)
     }
-    out.toByteArray
+    out.array
   }
 
   /** Serialize one (block, channel) as a Leaf-page strip TIFF. */
@@ -157,7 +143,7 @@ object TiffBinary {
   private[graft] def serializeTiledPages(pages: Seq[Array[Array[Long]]], t: Int): Array[Byte] = {
     require(t % 16 == 0, s"TIFF tile size must be a multiple of 16, got $t")
     // per page: the tile grid, row-major (ty, tx), each zero-padded t×t
-    val pageTiles: Seq[Seq[Array[Byte]]] = pages.map { page =>
+    val pageTiles: Seq[Seq[Array[Byte]]] = withDeflate(d => pages.iterator.map { page =>
       val (h, w) = (page.length, page.head.length)
       val (nty, ntx) = ((h + t - 1) / t, (w + t - 1) / t)
       for (ty <- 0 until nty; tx <- 0 until ntx) yield {
@@ -166,9 +152,9 @@ object TiffBinary {
           val (y, x) = (ty * t + dy, tx * t + dx)
           putU16(raw, if (y < h && x < w) page(y)(x).toInt else 0)
         }
-        deflate(raw.toByteArray)
+        d(raw.toByteArray)
       }
-    }
+    }.toIndexedSeq)
     val padded = pageTiles.map(_.map(evenPad))
     val out = new java.io.ByteArrayOutputStream()
     out.write('I'); out.write('I'); putU16(out, 42)

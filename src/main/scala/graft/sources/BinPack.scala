@@ -60,7 +60,7 @@ object BinPack {
         floor(col("o_totalprice") * 100).cast("long").as("total_c"))
     val mk = o.agg(max("k")).collect()(0).getLong(0)
     val b = o.withColumn("fid", expr(s"(k * $NSmall) div (${mk + 1}L)"))
-    b.repartition(col("fid")).sortWithinPartitions("fid", "k")
+    b.transform(ManifestTable.byPartition("fid")).sortWithinPartitions("fid", "k")
       .write.mode(SaveMode.Overwrite).partitionBy("fid")
       .parquet(s"$store/data")
     val v1 = SnapshotStore.commit(store, SnapshotStore.listDataFiles(store))
@@ -85,7 +85,7 @@ object BinPack {
     val binMap = binOf.toSeq.toDF("fid", "bin")
     SnapshotStore.read(spark, store, v1)
       .join(broadcast(binMap), Seq("fid"))
-      .repartition(col("bin")).sortWithinPartitions("bin", "k")
+      .transform(ManifestTable.byPartition("bin")).sortWithinPartitions("bin", "k")
       .select("k", "total_c", "bin")
       .write.mode(SaveMode.Append).partitionBy("bin")
       .parquet(s"$store/data2")

@@ -56,19 +56,20 @@ object BloomIndex {
 
   /** Write orders date-partitioned (p = order year) on the
     * [[ManifestTable]] core, whose stats size each file's filter
-    * (m = BitsPerKey * keys in file; orderkey is the primary key, so
-    * keys = rows) and carry its key maximum; then the per-file sparse
-    * bloom-word index beside the data.
+    * (m = BitsPerKey * n_rows; orderkey is the primary key, so
+    * keys = rows) and carry its key maximum `hi_k`; then the per-file
+    * sparse bloom-word index beside the data, built from the store
+    * read back.
     */
   private[graft] def stage(spark: SparkSession, dir: String): ManifestTable = {
     val t = ManifestTable.write("bloom", Tables(spark, dir, "orders")
         .select(col("o_orderkey").as("k"),
           floor(col("o_totalprice") * 100).cast("long").as("price_c"),
           year(col("o_orderdate")).cast("long").as("p")),
-      Seq("p"), Nil, (count(lit(1)) * BitsPerKey).as("m"), max("k").as("mxk"))
+      Seq("p"), Nil, Seq("k"))
     // the index: distinct bloom positions -> sparse non-zero words,
     // built with a map-side-combinable two-level bit_or aggregation
-    t.pinned.join(broadcast(t.statsFrame.select("p", "m")), Seq("p"))
+    t.read(t.stats).join(broadcast(filterBits(t)), Seq("p"))
       .select(col("p"), explode(array((0 until BloomK).map(i =>
         expr(posExpr(i, "k", "m"))): _*)).as("pos"))
       .distinct()
@@ -79,8 +80,12 @@ object BloomIndex {
     t
   }
 
+  /** Each file's filter size `(p, m)`: m = BitsPerKey * keys in file. */
+  private def filterBits(t: ManifestTable): DataFrame =
+    t.statsFrame.select(col("p"), (col("n_rows") * BitsPerKey).as("m"))
+
   /** The key maximum the probe schedule derives from. */
-  private[graft] def keyMax(t: ManifestTable): Long = t.max("mxk")
+  private[graft] def keyMax(t: ManifestTable): Long = t.max("hi_k")
 
   /** The default 20-probe batch. */
   private[graft] def defaultProbes(spark: SparkSession, t: ManifestTable): DataFrame =
@@ -98,7 +103,7 @@ object BloomIndex {
   private[graft] def planProbeFrame(spark: SparkSession, t: ManifestTable,
       probes: DataFrame): DataFrame = {
     val index = spark.read.schema(IndexCols).parquet(s"${t.store}/index")
-    val pb = probes.crossJoin(broadcast(t.statsFrame.select("p", "m")))
+    val pb = probes.crossJoin(broadcast(filterBits(t)))
       .select(col("pk"), col("p"), explode(array((0 until BloomK).map(i =>
         expr(posExpr(i, "pk", "m"))): _*)).as("pos"))
       .distinct()

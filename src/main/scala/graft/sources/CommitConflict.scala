@@ -85,7 +85,7 @@ object CommitConflict {
       .select(col("o_orderkey").as("k"),
         floor(col("o_totalprice") * 100).cast("long").as("total_c"),
         year(col("o_orderdate")).cast("long").as("p"))
-      .repartition(col("p"))
+      .transform(ManifestTable.byPartition("p"))
       .write.mode(SaveMode.Overwrite).partitionBy("p").parquet(store)
     SnapshotStore.commit(store, SnapshotStore.listDataFiles(store)): Unit
     store

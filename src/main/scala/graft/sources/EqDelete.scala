@@ -52,7 +52,7 @@ object EqDelete {
     base.filter(col("k") % 20 === 3)
       .select(col("k"), col("ck"), (col("total_c") + 7L).as("total_c"),
         col("p").cast("long").as("p"))
-      .repartition(col("p"))
+      .transform(ManifestTable.byPartition("p"))
       .write.mode(SaveMode.Append).partitionBy("p").parquet(store)
     val reins = SnapshotStore.listDataFiles(store).filterNot(before)
     SnapshotStore.commitWithDeletes(store, v1files ++ reins,
@@ -120,7 +120,7 @@ object EqDelete {
             base.filter(col("k") % 20 === 3)
               .select(col("k"), col("ck"), (col("total_c") + 7L).as("total_c"),
                 col("p").cast("long").as("p"))
-              .repartition(col("p"))
+              .transform(ManifestTable.byPartition("p"))
               .write.mode(SaveMode.Append).partitionBy("p").parquet(store)
             reins = SnapshotStore.listDataFiles(store).filterNot(before)
             SnapshotStore.commitWithDeletes(store, v1files ++ reins,

@@ -55,12 +55,11 @@ object HiddenPartition {
   val PmHi: Long = 1997L * 12 + (7 - 1)
 
   /** Write orders under the hidden (month, bucket) spec; the stats
-    * are the cell manifest, a row count and custkey maximum per
+    * are the cell manifest, a row count and custkey bounds per
     * populated (pm, pb) cell.
     */
   private[sources] def stage(spark: SparkSession, dir: String): ManifestTable =
-    ManifestTable.write("hidpart", base(spark, dir), Seq("pm", "pb"), Nil,
-      count(lit(1)).as("n_rows"), max("c").as("hi_c"))
+    ManifestTable.write("hidpart", base(spark, dir), Seq("pm", "pb"), Nil, Seq("c"))
 
   /** Orders with the two hidden transforms applied. */
   private[sources] def base(spark: SparkSession, dir: String): DataFrame =
@@ -73,20 +72,25 @@ object HiddenPartition {
       expr(s"graft_md5_prefix(concat('hp:', cast(o_custkey as string)))" +
         s" % $Buckets").as("pb"))
 
+  /** The cells the raw date window derives through the month
+    * transform: its month range, in every bucket.
+    */
+  private def window(t: ManifestTable): Seq[Row] =
+    t.stats.filter(r => r.getAs[Long]("pm") >= PmLo && r.getAs[Long]("pm") <= PmHi)
+
   /** The cells the raw-column query derives through the transforms:
     * the window's month range in the point key's bucket.
     */
   private[sources] def plan(t: ManifestTable, kb: Long): Seq[Row] =
-    t.stats.filter(r => r.getAs[Long]("pm") >= PmLo &&
-      r.getAs[Long]("pm") <= PmHi && r.getAs[Long]("pb") == kb)
+    window(t).filter(_.getAs[Long]("pb") == kb)
 
   def hiddenPartition(spark: SparkSession, dir: String): DataFrame = {
     val t = stage(spark, dir)
     try {
       // the query's point key: smallest custkey >= 40% of max that HAS
       // an order inside the raw date window (guarantees n_match >= 1),
-      // found over the store's pinned base
-      val k = t.pinned.filter(col("c") >= (4L * t.max("hi_c")) / 10L &&
+      // found over the window's cells read back
+      val k = t.read(window(t)).filter(col("c") >= (4L * t.max("hi_c")) / 10L &&
           col("d") >= lit(DLo).cast("timestamp") &&
           col("d") <= lit(DHi).cast("timestamp"))
         .agg(min("c")).collect()(0).getLong(0)

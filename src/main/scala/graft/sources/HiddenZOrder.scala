@@ -74,15 +74,13 @@ object HiddenZOrder {
     */
   private[sources] def stage(spark: SparkSession, dir: String): ManifestTable =
     ManifestTable.write("hidz", base(spark, dir), Seq("pq", "fid"), Seq("z"),
-      min("c").as("lo_c"), max("c").as("hi_c"),
-      min("total_c").as("lo_tc"), max("total_c").as("hi_tc"),
-      count(lit(1)).as("n_rows"))
+      Seq("c", "total_c"))
 
   /** The (custkey, price) box (cLo, cHi, tcLo, tcHi): fixed fractions
     * of the maxima, which are the largest file envelopes.
     */
   private[sources] def box(t: ManifestTable): (Long, Long, Long, Long) = {
-    val (mc, mtc) = (t.max("hi_c"), t.max("hi_tc"))
+    val (mc, mtc) = (t.max("hi_c"), t.max("hi_total_c"))
     ((30L * mc) / 100L, (45L * mc) / 100L, (20L * mtc) / 100L, (50L * mtc) / 100L)
   }
 
@@ -99,7 +97,7 @@ object HiddenZOrder {
     val (cLo, cHi, tcLo, tcHi) = box(t)
     afterQuarter(t).filter(r =>
       r.getAs[Long]("hi_c") >= cLo && r.getAs[Long]("lo_c") <= cHi &&
-        r.getAs[Long]("hi_tc") >= tcLo && r.getAs[Long]("lo_tc") <= tcHi)
+        r.getAs[Long]("hi_total_c") >= tcLo && r.getAs[Long]("lo_total_c") <= tcHi)
   }
 
   def hiddenZorder(spark: SparkSession, dir: String): DataFrame = {

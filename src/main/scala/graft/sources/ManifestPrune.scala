@@ -32,29 +32,44 @@ object ManifestPrune {
   val MFiles = 64L
   val PerManifest = 8L
 
-  def manifestPrune(spark: SparkSession, dir: String): DataFrame = {
+  /** The data level: orders as [[MFiles]] key-range files, k-sorted,
+    * with per-file row counts and key bounds.
+    */
+  private[sources] def stageFiles(spark: SparkSession, dir: String): ManifestTable = {
     val o = Tables(spark, dir, "orders")
       .select(col("o_orderkey").as("k"),
         floor(col("o_totalprice") * 100).cast("long").as("total_c"))
     val mk = o.agg(max("k")).collect()(0).getLong(0)
-    val files = ManifestTable.write("mprune",
+    ManifestTable.write("mprune",
       o.withColumn("fid", expr(s"(k * $MFiles) div (${mk + 1}L)")),
-      Seq("fid"), Seq("k"),
-      min("k").as("lo_k"), max("k").as("hi_k"), count(lit(1)).as("n_rows"))
+      Seq("fid"), Seq("k"), Seq("k"))
+  }
+
+  /** The metadata level: the data level's stats rows as manifests of
+    * [[PerManifest]] contiguous files, partitioned by `mid`. A
+    * manifest's key envelope in the manifest list is
+    * (lo_lo_k, hi_hi_k): the least lo_k and the greatest hi_k of its
+    * entries.
+    */
+  private[sources] def stageManifests(files: ManifestTable): ManifestTable =
+    ManifestTable.write("mprune_meta",
+      files.statsFrame.withColumn("mid", expr(s"fid div $PerManifest")),
+      Seq("mid"), Seq("fid"), Seq("lo_k", "hi_k"))
+
+  def manifestPrune(spark: SparkSession, dir: String): DataFrame = {
+    val files = stageFiles(spark, dir)
     try {
-      val manifests = ManifestTable.write("mprune_meta",
-        files.statsFrame.withColumn("mid", expr(s"fid div $PerManifest")),
-        Seq("mid"), Seq("fid"),
-        min("lo_k").as("lo_k"), max("hi_k").as("hi_k"))
+      val manifests = stageManifests(files)
       try {
         // hierarchical plan for the 30–35 % key band
+        val mk = files.max("hi_k")
         val (loB, hiB) = ((30L * mk) / 100L, (35L * mk) / 100L)
-        def overlaps(r: Row): Boolean =
-          r.getAs[Long]("hi_k") >= loB && r.getAs[Long]("lo_k") <= hiB
+        def overlaps(lo: String, hi: String)(r: Row): Boolean =
+          r.getAs[Long](hi) >= loB && r.getAs[Long](lo) <= hiB
         // level 1: the manifest list, drop whole manifests
-        val mHit = manifests.stats.filter(overlaps)
+        val mHit = manifests.stats.filter(overlaps("lo_lo_k", "hi_hi_k"))
         // level 2: read ONLY the surviving manifests' entries
-        val fHit = manifests.read(mHit).collect().toSeq.filter(overlaps)
+        val fHit = manifests.read(mHit).collect().toSeq.filter(overlaps("lo_k", "hi_k"))
         // level 3: open only the surviving data files
         val Seq(_, nm, stc) =
           files.tally(fHit, col("k").between(loB, hiB), "total_c")

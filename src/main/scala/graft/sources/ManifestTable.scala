@@ -1,6 +1,11 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import scala.jdk.CollectionConverters._
@@ -17,30 +22,34 @@ import graft.Scratch
   * Store layout: `data/<col>=<v>/…` per partition-column value tuple.
   * Only this module builds those paths.
   *
-  * One pass over the source ([[write]]): the base is lazily
-  * checkpointed, so the data write materializes it and the stats
-  * aggregation reads pinned blocks instead of re-scanning the source
-  * and re-running the layout transform. The stats are bounded
-  * metadata: collected once and handed to the planner driver-side,
-  * where every reader plans from them; they are not written out.
-  * Key maxima a transform needs are collected by the caller before
-  * the write and baked into its expressions as literals — a
-  * `crossJoin(broadcast(mx))` would re-run the max subquery in every
-  * execution that touches the base.
+  * One pass over the source ([[ManifestTable.write]]): one shuffle by
+  * the partition columns into a fixed count of tasks, so every core
+  * writes files, and the manifest is read back from the written
+  * files' parquet footers on the driver — the bounds come from the
+  * writer, as an Iceberg manifest's do, not from a second scan or an
+  * aggregation job. Per partition-value tuple the manifest carries
+  * `n_rows` (the footers' row counts) and `lo_<c>`/`hi_<c>` for each
+  * bounded column `c` (the column chunks' min/max statistics; null
+  * when the tuple holds no non-null value, as SQL `min`/`max` give).
+  * Ops derive their own stat names from these. Key maxima a transform
+  * needs are collected by the caller before the write and baked into
+  * its expressions as literals — a `crossJoin(broadcast(mx))` would
+  * re-run the max subquery in every execution that touches the base.
   *
-  * @param pinned the lazily checkpointed base the store was written
-  *   from; further aggregates over it read pinned blocks
   * @param schema the data columns as read back: the base's other
   *   columns, then the partition columns
+  * @param statsSchema the partition columns, `n_rows`, then the
+  *   `lo_<c>`/`hi_<c>` pair of each bounded column
   */
-private[graft] final case class ManifestTable(store: String,
+private[graft] final case class ManifestTable(spark: SparkSession, store: String,
     partCols: Seq[String], schema: StructType, statsSchema: StructType,
-    stats: IndexedSeq[Row], pinned: DataFrame) {
+    stats: IndexedSeq[Row]) {
 
-  private def spark: SparkSession = pinned.sparkSession
-
-  /** The largest value of the stats column `c` over all files. */
-  def max(c: String): Long = stats.map(_.getAs[Long](c)).max
+  /** The largest non-null value of the stats column `c` over all files. */
+  def max(c: String): Long = {
+    val i = statsSchema.fieldIndex(c)
+    stats.filterNot(_.isNullAt(i)).map(_.getLong(i)).max
+  }
 
   /** The stats rows as a local frame (no job to build or broadcast). */
   def statsFrame: DataFrame = spark.createDataFrame(stats.asJava, statsSchema)
@@ -68,31 +77,97 @@ private[graft] final case class ManifestTable(store: String,
 
 private[graft] object ManifestTable {
 
-  /** Write `base` under a fresh scratch store partitioned by
-    * `partCols`, rows sorted by `clusterCols` inside each file, and
-    * collect the `stats` aggregates per file.
+  /** Write `base` under a fresh scratch store partitioned by the long
+    * columns `partCols`, rows sorted by `clusterCols` inside each
+    * file, and read the manifest — `n_rows` and the bounds of each of
+    * the long columns `bounded` per partition-value tuple — from the
+    * written footers.
     */
   def write(prefix: String, base: DataFrame, partCols: Seq[String],
-      clusterCols: Seq[String], stats: Column*): ManifestTable = {
+      clusterCols: Seq[String], bounded: Seq[String]): ManifestTable = {
     val spark = base.sparkSession
+    (partCols ++ bounded).foreach(c => require(base.schema(c).dataType == LongType,
+      s"manifest column $c is ${base.schema(c).dataType}, not bigint"))
     val store = Scratch.path(prefix)
     Scratch.rm(store)
-    val b = base.localCheckpoint(eager = false)
-    // one shuffle keyed by the partition columns colocates each file's
-    // rows, so partitionBy writes exactly one file per value tuple. The
-    // sort leads with the partition columns so the partitioned write's
-    // required ordering is already satisfied — otherwise the writer
-    // re-sorts by the partition columns alone (non-stable) and the
-    // cluster order inside each file is destroyed
-    b.repartition(partCols.map(col): _*)
+    // the shuffle colocates each value tuple's rows, so partitionBy
+    // writes exactly one file per tuple. The sort leads with the
+    // partition columns so the partitioned write's required ordering is
+    // already satisfied — otherwise the writer re-sorts by the
+    // partition columns alone (non-stable) and the cluster order inside
+    // each file is destroyed
+    base.transform(byPartition(partCols: _*))
       .sortWithinPartitions((partCols ++ clusterCols).map(col): _*)
       .write.mode(SaveMode.Overwrite).partitionBy(partCols: _*)
       .parquet(s"$store/data")
-    val statsDf = b.groupBy(partCols.map(col): _*).agg(stats.head, stats.tail: _*)
-    ManifestTable(store, partCols,
-      StructType(b.schema.filterNot(f => partCols.contains(f.name)) ++
-        partCols.map(b.schema(_))),
-      statsDf.schema, statsDf.collect().toIndexedSeq, b)
+    val statsSchema = StructType(partCols.map(StructField(_, LongType, nullable = false)) ++
+      Seq(StructField("n_rows", LongType, nullable = false)) ++
+      bounded.flatMap(c => Seq(StructField(s"lo_$c", LongType), StructField(s"hi_$c", LongType))))
+    ManifestTable(spark, store, partCols,
+      StructType(base.schema.filterNot(f => partCols.contains(f.name)) ++
+        partCols.map(base.schema(_))),
+      statsSchema, footerStats(spark, s"$store/data", partCols, bounded).map(v =>
+        new GenericRowWithSchema(v.toArray, statsSchema)))
+  }
+
+  /** `df` shuffled by `cols` into a fixed count of partitions, one per
+    * core, ready for a `partitionBy(cols)` write (`df.transform(
+    * byPartition(cols: _*))`). A fixed count, which AQE does not
+    * coalesce: a staged store's shuffle is small, and coalesced into
+    * one task it leaves one thread writing every file.
+    */
+  def byPartition(cols: String*)(df: DataFrame): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism, cols.map(col): _*)
+
+  /** The manifest values of the partitioned parquet store at `root`, read
+    * on the driver from every data file's footer and folded per
+    * partition-value tuple, in tuple order: the tuple, the summed row
+    * counts, then the min/max over the `bounded` columns' chunk
+    * statistics. A chunk without statistics fails loudly rather than
+    * plan from a guess.
+    */
+  private def footerStats(spark: SparkSession, root: String, partCols: Seq[String],
+      bounded: Seq[String]): IndexedSeq[Seq[Any]] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val rootPath = new Path(root)
+    val fs = rootPath.getFileSystem(conf)
+    // plain statuses: `listFiles` builds a LocatedFileStatus per file,
+    // which on the local filesystem forks a process for its permissions
+    def walk(p: Path): Iterator[FileStatus] = fs.listStatus(p).iterator
+      .filterNot(s => s.getPath.getName.startsWith("_") || s.getPath.getName.startsWith("."))
+      .flatMap(s => if (s.isDirectory) walk(s.getPath) else Iterator(s))
+    // per tuple: n_rows, then (lo, hi) per bounded column, null until
+    // a chunk with a non-null value is seen
+    val acc = scala.collection.mutable.Map.empty[Seq[Long], Array[Any]]
+    walk(rootPath).filter(_.getPath.getName.endsWith(".parquet")).foreach { status =>
+      val f = status.getPath
+      val dirs = Iterator.iterate(f.getParent)(_.getParent)
+        .take(partCols.length).map(_.getName).toSeq.reverse
+      val key = partCols.zip(dirs).map { case (c, d) =>
+        require(d.startsWith(s"$c="), s"$f is not under a $c=<v> directory")
+        d.substring(c.length + 1).toLong
+      }
+      val a = acc.getOrElseUpdate(key, 0L +: Array.fill[Any](2 * bounded.length)(null))
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(status, conf), ParquetMetadataConverter.NO_FILTER)
+      footer.getBlocks.asScala.foreach { block =>
+        a(0) = a(0).asInstanceOf[Long] + block.getRowCount
+        val chunks = block.getColumns.asScala.map(c => c.getPath.toDotString -> c).toMap
+        bounded.zipWithIndex.foreach { case (c, i) =>
+          val chunk = chunks(c)
+          val st = chunk.getStatistics
+          if (st.hasNonNullValue) {
+            val lo = st.genericGetMin.asInstanceOf[Number].longValue
+            val hi = st.genericGetMax.asInstanceOf[Number].longValue
+            a(1 + 2 * i) = Option(a(1 + 2 * i)).fold(lo)(v => math.min(v.asInstanceOf[Long], lo))
+            a(2 + 2 * i) = Option(a(2 + 2 * i)).fold(hi)(v => math.max(v.asInstanceOf[Long], hi))
+          } else require(st.isNumNullsSet && st.getNumNulls == chunk.getValueCount,
+            s"$f has no statistics for column $c")
+        }
+      }
+    }
+    acc.toIndexedSeq.sortBy(_._1)(Ordering.Implicits.seqOrdering[Seq, Long])
+      .map { case (k, a) => k ++ a }
   }
 
   /** The parquet `paths` (files or partition directories under `base`,

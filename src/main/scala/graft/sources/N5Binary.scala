@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.VoxelGrid
+import graft.{VoxelGrid, Zlib}
 import graft.octree.TreeFiles
 
 /** Physical N5 containers — the reference's PRIMARY input arm
@@ -54,26 +54,6 @@ object N5Binary {
   private def datasetAttrs(edge: Int): String =
     s"""{"dimensions":[$edge,$edge,$edge],"blockSize":[$Leaf,$Leaf,$Leaf],"dataType":"uint16","compression":{"type":"gzip","level":-1}}"""
 
-  private def gzip(raw: Array[Byte]): Array[Byte] = {
-    val buf = new java.io.ByteArrayOutputStream()
-    val gz = new java.util.zip.GZIPOutputStream(buf)
-    gz.write(raw); gz.close()
-    buf.toByteArray
-  }
-
-  private def gunzip(comp: Array[Byte], rawLen: Int): Array[Byte] = {
-    val gz = new java.util.zip.GZIPInputStream(new java.io.ByteArrayInputStream(comp))
-    val raw = new Array[Byte](rawLen)
-    var off = 0
-    var n = 0
-    while (off < rawLen && n >= 0) {
-      n = gz.read(raw, off, rawLen - off)
-      if (n > 0) off += n
-    }
-    require(off == rawLen && gz.read() < 0, s"gzip payload is not exactly $rawLen bytes")
-    raw
-  }
-
   private def putU16BE(out: java.io.ByteArrayOutputStream, v: Int): Unit = {
     out.write((v >> 8) & 0xff); out.write(v & 0xff)
   }
@@ -104,7 +84,7 @@ object N5Binary {
     putU16BE(out, 0)     // mode: default
     putU16BE(out, 3)     // ndim
     putU32BE(out, Leaf.toLong); putU32BE(out, Leaf.toLong); putU32BE(out, Leaf.toLong)
-    out.write(gzip(raw.toByteArray))
+    out.write(Zlib.gzip(raw.toByteArray))
     out.toByteArray
   }
 
@@ -154,7 +134,7 @@ object N5Binary {
         require(ndim == 3, s"unexpected chunk ndim $ndim")
         val dims = (0 until ndim).map(i => getU32BE(bytes, 4 + 4 * i).toInt)
         val (bsX, bsY, bsZ) = (dims(0), dims(1), dims(2))
-        val raw = gunzip(bytes.drop(4 + 4 * ndim), bsX * bsY * bsZ * 2)
+        val raw = Zlib.gunzip(bytes.drop(4 + 4 * ndim), bsX * bsY * bsZ * 2)
         val level = (Levels - s).toLong
         for {
           iz <- 0 until bsZ; iy <- 0 until bsY; ix <- 0 until bsX

@@ -52,13 +52,13 @@ object PartitionEvolve {
       // stays a DATA column (partitioning never drops source columns)
       base.filter(col("p") <= SpecCut)
         .select(col("k"), col("total_c"), col("m"), col("p"))
-        .repartition(col("p"))
+        .transform(ManifestTable.byPartition("p"))
         .write.mode(SaveMode.Overwrite).partitionBy("p")
         .parquet(s"$store/ps=1")
       // spec 2 (later years): partition by (year, month)
       base.filter(col("p") > SpecCut)
         .select(col("k"), col("total_c"), col("p"), col("m"))
-        .repartition(col("p"), col("m"))
+        .transform(ManifestTable.byPartition("p", "m"))
         .write.mode(SaveMode.Overwrite).partitionBy("p", "m")
         .parquet(s"$store/ps=2")
       SnapshotStore.commit(store, SnapshotStore.listDataFiles(store)): Unit

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.Scratch
 import graft.Tables
 
@@ -46,11 +47,20 @@ object PosDelete {
     def drop(): Unit = Scratch.rm(store)
   }
 
+  /** The columns [[stage]] writes: the data files' `k`, `total_c`,
+    * then `fid` from the partition directories.
+    */
+  private val DataCols = ManifestTable.longs("k", "total_c", "fid")
+
+  /** The delete vector's columns: (data file path, row position). */
+  private val DeleteCols = StructType(Seq(
+    StructField("fp", StringType), StructField("pos", LongType)))
+
   /** The data scan WITH the parquet metadata columns that position
-    * deletes reference.
+    * deletes reference, read with the written schema.
     */
   private[sources] def metaScan(spark: SparkSession, store: String): DataFrame =
-    spark.read.option("basePath", s"$store/data")
+    spark.read.schema(DataCols).option("basePath", s"$store/data")
       .parquet(s"$store/data")
       .select(col("k"), col("total_c"),
         col("_metadata.file_path").as("fp"),
@@ -68,7 +78,7 @@ object PosDelete {
         floor(col("o_totalprice") * 100).cast("long").as("total_c"))
     val mk = o.agg(max("k")).collect()(0).getLong(0)
     o.withColumn("fid", expr(s"(k * $NFiles) div (${mk + 1}L)"))
-      .repartition(col("fid")).sortWithinPartitions("fid", "k")
+      .transform(ManifestTable.byPartition("fid")).sortWithinPartitions("fid", "k")
       .write.mode(SaveMode.Overwrite).partitionBy("fid")
       .parquet(s"$store/data")
     val v1 = SnapshotStore.commit(store, SnapshotStore.listDataFiles(store))
@@ -88,7 +98,7 @@ object PosDelete {
     try {
       val scan = metaScan(spark, store)
       // readers
-      val dels = spark.read.parquet(s"$store/_deletes/pd1")
+      val dels = spark.read.schema(DeleteCols).parquet(s"$store/_deletes/pd1")
       val live = scan.join(broadcast(dels), Seq("fp", "pos"), "left_anti")
       val delStats = dels
         .agg(count(lit(1)).as("n_deletes"),

@@ -77,7 +77,7 @@ object RowLineage {
       val before = SnapshotStore.listDataFiles(store).toSet
       carried.unionByName(updated.select(carried.columns.map(col): _*))
         .unionByName(inserted)
-        .repartition(col("p"))
+        .transform(ManifestTable.byPartition("p"))
         .write.mode(SaveMode.Append).partitionBy("p").parquet(store)
       val newFiles = SnapshotStore.listDataFiles(store).filterNot(before)
       val v2 = SnapshotStore.commit(store,

@@ -82,7 +82,7 @@ object SnapshotDelete {
       val head = SnapshotStore.readWithDeletes(spark, store, 3, "k")
         .select(col("k"), col("ck"), col("total_c"), col("p").cast("long").as("p"))
       val before = SnapshotStore.listDataFiles(store).toSet
-      head.repartition(col("p"))
+      head.transform(ManifestTable.byPartition("p"))
         .write.mode(SaveMode.Append).partitionBy("p").parquet(store)
       val newFiles = SnapshotStore.listDataFiles(store).filterNot(before)
       val v4 = SnapshotStore.commitWithDeletes(store, newFiles, Seq.empty)
@@ -148,7 +148,7 @@ object SnapshotDelete {
       // on disk in the v1 files the manifest merely hides
       def physicalCount(): Long = {
         val fs = SnapshotStore.listDataFiles(store)
-        spark.read.option("basePath", store)
+        spark.read.schema(TableMerge.BaseCols).option("basePath", store)
           .parquet(fs.map(f => s"$store/$f"): _*)
           .filter(col("ck") === subj).count()
       }
@@ -160,7 +160,7 @@ object SnapshotDelete {
         .select(col("k"), col("ck"), col("total_c"),
           col("p").cast("long").as("p"))
       val before = SnapshotStore.listDataFiles(store).toSet
-      head.repartition(col("p"))
+      head.transform(ManifestTable.byPartition("p"))
         .write.mode(SaveMode.Append).partitionBy("p").parquet(store)
       val v3 = SnapshotStore.commitWithDeletes(store,
         SnapshotStore.listDataFiles(store).filterNot(before), Seq.empty)

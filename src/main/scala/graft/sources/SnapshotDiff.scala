@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.Scratch
 
 /** INCREMENTAL CHANGELOG SCAN between two snapshot versions — the
@@ -67,6 +68,10 @@ object SnapshotDiff {
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), agg.schema)
     }
   }
+
+  /** The columns [[snapshotTail]] writes each `diff-v<v>` with. */
+  private val DiffCols = StructType(StructField("op", StringType) +:
+    ManifestTable.longs("n_keys", "sum_key", "sum_total_c", "version").fields)
 
   /** stream_snapshot_tail — the CHANGELOG STREAMING SOURCE, the read
     * twin of stream_cdc_apply: a downstream consumer tails the
@@ -141,7 +146,7 @@ object SnapshotDiff {
       q.stop()
       val diffs = Option(new java.io.File(outRoot).list()).toSeq.flatten
         .filter(_.startsWith("diff-v")).sorted.map(d => s"$outRoot/$d")
-      val agg = spark.read.parquet(diffs: _*)
+      val agg = spark.read.schema(DiffCols).parquet(diffs: _*)
         .select("version", "op", "n_keys", "sum_key", "sum_total_c")
         .orderBy("version", "op")
       val rows = agg.collect().toIndexedSeq

@@ -22,7 +22,7 @@ object StatsPrune {
   val PruneFiles = 4L
 
   /** Write orders as (year, orderkey-range) files with per-file
-    * min/max/count key stats. The key maximum the bands are fractions
+    * row counts and key bounds (`n_rows`, `lo_k`, `hi_k`). The key maximum the bands are fractions
     * of is the largest `hi_k` ([[keyMax]]).
     */
   private[graft] def stage(spark: SparkSession, dir: String): ManifestTable = {
@@ -33,8 +33,7 @@ object StatsPrune {
     val mk = o.agg(max("k")).collect()(0).getLong(0)
     ManifestTable.write("sprune",
       o.withColumn("fid", expr(s"(k * $PruneFiles) div ${mk + 1}L")),
-      Seq("p", "fid"), Nil,
-      min("k").as("lo_k"), max("k").as("hi_k"), count(lit(1)).as("n_rows"))
+      Seq("p", "fid"), Nil, Seq("k"))
   }
 
   private[graft] def keyMax(t: ManifestTable): Long = t.max("hi_k")

@@ -40,6 +40,12 @@ object TableMerge {
     */
   val InsOffset = 1000000000000L
 
+  /** The columns a [[stageStore]] store is written with: the data
+    * files' `k`, `ck`, `total_c`, then `p` from the partition
+    * directories.
+    */
+  private[sources] val BaseCols = ManifestTable.longs("k", "ck", "total_c", "p")
+
   /** The base table: one row per order, partitioned by order year. */
   private[sources] def baseTable(spark: SparkSession, dir: String): DataFrame =
     Tables(spark, dir, "orders")
@@ -104,7 +110,7 @@ object TableMerge {
     val before = SnapshotStore.listDataFiles(store).toSet
     cur.join(gone, Seq("k"), "left_anti")
       .unionByName(enter)
-      .repartition(col("p"))
+      .transform(ManifestTable.byPartition("p"))
       .write.mode(SaveMode.Append).partitionBy("p").parquet(store)
     val newFiles = SnapshotStore.listDataFiles(store).filterNot(before)
     val files = untouched ++ newFiles

@@ -107,7 +107,7 @@ object TableRefs {
       yLo: Long, yHi: Long): Seq[String] = {
     val before = SnapshotStore.listDataFiles(root).toSet
     df.filter(col("y") >= yLo && col("y") <= yHi)
-      .repartition(col("y"))
+      .transform(ManifestTable.byPartition("y"))
       .write.mode(SaveMode.Append).partitionBy("y")
       .parquet(s"$root/data")
     SnapshotStore.listDataFiles(root).filterNot(before)
@@ -348,7 +348,7 @@ object TableRefs {
           when(col("k") % 7 === 3, -col("pc")).otherwise(col("pc")).as("pc"),
           when(col("k") % 7 === 5, col("y") + 1).otherwise(col("y")).as("yd"))
       val before = SnapshotStore.listDataFiles(root).toSet
-      bad.repartition(col("y"))
+      bad.transform(ManifestTable.byPartition("y"))
         .write.mode(SaveMode.Append).partitionBy("y")
         .parquet(s"$root/data")
       val badAdd = SnapshotStore.listDataFiles(root).filterNot(before)

@@ -48,9 +48,7 @@ object ZOrderStore {
         .withColumn("cd", expr(curve.position))
         .withColumn("fid", expr(s"cd div ${1L << (2 * Queries.ZBits - 6)}"))
         .select("pk", "sk", "price_c", "cd", "fid"),
-      Seq("fid"), Seq("cd"),
-      min("pk").as("lo_pk"), max("pk").as("hi_pk"),
-      min("sk").as("lo_sk"), max("sk").as("hi_sk"), count(lit(1)).as("n_rows"))
+      Seq("fid"), Seq("cd"), Seq("pk", "sk"))
   }
 
   /** The box (pkLo, pkHi, skLo, skHi): 30–35 % of each key maximum,

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.VoxelGrid
+import graft.{VoxelGrid, Zlib}
 import graft.octree.TreeFiles
 
 /** Physical Zarr v3 containers — the CURRENT Zarr spec (zarr-specs
@@ -63,7 +63,7 @@ object Zarr3Binary {
       raw(off) = ((v >> 8) & 0xff).toByte
       raw(off + 1) = (v & 0xff).toByte
     }
-    ZarrBinary.gzipBytes(raw)
+    Zlib.gzip(raw)
   }
 
   /** Write the full v3 hierarchy: root group, per-channel groups,
@@ -143,7 +143,7 @@ object Zarr3Binary {
       .as[(Long, Long, Long, Long, Long, Long, Long, Long, Array[Byte])]
       .flatMap { case (s, c, gz, gy, gx, bsZl, bsYl, bsXl, bytes) =>
         val (bsZ, bsY, bsX) = (bsZl.toInt, bsYl.toInt, bsXl.toInt)
-        val raw = ZarrBinary.gunzipBytes(bytes, bsZ * bsY * bsX * 2)
+        val raw = Zlib.gunzip(bytes, bsZ * bsY * bsX * 2)
         val level = (Levels - s).toLong
         for {
           iz <- 0 until bsZ; iy <- 0 until bsY; ix <- 0 until bsX

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.VoxelGrid
+import graft.{VoxelGrid, Zlib}
 import graft.octree.TreeFiles
 
 /** Physical Zarr (v2) containers — the OTHER half of the reference's
@@ -61,57 +61,6 @@ object ZarrBinary {
   private def zarray(edge: Int, separator: String, compressor: String): String =
     s"""{"zarr_format":2,"shape":[$edge,$edge,$edge],"chunks":[$Leaf,$Leaf,$Leaf],"dtype":">u2","compressor":{"id":"$compressor","level":1},"fill_value":0,"order":"C","filters":null,"dimension_separator":"$separator"}"""
 
-  private[sources] def deflate(raw: Array[Byte]): Array[Byte] = {
-    val d = new java.util.zip.Deflater(1)
-    d.setInput(raw); d.finish()
-    val out = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](8192)
-    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-    d.end()
-    out.toByteArray
-  }
-
-  private[sources] def inflate(comp: Array[Byte], rawLen: Int): Array[Byte] = {
-    val inf = new java.util.zip.Inflater()
-    inf.setInput(comp)
-    val raw = new Array[Byte](rawLen)
-    var off = 0
-    while (off < rawLen && !inf.finished()) {
-      val n = inf.inflate(raw, off, rawLen - off)
-      // inflate() == 0 with needsInput means the stream is TRUNCATED:
-      // no more input will ever arrive, so looping again would spin
-      // forever — fail loudly instead
-      require(n > 0 || !(inf.needsInput() || inf.needsDictionary()),
-        s"truncated deflate stream: $off of $rawLen bytes inflated")
-      off += n
-    }
-    require(off == rawLen && inf.finished(),
-      s"zlib payload is not exactly $rawLen bytes")
-    inf.end()
-    raw
-  }
-
-  private[sources] def gzipBytes(raw: Array[Byte]): Array[Byte] = {
-    val buf = new java.io.ByteArrayOutputStream()
-    val gz = new java.util.zip.GZIPOutputStream(buf)
-    gz.write(raw); gz.close()
-    buf.toByteArray
-  }
-
-  private[sources] def gunzipBytes(comp: Array[Byte], rawLen: Int): Array[Byte] = {
-    val gz = new java.util.zip.GZIPInputStream(new java.io.ByteArrayInputStream(comp))
-    val raw = new Array[Byte](rawLen)
-    var off = 0
-    var n = 0
-    while (off < rawLen && n >= 0) {
-      n = gz.read(raw, off, rawLen - off)
-      if (n > 0) off += n
-    }
-    require(off == rawLen && gz.read() < 0,
-      s"gzip payload is not exactly $rawLen bytes")
-    raw
-  }
-
   /** Serialize one chunk: the C-order BE uint16 block through the
     * array's compressor (numcodecs `zlib` = raw DEFLATE, `gzip` =
     * gzip-framed) — offset (z·bsY + y)·bsX + x, x fastest.
@@ -124,7 +73,7 @@ object ZarrBinary {
       raw(off) = ((v >> 8) & 0xff).toByte
       raw(off + 1) = (v & 0xff).toByte
     }
-    if (compressor == "gzip") gzipBytes(raw) else deflate(raw)
+    if (compressor == "gzip") Zlib.gzip(raw) else Zlib.deflate(raw, 1)
   }
 
   /** Write the full container: root + group + array metadata (bounded,
@@ -241,8 +190,8 @@ object ZarrBinary {
         val (bsZ, bsY, bsX) = (bsZl.toInt, bsYl.toInt, bsXl.toInt)
         val rawLen = bsZ * bsY * bsX * 2
         val raw = comp match {
-          case "zlib" => inflate(bytes, rawLen)
-          case "gzip" => gunzipBytes(bytes, rawLen)
+          case "zlib" => Zlib.inflate(bytes, rawLen)
+          case "gzip" => Zlib.gunzip(bytes, rawLen)
           case other => throw new IllegalArgumentException(
             s"unsupported compressor '$other'")
         }
