@@ -10,33 +10,16 @@ import java.util.zip.{Deflater, GZIPInputStream, GZIPOutputStream, Inflater}
   */
 private[graft] object Zlib {
 
-  /** A zlib compressor at `level` for a run of payloads, such as the
-    * pages of one TIFF file: one `Deflater`, reset between payloads,
-    * so the run allocates the zlib state once. Each payload's bytes are
-    * those a fresh `Deflater` at `level` gives. Not thread-safe;
-    * [[end]] frees the native state.
-    */
-  final class Deflate(level: Int) {
-    private val d = new Deflater(level)
-
-    def apply(raw: Array[Byte]): Array[Byte] = {
-      d.reset(); d.setInput(raw); d.finish()
-      var out = new Array[Byte](raw.length + 64)
-      var n = 0
-      while (!d.finished()) {
-        if (n == out.length) out = java.util.Arrays.copyOf(out, 2 * out.length)
-        n += d.deflate(out, n, out.length - n)
-      }
-      java.util.Arrays.copyOf(out, n)
-    }
-
-    def end(): Unit = d.end()
-  }
-
   /** `raw` as one zlib stream at `level`. */
   def deflate(raw: Array[Byte], level: Int): Array[Byte] = {
-    val d = new Deflate(level)
-    try d(raw) finally d.end()
+    val d = new Deflater(level)
+    try {
+      d.setInput(raw); d.finish()
+      val out = new java.io.ByteArrayOutputStream()
+      val buf = new Array[Byte](8192)
+      while (!d.finished()) out.write(buf, 0, d.deflate(buf))
+      out.toByteArray
+    } finally d.end()
   }
 
   /** The zlib stream `comp`, which must inflate to exactly `rawLen` bytes. */

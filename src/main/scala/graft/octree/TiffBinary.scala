@@ -60,14 +60,6 @@ object TiffBinary {
   private[graft] def inflate(comp: Array[Byte], rawLen: Int): Array[Byte] =
     Zlib.inflate(comp, rawLen)
 
-  /** `f` run with one compressor at the reference's ZLIB level 6, which
-    * deflates every strip or tile of one file.
-    */
-  private def withDeflate[A](f: Zlib.Deflate => A): A = {
-    val d = new Zlib.Deflate(6)
-    try f(d) finally d.end()
-  }
-
   // TIFF field types
   private val TShort = 3
   private val TLong = 4
@@ -83,28 +75,25 @@ object TiffBinary {
     * (strip offsets known by then).
     */
   private[graft] def serializePages(pages: Seq[Array[Array[Long]]]): Array[Byte] = {
-    val strips: IndexedSeq[Array[Byte]] = withDeflate(d => pages.iterator.map { page =>
-      val raw = new Array[Byte](2 * page.iterator.map(_.length).sum)
-      var i = 0
-      for (row <- page; v <- row) {
-        raw(i) = v.toByte; raw(i + 1) = (v >> 8).toByte
-        i += 2
-      }
-      d(raw)
-    }.toIndexedSeq)
-    val stripOffs = strips.scanLeft(8L)((o, st) => o + st.length + st.length % 2)
+    val strips: Seq[Array[Byte]] = pages.map { page =>
+      val raw = new java.io.ByteArrayOutputStream()
+      for (row <- page; v <- row) putU16(raw, v.toInt)
+      Zlib.deflate(raw.toByteArray, 6) // the reference's ZLIB level
+    }
+    val padded = strips.map(evenPad)
+    val out = new java.io.ByteArrayOutputStream()
+    out.write('I'); out.write('I'); putU16(out, 42)
+    val stripOffs = padded.scanLeft(8L)(_ + _.length)
+    putU32(out, stripOffs.last) // first IFD sits after all strip data
+    padded.foreach(out.write)
     // one IFD per page: 10 ascending-sorted tags, 12 bytes each
     val ifdSize = 2 + 10 * 12 + 4
-    val out = java.nio.ByteBuffer.allocate((stripOffs.last + strips.length * ifdSize).toInt)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    out.put('I'.toByte).put('I'.toByte).putShort(42.toShort)
-    out.putInt(stripOffs.last.toInt) // first IFD sits after all strip data
-    strips.foreach { st => out.put(st); if (st.length % 2 == 1) out.put(0.toByte) }
-    def entry(tag: Int, typ: Int, value: Long): Unit =
-      out.putShort(tag.toShort).putShort(typ.toShort).putInt(1).putInt(value.toInt)
-    for ((page, z) <- pages.iterator.zipWithIndex) {
-      val (h, w) = (page.length.toLong, page.head.length.toLong)
-      out.putShort(10.toShort)
+    def entry(tag: Int, typ: Int, value: Long): Unit = {
+      putU16(out, tag); putU16(out, typ); putU32(out, 1L); putU32(out, value)
+    }
+    for (z <- pages.indices) {
+      val (h, w) = (pages(z).length.toLong, pages(z).head.length.toLong)
+      putU16(out, 10)
       entry(256, TLong, w)                       // ImageWidth
       entry(257, TLong, h)                       // ImageLength
       entry(258, TShort, 16L)                    // BitsPerSample
@@ -115,10 +104,10 @@ object TiffBinary {
       entry(278, TLong, h)                       // RowsPerStrip
       entry(279, TLong, strips(z).length.toLong) // StripByteCounts (true length, pad excluded)
       entry(339, TShort, 1L)                     // SampleFormat: unsigned
-      val next = if (z == strips.length - 1) 0L else stripOffs.last + (z + 1).toLong * ifdSize
-      out.putInt(next.toInt)
+      val next = if (z == pages.length - 1) 0L else stripOffs.last + (z + 1).toLong * ifdSize
+      putU32(out, next)
     }
-    out.array
+    out.toByteArray
   }
 
   /** Serialize one (block, channel) as a Leaf-page strip TIFF. */
@@ -143,7 +132,7 @@ object TiffBinary {
   private[graft] def serializeTiledPages(pages: Seq[Array[Array[Long]]], t: Int): Array[Byte] = {
     require(t % 16 == 0, s"TIFF tile size must be a multiple of 16, got $t")
     // per page: the tile grid, row-major (ty, tx), each zero-padded t×t
-    val pageTiles: Seq[Seq[Array[Byte]]] = withDeflate(d => pages.iterator.map { page =>
+    val pageTiles: Seq[Seq[Array[Byte]]] = pages.map { page =>
       val (h, w) = (page.length, page.head.length)
       val (nty, ntx) = ((h + t - 1) / t, (w + t - 1) / t)
       for (ty <- 0 until nty; tx <- 0 until ntx) yield {
@@ -152,9 +141,9 @@ object TiffBinary {
           val (y, x) = (ty * t + dy, tx * t + dx)
           putU16(raw, if (y < h && x < w) page(y)(x).toInt else 0)
         }
-        d(raw.toByteArray)
+        Zlib.deflate(raw.toByteArray, 6)
       }
-    }.toIndexedSeq)
+    }
     val padded = pageTiles.map(_.map(evenPad))
     val out = new java.io.ByteArrayOutputStream()
     out.write('I'); out.write('I'); putU16(out, 42)

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
@@ -129,27 +129,20 @@ private[graft] object ManifestTable {
   private def footerStats(spark: SparkSession, root: String, partCols: Seq[String],
       bounded: Seq[String]): IndexedSeq[Seq[Any]] = {
     val conf = spark.sessionState.newHadoopConf()
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(conf)
-    // plain statuses: `listFiles` builds a LocatedFileStatus per file,
-    // which on the local filesystem forks a process for its permissions
-    def walk(p: Path): Iterator[FileStatus] = fs.listStatus(p).iterator
-      .filterNot(s => s.getPath.getName.startsWith("_") || s.getPath.getName.startsWith("."))
-      .flatMap(s => if (s.isDirectory) walk(s.getPath) else Iterator(s))
     // per tuple: n_rows, then (lo, hi) per bounded column, null until
     // a chunk with a non-null value is seen
     val acc = scala.collection.mutable.Map.empty[Seq[Long], Array[Any]]
-    walk(rootPath).filter(_.getPath.getName.endsWith(".parquet")).foreach { status =>
-      val f = status.getPath
-      val dirs = Iterator.iterate(f.getParent)(_.getParent)
-        .take(partCols.length).map(_.getName).toSeq.reverse
+    SnapshotStore.listDataFiles(root).foreach { rel =>
+      val f = s"$root/$rel"
+      val dirs = rel.split('/').dropRight(1).toSeq
+      require(dirs.length == partCols.length, s"$f is not under one directory per partition column")
       val key = partCols.zip(dirs).map { case (c, d) =>
         require(d.startsWith(s"$c="), s"$f is not under a $c=<v> directory")
         d.substring(c.length + 1).toLong
       }
       val a = acc.getOrElseUpdate(key, 0L +: Array.fill[Any](2 * bounded.length)(null))
       val footer = ParquetFooterReader.readFooter(
-        HadoopInputFile.fromStatus(status, conf), ParquetMetadataConverter.NO_FILTER)
+        HadoopInputFile.fromPath(new Path(f), conf), ParquetMetadataConverter.NO_FILTER)
       footer.getBlocks.asScala.foreach { block =>
         a(0) = a(0).asInstanceOf[Long] + block.getRowCount
         val chunks = block.getColumns.asScala.map(c => c.getPath.toDotString -> c).toMap
